@@ -1579,7 +1579,7 @@ def compact_band_ledger(
     carries the SAME key for that band — any future doc that would have
     matched the dropped row still matches the leader's identical row, so
     leader-mapped candidate recall is provably unchanged (gate:
-    tests/test_round8_staged.py recall-preservation property). Rows
+    tests/test_span_interval_queries.py recall-preservation property). Rows
     whose key differs from the leader's (near-dups with partially
     different signatures) are KEPT — compaction never trades recall.
     Docs absent from ``doc_groups`` are untouched.

@@ -1,21 +1,15 @@
-"""Round-7 operators — built and parity-proven during round 6 under a
-catalog freeze, PROMOTED to the live catalog in round 7.
+"""Sampling, statistics, time-series, graph and set-similarity queries.
 
-History: the live catalog was frozen at 214 entries through round 6 so
-the driver's 50-query correctness prefix could close the last 31
-never-driver-checked rows (CORRECTNESS_r06.json did — union 214/214).
-These 16 specs were built during that freeze with the same
-:class:`QuerySpec` contract and exact-DuckDB parity tests
-(tests/test_round7_staged.py), then promoted at the round-6→7 boundary:
-``catalog._load_all`` merges ``STAGED()`` into the live registry, so the
-driver rotation now samples them first (they are the never-checked
-tier). Standing rule: new operators stage here mid-round and promote
-only at round boundaries.
+Weighted and per-group priority sampling, PMI and Zipf token statistics,
+OHLC bars and gap-filled hourly series, token Gini, basket lift,
+triangle counts, the Pareto frontier, the prefix-filtered Jaccard
+self-join, session n-grams, the KS distance, MAD outliers and interval
+islands. Each spec is proven by its exact DuckDB oracle
+(``tools/check_parity.py``; direct tests in
+tests/test_analytics_queries.py).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,30 +24,16 @@ from dbt_glue_spark.extensions import (
 )
 from dbt_glue_spark.extensions.sampling import _PRIORITY_SPACE
 from dbt_glue_spark.extensions.sketches import _duck_hash_int
-from dbt_glue_spark.plans.catalog import QuerySpec
+from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.plans.extension_queries import _SH as _ext_SH
 from dbt_glue_spark.sources.registry import load_table
-
-_STAGED: dict[str, QuerySpec] = {}
-
-
-def register_staged(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _STAGED[name] = QuerySpec(name, fn, oracle, doc)
-        return fn
-
-    return deco
-
-
-def STAGED() -> dict[str, QuerySpec]:
-    return dict(_STAGED)
 
 
 _WS_K = 256
 _WS_W = "GREATEST(COALESCE(CAST(n_chars AS BIGINT), 1), 1)"
 
 
-@register_staged(
+@register(
     "ext_weighted_sample",
     f"""
     WITH pri AS (
@@ -88,7 +68,7 @@ def ext_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.weighted_sample(docs, "doc_id", "n_chars", k=_WS_K, seed="7")
 
 
-@register_staged(
+@register(
     "ext_pmi_pairs",
     r"""
     WITH tok AS (
@@ -135,7 +115,7 @@ def ext_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_analysis.pmi_pairs(docs, "text", window=3, min_count=5, k=50)
 
 
-@register_staged(
+@register(
     "ext_zipf_buckets",
     r"""
     WITH tk AS (
@@ -185,7 +165,7 @@ _OHLC_R = """
 """
 
 
-@register_staged(
+@register(
     "ext_ohlc_hourly",
     _OHLC_R
     + """
@@ -208,7 +188,7 @@ def ext_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return timeseries.ohlc_bars(ev, "ts", "event_type", "value", "event_id")
 
 
-@register_staged(
+@register(
     "ext_gap_fill_hourly",
     _OHLC_R
     + """,
@@ -253,7 +233,7 @@ def ext_gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_token_gini",
     r"""
     WITH tok AS (
@@ -294,7 +274,7 @@ _BASKET_D = """
 """
 
 
-@register_staged(
+@register(
     "ext_basket_lift",
     _BASKET_D
     + """,
@@ -324,7 +304,7 @@ def ext_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return associations.basket_lift_pairs(li, "l_orderkey", "l_partkey", 2, 100)
 
 
-@register_staged(
+@register(
     "ext_triangle_parts",
     _BASKET_D
     + """,
@@ -358,7 +338,7 @@ def ext_triangle_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph.triangle_counts(edges, k=20)
 
 
-@register_staged(
+@register(
     "ext_pareto_orders",
     r"""
     WITH xg AS (
@@ -390,7 +370,7 @@ def ext_pareto_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_prefix_jaccard_join",
     "WITH "
     + _ext_SH
@@ -426,7 +406,7 @@ def ext_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.prefix_jaccard_pairs(docs, "text", "doc_id", 3, (1, 2))
 
 
-@register_staged(
+@register(
     "ext_session_trigrams",
     r"""
     WITH ev AS (
@@ -458,7 +438,7 @@ def ext_session_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "streaming_ohlc",
     _OHLC_R
     + """
@@ -516,7 +496,7 @@ def streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WSG_K = 64
 
 
-@register_staged(
+@register(
     "ext_weighted_sample_by_source",
     f"""
     WITH pri AS (
@@ -556,7 +536,7 @@ def ext_weighted_sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@register_staged(
+@register(
     "ext_ks_distance",
     r"""
     WITH v AS (
@@ -606,7 +586,7 @@ def ext_ks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_mad_outliers",
     r"""
     WITH med AS (
@@ -650,7 +630,7 @@ def ext_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mad_outliers(orders, "o_orderpriority", "o_totalprice", 3.0)
 
 
-@register_staged(
+@register(
     "ext_interval_islands",
     r"""
     WITH iv AS (

@@ -42,6 +42,8 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 def register(name: str, oracle: str | None, doc: str = ""):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in _REGISTRY:
+            raise ValueError(f"catalog query {name!r} is already registered")
         _REGISTRY[name] = QuerySpec(name, fn, oracle, doc)
         return fn
 
@@ -49,60 +51,20 @@ def register(name: str, oracle: str | None, doc: str = ""):
 
 
 def _load_all() -> None:
-    # imports populate _REGISTRY via the register decorator
+    # imports populate _REGISTRY via the register decorator; this order is
+    # the registration order _interleave keeps within each family
     from dbt_glue_spark.plans import relational  # noqa: F401
     from dbt_glue_spark.plans import tpch_suite  # noqa: F401
     from dbt_glue_spark.plans import materialization_queries  # noqa: F401
     from dbt_glue_spark.plans import extension_queries  # noqa: F401
     from dbt_glue_spark.plans import udf_queries  # noqa: F401
-
-    # Round-7 promotion: the 16 operators staged (and parity-proven) during
-    # round 6 join the live catalog. Staging-then-promoting at round
-    # boundaries is the standing rule — mid-round additions would dilute
-    # the driver's sampled correctness prefix (see round7_staged docstring).
-    from dbt_glue_spark.plans import round7_staged
-
-    _REGISTRY.update(round7_staged.STAGED())
-
-    # Round-8 promotion: the 6 operators staged (and ×7-profile
-    # parity-proven) during round 7 join the live catalog (230 → 236).
-    from dbt_glue_spark.plans import round8_staged
-
-    _REGISTRY.update(round8_staged.STAGED8())
-
-    # Round-9 promotion: the 10 operators staged (and ×8-profile
-    # parity-proven) during round 8 join the live catalog (236 → 246).
-    from dbt_glue_spark.plans import round9_staged
-
-    _REGISTRY.update(round9_staged.STAGED9())
-
-    # Round-10 promotion: the 24 operators staged (and ×11-axis
-    # parity-proven) during round 9 join the live catalog (246 → 270):
-    # the crawl/URL tier, token-budget mixture tier, Gopher quality
-    # flags, nonfinite audits, and the SFT/chat tier.
-    from dbt_glue_spark.plans import round10_staged
-
-    _REGISTRY.update(round10_staged.STAGED10())
-
-    # Round-11 promotion: the 13 operators staged (and ×12-directory
-    # exact-parity-proven) during round 10 join the live catalog
-    # (270 → 283): the multimodal-dedup tier on REAL decoders
-    # (perceptual image/video/audio near-dup, scene/keyframe manifests,
-    # decode audit, media data card), the k-anonymity / l-diversity
-    # privacy censuses, and the streaming image frontier.
-    from dbt_glue_spark.plans import round11_staged
-
-    _REGISTRY.update(round11_staged.STAGED11())
-
-    # Round-12 promotion: the 9 operators staged (and ×12-directory
-    # exact-parity-proven) during round 11 join the live catalog
-    # (283 → 292): the cross-modal pair tier (caption consistency/spam
-    # censuses, paired keep-best with joint-class survivor consistency,
-    # modality mixture card, paired contamination, pair completeness/
-    # alignment) and the streaming mixture monitor + pair frontier.
-    from dbt_glue_spark.plans import round12_staged
-
-    _REGISTRY.update(round12_staged.STAGED12())
+    from dbt_glue_spark.plans import analytics_queries  # noqa: F401
+    from dbt_glue_spark.plans import span_interval_queries  # noqa: F401
+    from dbt_glue_spark.plans import drift_audit_queries  # noqa: F401
+    from dbt_glue_spark.plans import curation_queries  # noqa: F401
+    from dbt_glue_spark.plans import media_dedup_queries  # noqa: F401
+    from dbt_glue_spark.plans import crossmodal_queries  # noqa: F401
+    from dbt_glue_spark.plans import embedding_curation_queries  # noqa: F401
 
 
 def _family(name: str) -> str:

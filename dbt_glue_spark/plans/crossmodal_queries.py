@@ -1,11 +1,7 @@
-"""Round-12 STAGED queries — built and parity-proven during round 11,
-to be promoted at the round-11→12 boundary (standing rule: new operators
-stage mid-round so the driver's sampled correctness prefix stays closed
-over the live catalog, and promote only between rounds).
+"""Cross-modal (caption, image) pair queries.
 
-The tier is the r10 VERDICT "Next round" item-6 brief — CROSS-MODAL
-PAIRS, the one LLM-pipeline seam with analysis on both sides (text
-dedup, perceptual media dedup) but, before this tier, no JOINT
+CROSS-MODAL PAIRS, the one LLM-pipeline seam with analysis on both sides
+(text dedup, perceptual media dedup) but, before this module, no JOINT
 operator (``extensions/crossmodal.py``):
 
 - ``ext_caption_consistency`` — the mislabeled-pair census: for every
@@ -55,29 +51,15 @@ doc_id % 17 == 0 → undecodable bytes; both drop from joint classes.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.catalog import QuerySpec
-from dbt_glue_spark.plans.round11_staged import synth_image_bytes
+from dbt_glue_spark.plans.catalog import register
+from dbt_glue_spark.plans.media_dedup_queries import synth_image_bytes
 from dbt_glue_spark.sources.registry import load_table
-
-_STAGED12: dict[str, QuerySpec] = {}
-
-
-def register_staged(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _STAGED12[name] = QuerySpec(name, fn, oracle, doc)
-        return fn
-
-    return deco
-
-
-def STAGED12() -> dict[str, QuerySpec]:
-    return dict(_STAGED12)
 
 
 def synth_caption(doc_id: int) -> str | None:
@@ -136,7 +118,7 @@ _CAP = """CASE WHEN doc_id % 13 = 0 THEN 'stock'
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_caption_consistency",
     f"""
     WITH m AS (
@@ -174,7 +156,7 @@ def ext_caption_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_caption_spam",
     f"""
     WITH m AS (
@@ -207,7 +189,7 @@ def ext_caption_spam(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_paired_keep_best",
     f"""
     WITH m AS (
@@ -255,7 +237,7 @@ def ext_paired_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MMC_BUDGET = 2_000
 
 
-@register_staged(
+@register(
     "ext_modality_mixture_card",
     f"""
     WITH per AS (
@@ -373,7 +355,7 @@ def ext_modality_mixture_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_paired_contamination",
     f"""
     WITH m AS (
@@ -417,7 +399,7 @@ def ext_paired_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_pair_completeness",
     """
     WITH m AS (
@@ -480,7 +462,7 @@ def _alignment_oracle() -> str:
     """
 
 
-@register_staged(
+@register(
     "ext_pair_alignment",
     _alignment_oracle(),
     doc="Cross-modal embedding alignment histogram "
@@ -525,7 +507,7 @@ def ext_pair_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "streaming_mixture_monitor",
     """
     WITH per AS (
@@ -650,7 +632,7 @@ def streaming_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "streaming_pair_frontier",
     f"""
     WITH m AS (

@@ -1,16 +1,11 @@
-"""Round-10 pool — built and parity-proven during round 9, PROMOTED at
-the round-9→10 boundary (catalog 246 → 270; standing rule: new operators
-stage mid-round so the driver's sampled correctness prefix stays closed
-over the live catalog, and promote only between rounds).
+"""Crawl, mixture, quality and chat/SFT curation queries.
 
-Same :class:`QuerySpec` contract and exact-DuckDB gates as the earlier
-pools (tests/test_round10_staged.py, every pathological data profile).
-Promotion = merge ``STAGED10()`` into ``catalog._load_all`` exactly like
-round7/8/9_staged.
+Same :class:`QuerySpec` contract and exact-DuckDB gates as every catalog
+module (tests/test_curation_queries.py, every pathological data
+profile).
 
-The tier is the VERDICT r8 "Next round" item-5 brief — the crawl-side /
-mixture-side operators a production training-data pipeline runs before
-and after document dedup:
+The crawl-side / mixture-side operators a production training-data
+pipeline runs before and after document dedup:
 
 - ``ext_url_dedup`` — URL canonicalization + exact URL-level dedup
   (web.url_dedup): tracking params, case, default ports, fragments and
@@ -37,27 +32,11 @@ steps, so a canonicalization bug cannot cancel out of both sides.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.catalog import QuerySpec
+from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.sources.registry import load_table
-
-_STAGED10: dict[str, QuerySpec] = {}
-
-
-def register_staged(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _STAGED10[name] = QuerySpec(name, fn, oracle, doc)
-        return fn
-
-    return deco
-
-
-def STAGED10() -> dict[str, QuerySpec]:
-    return dict(_STAGED10)
 
 
 # ---------------------------------------------------------------------------
@@ -115,7 +94,7 @@ _SQL_CANON = (
 _SQL_DOMAIN = f"'src' || CAST({_SQL_G} % 7 AS VARCHAR) || 'ex.' || {_SQL_SUFFIX}"
 
 
-@register_staged(
+@register(
     "ext_url_dedup",
     f"""
     SELECT {_SQL_CANON} AS canon_url,
@@ -146,7 +125,7 @@ def ext_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return url_dedup(docs, "url", "doc_id")
 
 
-@register_staged(
+@register(
     "ext_domain_caps",
     f"""
     WITH d AS (
@@ -188,7 +167,7 @@ def ext_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TBA_BUDGET = 30_000
 
 
-@register_staged(
+@register(
     "ext_token_budget_alloc",
     f"""
     WITH per AS (
@@ -275,7 +254,7 @@ def ext_token_budget_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_gopher_quality_flags",
     r"""
     WITH base AS (
@@ -357,7 +336,7 @@ def ext_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_line_dedup",
     r"""
     WITH w AS (
@@ -435,7 +414,7 @@ def ext_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TM_BUDGET = 50_000
 
 
-@register_staged(
+@register(
     "ext_temperature_mixture",
     f"""
     WITH per AS (
@@ -482,7 +461,7 @@ def ext_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     return temperature_mixture(docs, "source", "n_chars", _TM_BUDGET)
 
 
-@register_staged(
+@register(
     "ext_quality_threshold_sweep",
     """
     WITH d AS (
@@ -532,7 +511,7 @@ def ext_quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return threshold_retention(docs, "q", "n_chars", 100)
 
 
-@register_staged(
+@register(
     "ext_url_frontier_ledger",
     f"""
     WITH seen AS (
@@ -572,7 +551,7 @@ def ext_url_frontier_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     return url_frontier_new(batch, ledger)
 
 
-@register_staged(
+@register(
     "ext_domain_quality_agg",
     f"""
     SELECT {_SQL_DOMAIN} AS domain,
@@ -610,7 +589,7 @@ def ext_domain_quality_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "streaming_url_frontier",
     f"""
     SELECT DISTINCT {_SQL_CANON} AS canon_url
@@ -676,7 +655,7 @@ def streaming_url_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_dedup_keep_best",
     """
     WITH d AS (
@@ -721,7 +700,7 @@ _ERP_BUDGET = 1_000_000
 _ERP_E = 4
 
 
-@register_staged(
+@register(
     "ext_epoch_repeat_plan",
     f"""
     WITH per AS (
@@ -807,7 +786,7 @@ def ext_epoch_repeat_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_tokenizer_fertility",
     r"""
     WITH d AS (
@@ -869,7 +848,7 @@ def ext_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_curriculum_stages",
     """
     WITH d AS (
@@ -950,7 +929,7 @@ _SQL_RAW_CLEAN = (
 )
 
 
-@register_staged(
+@register(
     "ext_nonfinite_audit",
     f"""
     WITH e AS (SELECT event_id % 11 AS m, value FROM events),
@@ -1023,7 +1002,7 @@ def ext_nonfinite_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nonfinite_audit(ev, ["value_m", "value"])
 
 
-@register_staged(
+@register(
     "ext_nonfinite_sanitize",
     f"""
     WITH e AS (
@@ -1128,7 +1107,7 @@ def _synth_turns_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_chat_turn_validation",
     f"""
     WITH t AS ({_SQL_TURNS}),
@@ -1207,7 +1186,7 @@ def ext_chat_turn_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return validate_turns(_synth_turns_spark(spark, sf_dir))
 
 
-@register_staged(
+@register(
     "ext_chat_response_dedup",
     f"""
     WITH t AS ({_SQL_TURNS}),
@@ -1254,7 +1233,7 @@ def ext_chat_response_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRUNC_L = 64
 
 
-@register_staged(
+@register(
     "ext_chat_truncation_plan",
     f"""
     WITH t AS ({_SQL_TURNS}),
@@ -1370,7 +1349,7 @@ _SQL_PAIRS_PFX = _SQL_PAIRS.replace("e.text", "substr(e.text, 1, 24)").replace(
 )
 
 
-@register_staged(
+@register(
     "ext_preference_pair_audit",
     f"""
     WITH p AS ({_SQL_PAIRS_PFX}),
@@ -1418,7 +1397,7 @@ def ext_preference_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return preference_pair_audit(_synth_pairs_spark(spark, sf_dir, prefix=24))
 
 
-@register_staged(
+@register(
     "ext_preference_length_bias",
     f"""
     WITH p AS ({_SQL_PAIRS}),
@@ -1468,7 +1447,7 @@ def ext_preference_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     return preference_length_bias(_synth_pairs_spark(spark, sf_dir))
 
 
-@register_staged(
+@register(
     "streaming_chat_response_dedup",
     """
     WITH t AS (
@@ -1539,29 +1518,6 @@ def streaming_chat_response_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     return spark.table(name)
 
 
-@register_staged(
-    "ext_cluster_keep_best",
-    None,  # oracle assigned below (reuses the recursive clusters CTE)
-    doc="Quality-argmax survivor per NEAR-DUP CLUSTER "
-    "(dedup.cluster_keep_best): connected components over 3-gram-"
-    "Jaccard>=0.5 pairs, then keep the highest-scored member of each "
-    "transitive family (ties -> lowest id; NULL score loses via -1 "
-    "coalesce) — the FineWeb curation rule applied at cluster "
-    "granularity, where dedup_apply's greedy pairwise keep-lowest-id "
-    "can silently discard the best copy. Oracle replays the recursive-"
-    "CTE transitive closure + an argmax window; the Spark side is the "
-    "label-propagation loop + ONE cluster-keyed groupBy with the "
-    "min(struct(-q, id)) argmax — no window, no join-back.",
-)
-def ext_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbt_glue_spark.extensions import dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.5)
-    scored = docs.select("doc_id", (F.col("n_chars") % 1000).alias("q"))
-    return dedup.cluster_keep_best(scored, pairs, "doc_id", "q")
-
-
 def _cluster_keep_best_oracle() -> str:
     from dbt_glue_spark.plans.extension_queries import _CLUSTERS_SQL
 
@@ -1591,15 +1547,30 @@ def _cluster_keep_best_oracle() -> str:
     )
 
 
-_STAGED10["ext_cluster_keep_best"] = QuerySpec(
+@register(
     "ext_cluster_keep_best",
-    ext_cluster_keep_best,
     _cluster_keep_best_oracle(),
-    _STAGED10["ext_cluster_keep_best"].doc,
+    doc="Quality-argmax survivor per NEAR-DUP CLUSTER "
+    "(dedup.cluster_keep_best): connected components over 3-gram-"
+    "Jaccard>=0.5 pairs, then keep the highest-scored member of each "
+    "transitive family (ties -> lowest id; NULL score loses via -1 "
+    "coalesce) — the FineWeb curation rule applied at cluster "
+    "granularity, where dedup_apply's greedy pairwise keep-lowest-id "
+    "can silently discard the best copy. Oracle replays the recursive-"
+    "CTE transitive closure + an argmax window; the Spark side is the "
+    "label-propagation loop + ONE cluster-keyed groupBy with the "
+    "min(struct(-q, id)) argmax — no window, no join-back.",
 )
+def ext_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from dbt_glue_spark.extensions import dedup
+
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.5)
+    scored = docs.select("doc_id", (F.col("n_chars") % 1000).alias("q"))
+    return dedup.cluster_keep_best(scored, pairs, "doc_id", "q")
 
 
-@register_staged(
+@register(
     "ext_chat_render",
     f"""
     WITH t AS ({_SQL_TURNS}),

@@ -1,12 +1,8 @@
-"""Round-13 STAGED queries — built and parity-proven during round 12,
-to be promoted at the round-12→13 boundary (standing rule: new operators
-stage mid-round so the driver's sampled correctness prefix stays closed
-over the live catalog, and promote only between rounds).
+"""Embedding-side curation queries.
 
-The tier is the r11 VERDICT "Next round" item-6 brief — the EMBEDDING-
-SIDE curation seam. The embeddings table already carries kNN (brute/
-LSH/IVF/quantized), k-means, SemDeDup-style prototypical dedup
-(``ext_semantic_dedup``) and an LSH recall audit; what it lacked:
+The embeddings table already carries kNN (brute/LSH/IVF/quantized),
+k-means, SemDeDup-style prototypical dedup (``ext_semantic_dedup``) and
+an LSH recall audit; this module adds:
 
 - ``ext_semantic_keep_best`` — semantic dedup with QUALITY-ARGMAX
   survivor selection (``clustering.semantic_keep_best``): semantic
@@ -72,32 +68,16 @@ via bigint division. No floats cross engines un-rounded.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.catalog import QuerySpec
+from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.plans.extension_queries import (
     _KMEANS_CTE,
     _bucket_sql,
     _cos_sql,
 )
 from dbt_glue_spark.sources.registry import load_table
-
-_STAGED13: dict[str, QuerySpec] = {}
-
-
-def register_staged(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _STAGED13[name] = QuerySpec(name, fn, oracle, doc)
-        return fn
-
-    return deco
-
-
-def STAGED13() -> dict[str, QuerySpec]:
-    return dict(_STAGED13)
 
 
 # Shared oracle tails over the replayed Lloyd assignment: m = (id, cid,
@@ -172,7 +152,7 @@ _EDGES_CLOSURE_CTE = (
 )
 
 
-@register_staged(
+@register(
     "ext_semantic_keep_best",
     _KMEANS_CTE
     + _M_CTE
@@ -214,7 +194,7 @@ def ext_semantic_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_semantic_contamination",
     _KMEANS_CTE
     + _M_CTE
@@ -300,7 +280,7 @@ _IVF_CTE = r"""
 """
 
 
-@register_staged(
+@register(
     "ext_ivf_recall_audit",
     _IVF_CTE
     + """
@@ -387,7 +367,7 @@ def ext_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_semantic_dedup_recall",
     _KMEANS_CTE
     + _M_CTE
@@ -443,7 +423,7 @@ def ext_semantic_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_semantic_class_card",
     _KMEANS_CTE
     + _M_CTE
@@ -538,7 +518,7 @@ _QUANT_CTE = """
 """
 
 
-@register_staged(
+@register(
     "ext_quantized_recall_audit",
     _QUANT_CTE
     + """
@@ -611,7 +591,7 @@ def ext_quantized_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "streaming_embedding_frontier",
     f"""
     WITH base AS MATERIALIZED (
@@ -716,7 +696,7 @@ def streaming_embedding_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_semantic_purity",
     _KMEANS_CTE
     + """
@@ -805,7 +785,7 @@ def ext_semantic_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_ivf_cell_card",
     _IVF_CTE
     + """
@@ -851,7 +831,7 @@ def ext_ivf_cell_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_semantic_dedup_incremental",
     _KMEANS_CTE
     + """
@@ -927,7 +907,7 @@ def ext_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@register_staged(
+@register(
     "ext_embedding_drift",
     _KMEANS_CTE
     + """

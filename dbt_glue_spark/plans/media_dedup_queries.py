@@ -1,17 +1,10 @@
-"""Round-11 queries — built and parity-proven during round 10, PROMOTED
-at the round-10→11 boundary into the live catalog (270 → 283; standing
-rule: new operators stage mid-round so the driver's sampled correctness
-prefix stays closed over the live catalog, and promote only between
-rounds).
+"""Multimodal dedup and privacy-census queries.
 
-Same :class:`QuerySpec` contract and exact-DuckDB gates as the earlier
-pools (tests/test_round11_staged.py, every pathological data profile).
-Promotion = merge ``STAGED11()`` into ``catalog._load_all`` exactly like
-round7/8/9/10_staged.
+Same :class:`QuerySpec` contract and exact-DuckDB gates as every catalog
+module (every pathological data profile).
 
-The tier is the r9 VERDICT "Next round" item-5 brief — MULTIMODAL DEDUP,
-the one LLM-pipeline family where the catalog had analysis
-(multimodal.py features/resize/resample) but no dedup:
+MULTIMODAL DEDUP, the one LLM-pipeline family where the catalog had
+analysis (multimodal.py features/resize/resample) but no dedup:
 
 - ``ext_image_dhash_dedup`` — perceptual exact-duplicate manifest over
   dHash (brightness-shifted re-encodes collapse onto one hash);
@@ -84,22 +77,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions.multimodal import png_encode, video_encode
-from dbt_glue_spark.plans.catalog import QuerySpec
+from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.sources.registry import load_table
-
-_STAGED11: dict[str, QuerySpec] = {}
-
-
-def register_staged(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _STAGED11[name] = QuerySpec(name, fn, oracle, doc)
-        return fn
-
-    return deco
-
-
-def STAGED11() -> dict[str, QuerySpec]:
-    return dict(_STAGED11)
 
 
 # ---------------------------------------------------------------------------
@@ -332,7 +311,7 @@ def _synth_media(
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_image_dhash_dedup",
     """
     WITH m AS (
@@ -367,7 +346,7 @@ def ext_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_image_near_dup_pairs",
     """
     WITH m AS (
@@ -405,7 +384,7 @@ def ext_image_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_video_near_dup",
     """
     WITH m AS (
@@ -450,7 +429,7 @@ def ext_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_audio_fingerprint_pairs",
     """
     WITH m AS (
@@ -489,7 +468,7 @@ def ext_audio_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_media_decode_audit",
     """
     WITH m AS (
@@ -535,7 +514,7 @@ def ext_media_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_image_dup_clusters",
     """
     WITH m AS (
@@ -570,7 +549,7 @@ def ext_image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_video_scene_changes",
     """
     SELECT CAST(doc_id AS BIGINT) AS media_id,
@@ -604,7 +583,7 @@ def ext_video_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_audio_snippet_match",
     """
     WITH m AS (
@@ -644,7 +623,7 @@ def ext_audio_snippet_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_video_keyframes",
     """
     WITH v AS (
@@ -681,7 +660,7 @@ def ext_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_k_anonymity",
     """
     WITH cls AS (
@@ -714,7 +693,7 @@ def ext_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_anonymity(docs, ["lang", "source", "__bucket"], k=5)
 
 
-@register_staged(
+@register(
     "ext_l_diversity",
     """
     WITH cls AS (
@@ -752,7 +731,7 @@ def ext_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "streaming_image_frontier",
     """
     WITH m AS (
@@ -858,7 +837,7 @@ def streaming_image_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_media_data_card",
     """
     WITH m AS (

@@ -1,13 +1,9 @@
-"""Round-8 STAGED queries — built and parity-proven during round 7,
-promoted at the round-7→8 boundary (standing rule from VERDICT r6: new
-operators stage mid-round so the driver's sampled correctness prefix
-stays closed over the live catalog, and promote only between rounds).
+"""Span, ledger, change-point and interval queries.
 
-Same :class:`QuerySpec` contract and exact-DuckDB gates as the round-7
-pool (tests/test_round8_staged.py, ×7 data profiles). Promotion = merge
-``STAGED8()`` into ``catalog._load_all`` exactly like round7_staged.
+Same :class:`QuerySpec` contract and exact-DuckDB gates as every catalog
+module (tests/test_span_interval_queries.py, ×7 data profiles).
 
-The three operators close VERDICT r6 item 4 (the next staged tier):
+Three of the operators:
 
 - ``ext_exact_substring_spans`` — stride-1 Lee-et-al. ExactSubstr
   coverage (dedup.exact_substring_spans);
@@ -21,33 +17,17 @@ The three operators close VERDICT r6 item 4 (the next staged tier):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions import dedup
-from dbt_glue_spark.plans.catalog import QuerySpec
+from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.sources.registry import load_table
-
-_STAGED8: dict[str, QuerySpec] = {}
-
-
-def register_staged(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _STAGED8[name] = QuerySpec(name, fn, oracle, doc)
-        return fn
-
-    return deco
-
-
-def STAGED8() -> dict[str, QuerySpec]:
-    return dict(_STAGED8)
 
 
 _ESS_L = 16
 
-@register_staged(
+@register(
     "ext_exact_substring_spans",
     rf"""
     WITH tok AS (
@@ -188,7 +168,7 @@ def _compaction_oracle() -> str:
     """
 
 
-@register_staged(
+@register(
     "ext_ledger_compaction",
     _compaction_oracle(),
     doc="Cross-run near-dup ledger compaction (dedup.compact_band_ledger "
@@ -238,12 +218,13 @@ _PS_K = 256
 def _priority_sample_oracle() -> str:
     # the streamed ledger must equal the ONE-SHOT batch sample exactly —
     # reuse the promoted batch query's oracle verbatim (same k/seed/space)
-    from dbt_glue_spark.plans.round7_staged import STAGED
+    from dbt_glue_spark.plans import analytics_queries  # noqa: F401
+    from dbt_glue_spark.plans.catalog import _REGISTRY
 
-    return STAGED()["ext_weighted_sample"].oracle
+    return _REGISTRY["ext_weighted_sample"].oracle
 
 
-@register_staged(
+@register(
     "streaming_priority_sample",
     _priority_sample_oracle(),
     doc="Streaming twin of ext_weighted_sample "
@@ -297,7 +278,7 @@ def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_cusum_changepoints",
     """
     WITH base AS (
@@ -360,7 +341,7 @@ def ext_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_sorted_neighborhood",
     r"""
     WITH base AS (
@@ -397,7 +378,7 @@ def ext_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_interval_overlap_join",
     """
     WITH a AS (

@@ -1,7 +1,9 @@
-"""Round-7 staged operators — promoted to the live catalog at the r6→7
-boundary (see plans/round7_staged.py docstring). These tests keep the
-direct exact-DuckDB parity proofs for the 16 specs and pin the promotion
-contract: all 16 live, and sampled first by the driver rotation.
+"""Direct tests for the queries in plans/analytics_queries.py (sampling,
+statistics, time series, graph and set-similarity operators).
+
+Each spec is proven against its DuckDB oracle with the exact compare of
+tools/check_parity.py; each operator also gets hand-computed,
+brute-force or property checks.
 """
 
 from __future__ import annotations
@@ -11,57 +13,24 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.round7_staged import STAGED
-from tools.check_parity import duck_con, normalize, values_equal
+from dbt_glue_spark.plans import analytics_queries
+from dbt_glue_spark.plans.catalog import SPECS
+from tools.check_parity import compare
 
 # Promotion-gate / full-sweep module: deselected by default so the suite
 # fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
-STAGED_NAMES = sorted(STAGED())
+
+SPECS_HERE = {
+    n: s for n, s in SPECS().items() if s.fn.__module__ == analytics_queries.__name__
+}
 
 
-def _exact_compare(spark, sf_dir, spec):
-    sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(spec.oracle)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    sn, dn = normalize(srows, scols), normalize(drows, dcols)
-    assert len(sn) == len(dn), (len(sn), len(dn))
-    for r1, r2 in zip(sn, dn):
-        assert all(values_equal(a, b) for a, b in zip(r1, r2)), (r1, r2)
-
-
-@pytest.mark.parametrize("name", STAGED_NAMES)
-def test_staged_oracle_parity(spark, sf_dir, name):
-    _exact_compare(spark, sf_dir, STAGED()[name])
-
-
-def test_staged_operators_promoted_and_sampled_first():
-    """Round-7 promotion contract, in rotation-invariant form: all 16
-    staged operators are live in the catalog, and any of them WITHOUT a
-    green latest driver CORRECTNESS row sits in the never-checked tier,
-    i.e. inside the driver's 50-query sampled prefix. (The r7 original
-    hard-coded prefix membership, which was only true *before* the driver
-    wrote CORRECTNESS_r07.json — once the 16 earned green rows, the
-    rotation correctly deprioritized them and the assertion rotted. This
-    form stays true before AND after a driver run.)"""
-    from dbt_glue_spark.plans.catalog import SPECS, _previously_checked
-
-    specs = SPECS()
-    missing = set(STAGED_NAMES) - set(specs)
-    assert not missing, missing
-    prefix = set(list(specs)[:50])
-    unchecked = set(STAGED_NAMES) - _previously_checked()
-    not_in_prefix = unchecked - prefix
-    assert not not_in_prefix, not_in_prefix
+@pytest.mark.parametrize("name", sorted(SPECS_HERE))
+def test_oracle_parity(spark, sf_dir, name):
+    err = compare(spark, SPECS_HERE[name], sf_dir)
+    assert err is None, err
 
 
 def test_weighted_sample_layout_invariant(spark, sf_dir):
@@ -438,7 +407,7 @@ def test_staged_survive_empty_input(spark, sf_dir, tmp_path_factory):
         load_table(spark, sf_dir, t).limit(0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, f"{t}.parquet"))
-    for name, spec in sorted(STAGED().items()):
+    for name, spec in sorted(SPECS_HERE.items()):
         df = spec.fn(spark, out)
         rows = df.collect()
         assert isinstance(rows, list), name
@@ -719,7 +688,7 @@ def test_staged_driver_contract(spark, sf_dir):
 
     from tests.test_driver_contract import NESTED, _driver_canon
 
-    for name, spec in sorted(STAGED().items()):
+    for name, spec in sorted(SPECS_HERE.items()):
         df = spec.fn(spark, sf_dir)
         nested = [
             f.name for f in df.schema.fields if isinstance(f.dataType, NESTED)

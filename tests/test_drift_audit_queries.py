@@ -1,8 +1,9 @@
-"""Round-9 pool: staged and parity-proven during round 8, PROMOTED at the
-round-8→9 boundary (catalog 236 → 246; plans/round9_staged.py docstring).
-These tests prove the specs with the same exact DuckDB compare the live
-sweep uses, pin the promotion contract rotation-invariantly, and
-brute-force / property-check each operator.
+"""Direct tests for the queries in plans/drift_audit_queries.py (drift,
+PPSWOR sampling, contamination ledger and corpus-growth audits).
+
+Each spec is proven against its DuckDB oracle with the exact compare of
+tools/check_parity.py; each operator also gets hand-computed,
+brute-force or property checks.
 """
 
 from __future__ import annotations
@@ -12,56 +13,24 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.round9_staged import STAGED9
-from tools.check_parity import duck_con, normalize, values_equal
+from dbt_glue_spark.plans import drift_audit_queries
+from dbt_glue_spark.plans.catalog import SPECS
+from tools.check_parity import compare
 
 # Promotion-gate / full-sweep module: deselected by default so the suite
 # fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
-STAGED9_NAMES = sorted(STAGED9())
+
+SPECS_HERE = {
+    n: s for n, s in SPECS().items() if s.fn.__module__ == drift_audit_queries.__name__
+}
 
 
-def _exact_compare(spark, sf_dir, spec):
-    sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(spec.oracle)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    sn, dn = normalize(srows, scols), normalize(drows, dcols)
-    assert len(sn) == len(dn), (len(sn), len(dn))
-    for r1, r2 in zip(sn, dn):
-        assert all(values_equal(a, b) for a, b in zip(r1, r2)), (r1, r2)
-
-
-@pytest.mark.parametrize("name", STAGED9_NAMES)
-def test_staged9_oracle_parity(spark, sf_dir, name):
-    _exact_compare(spark, sf_dir, STAGED9()[name])
-
-
-def test_staged9_promoted_and_sampled_first():
-    """Round-9 promotion contract (rotation-invariant form, per the r7
-    verdict's time-bomb lesson): the 10 staged operators are live in the
-    catalog (236 + 10 = 246), and any of them WITHOUT a green latest
-    driver CORRECTNESS row sits in the driver's 50-query sampled prefix
-    — true before the driver run (all 10 in the never-checked tier) and
-    after it (green rows rotate out, red rows must re-enter)."""
-    from dbt_glue_spark.plans.catalog import SPECS, _previously_checked
-
-    specs = SPECS()
-    assert len(specs) >= 246, len(specs)  # 246 at r9; later rounds promote more
-    missing = set(STAGED9_NAMES) - set(specs)
-    assert not missing, missing
-    prefix = set(list(specs)[:50])
-    unchecked = set(STAGED9_NAMES) - _previously_checked()
-    not_in_prefix = unchecked - prefix
-    assert not not_in_prefix, not_in_prefix
+@pytest.mark.parametrize("name", sorted(SPECS_HERE))
+def test_oracle_parity(spark, sf_dir, name):
+    err = compare(spark, SPECS_HERE[name], sf_dir)
+    assert err is None, err
 
 
 # ---------------------------------------------------------------------------
@@ -395,7 +364,7 @@ def test_staged9_survive_empty_input(spark, sf_dir, tmp_path_factory):
         load_table(spark, sf_dir, t).limit(0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, f"{t}.parquet"))
-    for name, spec in sorted(STAGED9().items()):
+    for name, spec in sorted(SPECS_HERE.items()):
         rows = spec.fn(spark, out).collect()
         assert isinstance(rows, list), name
 
@@ -405,7 +374,7 @@ def test_staged9_driver_contract(spark, sf_dir):
     driver's canonicalization precondition."""
     from tests.test_driver_contract import NESTED, _driver_canon
 
-    for name, spec in sorted(STAGED9().items()):
+    for name, spec in sorted(SPECS_HERE.items()):
         df = spec.fn(spark, sf_dir)
         nested = [
             f.name for f in df.schema.fields if isinstance(f.dataType, NESTED)
@@ -455,26 +424,6 @@ def test_staged9_plan_shapes(spark, sf_dir):
             fn.__name__,
             hints,
         )
-
-
-def test_staged9_parity_under_forced_spill(spark, sf_dir):
-    """The round-9 pool through the same forced-spill axis the live
-    catalog faces: window/SMJ/session-window buffers pushed through
-    their external-sorter paths must not perturb any staged result."""
-    from tests.test_parity_sweep import SPILL_CONFS
-
-    old = {k: spark.conf.get(k, None) for k in SPILL_CONFS}
-    try:
-        for k, v in SPILL_CONFS.items():
-            spark.conf.set(k, v)
-        for name in STAGED9_NAMES:
-            _exact_compare(spark, sf_dir, STAGED9()[name])
-    finally:
-        for k, v in old.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,13 @@
-"""Round-13 staged operators (embedding-side curation tier): parity-proven
-now, catalog-registered at the round-12→13 boundary
-(plans/round13_staged.py docstring). These tests prove the staged specs
-with the same exact DuckDB compare the live sweep uses, pin the
-stage-then-promote discipline (the live catalog stays at 292 this round),
-and brute-force / property-check each operator — semantic keep-best's
-component structure and argmax law (NULL quality, ties), the
-contamination census against a brute-force derivation, IVF recall
-bounds and consistency, the bucketing-recall identity at k=1, and the
-class card's accounting identities against keep-best.
+"""Direct tests for the queries in plans/embedding_curation_queries.py
+(embedding-side curation).
+
+Each spec is proven against its DuckDB oracle with the exact compare of
+tools/check_parity.py; each operator also gets hand-computed,
+brute-force or property checks — semantic keep-best's component
+structure and argmax law (NULL quality, ties), the contamination census
+against a brute-force derivation, IVF recall bounds and consistency, the
+bucketing-recall identity at k=1, and the class card's accounting
+identities against keep-best.
 """
 
 from __future__ import annotations
@@ -18,50 +18,24 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.round13_staged import STAGED13
-from tools.check_parity import duck_con, normalize, values_equal
+from dbt_glue_spark.plans import embedding_curation_queries
+from dbt_glue_spark.plans.catalog import SPECS
+from tools.check_parity import compare
 
 # Promotion-gate / full-sweep module: deselected by default so the suite
 # fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
-STAGED13_NAMES = sorted(STAGED13())
+
+SPECS_HERE = {
+    n: s for n, s in SPECS().items() if s.fn.__module__ == embedding_curation_queries.__name__
+}
 
 
-def _exact_compare(spark, sf_dir, spec):
-    sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(spec.oracle)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    sn, dn = normalize(srows, scols), normalize(drows, dcols)
-    assert len(sn) == len(dn), (len(sn), len(dn))
-    for r1, r2 in zip(sn, dn):
-        assert all(values_equal(a, b) for a, b in zip(r1, r2)), (r1, r2)
-
-
-@pytest.mark.parametrize("name", STAGED13_NAMES)
-def test_staged13_oracle_parity(spark, sf_dir, name):
-    _exact_compare(spark, sf_dir, STAGED13()[name])
-
-
-def test_catalog_holds_at_292_and_staged13_not_registered():
-    """Stage-then-promote: the round-13 pool must NOT be live this round —
-    registering mid-round would push never-checked entries into the
-    driver's 50-query prefix and crowd out the 9 round-12 promotions
-    earning their first hard rows."""
-    from dbt_glue_spark.plans.catalog import SPECS
-
-    specs = SPECS()
-    assert len(specs) == 292, len(specs)
-    overlap = set(STAGED13_NAMES) & set(specs)
-    assert not overlap, overlap
+@pytest.mark.parametrize("name", sorted(SPECS_HERE))
+def test_oracle_parity(spark, sf_dir, name):
+    err = compare(spark, SPECS_HERE[name], sf_dir)
+    assert err is None, err
 
 
 # ---------------------------------------------------------------------------
@@ -212,7 +186,7 @@ def test_semantic_contamination_hand_case(spark):
 def test_semantic_contamination_output_bounded_by_eval(spark, sf_dir):
     """Every output row is an eval id; n_hits never exceeds the train
     corpus size."""
-    spec = STAGED13()["ext_semantic_contamination"]
+    spec = SPECS_HERE["ext_semantic_contamination"]
     rows = spec.fn(spark, sf_dir).collect()
     from dbt_glue_spark.sources.registry import load_table
 
@@ -232,7 +206,7 @@ def test_semantic_contamination_output_bounded_by_eval(spark, sf_dir):
 
 
 def test_ivf_recall_bounds_and_identity(spark, sf_dir):
-    spec = STAGED13()["ext_ivf_recall_audit"]
+    spec = SPECS_HERE["ext_ivf_recall_audit"]
     rows = spec.fn(spark, sf_dir).collect()
     assert rows  # the 10-query probe set exists at every sf
     for r in rows:
@@ -267,7 +241,7 @@ def test_ivf_recall_is_one_when_nprobe_covers_all_cells(spark, sf_dir):
 
 
 def test_semantic_dedup_recall_bounds(spark, sf_dir):
-    spec = STAGED13()["ext_semantic_dedup_recall"]
+    spec = SPECS_HERE["ext_semantic_dedup_recall"]
     row = spec.fn(spark, sf_dir).collect()[0]
     assert row.n_bucketed_pairs <= row.n_true_pairs
     if row.n_true_pairs > 0:
@@ -320,8 +294,8 @@ def test_semantic_class_card_accounting(spark, sf_dir):
     the exact bigint formula."""
     from dbt_glue_spark.sources.registry import load_table
 
-    card = STAGED13()["ext_semantic_class_card"].fn(spark, sf_dir).collect()
-    keep = STAGED13()["ext_semantic_keep_best"].fn(spark, sf_dir).collect()
+    card = SPECS_HERE["ext_semantic_class_card"].fn(spark, sf_dir).collect()
+    keep = SPECS_HERE["ext_semantic_keep_best"].fn(spark, sf_dir).collect()
     emb = load_table(spark, sf_dir, "embeddings")
     n_nonnull = emb.filter(F.col("embedding").isNotNull()).count()
     assert sum(r.n_vectors for r in card) == n_nonnull
@@ -340,7 +314,7 @@ def test_staged13_plans_have_no_cartesian_product(spark, sf_dir):
     """The candidate joins are equi-joins on cluster_id / cell; the only
     tolerated nested-loop is the broadcast k-row centroid assign and the
     1-row recall cross-join — never a CartesianProduct."""
-    for name, spec in sorted(STAGED13().items()):
+    for name, spec in sorted(SPECS_HERE.items()):
         plan = (
             spec.fn(spark, sf_dir)
             ._jdf.queryExecution()
@@ -363,8 +337,9 @@ def test_staged13_specs_survive_empty_embeddings(spark, sf_dir, tmp_path):
         load_table(spark, sf_dir, t).limit(0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, f"{t}.parquet"))
-    for name, spec in sorted(STAGED13().items()):
-        _exact_compare(spark, out, spec)
+    for name, spec in sorted(SPECS_HERE.items()):
+        err = compare(spark, spec, out)
+        assert err is None, (name, err)
 
 
 # ---------------------------------------------------------------------------
@@ -373,7 +348,7 @@ def test_staged13_specs_survive_empty_embeddings(spark, sf_dir, tmp_path):
 
 
 def test_quantized_recall_bounds_and_identity(spark, sf_dir):
-    spec = STAGED13()["ext_quantized_recall_audit"]
+    spec = SPECS_HERE["ext_quantized_recall_audit"]
     rows = spec.fn(spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -460,7 +435,7 @@ def test_semantic_purity_hand_case_and_tie_law(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>, label int"
     )
-    from dbt_glue_spark.plans.round13_staged import ext_semantic_purity
+    from dbt_glue_spark.plans.embedding_curation_queries import ext_semantic_purity
 
     # rebuild the spec logic on the hand frame via the same operators
     assigned = kmeans_assign(df, k=2, max_iter=4)
@@ -492,7 +467,7 @@ def test_semantic_purity_hand_case_and_tie_law(spark):
 def test_semantic_purity_accounting(spark, sf_dir):
     from dbt_glue_spark.sources.registry import load_table
 
-    rows = STAGED13()["ext_semantic_purity"].fn(spark, sf_dir).collect()
+    rows = SPECS_HERE["ext_semantic_purity"].fn(spark, sf_dir).collect()
     emb = load_table(spark, sf_dir, "embeddings")
     n_nonnull = emb.filter(F.col("embedding").isNotNull()).count()
     assert sum(r.n_vectors for r in rows) == n_nonnull
@@ -510,7 +485,7 @@ def test_ivf_cell_card_accounting(spark, sf_dir):
     formula and sum to ≤ 1e6 (floor rounding) within k crumbs."""
     from dbt_glue_spark.sources.registry import load_table
 
-    rows = STAGED13()["ext_ivf_cell_card"].fn(spark, sf_dir).collect()
+    rows = SPECS_HERE["ext_ivf_cell_card"].fn(spark, sf_dir).collect()
     emb = load_table(spark, sf_dir, "embeddings")
     n_nonnull = emb.filter(F.col("embedding").isNotNull()).count()
     total = sum(r.n_vectors for r in rows)
@@ -531,7 +506,7 @@ def test_semantic_incremental_every_new_vector_visible(spark, sf_dir):
     one row; admitted ⟺ zero exemplar hits."""
     from dbt_glue_spark.sources.registry import load_table
 
-    rows = STAGED13()["ext_semantic_dedup_incremental"].fn(spark, sf_dir).collect()
+    rows = SPECS_HERE["ext_semantic_dedup_incremental"].fn(spark, sf_dir).collect()
     emb = load_table(spark, sf_dir, "embeddings")
     n_new = emb.filter(
         (F.col("vec_id") % 2 == 1) & F.col("embedding").isNotNull()
@@ -587,7 +562,7 @@ def test_embedding_drift_accounting(spark, sf_dir):
     in [0, 1e6]."""
     from dbt_glue_spark.sources.registry import load_table
 
-    rows = STAGED13()["ext_embedding_drift"].fn(spark, sf_dir).collect()
+    rows = SPECS_HERE["ext_embedding_drift"].fn(spark, sf_dir).collect()
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )

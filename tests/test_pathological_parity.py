@@ -16,7 +16,6 @@ can never drift apart.
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -26,10 +25,9 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-from check_parity import duck_con  # noqa: E402 — the tool's own view setup
+from check_parity import run_parity  # noqa: E402 — the tool's own exact compare
 from gen_pathological import mutate  # noqa: E402
 
-from dbt_glue_spark.plans.catalog import SPECS
 from dbt_glue_spark.sources.registry import TABLES, load_table
 
 # Promotion-gate / full-sweep module: deselected by default so the suite
@@ -81,60 +79,9 @@ def dirty_sf(spark, sf_dir, tmp_path_factory):
     return out
 
 
-@pytest.fixture(scope="module")
-def duck(dirty_sf):
-    # reuse the parity tool's own view setup so tool and gate can't drift
-    return duck_con(dirty_sf)
-
-
-def _normalize(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def key(v):
-        return (0, "") if v is None else (1, str(v))
-
-    out = [tuple(r[i] for i in order) for r in rows]
-    return sorted(out, key=lambda r: tuple(key(v) for v in r))
-
-
-def _values_equal(a, b) -> bool:
-    if a is None or b is None:
-        return a is None and b is None
-    if isinstance(a, float) or isinstance(b, float):
-        try:
-            fa, fb = float(a), float(b)
-        except (TypeError, ValueError):
-            return str(a) == str(b)
-        if math.isnan(fa) and math.isnan(fb):
-            return True
-        return fa == fb
-    return str(a) == str(b)
-
-
-def test_dirty_data_parity_regression_set(spark, dirty_sf, duck):
-    specs = SPECS()
-    failures = []
-    for name in REGRESSION_SET:
-        spec = specs[name]
-        try:
-            sdf = spec.fn(spark, dirty_sf)
-            srows = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
-            cur = duck.execute(spec.oracle)
-            dcols = [d[0] for d in cur.description]
-            drows = _normalize(cur.fetchall(), dcols)
-        except Exception as exc:  # noqa: BLE001
-            failures.append(f"{name}: {type(exc).__name__}: {str(exc)[:140]}")
-            continue
-        if len(srows) != len(drows):
-            failures.append(f"{name}: rowcount spark={len(srows)} duck={len(drows)}")
-            continue
-        for sr, dr in zip(srows, drows):
-            if len(sr) != len(dr) or not all(
-                _values_equal(a, b) for a, b in zip(sr, dr)
-            ):
-                failures.append(f"{name}: value diff {sr} vs {dr}")
-                break
-    assert not failures, "\n".join(failures)
+def test_dirty_data_parity_regression_set(spark, dirty_sf):
+    failures = run_parity(dirty_sf, only=REGRESSION_SET, spark=spark)
+    assert not failures, failures
 
 
 # Zero-variance / all-duplicate axis: the four queries that diverged on
@@ -201,7 +148,6 @@ def test_streaming_pathological_axes(spark, sf_dir, tmp_path_factory, variant):
     stream must start, drain, commit, and agree with the batch oracle
     on empty tables (watermarks with no data, ledgers with no batches).
     """
-    from check_parity import run_parity
     from gen_pathological import (
         mutate_const,
         mutate_dupheavy,
@@ -233,30 +179,8 @@ def test_streaming_pathological_axes(spark, sf_dir, tmp_path_factory, variant):
 
 
 def test_constant_data_parity_regression_set(spark, const_sf):
-    con = duck_con(const_sf)
-    specs = SPECS()
-    failures = []
-    for name in CONST_REGRESSION_SET:
-        spec = specs[name]
-        try:
-            sdf = spec.fn(spark, const_sf)
-            srows = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
-            cur = con.execute(spec.oracle)
-            dcols = [d[0] for d in cur.description]
-            drows = _normalize(cur.fetchall(), dcols)
-        except Exception as exc:  # noqa: BLE001
-            failures.append(f"{name}: {type(exc).__name__}: {str(exc)[:140]}")
-            continue
-        if len(srows) != len(drows):
-            failures.append(f"{name}: rowcount spark={len(srows)} duck={len(drows)}")
-            continue
-        for sr, dr in zip(srows, drows):
-            if len(sr) != len(dr) or not all(
-                _values_equal(a, b) for a, b in zip(sr, dr)
-            ):
-                failures.append(f"{name}: value diff {sr} vs {dr}")
-                break
-    assert not failures, "\n".join(failures)
+    failures = run_parity(const_sf, only=CONST_REGRESSION_SET, spark=spark)
+    assert not failures, failures
 
 
 LONG_TEXT_SET = [
@@ -298,7 +222,6 @@ def test_long_document_axis(spark, sf_dir, tmp_path_factory):
     the FULL 214-query sweep passed on /tmp/sf_long (0 failures,
     including the O(len²)-per-candidate edit-distance verify); this
     pins the text-family subset so the axis re-runs in minutes."""
-    from check_parity import run_parity
     from gen_pathological import mutate_long
 
     out = str(tmp_path_factory.mktemp("sf_long"))
@@ -376,39 +299,8 @@ def unicode_sf(spark, sf_dir, tmp_path_factory):
 
 
 def test_unicode_parity_regression_set(spark, unicode_sf):
-    specs = SPECS()
-    con = duck_con(unicode_sf)
-    failures = []
-    try:
-        for name in UNICODE_REGRESSION_SET:
-            spec = specs[name]
-            try:
-                sdf = spec.fn(spark, unicode_sf)
-                srows = _normalize(
-                    [tuple(r) for r in sdf.collect()], sdf.columns
-                )
-                cur = con.execute(spec.oracle)
-                dcols = [d[0] for d in cur.description]
-                drows = _normalize(cur.fetchall(), dcols)
-            except Exception as exc:  # noqa: BLE001
-                failures.append(
-                    f"{name}: {type(exc).__name__}: {str(exc)[:140]}"
-                )
-                continue
-            if len(srows) != len(drows):
-                failures.append(
-                    f"{name}: rowcount spark={len(srows)} duck={len(drows)}"
-                )
-                continue
-            for sr, dr in zip(srows, drows):
-                if len(sr) != len(dr) or not all(
-                    _values_equal(a, b) for a, b in zip(sr, dr)
-                ):
-                    failures.append(f"{name}: value diff {sr} vs {dr}")
-                    break
-    finally:
-        con.close()
-    assert not failures, "\n".join(failures)
+    failures = run_parity(unicode_sf, only=UNICODE_REGRESSION_SET, spark=spark)
+    assert not failures, failures
 
 
 def test_fold_lower_primitive_contract(spark):
@@ -486,39 +378,8 @@ def dupheavy_sf(spark, sf_dir, tmp_path_factory):
 
 
 def test_dupheavy_parity_regression_set(spark, dupheavy_sf):
-    specs = SPECS()
-    con = duck_con(dupheavy_sf)
-    failures = []
-    try:
-        for name in DUPHEAVY_REGRESSION_SET:
-            spec = specs[name]
-            try:
-                sdf = spec.fn(spark, dupheavy_sf)
-                srows = _normalize(
-                    [tuple(r) for r in sdf.collect()], sdf.columns
-                )
-                cur = con.execute(spec.oracle)
-                dcols = [d[0] for d in cur.description]
-                drows = _normalize(cur.fetchall(), dcols)
-            except Exception as exc:  # noqa: BLE001
-                failures.append(
-                    f"{name}: {type(exc).__name__}: {str(exc)[:140]}"
-                )
-                continue
-            if len(srows) != len(drows):
-                failures.append(
-                    f"{name}: rowcount spark={len(srows)} duck={len(drows)}"
-                )
-                continue
-            for sr, dr in zip(srows, drows):
-                if len(sr) != len(dr) or not all(
-                    _values_equal(a, b) for a, b in zip(sr, dr)
-                ):
-                    failures.append(f"{name}: value diff {sr} vs {dr}")
-                    break
-    finally:
-        con.close()
-    assert not failures, "\n".join(failures)
+    failures = run_parity(dupheavy_sf, only=DUPHEAVY_REGRESSION_SET, spark=spark)
+    assert not failures, failures
 
 
 def test_dupheavy_axis_structural_contract(spark, dupheavy_sf):

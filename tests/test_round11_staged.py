@@ -1,12 +1,13 @@
-"""Round-11 operators (multimodal dedup tier): parity-proven during round
-10, catalog-registered at the round-10→11 boundary (plans/round11_staged.py
-docstring). These tests prove the specs with the same exact DuckDB
-compare the live sweep uses, pin the promotion contract (catalog 270 →
-283, unchecked promotions in the sampled prefix), and brute-force /
-property-check
-each operator — the dHash closed form, the brightness/perturbation
-invariants, banding exhaustiveness, frame-set Jaccard, landmark
-constellations, the df cutoffs, and the decode-honesty contract.
+"""Direct tests for the queries in plans/media_dedup_queries.py (multimodal
+dedup and privacy censuses).
+
+Each spec is proven against its DuckDB oracle with the exact compare of
+tools/check_parity.py; each operator also gets hand-computed,
+brute-force or property checks.
+
+The dHash closed form, the brightness/perturbation invariants, banding
+exhaustiveness, frame-set Jaccard, landmark constellations, the df
+cutoffs and the decode-honesty contract are each checked directly.
 """
 
 from __future__ import annotations
@@ -16,57 +17,59 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.round11_staged import (
-    STAGED11,
+from dbt_glue_spark.plans import media_dedup_queries
+from dbt_glue_spark.plans.catalog import SPECS
+from dbt_glue_spark.plans.media_dedup_queries import (
     expected_dhash,
     synth_audio_bytes,
     synth_dhash_png,
     synth_image_bytes,
     synth_video_bytes,
 )
-from tools.check_parity import duck_con, normalize, values_equal
-
-STAGED11_NAMES = sorted(STAGED11())
+from tools.check_parity import compare
 
 
-def _exact_compare(spark, sf_dir, spec):
-    sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(spec.oracle)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    sn, dn = normalize(srows, scols), normalize(drows, dcols)
-    assert len(sn) == len(dn), (len(sn), len(dn))
-    for r1, r2 in zip(sn, dn):
-        assert all(values_equal(a, b) for a, b in zip(r1, r2)), (r1, r2)
+SPECS_HERE = {
+    n: s for n, s in SPECS().items() if s.fn.__module__ == media_dedup_queries.__name__
+}
 
 
-@pytest.mark.parametrize("name", STAGED11_NAMES)
+@pytest.mark.parametrize("name", sorted(SPECS_HERE))
 def test_staged11_oracle_parity(spark, sf_dir, name):
-    _exact_compare(spark, sf_dir, STAGED11()[name])
+    err = compare(spark, SPECS_HERE[name], sf_dir)
+    assert err is None, err
+
+
+MEDIA_DEDUP_NAMES = (
+    "ext_audio_fingerprint_pairs",
+    "ext_audio_snippet_match",
+    "ext_image_dhash_dedup",
+    "ext_image_dup_clusters",
+    "ext_image_near_dup_pairs",
+    "ext_k_anonymity",
+    "ext_l_diversity",
+    "ext_media_data_card",
+    "ext_media_decode_audit",
+    "ext_video_keyframes",
+    "ext_video_near_dup",
+    "ext_video_scene_changes",
+    "streaming_image_frontier",
+)
 
 
 def test_staged11_promoted_and_sampled_first():
-    """Round-11 promotion contract (rotation-invariant form, per the r7
-    verdict's time-bomb lesson): the 13 staged operators are live in the
-    catalog (270 + 13 = 283), and any of them WITHOUT a green latest
-    driver CORRECTNESS row sits in the driver's 50-query sampled prefix
-    — true before the driver run (all 13 in the never-checked tier) and
-    after it (green rows rotate out, red rows must re-enter)."""
-    from dbt_glue_spark.plans.catalog import SPECS, _previously_checked
+    """The 13 multimodal-dedup queries are live in the catalog and are
+    registered by plans/media_dedup_queries.py, and any of them WITHOUT a
+    green latest driver CORRECTNESS row sits in the 50-query sampled
+    prefix (green rows rotate out, red rows must re-enter)."""
+    from dbt_glue_spark.plans.catalog import _previously_checked
 
     specs = SPECS()
-    assert len(specs) >= 283, len(specs)  # 283 at r11; later rounds promote more
-    missing = set(STAGED11_NAMES) - set(specs)
+    assert sorted(SPECS_HERE) == sorted(MEDIA_DEDUP_NAMES)
+    missing = set(MEDIA_DEDUP_NAMES) - set(specs)
     assert not missing, missing
     prefix = set(list(specs)[:50])
-    unchecked = set(STAGED11_NAMES) - _previously_checked()
+    unchecked = set(MEDIA_DEDUP_NAMES) - _previously_checked()
     not_in_prefix = unchecked - prefix
     assert not not_in_prefix, not_in_prefix
 
@@ -402,7 +405,7 @@ def test_near_dup_plans_have_no_cartesian(spark, sf_dir):
         "ext_video_near_dup",
         "ext_audio_fingerprint_pairs",
     ):
-        df = STAGED11()[name].fn(spark, sf_dir)
+        df = SPECS_HERE[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, (name, plan)
         assert "BroadcastNestedLoopJoin" not in plan, (name, plan)
@@ -415,8 +418,8 @@ def test_media_bytes_never_shuffle(spark, sf_dir):
     as INPUT to the MapInPandas decode, which runs before any shuffle)."""
     import re
 
-    for name in STAGED11_NAMES:
-        df = STAGED11()[name].fn(spark, sf_dir)
+    for name in sorted(SPECS_HERE):
+        df = SPECS_HERE[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         for part in re.findall(r"hashpartitioning\(([^)]*)\)", plan):
             assert "content#" not in part, (name, part)
@@ -450,7 +453,7 @@ def test_image_dup_clusters_transitive_chain(spark):
     """a≈b (1 bit), b≈c (1 bit), a vs c 2 bits > max_hamming=1: no direct
     a-c pair, yet components must merge all three — the transitivity
     that pairs alone cannot express."""
-    from dbt_glue_spark.plans.round11_staged import synth_pattern_png
+    from dbt_glue_spark.plans.media_dedup_queries import synth_pattern_png
     from dbt_glue_spark.extensions.multimodal_dedup import image_dup_clusters
 
     w = 0x0123456789ABCDEF
@@ -500,7 +503,7 @@ def test_audio_snippet_match_position_invariant(spark):
     """A clip of the MIDDLE two segments matches its source track (3
     shared landmarks) and no other — cutting position doesn't matter
     because landmark sets are position-free."""
-    from dbt_glue_spark.plans.round11_staged import (
+    from dbt_glue_spark.plans.media_dedup_queries import (
         synth_audio_snippet_bytes,
     )
     from dbt_glue_spark.extensions.multimodal_dedup import audio_snippet_match
@@ -647,7 +650,7 @@ def test_staged11_specs_survive_empty_documents(spark, sf_dir, tmp_path):
         load_table(spark, sf_dir, t).limit(0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, f"{t}.parquet"))
-    for name, spec in sorted(STAGED11().items()):
+    for name, spec in sorted(SPECS_HERE.items()):
         n = spec.fn(spark, out).count()
         assert n == 0, (name, n)
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.round11_staged import synth_dhash_png
+from dbt_glue_spark.plans.media_dedup_queries import synth_dhash_png
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,9 @@
-"""Round-12 operators (cross-modal pair tier): parity-proven during round
-11, catalog-registered at the round-11→12 boundary (plans/round12_staged.py
-docstring). These tests prove the specs with the same exact DuckDB
-compare the live sweep uses, pin the promotion contract (catalog 283 →
-292, unchecked promotions in the sampled prefix), and brute-force / property-check
-each operator — the one-pass joint signature and its NULL contract, the
-consistency/spam censuses, joint-class survivor consistency (same
-exemplar pair on both sides, quality argmax, NULL-quality and tie law),
-the mixture card's exact accounting, and the streaming frontier's Kappa
-equivalence.
+"""Direct tests for the queries in plans/crossmodal_queries.py (cross-modal
+caption/image pairs).
+
+Each spec is proven against its DuckDB oracle with the exact compare of
+tools/check_parity.py; each operator also gets hand-computed,
+brute-force or property checks.
 """
 
 from __future__ import annotations
@@ -17,55 +13,55 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.round11_staged import synth_dhash_png
-from dbt_glue_spark.plans.round12_staged import (
-    STAGED12,
+from dbt_glue_spark.plans.media_dedup_queries import synth_dhash_png
+from dbt_glue_spark.plans import crossmodal_queries
+from dbt_glue_spark.plans.catalog import SPECS
+from dbt_glue_spark.plans.crossmodal_queries import (
     synth_caption,
     synth_image_bytes,
 )
-from tools.check_parity import duck_con, normalize, values_equal
-
-STAGED12_NAMES = sorted(STAGED12())
+from tools.check_parity import compare
 
 
-def _exact_compare(spark, sf_dir, spec):
-    sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(spec.oracle)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    sn, dn = normalize(srows, scols), normalize(drows, dcols)
-    assert len(sn) == len(dn), (len(sn), len(dn))
-    for r1, r2 in zip(sn, dn):
-        assert all(values_equal(a, b) for a, b in zip(r1, r2)), (r1, r2)
+SPECS_HERE = {
+    n: s for n, s in SPECS().items() if s.fn.__module__ == crossmodal_queries.__name__
+}
 
 
-@pytest.mark.parametrize("name", STAGED12_NAMES)
+@pytest.mark.parametrize("name", sorted(SPECS_HERE))
 def test_staged12_oracle_parity(spark, sf_dir, name):
-    _exact_compare(spark, sf_dir, STAGED12()[name])
+    err = compare(spark, SPECS_HERE[name], sf_dir)
+    assert err is None, err
+
+
+CROSSMODAL_NAMES = (
+    "ext_caption_consistency",
+    "ext_caption_spam",
+    "ext_modality_mixture_card",
+    "ext_pair_alignment",
+    "ext_pair_completeness",
+    "ext_paired_contamination",
+    "ext_paired_keep_best",
+    "streaming_mixture_monitor",
+    "streaming_pair_frontier",
+)
 
 
 def test_staged12_promoted_and_sampled_first():
-    """Round-12 promotion contract (rotation-invariant form, per the r7
-    verdict's time-bomb lesson): the 9 staged operators are live in the
-    catalog (283 + 9 = 292), and any of them WITHOUT a green latest
-    driver CORRECTNESS row sits in the driver's 50-query sampled prefix
-    — true before the driver run (all 9 in the never-checked tier) and
-    after it (green rows rotate out, red rows must re-enter)."""
-    from dbt_glue_spark.plans.catalog import SPECS, _previously_checked
+    """The 9 cross-modal queries are live in the catalog (303 queries in
+    all) and are registered by plans/crossmodal_queries.py, and any of
+    them WITHOUT a green latest driver CORRECTNESS row sits in the
+    50-query sampled prefix (green rows rotate out, red rows must
+    re-enter)."""
+    from dbt_glue_spark.plans.catalog import _previously_checked
 
     specs = SPECS()
-    assert len(specs) == 292, len(specs)
-    missing = set(STAGED12_NAMES) - set(specs)
+    assert len(specs) == 303, len(specs)
+    assert sorted(SPECS_HERE) == sorted(CROSSMODAL_NAMES)
+    missing = set(CROSSMODAL_NAMES) - set(specs)
     assert not missing, missing
     prefix = set(list(specs)[:50])
-    unchecked = set(STAGED12_NAMES) - _previously_checked()
+    unchecked = set(CROSSMODAL_NAMES) - _previously_checked()
     not_in_prefix = unchecked - prefix
     assert not not_in_prefix, not_in_prefix
 
@@ -412,7 +408,7 @@ def test_crossmodal_audits_empty_input(spark):
     ["ext_caption_consistency", "ext_caption_spam", "ext_paired_keep_best"],
 )
 def test_crossmodal_plans_have_no_cartesian(spark, sf_dir, name):
-    df = STAGED12()[name].fn(spark, sf_dir)
+    df = SPECS_HERE[name].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, (name, plan)
     assert "BroadcastNestedLoopJoin" not in plan, (name, plan)
@@ -427,7 +423,7 @@ def test_crossmodal_media_bytes_never_shuffle(spark, sf_dir, name):
     raw media bytes and full caption strings stay out of shuffles."""
     import re
 
-    df = STAGED12()[name].fn(spark, sf_dir)
+    df = SPECS_HERE[name].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     for part in re.findall(r"hashpartitioning\(([^)]*)\)", plan):
         assert "content" not in part, (name, part)
@@ -549,6 +545,6 @@ def test_staged12_specs_survive_empty_documents(spark, sf_dir, tmp_path):
         load_table(spark, sf_dir, t).limit(0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, f"{t}.parquet"))
-    for name, spec in sorted(STAGED12().items()):
+    for name, spec in sorted(SPECS_HERE.items()):
         n = spec.fn(spark, out).count()
         assert n == 0, (name, n)

@@ -1,9 +1,10 @@
-"""Round-8 staged operators: parity-proven now, catalog-registered at the
-round-7→8 boundary (plans/round8_staged.py docstring). These tests prove
-the staged specs with the same exact DuckDB compare the live sweep uses,
-and pin the stage-then-promote discipline: the live catalog stays at 230
-this round so the driver's sampled prefix covers exactly the 16 round-7
-promotions.
+"""Direct tests for the queries in plans/span_interval_queries.py
+(substring spans, ledger compaction, change points, sorted neighbourhood
+and interval joins).
+
+Each spec is proven against its DuckDB oracle with the exact compare of
+tools/check_parity.py; each operator also gets hand-computed,
+brute-force or property checks.
 """
 
 from __future__ import annotations
@@ -11,56 +12,24 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.round8_staged import STAGED8
-from tools.check_parity import duck_con, normalize, values_equal
+from dbt_glue_spark.plans import span_interval_queries
+from dbt_glue_spark.plans.catalog import SPECS
+from tools.check_parity import compare
 
 # Promotion-gate / full-sweep module: deselected by default so the suite
 # fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
-STAGED8_NAMES = sorted(STAGED8())
+
+SPECS_HERE = {
+    n: s for n, s in SPECS().items() if s.fn.__module__ == span_interval_queries.__name__
+}
 
 
-def _exact_compare(spark, sf_dir, spec):
-    sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(spec.oracle)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    sn, dn = normalize(srows, scols), normalize(drows, dcols)
-    assert len(sn) == len(dn), (len(sn), len(dn))
-    for r1, r2 in zip(sn, dn):
-        assert all(values_equal(a, b) for a, b in zip(r1, r2)), (r1, r2)
-
-
-@pytest.mark.parametrize("name", STAGED8_NAMES)
-def test_staged8_oracle_parity(spark, sf_dir, name):
-    _exact_compare(spark, sf_dir, STAGED8()[name])
-
-
-def test_staged8_promoted_and_sampled_first():
-    """Round-8 promotion contract (rotation-invariant form, per the r7
-    verdict's time-bomb lesson): the 6 staged operators are live in the
-    catalog (230 + 6 = 236), and any of them WITHOUT a green latest
-    driver CORRECTNESS row sits in the driver's 50-query sampled prefix
-    — true before the driver run (all 6 in the never-checked tier) and
-    after it (green rows rotate out, red rows must re-enter)."""
-    from dbt_glue_spark.plans.catalog import SPECS, _previously_checked
-
-    specs = SPECS()
-    assert len(specs) >= 236, len(specs)  # 236 at r8; later rounds promote more
-    missing = set(STAGED8_NAMES) - set(specs)
-    assert not missing, missing
-    prefix = set(list(specs)[:50])
-    unchecked = set(STAGED8_NAMES) - _previously_checked()
-    not_in_prefix = unchecked - prefix
-    assert not not_in_prefix, not_in_prefix
+@pytest.mark.parametrize("name", sorted(SPECS_HERE))
+def test_oracle_parity(spark, sf_dir, name):
+    err = compare(spark, SPECS_HERE[name], sf_dir)
+    assert err is None, err
 
 
 def test_exact_substring_spans_brute_force(spark):
@@ -214,27 +183,6 @@ def test_priority_sample_stream_replay_is_noop(spark, tmp_path):
     a = sorted(tuple(r) for r in bp.collect())
     b = sorted(tuple(r) for r in once.collect())
     assert a == b
-
-
-def test_staged8_parity_under_forced_spill(spark, sf_dir):
-    """The round-8 pool through the same forced-spill axis the live
-    catalog faces (VERDICT r6 item 6 applied to the new tier): window/
-    SMJ/session-window buffers pushed through their external-sorter
-    paths must not perturb any staged result."""
-    from tests.test_parity_sweep import SPILL_CONFS
-
-    old = {k: spark.conf.get(k, None) for k in SPILL_CONFS}
-    try:
-        for k, v in SPILL_CONFS.items():
-            spark.conf.set(k, v)
-        for name in STAGED8_NAMES:
-            _exact_compare(spark, sf_dir, STAGED8()[name])
-    finally:
-        for k, v in old.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
 
 
 def test_cusum_changepoints_brute_force(spark):
@@ -434,6 +382,6 @@ def test_staged8_survive_empty_input(spark, sf_dir, tmp_path_factory):
         load_table(spark, sf_dir, t).limit(0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, f"{t}.parquet"))
-    for name, spec in sorted(STAGED8().items()):
+    for name, spec in sorted(SPECS_HERE.items()):
         rows = spec.fn(spark, out)
         assert isinstance(rows.collect(), list), name

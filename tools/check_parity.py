@@ -11,9 +11,10 @@ Usage: python tools/check_parity.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -23,8 +24,6 @@ from dbt_glue_spark.sources.registry import TABLES
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    import os
-
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
@@ -61,6 +60,41 @@ def values_equal(a, b) -> bool:
     return str(a) == str(b)
 
 
+def compare(spark, spec, sf_dir: str, con=None) -> str | None:
+    """Exact compare of one spec's Spark result against its DuckDB oracle.
+
+    Returns None when the two agree, else a description of the first
+    difference. A spec without an oracle passes once its Spark side runs.
+    ``con`` defaults to a fresh :func:`duck_con` over ``sf_dir``.
+    """
+    if con is None:
+        with duck_con(sf_dir) as own:
+            return compare(spark, spec, sf_dir, own)
+    try:
+        sdf = spec.fn(spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:  # noqa: BLE001
+        return f"spark error: {e}"
+    if spec.oracle is None:
+        return None
+    try:
+        rel = con.sql(spec.oracle)
+        dcols = rel.columns
+        drows = rel.fetchall()
+    except Exception as e:  # noqa: BLE001
+        return f"duckdb error: {e}"
+    if sorted(scols) != sorted(dcols):
+        return f"columns differ spark={sorted(scols)} duck={sorted(dcols)}"
+    sn, dn = normalize(srows, scols), normalize(drows, dcols)
+    if len(sn) != len(dn):
+        return f"rowcount spark={len(sn)} duck={len(dn)}"
+    for i, (sr, dr) in enumerate(zip(sn, dn)):
+        if not all(values_equal(a, b) for a, b in zip(sr, dr)):
+            return f"first diff at sorted row {i}:\n      spark: {sr}\n      duck : {dr}"
+    return None
+
+
 def run_parity(sf_dir: str, only=None, spark=None) -> list[str]:
     """Run the sweep; return the list of failing query names.
 
@@ -81,46 +115,12 @@ def run_parity(sf_dir: str, only=None, spark=None) -> list[str]:
     for name, spec in sorted(specs.items()):
         if only and name not in only:
             continue
-        try:
-            sdf = spec.fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
+        err = compare(spark, spec, sf_dir, con)
+        if err:
             failures.append(name)
-            print(f"FAIL  {name}: spark error: {e}")
-            continue
-        if spec.oracle is None:
-            print(f"ok    {name}: rows-only ({len(srows)} rows)")
-            continue
-        try:
-            rel = con.sql(spec.oracle)
-            dcols = rel.columns
-            drows = rel.fetchall()
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error: {e}")
-            continue
-        if sorted(scols) != sorted(dcols):
-            failures.append(name)
-            print(f"FAIL  {name}: columns differ spark={sorted(scols)} duck={sorted(dcols)}")
-            continue
-        sn, dn = normalize(srows, scols), normalize(drows, dcols)
-        if len(sn) != len(dn):
-            failures.append(name)
-            print(f"FAIL  {name}: rowcount spark={len(sn)} duck={len(dn)}")
-            continue
-        bad = None
-        for i, (sr, dr) in enumerate(zip(sn, dn)):
-            if not all(values_equal(a, b) for a, b in zip(sr, dr)):
-                bad = (i, sr, dr)
-                break
-        if bad:
-            failures.append(name)
-            print(f"FAIL  {name}: first diff at sorted row {bad[0]}:")
-            print(f"      spark: {bad[1]}")
-            print(f"      duck : {bad[2]}")
+            print(f"FAIL  {name}: {err}")
         else:
-            print(f"PASS  {name} ({len(sn)} rows)")
+            print(f"{'PASS' if spec.oracle else 'ok  '}  {name}")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return failures
 

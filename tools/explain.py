@@ -1,13 +1,14 @@
-"""Capture .explain('formatted') for headline queries into plans/r12/.
+"""Capture .explain('formatted') for catalog queries into a directory.
 
 Usage:
-    python tools/explain_r12.py before [query ...]
-    python tools/explain_r12.py after  [query ...]
+    python tools/explain.py <out_dir> before [query ...]
+    python tools/explain.py <out_dir> after  [query ...]
 
-Writes plans/r12/<query>_<tag>.txt for each query (default: the bench
-headline set).  Also prints a one-line plan-shape summary per query:
-Exchange count, join strategies, Python-eval nodes — the metrics the
-optimization guide says to watch (§7.2).
+Writes <out_dir>/<query>_<tag>.txt for each query (default: the bench
+headline set), planned over $SPARK_GRAFT_SF_DIR (default sf0.1). Also
+prints a one-line plan-shape summary per query: Exchange count, join
+strategies, Python-eval nodes — the metrics the optimization guide says
+to watch (§7.2).
 """
 
 from __future__ import annotations
@@ -48,17 +49,11 @@ def summarize(plan: str) -> str:
     return f"Exchange={n_ex} joins=[{j}] py=[{p}]"
 
 
-def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+def main(argv: list[str]) -> None:
+    out_dir, tag, names = argv[0], argv[1], argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r12",
-    )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("explain_r12")
+    spark = get_spark("explain")
     spark.sparkContext.setLogLevel("ERROR")
     specs = SPECS()
     if not names:
@@ -76,4 +71,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

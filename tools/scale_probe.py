@@ -742,7 +742,7 @@ def probe_staged11(spark, sf_dir: str, factors: list[int]) -> tuple[dict, dict]:
     import pandas as pd
 
     from dbt_glue_spark.extensions import multimodal_dedup as md
-    from dbt_glue_spark.plans.round11_staged import synth_pattern_png
+    from dbt_glue_spark.plans.media_dedup_queries import synth_pattern_png
 
     def word(tag: str, n: int) -> int:
         return int.from_bytes(
@@ -922,7 +922,7 @@ def probe_staged12(spark, sf_dir: str, factors: list[int]) -> tuple[dict, dict]:
     import pandas as pd
 
     from dbt_glue_spark.extensions import crossmodal as cm
-    from dbt_glue_spark.plans.round11_staged import synth_pattern_png
+    from dbt_glue_spark.plans.media_dedup_queries import synth_pattern_png
 
     def word(tag: str, n: int) -> int:
         return int.from_bytes(

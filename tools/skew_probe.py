@@ -178,11 +178,7 @@ def main() -> None:
 
             token_ratio = round(_toks(hot_dir) / _toks(sf_dir), 2)
 
-        # staged-pool operators are probe-visible before promotion (live
-        # catalog entries win on name collision)
-        from dbt_glue_spark.plans.round9_staged import STAGED9
-
-        specs = {**STAGED9(), **SPECS()}
+        specs = SPECS()
         results: dict[str, dict] = {}
         # warm up EVERY probed query's codegen on both directories —
         # each plan compiles its own WholeStageCodegen, so warming only
