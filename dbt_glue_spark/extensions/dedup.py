@@ -22,7 +22,7 @@ stopwords.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -323,8 +323,10 @@ def minhash_lsh_pairs(
     # when the frames are GC'd). Signatures are 1 row/doc (tiny at any
     # scale); postings are ~doc_len rows/doc and spill to disk if needed.
     # sh NOT persisted (r12 A/B: 3.10 s vs 3.45 s cached — map-only
-    # postings recompute beats caching the exploded rows); sig stays
-    # persisted (1 row/doc, feeds the band self-join twice)
+    # postings recompute beats caching the exploded rows; re-measured
+    # with AQE coalescing cached frames, sf0.1, 4 CPUs: 4.15 s persisted
+    # vs 3.60 s not, so still not worth it); sig stays persisted
+    # (1 row/doc, feeds the band self-join twice)
     sh = _shingle_postings(df, text_col, id_col, n, None)
     sig = _persist(minhash_signatures(df, text_col, id_col, n, num_hashes, postings=sh))
     band_cols = [
@@ -362,9 +364,12 @@ def minhash_lsh_pairs(
                 F.min("id").alias("__bmin"),
             )
         )
-        keep = counts.filter(F.col("__bn") <= max_band_bucket).select(
-            "band_idx", "band_key"
-        )
+        # a one-member bucket cannot yield an a.id < b.id pair (and star
+        # pairs come only from over-cap buckets), so singletons are pruned
+        # from the self-join input here, on the counts already computed
+        keep = counts.filter(
+            (F.col("__bn") >= 2) & (F.col("__bn") <= max_band_bucket)
+        ).select("band_idx", "band_key")
         if oversize_policy == "star":
             # oversized buckets degrade to a STAR around the bucket's
             # min id: O(bucket) candidates from the bucket-level __bmin
@@ -618,8 +623,9 @@ def dup_clusters(
     (clusters are near-cliques). Per round: one shuffle join edges⋈labels +
     one groupBy min; labels are localCheckpoint'ed so lineage (and plan
     size) stays constant across iterations — the standard Spark iterative-
-    algorithm discipline. Driver-side only the 1-row convergence count is
-    collected; vertex/edge data never leaves the cluster.
+    algorithm discipline. Driver-side only the convergence sum is read,
+    observed while each round's checkpoint runs (no aggregate job of its
+    own); vertex/edge data never leaves the cluster.
 
     Scale shape: the loop runs over V(E) — only vertices incident to at
     least one edge — not the full corpus. Non-duplicate docs (the vast
@@ -662,15 +668,41 @@ def dup_clusters(
     # materialized identity labels (a distinct + checkpoint) and then
     # paid a full edges⋈labels join for round 1 (r12-opt: one join
     # round removed from every dup_clusters call).
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("__nmin"))
-        .select(
-            F.col("src").alias("id"),
-            F.least(F.col("src"), F.col("__nmin")).alias("label"),
-        )
-        .localCheckpoint()
+    labels = edges.groupBy("src").agg(F.min("dst").alias("__nmin")).select(
+        F.col("src").alias("id"),
+        F.least(F.col("src"), F.col("__nmin")).alias("label"),
     )
+    # Convergence detection: labels are monotone non-increasing (the min
+    # always includes the vertex's own label via its self-loop), so the
+    # labelling is a fixed point iff Σ labels is unchanged from the
+    # previous round. The sum is observed on the frame each round
+    # checkpoints, so it rides that checkpoint's job instead of costing
+    # a separate aggregate job per round; a NULL sum means an empty edge
+    # relation. DECIMAL(38,0) keeps the sum exact at any vertex count /
+    # id range. The sum test is only sound when the decimal cast is
+    # lossless, i.e. the id type is integral: a non-numeric id (string
+    # doc ids) would cast to NULL, the sum would read NULL, and the
+    # NULL-means-empty branch below would silently return the round-1
+    # partial labelling — exactly the silent-partial failure this
+    # function must never emit (r12 ADVICE, medium). Fail loud up front
+    # instead, before the first observed checkpoint casts the ids.
+    _label_t = labels.schema["label"].dataType.simpleString()
+    if _label_t not in ("tinyint", "smallint", "int", "bigint"):
+        raise TypeError(
+            "dup_clusters requires an integral id column for the exact "
+            f"label-sum convergence test; got {id_col}: {_label_t}. "
+            "Map string/other ids to bigint (e.g. dense ids or xxhash64) "
+            "before clustering."
+        )
+
+    def _checkpoint_with_sum(frame):
+        obs = Observation()
+        out = frame.observe(
+            obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+        ).localCheckpoint()
+        return out, obs.get["s"]
+
+    labels, prev_sum = _checkpoint_with_sum(labels)
     if nparts is not None:
         labels = labels.repartition(nparts, "id").localCheckpoint()
     # Self-loops fold the "keep own label" term into the neighbor min:
@@ -692,34 +724,6 @@ def dup_clusters(
     # id-keyed join per round), which cuts remaining convergence to
     # O(log diameter); the common fast case never pays for it.
     _SHORTCUT_AFTER = 8
-    # Convergence detection: labels are monotone non-increasing (the min
-    # always includes the vertex's own label via its self-loop), so the
-    # labelling is a fixed point iff Σ labels is unchanged from the
-    # previous round — a 1-row aggregate over the already-checkpointed
-    # frame, replacing the former per-vertex __chg flag + filter/count.
-    # DECIMAL(38,0) keeps the sum exact at any vertex count / id range.
-    # The sum test is only sound when the decimal cast is lossless, i.e.
-    # the id type is integral: a non-numeric id (string doc ids) would
-    # cast to NULL, the sum would read NULL, and the NULL-means-empty
-    # branch below would silently return the round-1 partial labelling —
-    # exactly the silent-partial failure this function must never emit
-    # (r12 ADVICE, medium). Fail loud up front instead.
-    _label_t = labels.schema["label"].dataType.simpleString()
-    if _label_t not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            "dup_clusters requires an integral id column for the exact "
-            f"label-sum convergence test; got {id_col}: {_label_t}. "
-            "Map string/other ids to bigint (e.g. dense ids or xxhash64) "
-            "before clustering."
-        )
-
-    def _label_sum(frame):
-        row = frame.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]
-        return row["s"]
-
-    prev_sum = _label_sum(labels)
     converged = prev_sum is None  # empty edge relation → nothing to do
     for i in range(max_iter):
         if converged:
@@ -748,8 +752,7 @@ def dup_clusters(
             # keep every round's checkpointed labels id-partitioned so the
             # next round's edges⋈labels reuses the co-partitioning
             stepped = stepped.repartition(nparts, "id")
-        labels = stepped.localCheckpoint()
-        s = _label_sum(labels)
+        labels, s = _checkpoint_with_sum(stepped)
         converged = s == prev_sum
         prev_sum = s
     edges.unpersist()
