@@ -24,6 +24,7 @@ from dbt_glue_spark.extensions import (
 )
 from dbt_glue_spark.extensions.sampling import _PRIORITY_SPACE
 from dbt_glue_spark.extensions.sketches import _duck_hash_int
+from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.plans.extension_queries import _SH as _ext_SH
 from dbt_glue_spark.sources.registry import load_table
@@ -457,37 +458,14 @@ def ext_session_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "OHLC oracle exactly (Kappa equivalence; sum-free so float-exact).",
 )
 def streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dbt_glue_spark.streaming.pipelines import ohlc_stream
 
     events = load_table(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="dgs_q_stream_")
-    events.repartition(2).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)  # 2 staged files → 2 micro-batches
-        .parquet(stage)
-    )
-    name = f"q_stream_{uuid.uuid4().hex[:8]}"
-    # state = |series × open windows| partials — tiny; scope the
-    # state-store partitioning to it (same knob as streaming_hourly_counts)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            ohlc_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name).select(
+    # 2 staged files → 2 micro-batches; state = |series × open windows|
+    # partials, tiny (streams.STATE_PARTITIONS)
+    with streams.staged(events, 2) as stream:
+        out = streams.to_memory(ohlc_stream(stream), "complete", "streaming_ohlc")
+    return out.select(
         "event_type", "bar_hour", "open", "high", "low", "close",
         "hl_range", "n_events",
     )

@@ -57,6 +57,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.plans.media_dedup_queries import synth_image_bytes
 from dbt_glue_spark.sources.registry import load_table
@@ -540,9 +541,6 @@ def ext_pair_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "under arbitrary file order.",
 )
 def streaming_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dbt_glue_spark.streaming.pipelines import mixture_monitor_stream
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -560,43 +558,10 @@ def streaming_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("tokens"),
     )
-    stage = tempfile.mkdtemp(prefix="dgs_q_mixmon_")
-    typed.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema("pair_type string, tokens long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    name = f"q_mixmon_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            mixture_monitor_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    with streams.staged(typed, 4) as stream:
+        census = streams.to_memory(
+            mixture_monitor_stream(stream), "complete", "streaming_mixture_monitor"
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            spark.catalog.dropTempView(name)
-            raise TimeoutError(
-                f"streaming_mixture_monitor: query {name} did not finish "
-                "within 300 s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # the availableNow stream is terminated here (either finished or
-        # stopped on timeout), so its static ledger cache is releasable --
-        # without this, every spec invocation would leak one persisted
-        # frame into the never-evicting stream-static registry (sweeps
-        # and bench loops call the spec hundreds of times per session)
-        from dbt_glue_spark.streaming.pipelines import release_static_caches
-
-        release_static_caches()
-    census = spark.table(name)
     tot = census.agg(
         F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("bigint").alias("tot")
     )
@@ -665,9 +630,6 @@ def streaming_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     "order.",
 )
 def streaming_pair_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dbt_glue_spark.extensions.crossmodal import pair_signatures
     from dbt_glue_spark.streaming.pipelines import pair_frontier_stream
 
@@ -675,50 +637,10 @@ def streaming_pair_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger = pair_signatures(
         pairs.filter(F.col("pair_id") % 2 == 0)
     ).select("caption_key", "dhash")
-    stage = tempfile.mkdtemp(prefix="dgs_q_pairfrontier_")
-    pairs.select("pair_id", "caption", "content").repartition(4).write.mode(
-        "overwrite"
-    ).parquet(stage)
-    stream = (
-        spark.readStream.schema(
-            "pair_id long, caption string, content binary"
+    with streams.staged(pairs.select("pair_id", "caption", "content"), 4) as stream:
+        emitted = streams.to_memory(
+            pair_frontier_stream(stream, ledger), "append", "streaming_pair_frontier"
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    name = f"q_pairfrontier_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            pair_frontier_stream(stream, ledger)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # loud-timeout contract (r10 ADVICE on the image frontier): a
-        # slow box must fail here, not proceed with a partial emitted
-        # set misattributed to the operator
-        if not q.awaitTermination(300):
-            q.stop()
-            spark.catalog.dropTempView(name)
-            raise TimeoutError(
-                f"streaming_pair_frontier: query {name} did not finish "
-                "within 300 s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # the availableNow stream is terminated here (either finished or
-        # stopped on timeout), so its static ledger cache is releasable --
-        # without this, every spec invocation would leak one persisted
-        # frame into the never-evicting stream-static registry (sweeps
-        # and bench loops call the spec hundreds of times per session)
-        from dbt_glue_spark.streaming.pipelines import release_static_caches
-
-        release_static_caches()
-    emitted = spark.table(name)
     census = (
         pair_signatures(pairs)
         .groupBy("caption_key", "dhash")

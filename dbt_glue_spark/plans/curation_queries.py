@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.sources.registry import load_table
 
@@ -613,9 +614,6 @@ def ext_domain_quality_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "form from the variant construction.",
 )
 def streaming_url_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dbt_glue_spark.streaming.pipelines import url_frontier_stream
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -623,29 +621,10 @@ def streaming_url_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ledger = docs.filter((F.col("doc_id") < 100) & (F.col("doc_id") % 3 == 0))
     batch = docs.filter(F.col("doc_id") >= 100).select("url")
-    stage = tempfile.mkdtemp(prefix="dgs_q_urlfrontier_")
-    batch.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    name = f"q_urlfrontier_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            url_frontier_stream(stream, ledger)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with streams.staged(batch, 4) as stream:
+        return streams.to_memory(
+            url_frontier_stream(stream, ledger), "append", "streaming_url_frontier"
         )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -1480,9 +1459,6 @@ def ext_preference_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ledger membership closed-form from the turn construction.",
 )
 def streaming_chat_response_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dbt_glue_spark.streaming.pipelines import response_frontier_stream
 
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -1493,29 +1469,12 @@ def streaming_chat_response_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     ledger = turns.filter(F.col("doc_id") < 100).select("role", "text")
     batch = turns.filter(F.col("doc_id") >= 100).select("role", "text")
-    stage = tempfile.mkdtemp(prefix="dgs_q_respdedup_")
-    batch.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    name = f"q_respdedup_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            response_frontier_stream(stream, ledger)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with streams.staged(batch, 4) as stream:
+        return streams.to_memory(
+            response_frontier_stream(stream, ledger),
+            "append",
+            "streaming_chat_response_dedup",
         )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
 
 
 def _cluster_keep_best_oracle() -> str:

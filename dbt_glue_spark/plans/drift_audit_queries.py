@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions.sketches import _duck_hash_int
+from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.sources.registry import load_table
 
@@ -654,7 +655,6 @@ def ext_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from dbt_glue_spark.extensions.audit import (
         psi_js_from_histograms,
@@ -666,18 +666,12 @@ def streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events").select("event_id", "value")
-    stage = tempfile.mkdtemp(prefix="dgs_q_psisrc_")
-    events.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    target = tempfile.mkdtemp(prefix="dgs_q_psitgt_")
-    q = histogram_stream_sink(
-        stream, spark, target, os.path.join(target, "ckpt"), "value", 16
-    )
-    q.awaitTermination(300)
+    target = streams.sink_dir()
+    with streams.staged(events, 4) as stream:
+        q = histogram_stream_sink(
+            stream, spark, target, os.path.join(target, "ckpt"), "value", 16
+        )
+        streams.drain(q, "streaming_psi_drift")
     live = read_ledger_or(
         spark, target, value_histogram(events.limit(0), "value", 16)
     )

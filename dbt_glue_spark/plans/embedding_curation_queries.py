@@ -71,6 +71,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.plans.extension_queries import (
     _KMEANS_CTE,
@@ -628,9 +629,6 @@ def ext_quantized_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "even-id ledger leaves genuinely new buckets at every sf).",
 )
 def streaming_embedding_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dbt_glue_spark.extensions.similarity import sign_bucket
     from dbt_glue_spark.streaming.pipelines import embedding_frontier_stream
 
@@ -639,52 +637,19 @@ def streaming_embedding_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger = nonnull.filter(F.col("vec_id") % 2 == 0).select(
         sign_bucket(F.col("embedding"), 64, 8).alias("bucket")
     )
-    stage = tempfile.mkdtemp(prefix="dgs_q_embfrontier_")
     # normalize the staged element type: sf dirs store float elements,
-    # pathological axes double — cast on write so the fixed stream
-    # schema reads both (sign_bucket casts to double either way, so
+    # pathological axes double — cast on write so every axis stages the
+    # same stream schema (sign_bucket casts to double either way, so
     # bucket values are unchanged)
-    emb.select(
+    vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
     )
-    name = f"q_embfrontier_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            embedding_frontier_stream(stream, ledger, planes=8)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with streams.staged(vecs, 4) as stream:
+        emitted = streams.to_memory(
+            embedding_frontier_stream(stream, ledger, planes=8),
+            "append",
+            "streaming_embedding_frontier",
         )
-        # a timeout must FAIL LOUDLY, not proceed with a partial emitted
-        # set (the image-frontier lesson: a partial set surfaces as a
-        # parity mismatch misattributed to the operator)
-        if not q.awaitTermination(300):
-            q.stop()
-            spark.catalog.dropTempView(name)
-            raise TimeoutError(
-                f"streaming_embedding_frontier: query {name} did not "
-                "finish within 300 s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # the availableNow stream is terminated here (either finished or
-        # stopped on timeout), so its static ledger cache is releasable --
-        # without this, every spec invocation would leak one persisted
-        # frame into the never-evicting stream-static registry (sweeps
-        # and bench loops call the spec hundreds of times per session)
-        from dbt_glue_spark.streaming.pipelines import release_static_caches
-
-        release_static_caches()
-    emitted = spark.table(name)
     manifest = nonnull.select(
         sign_bucket(F.col("embedding"), 64, 8).alias("bucket")
     ).groupBy("bucket").agg(F.count("*").alias("class_size"))

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions import dedup, similarity, text_analysis
 from dbt_glue_spark.extensions.similarity import _hyperplane
+from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.quality import profile
 from dbt_glue_spark.quality import tests as dq
@@ -740,39 +741,16 @@ def dq_not_null_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     "final state must equal the batch oracle exactly (Kappa equivalence).",
 )
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dbt_glue_spark.streaming.pipelines import hourly_event_counts_stream
 
     events = load_table(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="dgs_q_stream_")
-    events.repartition(2).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)  # 2 staged files → 2 micro-batches
-        .parquet(stage)
-    )
-    name = f"q_stream_{uuid.uuid4().hex[:8]}"
-    # state-store partitioning follows shuffle.partitions at query start;
-    # scope it to the state size (|hours × types|, tiny) for this query —
-    # the real tuning knob on a cluster (SCALE.md §streaming)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            hourly_event_counts_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    # 2 staged files → 2 micro-batches
+    with streams.staged(events, 2) as stream:
+        out = streams.to_memory(
+            hourly_event_counts_stream(stream), "complete", "streaming_hourly_counts"
         )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # window start rendered as hour_ts to match the batch oracle's columns
-    return spark.table(name).select("hour_ts", "event_type", "n_events", "total_value")
+    return out.select("hour_ts", "event_type", "n_events", "total_value")
 
 
 @register(
@@ -805,35 +783,14 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sessionization exactly — the oracle is the batch lag+cumsum SQL.",
 )
 def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dbt_glue_spark.streaming.pipelines import sessionize_stream
 
     events = load_table(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="dgs_q_sess_")
-    events.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    name = f"q_sess_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sessionize_stream(stream, watermark=None)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    with streams.staged(events, 4) as stream:
+        out = streams.to_memory(
+            sessionize_stream(stream, watermark=None), "complete", "streaming_sessionize"
         )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name).select("user_id", "session_start", "n_events")
+    return out.select("user_id", "session_start", "n_events")
 
 
 @register(
@@ -848,34 +805,15 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "whose state expires with the watermark.",
 )
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     events = load_table(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="dgs_q_dedup_")
-    events.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    name = f"q_dedup_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.select("user_id", "event_type")
-            .dropDuplicates(["user_id", "event_type"])
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with streams.staged(events, 4) as stream:
+        return streams.to_memory(
+            stream.select("user_id", "event_type").dropDuplicates(
+                ["user_id", "event_type"]
+            ),
+            "append",
+            "streaming_dedup",
         )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
 
 
 @register(
@@ -910,10 +848,6 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the batch GROUP BY exactly.",
 )
 def streaming_activity_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import time as _time
-    import uuid
-
     from dbt_glue_spark.streaming.pipelines import user_activity_tracker
 
     events = load_table(spark, sf_dir, "events").select(
@@ -921,34 +855,22 @@ def streaming_activity_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("double").alias("value"),
     )
-    stage = tempfile.mkdtemp(prefix="dgs_q_track_")
-    events.coalesce(1).write.mode("overwrite").parquet(stage)
-    stream = spark.readStream.schema(events.schema).parquet(stage)
-    name = f"q_track_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     n_users = events.select("user_id").distinct().count()
-    try:
-        q = (
-            user_activity_tracker(stream, inactivity_timeout_ms=1)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        # batch 1 folds all rows into state; empty follow-up batches fire
-        # the processing-time timeout pass that flushes each user
-        deadline = _time.time() + 240
-        while _time.time() < deadline:
-            _time.sleep(2)
+    with streams.stage_dir() as stage:
+        stream = streams.file_stream(events, stage, 1, per_trigger=None)
+
+        def flushed(out: DataFrame) -> bool:
+            # batch 1 folds all rows into state; empty follow-up batches
+            # fire the processing-time timeout pass that flushes each user
             events.limit(0).write.mode("append").parquet(stage)
-            emitted = spark.table(name).count()
-            if emitted >= n_users:
-                break
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+            return out.count() >= n_users
+
+        return streams.to_memory(
+            user_activity_tracker(stream, inactivity_timeout_ms=1),
+            "append",
+            "streaming_activity_tracker",
+            until=flushed,
+        )
 
 
 @register(
@@ -1120,25 +1042,18 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from dbt_glue_spark.streaming.pipelines import incremental_stream_sink
 
     events = load_table(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="dgs_q_appendsrc_")
-    events.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(stage)
-    )
-    sink = tempfile.mkdtemp(prefix="dgs_q_appendsink_")
-    q = incremental_stream_sink(
-        stream,
-        os.path.join(sink, "data"),
-        os.path.join(sink, "ckpt"),
-    )
-    q.awaitTermination(300)
+    sink = streams.sink_dir()
+    with streams.staged(events, 4, per_trigger=2) as stream:
+        streams.drain(
+            incremental_stream_sink(
+                stream, os.path.join(sink, "data"), os.path.join(sink, "ckpt")
+            ),
+            "streaming_incremental_append",
+        )
     written = spark.read.parquet(os.path.join(sink, "data"))
     return written.groupBy(
         F.col("event_hour").alias("event_hour"), "event_type"
@@ -1168,31 +1083,24 @@ def streaming_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from dbt_glue_spark.streaming.pipelines import merge_stream_sink
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id"
     )
-    stage = tempfile.mkdtemp(prefix="dgs_q_mergesrc_")
+    target = streams.sink_dir()
     # repartition => batches arrive in no particular event order
-    events.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    target = tempfile.mkdtemp(prefix="dgs_q_mergetgt_")
-    q = merge_stream_sink(
-        stream,
-        spark,
-        target,
-        os.path.join(target, "ckpt"),
-        unique_key=["user_id", "event_type"],
-        dedup_source_on="event_id",
-    )
-    q.awaitTermination(300)
+    with streams.staged(events, 4) as stream:
+        q = merge_stream_sink(
+            stream,
+            spark,
+            target,
+            os.path.join(target, "ckpt"),
+            unique_key=["user_id", "event_type"],
+            dedup_source_on="event_id",
+        )
+        streams.drain(q, "streaming_merge_upsert")
     data_dir = os.path.join(target, "data")
     # empty source stream → no micro-batch ever merged → no target dir;
     # the upsert of nothing is an empty table, not a read error
@@ -1225,45 +1133,18 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Emitted rows must equal the batch interval join exactly.",
 )
 def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dbt_glue_spark.streaming.pipelines import click_purchase_join_stream
 
     events = load_table(spark, sf_dir, "events")
-    clicks_dir = tempfile.mkdtemp(prefix="dgs_q_clicks_")
-    purch_dir = tempfile.mkdtemp(prefix="dgs_q_purch_")
-    events.filter(F.col("event_type") == "click").repartition(2).write.mode(
-        "overwrite"
-    ).parquet(clicks_dir)
-    events.filter(F.col("event_type") == "purchase").repartition(2).write.mode(
-        "overwrite"
-    ).parquet(purch_dir)
-    schema = events.schema
-    c_stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(clicks_dir)
-    )
-    p_stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(purch_dir)
-    )
-    name = f"q_ivj_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            click_purchase_join_stream(c_stream, p_stream, watermark=None)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    clicks = events.filter(F.col("event_type") == "click")
+    purchases = events.filter(F.col("event_type") == "purchase")
+    with streams.staged(clicks, 2) as c_stream, streams.staged(purchases, 2) as p_stream:
+        out = streams.to_memory(
+            click_purchase_join_stream(c_stream, p_stream, watermark=None),
+            "append",
+            "streaming_interval_join",
         )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name).select(
-        "user_id", "click_id", "click_ts", "purchase_ts"
-    )
+    return out.select("user_id", "click_id", "click_ts", "purchase_ts")
 
 
 @register(
@@ -1281,41 +1162,23 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch left join exactly.",
 )
 def streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dbt_glue_spark.streaming.pipelines import enrich_stream
 
     events = load_table(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="dgs_q_enrich_")
-    events.repartition(2).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .select("event_id", "user_id")
-    )
     dim = spark.range(25).select(
         F.col("id").alias("seg_key"),
         F.concat(F.lit("seg"), F.col("id").cast("string")).alias("segment"),
     )
-    name = f"q_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        enrich_stream(
-            stream,
-            dim,
-            stream["user_id"] % 25 == dim["seg_key"],
-            ["segment"],
+    with streams.staged(events, 2) as src:
+        stream = src.select("event_id", "user_id")
+        enriched = enrich_stream(
+            stream, dim, stream["user_id"] % 25 == dim["seg_key"], ["segment"]
         )
-        .select("event_id", "user_id", "segment")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+        return streams.to_memory(
+            enriched.select("event_id", "user_id", "segment"),
+            "append",
+            "streaming_enrich",
+        )
 
 
 @register(
@@ -3410,10 +3273,9 @@ def _stream_cm_oracle() -> str:
 )
 def streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
-    from dbt_glue_spark.extensions.sketches import countmin_estimate
-    from dbt_glue_spark.streaming.pipelines import countmin_stream_sink
+    from dbt_glue_spark.extensions.sketches import countmin_build, countmin_estimate
+    from dbt_glue_spark.streaming.pipelines import countmin_stream_sink, read_ledger_or
 
     events = (
         load_table(spark, sf_dir, "events")
@@ -3421,20 +3283,12 @@ def streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id").isNotNull())
         .select(F.col("user_id").cast("string").alias("user_id"))
     )
-    stage = tempfile.mkdtemp(prefix="dgs_q_cmsrc_")
-    events.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    target = tempfile.mkdtemp(prefix="dgs_q_cmtgt_")
-    q = countmin_stream_sink(
-        stream, spark, target, os.path.join(target, "ckpt"), "user_id"
-    )
-    q.awaitTermination(300)
-    from dbt_glue_spark.extensions.sketches import countmin_build
-    from dbt_glue_spark.streaming.pipelines import read_ledger_or
+    target = streams.sink_dir()
+    with streams.staged(events, 4) as stream:
+        q = countmin_stream_sink(
+            stream, spark, target, os.path.join(target, "ckpt"), "user_id"
+        )
+        streams.drain(q, "streaming_countmin")
 
     sketch = read_ledger_or(spark, target, countmin_build(events.limit(0), "user_id"))
     top = (
@@ -3943,24 +3797,15 @@ def _stream_kmv_oracle() -> str:
 )
 def streaming_kmv_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
-    from dbt_glue_spark.extensions.sketches import kmv_estimate_from_hashes
-    from dbt_glue_spark.streaming.pipelines import kmv_stream_sink
+    from dbt_glue_spark.extensions.sketches import hash_fraction, kmv_estimate_from_hashes
+    from dbt_glue_spark.streaming.pipelines import kmv_stream_sink, read_ledger_or
 
     events = load_table(spark, sf_dir, "events").select("user_id")
-    stage = tempfile.mkdtemp(prefix="dgs_q_kmvsrc_")
-    events.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    target = tempfile.mkdtemp(prefix="dgs_q_kmvtgt_")
-    q = kmv_stream_sink(stream, spark, target, os.path.join(target, "ckpt"), "user_id")
-    q.awaitTermination(300)
-    from dbt_glue_spark.extensions.sketches import hash_fraction
-    from dbt_glue_spark.streaming.pipelines import read_ledger_or
+    target = streams.sink_dir()
+    with streams.staged(events, 4) as stream:
+        q = kmv_stream_sink(stream, spark, target, os.path.join(target, "ckpt"), "user_id")
+        streams.drain(q, "streaming_kmv_users")
 
     ledger = read_ledger_or(
         spark,
@@ -4783,28 +4628,20 @@ def ext_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from dbt_glue_spark.extensions.audit import (
         drift_from_histograms,
         value_histogram,
     )
-    from dbt_glue_spark.streaming.pipelines import histogram_stream_sink
+    from dbt_glue_spark.streaming.pipelines import histogram_stream_sink, read_ledger_or
 
     events = load_table(spark, sf_dir, "events").select("event_id", "value")
-    stage = tempfile.mkdtemp(prefix="dgs_q_histsrc_")
-    events.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    target = tempfile.mkdtemp(prefix="dgs_q_histtgt_")
-    q = histogram_stream_sink(
-        stream, spark, target, os.path.join(target, "ckpt"), "value", 16
-    )
-    q.awaitTermination(300)
-    from dbt_glue_spark.streaming.pipelines import read_ledger_or
+    target = streams.sink_dir()
+    with streams.staged(events, 4) as stream:
+        q = histogram_stream_sink(
+            stream, spark, target, os.path.join(target, "ckpt"), "value", 16
+        )
+        streams.drain(q, "streaming_drift_monitor")
 
     live = read_ledger_or(spark, target, value_histogram(events.limit(0), "value", 16))
     ref = value_histogram(
@@ -5784,27 +5621,20 @@ def _stream_gate_oracle() -> str:
 )
 def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    stage = tempfile.mkdtemp(prefix="dgs_q_gatesrc_")
-    docs.repartition(4).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    gated = text_analysis.quality_filter(stream)
-    target = tempfile.mkdtemp(prefix="dgs_q_gatetgt_")
-    q = (
-        gated.writeStream.format("parquet")
-        .option("path", os.path.join(target, "data"))
-        .option("checkpointLocation", os.path.join(target, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    target = streams.sink_dir()
+    with streams.staged(docs, 4) as stream:
+        q = (
+            text_analysis.quality_filter(stream)
+            .writeStream.format("parquet")
+            .option("path", os.path.join(target, "data"))
+            .option("checkpointLocation", os.path.join(target, "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        streams.drain(q, "streaming_quality_gate")
     out = spark.read.parquet(os.path.join(target, "data"))
     return out.groupBy("keep", "reasons").agg(
         F.count("*").cast("bigint").alias("n_docs"),

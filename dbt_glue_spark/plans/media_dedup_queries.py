@@ -77,6 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions.multimodal import png_encode, video_encode
+from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.sources.registry import load_table
 
@@ -764,9 +765,6 @@ def ext_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "new class.",
 )
 def streaming_image_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dbt_glue_spark.extensions.multimodal_dedup import image_dhash
     from dbt_glue_spark.streaming.pipelines import image_frontier_stream
 
@@ -776,48 +774,10 @@ def streaming_image_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("status") == "ok")
         .select("dhash")
     )
-    stage = tempfile.mkdtemp(prefix="dgs_q_imgfrontier_")
-    media.select("media_id", "content").repartition(4).write.mode(
-        "overwrite"
-    ).parquet(stage)
-    stream = (
-        spark.readStream.schema("media_id long, content binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    name = f"q_imgfrontier_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            image_frontier_stream(stream, ledger)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with streams.staged(media.select("media_id", "content"), 4) as stream:
+        emitted = streams.to_memory(
+            image_frontier_stream(stream, ledger), "append", "streaming_image_frontier"
         )
-        # A timeout on a slow box must FAIL LOUDLY here, not proceed with
-        # a partial emitted set (which would surface as a parity mismatch
-        # misattributed to the operator while the query keeps running).
-        if not q.awaitTermination(300):
-            q.stop()
-            spark.catalog.dropTempView(name)
-            raise TimeoutError(
-                f"streaming_image_frontier: query {name} did not finish "
-                "within 300 s (per-batch decode on a slow box?)"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # the availableNow stream is terminated here (either finished or
-        # stopped on timeout), so its static ledger cache is releasable --
-        # without this, every spec invocation would leak one persisted
-        # frame into the never-evicting stream-static registry (sweeps
-        # and bench loops call the spec hundreds of times per session)
-        from dbt_glue_spark.streaming.pipelines import release_static_caches
-
-        release_static_caches()
-    emitted = spark.table(name)
     manifest = (
         image_dhash(media)
         .filter(F.col("status") == "ok")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions import dedup
+from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.sources.registry import load_table
 
@@ -239,7 +240,6 @@ def _priority_sample_oracle() -> str:
 )
 def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from dbt_glue_spark.extensions.sampling import (
         priority_frame,
@@ -251,25 +251,19 @@ def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    stage = tempfile.mkdtemp(prefix="dgs_q_pssrc_")
-    docs.repartition(3).write.mode("overwrite").parquet(stage)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    target = tempfile.mkdtemp(prefix="dgs_q_pstgt_")
-    q = priority_sample_stream_sink(
-        stream,
-        spark,
-        target,
-        os.path.join(target, "ckpt"),
-        "doc_id",
-        "n_chars",
-        k=_PS_K,
-        seed="7",
-    )
-    q.awaitTermination(300)
+    target = streams.sink_dir()
+    with streams.staged(docs, 3) as stream:
+        q = priority_sample_stream_sink(
+            stream,
+            spark,
+            target,
+            os.path.join(target, "ckpt"),
+            "doc_id",
+            "n_chars",
+            k=_PS_K,
+            seed="7",
+        )
+        streams.drain(q, "streaming_priority_sample")
     # empty-stream contract (read_ledger_or): an empty corpus commits no
     # ledger; the sample of nothing is the empty typed priority frame
     empty_ledger = priority_frame(docs.limit(0), "doc_id", "n_chars")

@@ -284,11 +284,11 @@ def merge_stream_sink(
         data_dir = os.path.join(target_path, "data")
         if batch_df.isEmpty():
             return
-        try:
-            target = spark.read.parquet(data_dir)
-            exists = True
-        except Exception:  # first batch — no target yet
-            exists = False
+        # existence is the dir, not a successful read: a target that
+        # exists but fails to read (corrupt footer, permissions) must fail
+        # the batch, never be overwritten as if this were the first batch
+        exists = os.path.isdir(data_dir)
+        target = spark.read.parquet(data_dir) if exists else None
         if dedup_source_on is not None:
             # precombine semantics compare against the TARGET's value too
             # (an out-of-order batch must not clobber a newer target row):
@@ -1171,6 +1171,49 @@ def _takeover_state(
     return cur_path, commit_gen, False
 
 
+def _ledger_sink(
+    source_stream: DataFrame,
+    spark,
+    target_path: str,
+    checkpoint: str,
+    fold,
+    reset_on_takeover: bool,
+):
+    """The foreachBatch driver every ledger sink shares.
+
+    Per micro-batch: an empty batch commits nothing; otherwise the
+    checkpoint token and :func:`_takeover_state` decide the commit
+    generation and whether the batch is an at-least-once replay to skip;
+    ``fold(batch_df, cur)`` merges the batch into the current ledger
+    (``cur`` is None when there is none to merge into) and the result is
+    committed as a new version by :func:`_ledger_commit`. The query runs
+    ``availableNow`` and is returned started. ``reset_on_takeover`` is
+    the sink's merge algebra (see :func:`_takeover_state`)."""
+    # constructed here, resolved lazily inside the batch — the metadata
+    # file only exists once the stream starts (rules: _CkptToken doc)
+    token_of = _CkptToken(checkpoint)
+
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        token = token_of()
+        cur_path, commit_gen, skip = _takeover_state(
+            target_path, token, batch_id,
+            reset_on_takeover=reset_on_takeover, aliases=token_of.aliases(),
+        )
+        if skip:
+            return  # at-least-once replay of an already-merged batch
+        cur = spark.read.parquet(cur_path) if cur_path is not None else None
+        _ledger_commit(fold(batch_df, cur), target_path, commit_gen, batch_id)
+
+    return (
+        source_stream.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def countmin_stream_sink(
     source_stream: DataFrame,
     spark,
@@ -1200,37 +1243,18 @@ def countmin_stream_sink(
     """
     from dbt_glue_spark.extensions.sketches import countmin_build
 
-    # constructed here, resolved lazily inside the batch — the metadata
-    # file only exists once the stream starts (rules: _CkptToken doc)
-    token_of = _CkptToken(checkpoint)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        token = token_of()
-        cur_path, commit_gen, skip = _takeover_state(
-            target_path, token, batch_id,
-            reset_on_takeover=True, aliases=token_of.aliases(),
-        )
-        if skip:
-            return  # at-least-once replay of an already-merged batch
+    def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         batch_sketch = countmin_build(batch_df, col)
-        if cur_path is not None:
-            merged = (
-                spark.read.parquet(cur_path)
-                .unionByName(batch_sketch)
-                .groupBy("row_idx", "bucket")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
-        else:
-            merged = batch_sketch
-        _ledger_commit(merged, target_path, commit_gen, batch_id)
+        if cur is None:
+            return batch_sketch
+        return (
+            cur.unionByName(batch_sketch)
+            .groupBy("row_idx", "bucket")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+        )
 
-    return (
-        source_stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledger_sink(
+        source_stream, spark, target_path, checkpoint, fold, reset_on_takeover=True
     )
 
 
@@ -1262,35 +1286,15 @@ def kmv_stream_sink(
     """
     from dbt_glue_spark.extensions.sketches import hash_fraction
 
-    # constructed here, resolved lazily inside the batch — the metadata
-    # file only exists once the stream starts (rules: _CkptToken doc)
-    token_of = _CkptToken(checkpoint)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        token = token_of()
-        # reset_on_takeover=False: re-unioning re-delivered history is a
-        # set-merge no-op, so the ledger survives checkpoint loss intact
-        cur_path, commit_gen, skip = _takeover_state(
-            target_path, token, batch_id,
-            reset_on_takeover=False, aliases=token_of.aliases(),
-        )
-        if skip:
-            return  # at-least-once replay of an already-merged batch
+    def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         bh = batch_df.select(hash_fraction(F.col(col)).alias("h")).distinct()
-        if cur_path is not None:
-            merged = spark.read.parquet(cur_path).unionByName(bh).distinct()
-        else:
-            merged = bh
-        topk = merged.orderBy(F.col("h").asc()).limit(k)
-        _ledger_commit(topk, target_path, commit_gen, batch_id)
+        merged = bh if cur is None else cur.unionByName(bh).distinct()
+        return merged.orderBy(F.col("h").asc()).limit(k)
 
-    return (
-        source_stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    # reset_on_takeover=False: re-unioning re-delivered history is a
+    # set-merge no-op, so the ledger survives checkpoint loss intact
+    return _ledger_sink(
+        source_stream, spark, target_path, checkpoint, fold, reset_on_takeover=False
     )
 
 
@@ -1317,37 +1321,18 @@ def histogram_stream_sink(
     """
     from dbt_glue_spark.extensions.audit import value_histogram
 
-    # constructed here, resolved lazily inside the batch — the metadata
-    # file only exists once the stream starts (rules: _CkptToken doc)
-    token_of = _CkptToken(checkpoint)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        token = token_of()
-        cur_path, commit_gen, skip = _takeover_state(
-            target_path, token, batch_id,
-            reset_on_takeover=True, aliases=token_of.aliases(),
-        )
-        if skip:
-            return  # at-least-once replay of an already-merged batch
+    def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         batch_hist = value_histogram(batch_df, col, bucket_width, n_buckets)
-        if cur_path is not None:
-            merged = (
-                spark.read.parquet(cur_path)
-                .unionByName(batch_hist)
-                .groupBy("bucket")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
-        else:
-            merged = batch_hist
-        _ledger_commit(merged, target_path, commit_gen, batch_id)
+        if cur is None:
+            return batch_hist
+        return (
+            cur.unionByName(batch_hist)
+            .groupBy("bucket")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+        )
 
-    return (
-        source_stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledger_sink(
+        source_stream, spark, target_path, checkpoint, fold, reset_on_takeover=True
     )
 
 
@@ -1396,37 +1381,16 @@ def priority_sample_stream_sink(
     """
     from dbt_glue_spark.extensions.sampling import priority_frame
 
-    # constructed here, resolved lazily inside the batch — the metadata
-    # file only exists once the stream starts (rules: _CkptToken doc)
-    token_of = _CkptToken(checkpoint)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        token = token_of()
-        cur_path, commit_gen, skip = _takeover_state(
-            target_path, token, batch_id,
-            reset_on_takeover=False, aliases=token_of.aliases(),
-        )
-        if skip:
-            return  # at-least-once replay of an already-merged batch
+    def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
+        order = (F.col("priority").asc(), F.col(key_col).asc())
         bp = (
             priority_frame(batch_df, key_col, weight_col, seed)
-            .orderBy(F.col("priority").asc(), F.col(key_col).asc())
+            .orderBy(*order)
             .limit(k + 1)
         )
-        if cur_path is not None:
-            merged = spark.read.parquet(cur_path).unionByName(bp).distinct()
-        else:
-            merged = bp
-        topk = merged.orderBy(
-            F.col("priority").asc(), F.col(key_col).asc()
-        ).limit(k + 1)
-        _ledger_commit(topk, target_path, commit_gen, batch_id)
+        merged = bp if cur is None else cur.unionByName(bp).distinct()
+        return merged.orderBy(*order).limit(k + 1)
 
-    return (
-        source_stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledger_sink(
+        source_stream, spark, target_path, checkpoint, fold, reset_on_takeover=False
     )

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 
 import pytest
@@ -25,3 +27,39 @@ def test_register_rejects_duplicate_name():
     with pytest.raises(ValueError, match="already registered"):
         register(name, None)(lambda spark, sf_dir: None)
     assert SPECS()[name] is spec
+
+
+def test_streaming_specs_go_through_the_runner():
+    """Waiting for a query, staging its files and scoping the state-store
+    partitioning belong to plans/streams.py, which fails loud on a
+    timeout and cleans up after itself; a plan that hand-rolls any of
+    them regrows the silent-partial-answer path. (The batch
+    materialization specs' warehouse dirs are not stream staging, so
+    ``mkdtemp`` is held against the ``streaming_*`` specs only.)"""
+    plans = os.path.join(os.path.dirname(MANIFEST), "..", "dbt_glue_spark", "plans")
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(plans, "*.py"))):
+        if os.path.basename(path) == "streams.py":
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for c in ast.walk(fn):
+                if not (isinstance(c, ast.Call) and isinstance(c.func, ast.Attribute)):
+                    continue
+                what = c.func.attr
+                if (
+                    what == "awaitTermination"
+                    or (what == "mkdtemp" and fn.name.startswith("streaming_"))
+                    or (
+                        what == "set"
+                        and c.args
+                        and getattr(c.args[0], "value", None)
+                        == "spark.sql.shuffle.partitions"
+                    )
+                ):
+                    where = f"{os.path.basename(path)}:{c.lineno}"
+                    offenders.append(f"{where} {fn.name} {what}")
+    assert not offenders

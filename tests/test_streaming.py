@@ -125,6 +125,29 @@ def test_merge_stream_sink_latest_wins(spark, events_stream_source):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def test_merge_stream_sink_fails_on_unreadable_target(spark, tmp_path):
+    """A target that exists but cannot be read fails the batch: it is
+    never taken for "no target yet" and overwritten by one micro-batch."""
+    from pyspark.errors import StreamingQueryException
+
+    from dbt_glue_spark.streaming.pipelines import merge_stream_sink
+
+    src = tmp_path / "src"
+    spark.createDataFrame([(1, 10), (2, 20)], "k long, v long").write.parquet(str(src))
+    data_dir = tmp_path / "target" / "data"
+    data_dir.mkdir(parents=True)
+    corrupt = data_dir / "part-00000.parquet"
+    corrupt.write_bytes(b"PAR1 not a parquet footer")
+    stream = spark.readStream.schema("k long, v long").parquet(str(src))
+    q = merge_stream_sink(
+        stream, spark, str(tmp_path / "target"), str(tmp_path / "ckpt"), unique_key=["k"]
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert corrupt.read_bytes() == b"PAR1 not a parquet footer"
+    assert os.listdir(data_dir) == ["part-00000.parquet"]
+
+
 def test_user_activity_tracker_stateful(spark, events_stream_source):
     """applyInPandasWithState: run the tracker over the staged stream, then
     force the processing-time timeout with an empty follow-up batch and
