@@ -22,6 +22,7 @@ for exactly that substitution).
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import time
@@ -605,13 +606,17 @@ class Engine:
     ) -> DataFrame:
         """Run every declared schema test (``Model.tests``) — the ``dbt
         test`` command. Returns a report DataFrame (model, column, test,
-        n_failures, passed); overall health = ``report.filter("NOT
+        n_failures, passed) with one row per test, in model, column and
+        spec declaration order; overall health = ``report.filter("NOT
         passed")`` empty.
 
-        Each test evaluates lazily and only its failure COUNT is collected
-        (dbt likewise stores/counts failures) — failing-row payloads stay
-        distributed; fetch them by re-running the underlying quality
-        operator when debugging.
+        Every spec is checked before anything runs (an unknown one raises
+        ``ValueError`` without submitting a job). Then the failure COUNTS
+        of all selected tests come from one Spark action (dbt likewise
+        stores/counts failures) — failing-row payloads stay distributed;
+        fetch them by re-running the underlying quality operator when
+        debugging. The report itself is a local relation: reading or
+        filtering it runs no Spark job.
 
         ``store_failures=True`` is dbt's ``store_failures`` flag: each
         FAILING test additionally materializes its failing rows as a table
@@ -621,9 +626,7 @@ class Engine:
         tests store nothing, and a re-run replaces prior audit tables
         through the same versioned write path as any other table.
         """
-        from dbt_glue_spark.quality import tests as dq
-
-        report: list[tuple] = []
+        selected: list[tuple[str, str, str, DataFrame]] = []
         for name in names or list(self.models):
             model = self.models[name]
             if not model.tests:
@@ -631,40 +634,42 @@ class Engine:
             df = self.ref_df(name)
             for column, specs in model.tests.items():
                 for spec in specs:
-                    if spec == "unique":
-                        fails = dq.unique(df, column)
-                        label = "unique"
-                    elif spec == "not_null":
-                        fails = dq.not_null(df, column)
-                        label = "not_null"
-                    elif isinstance(spec, dict) and "accepted_values" in spec:
-                        cfg = spec["accepted_values"]
-                        fails = dq.accepted_values(
-                            df, column, cfg["values"], cfg.get("quote", True)
-                        )
-                        label = "accepted_values"
-                    elif isinstance(spec, dict) and "relationships" in spec:
-                        cfg = spec["relationships"]
-                        parent = self.ref_df(cfg["to"]) if cfg["to"] in self.models else self.spark.table(cfg["to"])
-                        fails = dq.relationships(df, column, parent, cfg["field"])
-                        label = "relationships"
-                    else:
-                        raise ValueError(f"unknown test spec {spec!r} on {name}.{column}")
-                    n = fails.count()
-                    if store_failures and n > 0:
-                        audit = Engine(
-                            self.spark,
-                            self.warehouse,
-                            schema=f"{self.schema}_dbt_test__audit",
-                        )
-                        audit_model = Model(f"{name}__{column}__{label}")
-                        audit.add(audit_model)
-                        audit._write_swap(fails, audit_model, op="STORE FAILURES")
-                    report.append((name, column, label, n, n == 0))
-        return self.spark.createDataFrame(
-            report or [("", "", "", 0, True)][:0],
-            "model string, column string, test string, n_failures bigint, passed boolean",
-        )
+                    selected.append((name, column, *self._failing_rows(name, df, column, spec)))
+        counts = _count_rows([fails for *_, fails in selected])
+        if store_failures and any(counts):
+            audit = Engine(
+                self.spark, self.warehouse, schema=f"{self.schema}_dbt_test__audit"
+            )
+            for (name, column, label, fails), n in zip(selected, counts):
+                if n > 0:
+                    audit_model = Model(f"{name}__{column}__{label}")
+                    audit.add(audit_model)
+                    audit._write_swap(fails, audit_model, op="STORE FAILURES")
+        rows = [(*test[:3], n, n == 0) for test, n in zip(selected, counts)]
+        return _report(self.spark, rows)
+
+    def _failing_rows(
+        self, name: str, df: DataFrame, column: str, spec: Any
+    ) -> tuple[str, DataFrame]:
+        """(label, failing-row frame) of one generic test ``spec`` on
+        column ``column`` of model ``name`` (read as ``df``): the one
+        dispatch ``test`` and ``run_tests`` share. Builds the plan only."""
+        from dbt_glue_spark.quality import tests as dq
+
+        if spec == "unique":
+            return "unique", dq.unique(df, column)
+        if spec == "not_null":
+            return "not_null", dq.not_null(df, column)
+        if isinstance(spec, dict) and "accepted_values" in spec:
+            cfg = spec["accepted_values"]
+            fails = dq.accepted_values(df, column, cfg["values"], cfg.get("quote", True))
+            return "accepted_values", fails
+        if isinstance(spec, dict) and "relationships" in spec:
+            cfg = spec["relationships"]
+            to = cfg["to"]
+            parent = self.ref_df(to) if to in self.models else self.spark.table(to)
+            return "relationships", dq.relationships(df, column, parent, cfg["field"])
+        raise ValueError(f"unknown test spec {spec!r} on {name}.{column}")
 
     def unit_test(
         self,
@@ -709,15 +714,17 @@ class Engine:
 
         sql = _REF.sub(sub, model.sql)
         sql = _THIS.sub(self.relation_for(name).render(), sql)
-        actual_df = self.spark.sql(sql)
-        expect_df = to_df(expect)
-        cols = expect_df.columns
-        actual = sorted(
-            (tuple(r[c] for c in cols) for r in actual_df.select(*cols).collect())
-        )
-        expected = sorted((tuple(r[c] for c in cols) for r in expect_df.collect()))
-        for v in views.values():
-            self.spark.catalog.dropTempView(v)
+        try:
+            actual_df = self.spark.sql(sql)
+            expect_df = to_df(expect)
+            cols = expect_df.columns
+            actual = sorted(
+                (tuple(r[c] for c in cols) for r in actual_df.select(*cols).collect())
+            )
+            expected = sorted((tuple(r[c] for c in cols) for r in expect_df.collect()))
+        finally:
+            for v in views.values():
+                self.spark.catalog.dropTempView(v)
         return {"passed": actual == expected, "actual": actual, "expected": expected}
 
     def compact(
@@ -1329,6 +1336,45 @@ class Engine:
         return self._write_swap(snap, model, op="SNAPSHOT")
 
 
+def _count_rows(frames: list[DataFrame]) -> list[int]:
+    """Row count of each frame, from ONE Spark action: every frame's rows
+    are tagged with the frame's index, the tagged frames are unioned, and
+    one aggregation counts them per index (partial counts are taken
+    map-side, so one small exchange serves every frame). AQE then runs the
+    frames' own shuffle stages in the same waves instead of one job chain
+    and one driver round trip per frame. No frames, no job."""
+    if not frames:
+        return []
+    tagged = functools.reduce(
+        DataFrame.unionAll, [f.select(F.lit(i).alias("i")) for i, f in enumerate(frames)]
+    )
+    counts = dict(tagged.groupBy("i").count().collect())
+    return [counts.get(i, 0) for i in range(len(frames))]
+
+
+#: typed all-NULL row closing the report's VALUES list (cut off by its LIMIT)
+_REPORT_NULL_ROW = (
+    "(CAST(NULL AS STRING), CAST(NULL AS STRING), CAST(NULL AS STRING), "
+    "CAST(NULL AS BIGINT), CAST(NULL AS BOOLEAN))"
+)
+
+
+def _report(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """``Engine.test``'s report as a local relation, an inline VALUES table
+    with every cell bound as a parameter: collecting or filtering it runs
+    no Spark job, where a ``createDataFrame(list)`` frame is RDD-backed and
+    runs one per action. The typed NULL row, which the LIMIT drops, fixes
+    the schema (model, column, test string, n_failures bigint, passed
+    boolean, all nullable) for any number of rows, zero included."""
+    cells = [f"(:m{i}, :c{i}, :t{i}, :n{i}, :p{i})" for i in range(len(rows))]
+    args = {f"{k}{i}": v for i, row in enumerate(rows) for k, v in zip("mctnp", row)}
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join([*cells, _REPORT_NULL_ROW])} "
+        f"AS t(model, `column`, test, n_failures, passed) LIMIT {len(rows)}",
+        args=args,
+    )
+
+
 def run_tests(
     engine: Engine,
     model_name: str,
@@ -1338,29 +1384,14 @@ def run_tests(
     test-name → failing-row count (0 = pass), dbt's test loop in one call.
 
     ``tests`` entries: (test_type, params) with test_type in unique /
-    not_null / accepted_values / relationships (quality/tests.py).
+    not_null / accepted_values / relationships (quality/tests.py). Runs
+    through ``Engine.test``'s dispatch: every entry is checked first, then
+    all counts come from one Spark action.
     """
-    from dbt_glue_spark.quality import tests as dq
-
     df = engine.ref_df(model_name)
-    results: dict[str, int] = {}
+    keys, frames = [], []
     for ttype, params in tests:
-        if ttype == "unique":
-            fail = dq.unique(df, params["column"])
-        elif ttype == "not_null":
-            fail = dq.not_null(df, params["column"])
-        elif ttype == "accepted_values":
-            fail = dq.accepted_values(
-                df, params["column"], params["values"], params.get("quote", True)
-            )
-        elif ttype == "relationships":
-            fail = dq.relationships(
-                df,
-                params["column"],
-                engine.ref_df(params["to"]),
-                params["field"],
-            )
-        else:
-            raise ValueError(f"unknown test {ttype}")
-        results[f"{ttype}:{params.get('column', '')}"] = fail.count()
-    return results
+        spec = ttype if ttype in ("unique", "not_null") else {ttype: params}
+        frames.append(engine._failing_rows(model_name, df, params["column"], spec)[1])
+        keys.append(f"{ttype}:{params['column']}")
+    return dict(zip(keys, _count_rows(frames)))

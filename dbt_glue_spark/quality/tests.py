@@ -36,8 +36,8 @@ def accepted_values(
 ) -> DataFrame:
     """Group-by counts of values outside the accepted list. ``quote_values``
     mirrors the reference's quote toggle (accepted_values.sql:14-20) —
-    with quote=False the column is compared unquoted (numeric semantics)."""
-    col = F.col(column) if quote_values else F.col(column).cast("double")
+    with quote=False each accepted value becomes a float literal and the
+    column is compared against those (numeric semantics)."""
     vals = values if quote_values else [float(v) for v in values]
     return (
         df.groupBy(F.col(column).alias("value_field"))
