@@ -11,33 +11,40 @@ placeholders in model SQL (regex-substituted — no Jinja dependency);
 ephemeral models inline as parenthesized subqueries exactly like dbt CTE
 inlining (SURVEY §2.12 M11).
 
-Storage model: external tables under ``{warehouse}/{schema}/{table}``
-(reference location policy, impl.py:415-444). Rewriting materializations
-(table full-refresh, merge, snapshot) write to a fresh versioned location
-then re-point the catalog — plain parquet has no transaction log, so the
-swap is the atomicity boundary (Delta/Iceberg on a real cluster make this
-a metadata commit; the engine's write path is isolated in ``_write_swap``
-for exactly that substitution).
+Storage model: external tables in ``__v{n}`` generation directories under
+``{warehouse}/{schema}`` (reference location policy, impl.py:415-444).
+Every table write goes through ``_write_swap``, under one contract: CHECK
+filter, observed row count, catalog refresh, one commit-log line, vacuum
+and the Athena manifest. Rewriting materializations (table, full refresh,
+merge, snapshot, DML, compaction) swap: write a fresh generation, then
+re-point the catalog — plain parquet has no transaction log, so the swap
+is the atomicity boundary. Incremental ``append`` and partitioned
+``insert_overwrite`` write in place, into the current generation. On a
+real cluster Delta/Iceberg make both a metadata commit; the write path is
+isolated in ``_write_swap`` for exactly that substitution.
 """
 
 from __future__ import annotations
 
 import functools
+import json
 import os
 import re
 import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.catalog import Catalog
 from dbt_glue_spark.materializations.seed import infer_seed_df
 from dbt_glue_spark.materializations.snapshot import scd2_apply
+from dbt_glue_spark.operators import governance
+from dbt_glue_spark.operators.governance import scan_versions
 from dbt_glue_spark.operators.merge import merge_upsert
 from dbt_glue_spark.operators.schema_evolution import evolve
-from dbt_glue_spark.relations import Relation, build_location
+from dbt_glue_spark.relations import Relation, quote
 
 TRANSACTIONAL_FORMATS = {"delta", "iceberg", "hudi"}
 #: formats the reference accepts (validate.sql:4)
@@ -86,8 +93,8 @@ class ModelConfig:
     # analogue): SQL boolean predicates enforced on EVERY write of this
     # model. SQL CHECK semantics — a row violates only when the predicate
     # is FALSE; NULL passes. Enforced in-plan (assert_true riding the
-    # write, no extra pass); a violating write fails mid-job and the
-    # staging swap leaves the previous table generation intact.
+    # write, no extra pass); a violating write fails mid-job and leaves
+    # the table unchanged (see ``Engine._write_swap``).
     check_constraints: list[str] | None = None
     # regenerate the Athena/Presto symlink manifest after EVERY write of
     # this model (reference ties delta_update_manifest to the write path,
@@ -413,21 +420,13 @@ class Engine:
             self._check_contract(out, model.config.contract)
         return out
 
-    def _location(self, model: Model, version: int | None = None) -> str:
-        # custom locations are versioned too (``{custom}__v{n}``) — an
-        # unversioned custom path would make every rewrite an in-place
-        # overwrite of the directory a concurrent (or self-) read is
-        # scanning, and would break the "readers of the old generation
-        # stay valid until the catalog flips" invariant for that config.
-        custom = model.config.custom_location
-        if custom is not None and version is not None:
-            custom = f"{custom.rstrip('/')}__v{version}"
-        ident = model.name if version is None else f"{model.name}__v{version}"
-        return build_location(self.warehouse, self.schema, ident, custom)
-
     def _version_scan_args(self, model: Model) -> tuple[str, str]:
         """(directory, base-name) where this model's ``__v{n}`` generations
-        live — beside a custom location, else under {warehouse}/{schema}."""
+        and its ``{base}__log.jsonl`` commit log live — beside a custom
+        location, else under {warehouse}/{schema}. Custom locations are
+        versioned too: an unversioned custom path would make every rewrite
+        an in-place overwrite of the directory a concurrent (or self-)
+        read is scanning."""
         custom = model.config.custom_location
         if custom:
             custom = custom.rstrip("/")
@@ -435,32 +434,38 @@ class Engine:
         return os.path.join(self.warehouse, self.schema), model.name
 
     def _write_swap(self, df: DataFrame, model: Model, op: str = "WRITE") -> Relation:
-        """Write df to a fresh versioned location, then re-point the catalog.
+        """Commit ``df`` as one write of ``model`` — the engine's only table
+        write. Every write, whatever its strategy, gets the same contract:
+        the model's CHECK constraints filter the rows, the written row count
+        is observed on the write itself (no extra pass), the catalog is
+        refreshed, one commit-log line is appended, and the Athena manifest
+        is regenerated when configured. A failed write commits nothing and
+        logs nothing.
 
-        The substitution point for transactional formats: with Delta/Iceberg
-        this whole function becomes ``CREATE OR REPLACE TABLE`` /
-        ``MERGE INTO`` (reference: adapters.sql:161-167). On plain parquet
-        the version bump keeps readers of the old location valid until the
-        catalog flips.
+        Two writes fulfil it, picked by ``op`` (the strategy the
+        materialization already holds):
 
-        Commit ordering: the full write lands under a *staging* identifier
-        first; only after it succeeds is the old table dropped and the
-        staging entry renamed over it (two metadata-only statements). A
-        failed or killed write therefore leaves the previous table fully
-        intact — the failure window is the metadata flip, not the data job.
+        - **in place** (``APPEND``, and ``INSERT OVERWRITE`` of a
+          partitioned table): ``insertInto`` the current generation, with
+          overwrite off, or on to replace only the batch's partitions
+          (the session's partitionOverwriteMode is dynamic). Spark's output
+          committer publishes the files only when the job succeeds.
+        - **swap** (everything else): write a fresh ``__v{n}`` generation
+          under a *staging* identifier, then drop the old entry and rename
+          the staging one over it (two metadata-only statements). Readers
+          of the old generation — including a lazy self-read feeding this
+          very write, as merge and snapshot do — stay valid until the
+          catalog flips, and a failed or killed write leaves the previous
+          generation intact. Superseded generations are vacuumed when
+          ``auto_vacuum`` is on.
 
-        Every successful swap appends one line to the model's commit log
-        (``{base}__log.jsonl`` beside the generations) with the version,
-        operation, and rows written (an observed metric riding the write —
-        no extra pass). ``Engine.history`` is the DESCRIBE HISTORY read
-        side; a failed write logs nothing, matching the no-commit outcome.
+        The substitution point for transactional formats: with
+        Delta/Iceberg the two writes become ``INSERT INTO`` / ``INSERT
+        OVERWRITE`` and ``CREATE OR REPLACE TABLE`` / ``MERGE INTO``
+        (reference: adapters.sql:161-167), and the log is the format's own.
         """
-        from pyspark.sql import Observation
-
         cfg = model.config
         rel = self.relation_for(model.name)
-        version = int(time.time() * 1000)
-        loc = self._location(model, version)
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         for c in cfg.check_constraints or []:
@@ -473,50 +478,91 @@ class Engine:
                     F.lit(True),
                 )
             )
-        writer = df.write.format(cfg.file_format).mode("overwrite")
-        if cfg.partition_by:
-            writer = writer.partitionBy(*cfg.partition_by)
-        writer = writer.option("path", loc)
-        if cfg.clustered_by and cfg.buckets:
-            writer = writer.bucketBy(cfg.buckets, *cfg.clustered_by).sortBy(
-                *cfg.clustered_by
-            )
-        stage = Relation(self.schema, f"{model.name}__stg{version}")
-        try:
-            writer.saveAsTable(stage.render())
-        except Exception:
-            self.catalog.drop(stage)
-            raise
-        self.catalog.drop(rel)
-        self.catalog.rename(stage, rel)
+        in_place = op == "APPEND" or (op == "INSERT OVERWRITE" and bool(cfg.partition_by))
+        ts_ms = None  # an in-place commit is stamped when it lands
+        if in_place:
+            # the rows land in the generation the newest commit names
+            commits = self._commits(model)
+            version = commits[-1]["version"] if commits else None
+            df.write.insertInto(rel.render(), overwrite=op != "APPEND")
+        else:
+            version = ts_ms = int(time.time() * 1000)
+            log_dir, base = self._version_scan_args(model)
+            loc = os.path.join(log_dir, f"{base}__v{version}")
+            writer = df.write.format(cfg.file_format).mode("overwrite")
+            if cfg.partition_by:
+                writer = writer.partitionBy(*cfg.partition_by)
+            writer = writer.option("path", loc)
+            if cfg.clustered_by and cfg.buckets:
+                writer = writer.bucketBy(cfg.buckets, *cfg.clustered_by).sortBy(
+                    *cfg.clustered_by
+                )
+            stage = Relation(self.schema, f"{model.name}__stg{version}")
+            try:
+                writer.saveAsTable(stage.render())
+            except Exception:
+                self.catalog.drop(stage)
+                raise
+            self.catalog.drop(rel)
+            self.catalog.rename(stage, rel)
+            # committed generation's location — lets callers (compact)
+            # account for the files they just wrote without building a
+            # second Spark FileIndex over the new table (one listing per
+            # rewrite, not two; at 100 TB object-store listing is a real cost)
+            self._last_swap_location = loc
         self.catalog.refresh(rel)
-        # committed generation's location — lets callers (compact) account
-        # for the files they just wrote without building a second Spark
-        # FileIndex over the new table (one listing per rewrite, not two;
-        # at 100 TB object-store listing is a real cost)
-        self._last_swap_location = loc
         try:
             rows = int(obs.get["rows"] or 0)
         except Exception:  # noqa: BLE001 — metric loss must not fail the commit
             rows = -1
-        log_dir, base = self._version_scan_args(model)
-        import json as _json
-
-        os.makedirs(log_dir, exist_ok=True)
-        with open(os.path.join(log_dir, f"{base}__log.jsonl"), "a") as fh:
-            fh.write(
-                _json.dumps(
-                    {"version": version, "ts_ms": version, "op": op, "rows": rows}
-                )
-                + "\n"
-            )
-        if cfg.auto_vacuum:
-            from dbt_glue_spark.operators.governance import vacuum_versions_at
-
-            vacuum_versions_at(*self._version_scan_args(model), keep=1)
+        self._commit(model, op, rows, version, ts_ms)
+        if cfg.auto_vacuum and not in_place:  # an in-place write supersedes nothing
+            governance.vacuum_versions_at(*self._version_scan_args(model), keep=1)
         if cfg.athena_manifest:
             self.generate_symlink_manifest(model.name, strict=False)
         return rel
+
+    def _log_path(self, model: Model) -> str:
+        log_dir, base = self._version_scan_args(model)
+        return os.path.join(log_dir, f"{base}__log.jsonl")
+
+    def _commits(self, model: Model) -> list[dict]:
+        """The model's commit log, oldest first."""
+        path = self._log_path(model)
+        if not os.path.exists(path):
+            return []
+        with open(path) as fh:
+            return [json.loads(line) for line in fh if line.strip()]
+
+    def _commit(
+        self, model: Model, op: str, rows: int, version: int | None, ts_ms: int | None = None
+    ) -> None:
+        """Append one line to the model's commit log. ``version`` names the
+        generation the table points at after the commit — the new one for
+        a swap (whose ``ts_ms`` is its version), the current one for an
+        in-place write, the restored one for a restore."""
+        path = self._log_path(model)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        entry = {
+            "version": version,
+            "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
+            "op": op,
+            "rows": rows,
+        }
+        with open(path, "a") as fh:
+            fh.write(json.dumps(entry) + "\n")
+
+    def _register(self, rel: Relation, model: Model, location: str) -> None:
+        """Catalog ``rel`` over an existing generation directory of
+        ``model`` — metadata only, no data moves (generations are immutable
+        once written); a partitioned table re-discovers its partitions."""
+        self.spark.sql(
+            f"CREATE TABLE {rel.render()} USING {model.config.file_format} "
+            f"LOCATION '{location}'"
+        )
+        if model.config.partition_by:
+            self.spark.sql(f"MSCK REPAIR TABLE {rel.render()}")
+        self.catalog.refresh(rel)
 
     def execute_script(self, script: str, splitter: str = "dbt_next_query") -> DataFrame:
         """Multi-statement batch: split on the marker, run sequentially,
@@ -968,9 +1014,7 @@ class Engine:
     def docs(self) -> DataFrame:
         """Catalog/docs extraction for this project's schema (the
         reference's get_catalog, impl.py:538-612)."""
-        from dbt_glue_spark.operators.governance import catalog_info
-
-        return catalog_info(self.spark, [self.schema])
+        return governance.catalog_info(self.spark, [self.schema])
 
     def delete_rows(self, name: str, predicate: str) -> int:
         """Row-level DELETE — the plain-parquet analogue of Delta/Iceberg
@@ -985,8 +1029,6 @@ class Engine:
         filtered rewrite — same shape as merge on parquet, documented in
         SCALE.md known-trade-offs.
         """
-        from pyspark.sql import Observation
-
         model = self.models[name]
         rel = self.relation_for(name)
         df = self.spark.table(rel.render())
@@ -1009,8 +1051,6 @@ class Engine:
         untouched (CASE WHEN is falsy on NULL — SQL UPDATE semantics).
         Returns the number of rows that matched the predicate.
         """
-        from pyspark.sql import Observation
-
         model = self.models[name]
         rel = self.relation_for(name)
         df = self.spark.table(rel.render())
@@ -1083,62 +1123,28 @@ class Engine:
         are immutable, so no data moves), and a RESTORE commit is logged.
         Requires ``auto_vacuum=False`` history retention, like any time
         travel here."""
-        import json as _json
-
         model = self.models[name]
-        from dbt_glue_spark.operators.governance import scan_versions
-
-        log_dir, base = self._version_scan_args(model)
-        paths = dict(scan_versions(log_dir, base))
+        paths = dict(scan_versions(*self._version_scan_args(model)))
         if version not in paths:
             raise KeyError(f"version {version} of {name} not retained")
         rel = self.relation_for(name)
         self.catalog.drop(rel)
-        self.spark.sql(
-            f"CREATE TABLE {rel.render()} USING {model.config.file_format} "
-            f"LOCATION '{paths[version]}'"
-        )
-        if model.config.partition_by:
-            self.spark.sql(f"MSCK REPAIR TABLE {rel.render()}")
-        self.catalog.refresh(rel)
-        with open(os.path.join(log_dir, f"{base}__log.jsonl"), "a") as fh:
-            fh.write(
-                _json.dumps(
-                    {
-                        "version": int(time.time() * 1000),
-                        "ts_ms": int(time.time() * 1000),
-                        "op": f"RESTORE v{version}",
-                        "rows": -1,
-                    }
-                )
-                + "\n"
-            )
+        self._register(rel, model, paths[version])
+        self._commit(model, f"RESTORE v{version}", -1, version)
         return rel
 
     def history(self, name: str) -> list[dict]:
         """Commit history, newest first — the ``DESCRIBE HISTORY`` analogue
-        for the versioned-location scheme. Each entry: version, ts_ms, op
+        for the versioned-location scheme. Each entry: version (the
+        generation the table pointed at after the commit), ts_ms, op
         (CREATE/APPEND/MERGE/DELETE/UPDATE/OPTIMIZE/...), rows written, and
         whether that generation is still retained on disk (``retained`` —
         history survives vacuum; data dirs may not)."""
-        import json as _json
-
-        log_dir, base = self._version_scan_args(self.models[name])
-        path = os.path.join(log_dir, f"{base}__log.jsonl")
-        if not os.path.exists(path):
-            return []
-        from dbt_glue_spark.operators.governance import scan_versions
-
-        retained = {v for v, _ in scan_versions(log_dir, base)}
-        out = []
-        with open(path) as fh:
-            for line in fh:
-                if line.strip():
-                    e = _json.loads(line)
-                    e["retained"] = e["version"] in retained
-                    out.append(e)
-        out.sort(key=lambda e: e["version"], reverse=True)
-        return out
+        model = self.models[name]
+        retained = {v for v, _ in scan_versions(*self._version_scan_args(model))}
+        out = [{**e, "retained": e["version"] in retained} for e in self._commits(model)]
+        # reversed first, so commits within one millisecond stay newest first
+        return sorted(reversed(out), key=lambda e: e["ts_ms"], reverse=True)
 
     def clone_table(self, name: str, target: str) -> Relation:
         """Zero-copy shallow clone — the Delta ``SHALLOW CLONE`` analogue:
@@ -1158,20 +1164,11 @@ class Engine:
                 f"clone_table requires auto_vacuum=False on {name!r}: vacuum "
                 "would delete the cloned generation on the next rewrite"
             )
-        from dbt_glue_spark.operators.governance import scan_versions
-
         gens = scan_versions(*self._version_scan_args(model))
         if not gens:
             raise KeyError(f"{name} has no materialized generation to clone")
-        _, src_loc = gens[0]
         tgt = Relation(self.schema, target)
-        fmt = model.config.file_format
-        self.spark.sql(
-            f"CREATE TABLE {tgt.render()} USING {fmt} LOCATION '{src_loc}'"
-        )
-        if model.config.partition_by:
-            self.spark.sql(f"MSCK REPAIR TABLE {tgt.render()}")
-        self.catalog.refresh(tgt)
+        self._register(tgt, model, gens[0][1])
         return tgt
 
     def analyze_table(self, name: str, columns: list[str] | None = None) -> dict:
@@ -1189,12 +1186,7 @@ class Engine:
         engine extension).
         """
         rel = self.relation_for(name)
-        self.spark.sql(f"ANALYZE TABLE {rel.render()} COMPUTE STATISTICS")
-        if columns:
-            self.spark.sql(
-                f"ANALYZE TABLE {rel.render()} COMPUTE STATISTICS FOR COLUMNS "
-                + ", ".join(columns)
-            )
+        self.catalog.analyze(rel, columns)
         stats: dict = {}
         for row in self.spark.sql(f"DESCRIBE TABLE EXTENDED {rel.render()}").collect():
             if row.col_name == "Statistics":
@@ -1213,7 +1205,7 @@ class Engine:
         rel = self.relation_for(name)
         out: dict = {}
         for row in self.spark.sql(
-            f"DESCRIBE TABLE EXTENDED {rel.render()} {column}"
+            f"DESCRIBE TABLE EXTENDED {rel.render()} {quote(column)}"
         ).collect():
             key = row.info_name.strip().lower().replace(" ", "_")
             val = row.info_value
@@ -1225,8 +1217,6 @@ class Engine:
         the versioned-location scheme (what Iceberg exposes as
         ``snapshots``; requires ``auto_vacuum=False`` to retain more than
         the current one)."""
-        from dbt_glue_spark.operators.governance import scan_versions
-
         return [v for v, _ in scan_versions(*self._version_scan_args(self.models[name]))]
 
     def read_version(self, name: str, version: int) -> DataFrame:
@@ -1234,8 +1224,6 @@ class Engine:
         the catalog pointer (which always tracks the newest). Plain-parquet
         analogue of Delta ``VERSION AS OF`` — old generations are immutable
         once written, so the read is consistent without any locking."""
-        from dbt_glue_spark.operators.governance import scan_versions
-
         model = self.models[name]
         for v, path in scan_versions(*self._version_scan_args(model)):
             if v == version:
@@ -1282,23 +1270,16 @@ class Engine:
         batch, target_df, _ = evolve(batch, target_df, cfg.on_schema_change)
 
         if cfg.incremental_strategy == "append":
-            # explicit dest-column projection (strategies.sql:2-3,22-39)
-            batch.select(*target_df.columns).write.mode("append").insertInto(
-                rel.render()
-            )
-            self.catalog.refresh(rel)
-            return rel
+            # in place, with the explicit dest-column projection
+            # (strategies.sql:2-3,22-39)
+            return self._write_swap(batch.select(*target_df.columns), model, op="APPEND")
 
         if cfg.incremental_strategy == "insert_overwrite":
+            # partitioned: dynamic partition overwrite in place
+            # (strategies.sql:1-19); no partitions ⇒ whole-table replace
+            # (strategies.sql:16-18)
             if cfg.partition_by:
-                # dynamic partition overwrite (strategies.sql:1-19; our
-                # session sets partitionOverwriteMode=dynamic)
-                batch.select(*target_df.columns).write.mode("overwrite").insertInto(
-                    rel.render(), overwrite=True
-                )
-                self.catalog.refresh(rel)
-                return rel
-            # no partitions ⇒ whole-table replace (strategies.sql:16-18)
+                batch = batch.select(*target_df.columns)
             return self._write_swap(batch, model, op="INSERT OVERWRITE")
 
         # merge
@@ -1311,8 +1292,7 @@ class Engine:
             exclude_columns=cfg.merge_exclude_columns,
             incremental_predicates=cfg.incremental_predicates,
         )
-        # a rewriting merge must not read-then-truncate its own input
-        merged = merged.localCheckpoint(eager=True)
+        # the lazy self-read is safe: the swap writes a new generation
         return self._write_swap(merged, model, op="MERGE")
 
     def _mat_snapshot(self, model: Model) -> Relation:
@@ -1331,8 +1311,6 @@ class Engine:
             check_cols=cfg.check_cols,
             invalidate_hard_deletes=cfg.invalidate_hard_deletes,
         )
-        if current is not None:
-            snap = snap.localCheckpoint(eager=True)
         return self._write_swap(snap, model, op="SNAPSHOT")
 
 

@@ -145,9 +145,3 @@ def vacuum_versions(warehouse: str, schema: str, model_name: str, keep: int = 1)
     """Warehouse-layout vacuum (see ``vacuum_versions_at``)."""
     return vacuum_versions_at(os.path.join(warehouse, schema), model_name, keep)
 
-
-def list_versions(warehouse: str, schema: str, model_name: str) -> list[tuple[int, str]]:
-    """Warehouse-layout listing (see ``scan_versions``) — the read side of
-    the versioned-location scheme — what Delta/Iceberg expose as the
-    snapshot log."""
-    return scan_versions(os.path.join(warehouse, schema), model_name)

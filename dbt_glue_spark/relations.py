@@ -1,17 +1,16 @@
-"""Relation identity + location policy.
+"""Relation identity.
 
 Mirrors the reference's relation model: two-level ``schema.identifier``
 namespace (database==schema enforced, reference:
-dbt/adapters/glue/credentials.py:69-78), backtick quoting
-(reference: dbt/adapters/glue/relation.py:7-25), and the
-``{location}/{schema}/{table}`` S3 layout (reference:
-dbt/adapters/glue/impl.py:415-444 ``_build_location``) mapped onto a local/
-object-store warehouse root.
+dbt/adapters/glue/credentials.py:69-78) and backtick quoting
+(reference: dbt/adapters/glue/relation.py:7-25). The reference's
+``{location}/{schema}/{table}`` S3 layout (impl.py:415-444) lives in
+``Engine._version_scan_args``, the one place that knows where a model's
+generations are stored.
 """
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass
 
@@ -26,32 +25,9 @@ def quote(name: str) -> str:
 class Relation:
     schema: str
     identifier: str
-    type: str = "table"  # table | view | temp_view
+    type: str = "table"  # table | view
 
     def render(self) -> str:
         # database level intentionally excluded, like SparkIncludePolicy
         # (reference: relation.py:13-17)
         return f"{quote(self.schema)}.{quote(self.identifier)}"
-
-    def temp(self, suffix: str = "_tmp") -> "Relation":
-        # temp-relation suffix policy (reference: incremental.sql:17,
-        # custom_temp_suffix); temp views are schema-less in the reference
-        # (adapters.sql:121-135) — we keep the schema for catalog hygiene.
-        return Relation(self.schema, f"{self.identifier}{suffix}", "temp_view")
-
-
-def build_location(
-    root: str,
-    schema: str,
-    identifier: str,
-    custom_location: str | None = None,
-    use_root_layout: bool = False,
-) -> str:
-    """``{root}/{schema}/{table}`` (default), ``{root}/{table}`` with the
-    root layout, or an explicit custom location — the three cases of the
-    reference's ``get_location`` (impl.py:415-444)."""
-    if custom_location:
-        return custom_location
-    if use_root_layout:
-        return os.path.join(root, identifier)
-    return os.path.join(root, schema, identifier)
