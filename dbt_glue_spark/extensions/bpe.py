@@ -28,13 +28,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbt_glue_spark.functions.text import words
+
 SENT = "\x1e"
 
 
 def _word_freqs(df: DataFrame, text_col: str):
-    words = F.expr(f"regexp_extract_all(translate(lower({text_col}), 'ς̇', 'σ'), '[a-z]+', 0)")
     return (
-        df.select(F.explode(words).alias("word"))
+        df.select(F.explode(words(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )

@@ -203,13 +203,29 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").alias("n_common"))
     )
-    # no F.broadcast hint on sizes: it is one row PER DOCUMENT, so a
-    # forced broadcast would bypass autoBroadcastJoinThreshold and OOM
-    # the driver at corpus scale. AQE picks broadcast at runtime iff the
-    # frame is actually small (tests/test_plan_quality.py gates this).
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "sh_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "sh_b"), "id_b")
+    return _jaccard_at_least(inter, sizes, threshold)
+
+
+def _jaccard_at_least(
+    inter: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """Verification tail shared by the n-gram and MinHash pair finders:
+    ``inter`` (id_a, id_b, n_common) ⋈ per-doc shingle counts ``sizes``
+    (id, n_sh) on both sides → Jaccard = |∩| / (|A|+|B|-|∩|), half-up
+    rounded to 6 dp, kept iff ≥ ``threshold``.
+
+    No F.broadcast hint on sizes: it can be one row PER DOCUMENT, so a
+    forced broadcast would bypass autoBroadcastJoinThreshold and OOM
+    the driver at corpus scale. AQE picks broadcast at runtime iff the
+    frame is actually small (tests/test_plan_quality.py gates this).
+    """
+    return (
+        inter.join(
+            sizes.withColumnsRenamed({"id": "id_a", "n_sh": "sh_a"}), "id_a"
+        )
+        .join(
+            sizes.withColumnsRenamed({"id": "id_b", "n_sh": "sh_b"}), "id_b"
+        )
         .withColumn(
             "jaccard",
             half_up_round(
@@ -220,7 +236,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
 def minhash_signatures(
@@ -447,23 +462,7 @@ def minhash_lsh_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_common"))
     )
-    return (
-        inter.join(
-            sizes.withColumnsRenamed({"id": "id_a", "n_sh": "sh_a"}), "id_a"
-        )
-        .join(
-            sizes.withColumnsRenamed({"id": "id_b", "n_sh": "sh_b"}), "id_b"
-        )
-        .withColumn(
-            "jaccard",
-            half_up_round(
-                F.col("n_common") / (F.col("sh_a") + F.col("sh_b") - F.col("n_common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_at_least(inter, sizes, threshold)
 
 
 def simhash(
@@ -576,33 +575,6 @@ def embedding_near_dup_pairs(
     return all_pairs_cosine(df, vec_col, id_col, threshold, buckets)
 
 
-def auto_shuffle_partitions(
-    n_rows: int,
-    bytes_per_row: int = 24,
-    target_mb: int = 64,
-    lo: int = 32,
-    hi: int = 4096,
-) -> int:
-    """SCALE.md's spill-aware shuffle-partition sizing rule as code:
-    partitions ∝ estimated shuffle rows / target block size, clamped.
-
-    The 64× weak-scaling mapping (SCALE.md round-8) showed the iterative
-    heavyweights' superlinear exponents were per-partition sort blocks
-    outgrowing the heap — raising partitions 32→128 at 64× recovered
-    ~20 % by itself. ``target_mb`` = 64 keeps each partition's sort
-    block well inside an executor's task memory at any corpus size;
-    ``bytes_per_row`` defaults to the (bigint, bigint) edge/label tuple
-    + shuffle framing. Clamped below by the session default (32) and
-    above by a sanity cap (a 100 TB run tunes `hi` to its executor
-    count × cores × 2-3, the standard Spark sizing guidance).
-    """
-    if n_rows < 0:
-        raise ValueError(f"n_rows must be >= 0: {n_rows}")
-    target_rows = max(1, (target_mb * 1024 * 1024) // max(1, bytes_per_row))
-    want = (n_rows + target_rows - 1) // target_rows
-    return max(lo, min(hi, int(want)))
-
-
 def dup_clusters(
     df: DataFrame,
     pairs: DataFrame,
@@ -633,21 +605,13 @@ def dup_clusters(
     an iteration; they label themselves in one final left join. Per-round
     cost is therefore ∝ |E|, independent of corpus size.
 
-    ``SPARK_GRAFT_AUTO_PARTITIONS=1`` engages SCALE.md's spill-aware
-    sizing rule (:func:`auto_shuffle_partitions`): edges and each
-    round's labels are hash-partitioned on the join key at partitions ∝
-    |E| / target block size, so (a) the per-round join reuses the
-    co-partitioning instead of re-exchanging both sides at the session
-    default, and (b) per-partition sort blocks stay inside task memory
-    past the 64× local point where the default 32 partitions hit the
-    heap cliff (SCALE.md round-8/round-9). Default OFF: bench/driver
-    scales sit far inside the linear regime and comparability outranks
-    headroom there. (The r8 md5-payload trick does not apply here: the
-    loop already carries only (bigint, bigint) tuples — 16 bytes — so
-    there is nothing wider to hash down.)
+    Partitioning is the session's: every exchange in the loop is sized
+    by ``spark.sql.shuffle.partitions`` and AQE coalescing, which a
+    large deployment raises (session.py) rather than this operator
+    choosing its own count. (The r8 md5-payload trick does not apply
+    here: the loop already carries only (bigint, bigint) tuples — 16
+    bytes — so there is nothing wider to hash down.)
     """
-    import os as _os
-
     # persist the pair list BEFORE symmetrizing: the union's two branches
     # share one cached evaluation of the (expensive) pair-generation plan
     # instead of computing it twice
@@ -655,12 +619,6 @@ def dup_clusters(
     edges = _persist(
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     )
-    nparts = None
-    if _os.environ.get("SPARK_GRAFT_AUTO_PARTITIONS", "").strip() == "1":
-        # edges is persisted: the count is one cheap action over the
-        # cached frame, paid once before the loop
-        nparts = auto_shuffle_partitions(edges.count())
-        edges = _persist(edges.repartition(nparts, "dst"))
     # Round 1 is join-free: the initial labelling is the identity map,
     # so the first round's neighbor-min is just min(dst) per src (plus
     # the vertex's own id via its implicit self-loop) — fold it into
@@ -703,8 +661,6 @@ def dup_clusters(
         return out, obs.get["s"]
 
     labels, prev_sum = _checkpoint_with_sum(labels)
-    if nparts is not None:
-        labels = labels.repartition(nparts, "id").localCheckpoint()
     # Self-loops fold the "keep own label" term into the neighbor min:
     # new_label(s) = min over {labels[d] : (s,d) ∈ edges ∪ self-loops},
     # so each round is ONE join + ONE groupBy — the former formulation's
@@ -748,10 +704,6 @@ def dup_clusters(
                     F.col("label"), F.coalesce(F.col("__llbl"), F.col("label"))
                 ).alias("label"),
             )
-        if nparts is not None:
-            # keep every round's checkpointed labels id-partitioned so the
-            # next round's edges⋈labels reuses the co-partitioning
-            stepped = stepped.repartition(nparts, "id")
         labels, s = _checkpoint_with_sum(stepped)
         converged = s == prev_sum
         prev_sum = s

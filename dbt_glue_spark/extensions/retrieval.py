@@ -21,13 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.functions.scalars import half_up_round
-
-# Same lexer the corpus heavy-hitters query uses: lowercase alpha runs.
-_WORD_RE = "[a-z]+"
-
-
-def _words(text_col: str) -> Column:
-    return F.expr(f"regexp_extract_all(translate(lower({text_col}), 'ς̇', 'σ'), '{_WORD_RE}', 0)")
+from dbt_glue_spark.functions.text import words
 
 
 def tfidf_top_terms(
@@ -53,12 +47,12 @@ def tfidf_top_terms(
     # NOT persisted (r12 A/B: 0.85 s vs 1.20 s cached): the regex
     # lexer explode is map-only codegen — recomputing it per branch
     # beats caching the exploded token rows
-    tokens = docs.select(F.col(id_col), F.explode(_words(text_col)).alias("tok"))
+    tokens = docs.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("tok"))
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     df_t = tokens.distinct().groupBy("tok").agg(F.count("*").alias("df"))
     if scope is not None:
         tf_toks = docs.filter(scope).select(
-            F.col(id_col), F.explode(_words(text_col)).alias("tok")
+            F.col(id_col), F.explode(words(F.col(text_col))).alias("tok")
         )
     else:
         tf_toks = tokens
@@ -132,7 +126,7 @@ def bm25_search(
         return docs.select(
             F.col(id_col), F.lit(None).cast("double").alias("bm25")
         ).limit(0)
-    toks = docs.select(F.col(id_col), F.explode(_words(text_col)).alias("tok"))
+    toks = docs.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("tok"))
     # one exchange: per-doc length + per-term conditional tfs in one
     # partial-aggregated pass (docs with zero alpha tokens produce no
     # toks rows and are absent, exactly as the old dl frame)
@@ -428,7 +422,7 @@ def query_expansion(
 
     terms = [t.lower() for t in query_terms]
     toks = _persist(
-        docs.select(F.col(id_col), F.explode(_words(text_col)).alias("tok"))
+        docs.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("tok"))
     )
     top = bm25_search(docs, terms, topk=topk_docs, id_col=id_col, text_col=text_col)
     fb = (

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.functions.scalars import half_up_round
-from dbt_glue_spark.functions.text import tokenize_once, tokens
+from dbt_glue_spark.functions.text import tokenize_once, tokens, words
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deliberately small + deterministic; the oracle SQL embeds the
@@ -440,14 +440,13 @@ def bigram_lm_score(
     one-row scalar. Docs with <2 alpha tokens have no bigrams and are
     absent from the output (same as the oracle's GROUP BY).
     """
-    words = F.expr(f"regexp_extract_all(translate(lower({text_col}), 'ς̇', 'σ'), '[a-z]+', 0)")
     # one lexer pass feeds unigrams AND bigrams (the regex is the
     # expensive per-row work — the tfidf/bm25 persisted-lexer lesson)
     # NOT persisted (r12 A/B, 7 reps: 2.09 s with neither lexer nor
     # doc_big cached vs 3.32 s with both): re-running the regexp lexer
     # in each consumer's codegen pipeline beats caching the token
     # arrays (cache serialization of array<string> dominates)
-    ws_stage = df.select(F.col(id_col), words.alias("ws"))
+    ws_stage = df.select(F.col(id_col), words(F.col(text_col)).alias("ws"))
     uni = ws_stage.select(F.explode("ws").alias("w"))
     big = (
         ws_stage.filter(F.size("ws") >= 2)
@@ -546,8 +545,9 @@ def wordpiece_tokenize(
     import uuid as _uuid
 
     spark = df.sparkSession
-    words = F.expr(f"regexp_extract_all(translate(lower({text_col}), 'ς̇', 'σ'), '[a-z]+', 0)")
-    inst = df.select(F.col(id_col), F.explode(words).alias("word"))
+    inst = df.select(
+        F.col(id_col), F.explode(words(F.col(text_col))).alias("word")
+    )
     view = f"__wp_words_{_uuid.uuid4().hex[:8]}"
     inst.select("word").distinct().createOrReplaceTempView(view)
     step = _wordpiece_step_sql(vocab)
@@ -668,9 +668,10 @@ def dsir_weights(
     from dbt_glue_spark.extensions.sketches import hash_fraction
 
     assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of two"
-    words = F.expr(f"regexp_extract_all(translate(lower({text_col}), 'ς̇', 'σ'), '[a-z]+', 0)")
     ws_stage = df.select(
-        F.col(id_col), F.expr(target_predicate).alias("is_target"), words.alias("ws")
+        F.col(id_col),
+        F.expr(target_predicate).alias("is_target"),
+        words(F.col(text_col)).alias("ws"),
     )
     # NOT persisted (r12 A/B with model: 1.25 s vs 1.54 s cached):
     # the bigram explode is map-only codegen, cheap to recompute
@@ -948,7 +949,7 @@ def vocab_coverage(
 
     kmax = max(ks)
     counts = (
-        df.select(F.explode(F.expr(f"regexp_extract_all(translate(lower({text_col}), 'ς̇', 'σ'), '[a-z]+', 0)")).alias("w"))
+        df.select(F.explode(words(F.col(text_col))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
@@ -1068,13 +1069,12 @@ def pmi_pairs(
     Output: tok_a, tok_b, c_ab, m_a, m_b, pmi_q6 — top ``k`` by
     (pmi_q6 desc, tok_a, tok_b), c_ab ≥ min_count.
     """
-    words = F.expr(f"regexp_extract_all(translate(lower({text_col}), 'ς̇', 'σ'), '[a-z]+', 0)")
     # The array is referenced 2·window times by the gap zips below.
     # CollapseProject's non-cheap-expression guard keeps this projection
     # separate (regexp_extract_all is not on the cheap list and is
     # multiply-referenced), so the regexp runs once per row — pinned by
     # tests/test_plan_quality.py::test_pmi_tokenize_evaluated_once.
-    staged = df.select(words.alias("__ws"))
+    staged = df.select(words(F.col(text_col)).alias("__ws"))
     tok = F.col("__ws")
     empty = F.array().cast("array<int>")
 
@@ -1151,9 +1151,8 @@ def zipf_rank_buckets(df: DataFrame, text_col: str = "text") -> DataFrame:
     by construction (intra-class order never crosses a decade boundary
     in aggregate).
     """
-    words = F.expr(f"regexp_extract_all(translate(lower({text_col}), 'ς̇', 'σ'), '[a-z]+', 0)")
     counts = (
-        df.select(F.explode(words).alias("tok"))
+        df.select(F.explode(words(F.col(text_col))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").cast("bigint").alias("freq"))
     )
@@ -1221,9 +1220,7 @@ def token_gini(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     """
     toks = df.select(
         F.col(id_col),
-        F.explode(
-            F.expr(f"regexp_extract_all(translate(lower({text_col}), 'ς̇', 'σ'), '[a-z]+', 0)")
-        ).alias("__tok"),
+        F.explode(words(F.col(text_col))).alias("__tok"),
     )
     per_doc = (
         toks.groupBy(id_col, "__tok")
@@ -1282,9 +1279,9 @@ def vocab_growth(
 
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1: {n_buckets}")
-    words = F.expr(f"regexp_extract_all(translate(lower({text_col}), 'ς̇', 'σ'), '[a-z]+', 0)")
     base = df.select(
-        F.col(id_col).cast("bigint").alias("__id"), words.alias("__toks")
+        F.col(id_col).cast("bigint").alias("__id"),
+        words(F.col(text_col)).alias("__toks"),
     ).filter(F.col("__id").isNotNull())
     st = base.agg(
         F.min("__id").alias("__mn"), F.max("__id").alias("__mx")

@@ -43,7 +43,9 @@ def tokenize_once(df, text_col: str, keep: list[str], lower: bool = False):
 # Folding AFTER lower — delete U+0307, map ς → σ — is symmetric (both
 # engines apply the same translate), so lower∘fold is engine-identical.
 # The identical fragment is valid SQL in BOTH engines; oracles embed it
-# via fold_lower_sql so the two sides cannot drift.
+# via fold_lower_sql so the two sides cannot drift. Spark-side word
+# lexing goes through :func:`words`, the one place this fold meets the
+# [a-z]+ extraction.
 _FOLD_FROM = "ς̇"  # ς + combining dot above
 _FOLD_TO = "σ"          # σ (U+0307 maps to nothing = deleted)
 
@@ -58,6 +60,13 @@ def fold_lower_sql(expr: str) -> str:
     """The same fold as :func:`fold_lower`, as a SQL fragment valid in
     both Spark SQL and DuckDB — use in F.expr sites and oracles alike."""
     return f"translate(lower({expr}), 'ς̇', 'σ')"
+
+
+def words(col: Column) -> Column:
+    """Word lexer → array<string>: lowercase alpha runs (``[a-z]+``) of
+    the engine-stable fold. The oracles' DuckDB form is
+    ``regexp_extract_all(translate(lower(x), 'ς̇', 'σ'), '[a-z]+')``."""
+    return F.regexp_extract_all(fold_lower(col), F.lit("[a-z]+"), F.lit(0))
 
 
 def normalize_text(col: Column) -> Column:

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions import dedup, similarity, text_analysis
 from dbt_glue_spark.extensions.similarity import _hyperplane
+from dbt_glue_spark.functions.text import words
 from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.quality import profile
@@ -1859,9 +1860,7 @@ def ext_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(
-            F.explode(
-                F.expr(r"regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+', 0)")
-            ).alias("tok")
+            F.explode(words(F.col("text"))).alias("tok")
         )
         .groupBy("tok")
         .agg(F.count("*").alias("n"))
@@ -2446,9 +2445,7 @@ def ext_countmin_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Σ per-token tf = instance count) while the 4-md5-per-row bucket
     # arithmetic runs per DISTINCT token instead of per token instance.
     tk = docs.select(
-        F.explode(
-            F.expr(r"regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+', 0)")
-        ).alias("tok")
+        F.explode(words(F.col("text"))).alias("tok")
     )
     tf = tk.groupBy("tok").agg(F.count("*").alias("true_n"))
     sketch = sketches.countmin_build(tf, "tok", weight_col="true_n")
@@ -4828,9 +4825,7 @@ def ext_rank_agreement_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.expr("regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+', 0)")
-        ).alias("tok"),
+        F.explode(words(F.col("text"))).alias("tok"),
     )
     tf = (
         toks.filter(F.col("tok").isin(terms))
@@ -4907,9 +4902,7 @@ def ext_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.expr("regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+', 0)")
-        ).alias("tok"),
+        F.explode(words(F.col("text"))).alias("tok"),
     )
     tf = (
         toks.filter(F.col("tok").isin(terms))
@@ -5132,9 +5125,7 @@ def ext_ndcg_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.expr("regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+', 0)")
-            ).alias("tok"),
+            F.explode(words(F.col("text"))).alias("tok"),
         )
         .filter(F.col("tok").isin(terms))
         .groupBy("doc_id")
@@ -5176,9 +5167,7 @@ def ext_top_tokens_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = (
         docs.select(
             "lang",
-            F.explode(
-                F.expr(r"regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+', 0)")
-            ).alias("tok"),
+            F.explode(words(F.col("text"))).alias("tok"),
         )
         .groupBy("lang", "tok")
         .agg(F.count("*").cast("bigint").alias("n"))
@@ -5469,9 +5458,7 @@ def ext_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.expr("regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+', 0)")
-            ).alias("tok"),
+            F.explode(words(F.col("text"))).alias("tok"),
         )
         .filter(F.col("tok").isin(terms))
         .select("doc_id")

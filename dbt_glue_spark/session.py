@@ -50,8 +50,7 @@ _DEFAULT_CONF: dict[str, str] = {
     # and every stage that reads it runs that many tasks over a few KB
     # each (the near-dup tier's _persist'ed sig/cand/edges frames). A
     # by-number repartition(n, col) is never coalesced, so explicit
-    # co-partitioning (dup_clusters' SPARK_GRAFT_AUTO_PARTITIONS path)
-    # keeps its n partitions. Measured on the perfbench neardup_corpus
+    # co-partitioning keeps its n partitions. Measured on the perfbench neardup_corpus
     # workload (4 CPUs, local[2]): 790 -> 73 tasks per pass, wall_s
     # -29 % (17.1 s -> 12.1 s, median of 3 alternated seeds), output
     # fingerprints exact.

@@ -404,6 +404,28 @@ def dedup_stream(
     ).dropDuplicatesWithinWatermark(keys)
 
 
+def _unseen_once(
+    stream: DataFrame, ledger: DataFrame, keys: list[str]
+) -> DataFrame:
+    """Frontier tail shared by the image, embedding and pair frontiers:
+    rows of ``stream`` whose ``keys`` the static ``ledger`` does not
+    hold (stream-static LEFT ANTI join), each new key emitted once
+    (dropDuplicates state keyed on ``keys``).
+
+    A stream-static join re-reads its static side every micro-batch, so
+    the distinct ledger keys are persisted and materialized here, before
+    the stream starts: a ledger lineage that includes a decode runs
+    once, not per trigger. The cache goes in the never-evicting
+    stream-static registry, not dedup's bounded LRU, which could evict
+    it mid-stream and silently re-run that lineage per micro-batch (r11
+    ADVICE); release_static_caches() reclaims it once the caller stops
+    the stream.
+    """
+    seen = _persist_static(ledger.select(*keys).distinct())
+    seen.count()  # materialize NOW — micro-batches hit the cache
+    return stream.join(seen, keys, "left_anti").dropDuplicates(keys)
+
+
 def image_frontier_stream(
     media_stream: DataFrame,
     seen_hashes: DataFrame,
@@ -444,18 +466,7 @@ def image_frontier_stream(
         .filter(F.col("status") == "ok")
         .select("dhash")
     )
-    # _persist_static (not dedup._persist): the bounded-LRU registry can
-    # evict this frame mid-stream (r11 ADVICE — nothing enforces the
-    # availableNow assumption the old comment leaned on), silently
-    # re-running the ledger lineage per micro-batch; the stream-static
-    # registry never evicts and is reclaimed by release_static_caches()
-    # once the caller stops the stream
-    seen = _persist_static(seen_hashes.select("dhash").distinct())
-    seen.count()  # materialize NOW — micro-batches hit the cache
-    return (
-        hashes.join(seen, "dhash", "left_anti")
-        .dropDuplicates(["dhash"])
-    )
+    return _unseen_once(hashes, seen_hashes, ["dhash"])
 
 
 def embedding_frontier_stream(
@@ -479,7 +490,7 @@ def embedding_frontier_stream(
     ``seen_buckets`` is a ledger of bucket strings (what a production
     deployment persists — ≤ 2^planes rows); its distinct projection is
     persisted and eagerly materialized in the stream-static registry
-    (see :func:`image_frontier_stream` — same eviction rationale).
+    (see :func:`_unseen_once`).
 
     NULL vectors are dropped here (no geometry; the census of missing
     embeddings is the batch audit's job).
@@ -493,14 +504,7 @@ def embedding_frontier_stream(
     buckets = vec_stream.filter(F.col(vec_col).isNotNull()).select(
         sign_bucket(F.col(vec_col), dim, planes).alias("bucket")
     )
-    # stream-static registry, not the bounded LRU — same eviction
-    # rationale as image_frontier_stream above
-    seen = _persist_static(seen_buckets.select("bucket").distinct())
-    seen.count()  # materialize NOW — micro-batches hit the cache
-    return (
-        buckets.join(seen, "bucket", "left_anti")
-        .dropDuplicates(["bucket"])
-    )
+    return _unseen_once(buckets, seen_buckets, ["bucket"])
 
 
 def pair_frontier_stream(
@@ -536,14 +540,7 @@ def pair_frontier_stream(
     keys = pair_signatures(
         pairs_stream, caption_col, content_col, id_col
     ).select("caption_key", "dhash")
-    # stream-static registry, not the bounded LRU — same eviction
-    # rationale as image_frontier_stream above (r11 ADVICE)
-    seen = _persist_static(seen_pairs.select("caption_key", "dhash").distinct())
-    seen.count()  # materialize NOW — micro-batches hit the cache
-    return (
-        keys.join(seen, ["caption_key", "dhash"], "left_anti")
-        .dropDuplicates(["caption_key", "dhash"])
-    )
+    return _unseen_once(keys, seen_pairs, ["caption_key", "dhash"])
 
 
 def mixture_monitor_stream(

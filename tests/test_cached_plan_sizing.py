@@ -5,8 +5,8 @@ so a frame cached through ``dedup._persist`` is planned with partition
 coalescing on; without it every cached frame keeps all
 ``spark.sql.shuffle.partitions`` partitions and each stage that reads it
 runs that many near-empty tasks. A by-number ``repartition(n, col)`` must
-still keep its ``n`` partitions: ``dup_clusters``'
-``SPARK_GRAFT_AUTO_PARTITIONS`` path relies on that co-partitioning.
+still keep its ``n`` partitions: the conf must not undo a co-partitioning
+that a plan asks for explicitly.
 
 Also here: the singleton band-bucket prune in ``minhash_lsh_pairs`` leaves
 its output unchanged.

@@ -839,3 +839,35 @@ def test_bpe_train_matches_python_reference(spark):
         .collect()
     ]
     assert got == py_bpe(text, 6), got
+
+
+def test_word_lexer_resolves_any_text_column_name(spark):
+    """The word-lexing operators take ``text_col`` as a column, not as a
+    SQL fragment: a text column named ``doc-text`` gives the same rows
+    as one named ``text``."""
+    from dbt_glue_spark.extensions.retrieval import tfidf_top_terms
+    from dbt_glue_spark.extensions.text_analysis import (
+        bigram_lm_score,
+        token_gini,
+        vocab_coverage,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "The cat sat on the mat"),
+            (2, "the dog sat; THE cat ran"),
+            (3, "ΣΟΦΟΣ İstanbul cat cat cat"),
+            (4, None),
+        ],
+        "doc_id bigint, text string",
+    )
+    dashed = docs.withColumnRenamed("text", "doc-text")
+    for run in (
+        lambda d, c: bigram_lm_score(d, text_col=c),
+        lambda d, c: vocab_coverage(d, ks=(1, 3), text_col=c),
+        lambda d, c: token_gini(d, text_col=c),
+        lambda d, c: tfidf_top_terms(d, k=2, text_col=c),
+    ):
+        want = sorted(map(tuple, run(docs, "text").collect()))
+        assert want
+        assert sorted(map(tuple, run(dashed, "doc-text").collect())) == want

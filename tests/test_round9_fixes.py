@@ -103,35 +103,14 @@ def test_drift_null_rate_change_not_tail_drift(spark):
 
 
 # ---------------------------------------------------------------------------
-# dup_clusters auto-partition heuristic (VERDICT r8 item 7)
+# dup_clusters ignores the retired auto-partition variable (VERDICT r8 item 7)
 # ---------------------------------------------------------------------------
 
 
-def test_auto_shuffle_partitions_formula():
-    from dbt_glue_spark.extensions.dedup import auto_shuffle_partitions
-
-    import pytest
-
-    # 64 MB / 24 B = 2_796_202 rows per partition
-    assert auto_shuffle_partitions(0) == 32          # lower clamp
-    assert auto_shuffle_partitions(1) == 32
-    assert auto_shuffle_partitions(2_796_202) == 32  # exactly one block
-    assert auto_shuffle_partitions(2_796_203) == 32  # ceil → 2, clamp 32
-    assert auto_shuffle_partitions(90_000_000) == 33  # past the clamp knee
-    assert auto_shuffle_partitions(10**12) == 4096   # upper clamp
-    # monotone in n_rows
-    prev = 0
-    for n in (10**6, 10**8, 10**9, 10**10, 10**11):
-        cur = auto_shuffle_partitions(n)
-        assert cur >= prev
-        prev = cur
-    with pytest.raises(ValueError, match="n_rows"):
-        auto_shuffle_partitions(-1)
-
-
 def test_dup_clusters_auto_partitions_invariant(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_AUTO_PARTITIONS=1 must not change RESULTS — only the
-    physical partitioning of the propagation loop."""
+    """The retired ``SPARK_GRAFT_AUTO_PARTITIONS`` variable changes
+    nothing: ``dup_clusters`` sizes its loop from the session's shuffle
+    settings, so setting it to 1 leaves the clusters as they were."""
     from dbt_glue_spark.extensions.dedup import (
         dup_clusters,
         minhash_lsh_pairs,

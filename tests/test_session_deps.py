@@ -6,10 +6,14 @@ Conf plumbing is checked on the pure build_conf dict (getOrCreate would
 silently ignore new conf on the live test session); actual executor
 shipping is checked end-to-end with add_py_files + a UDF that imports
 the shipped module on executors.
+
+Also here: session.py is the one module that reads the environment.
 """
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import tempfile
 import textwrap
@@ -62,3 +66,27 @@ def test_add_py_files_module_importable_from_udf(spark):
 
     out = spark.range(3).select(use_shipped("id").alias("v")).collect()
     assert sorted(r["v"] for r in out) == [42, 43, 44]
+
+
+def test_only_session_reads_the_environment():
+    """Every ``os.environ`` / ``os.getenv`` read in the package is in
+    session.py, where it sizes or locates the session; an operator that
+    picks its plan from an environment variable is a code path no
+    catalog query, test or benchmark run sees by default."""
+    pkg = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "dbt_glue_spark")
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        if os.path.relpath(path, pkg) == "session.py":
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute) and node.attr in ("environ", "getenv")
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "os"
+                and any(a.name in ("environ", "getenv") for a in node.names)
+            ):
+                offenders.append(f"{os.path.relpath(path, pkg)}:{node.lineno}")
+    assert not offenders
