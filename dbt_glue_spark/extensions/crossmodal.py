@@ -40,15 +40,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.extensions.dedup import dup_clusters
+from dbt_glue_spark.extensions.dedup import _persist, dup_clusters, hamming_lsh_pairs
 from dbt_glue_spark.extensions.multimodal import (
     DecodeUnavailable,
     png_decode,
 )
-from dbt_glue_spark.extensions.multimodal_dedup import (
-    _near_dup_pairs_from_sig,
-    dhash_from_decoded,
-)
+from dbt_glue_spark.extensions.multimodal_dedup import dhash_from_decoded
 
 
 def pair_signatures(
@@ -245,13 +242,13 @@ def paired_keep_best(
     # pair generation (3 internal refs), the component vertex set, and
     # the final scored join; without the cache one action re-runs the
     # full-corpus decode ~5-6× (r11 ADVICE)
-    from dbt_glue_spark.extensions.dedup import _persist
-
     sigs = _persist(pair_signatures(df, caption_col, content_col, id_col))
-    pairs = _near_dup_pairs_from_sig(
+    pairs = hamming_lsh_pairs(
         sigs.select(F.col(id_col).alias("id"), "dhash"),
-        max_hamming=max_hamming,
-        bands=bands,
+        "dhash",
+        64,
+        bands,
+        max_hamming,
     ).select("id_a", "id_b")
     comps = dup_clusters(
         sigs.select(F.col(id_col)), pairs, id_col, max_iter

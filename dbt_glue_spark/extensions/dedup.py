@@ -278,6 +278,30 @@ def minhash_signatures(
     )
 
 
+def _minhash_bands(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(id, band_idx, band_key) rows of a MinHash signature frame: each
+    band's key is the md5 of its ``num_hashes // bands`` hashes joined by
+    ``|``, band_idx its string index. The one banding definition shared
+    by :func:`minhash_lsh_pairs` and :func:`minhash_band_ledger`, so a
+    ledger built by one always matches buckets probed by the other."""
+    # ValueError, not assert: a bad split must fail under `python -O` too
+    if num_hashes % bands != 0:
+        raise ValueError(f"bands must divide num_hashes={num_hashes}, got {bands}")
+    rows_per_band = num_hashes // bands
+    band_cols = [
+        F.md5(
+            F.concat_ws("|", *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)])
+        ).alias(f"band{b}")
+        for b in range(bands)
+    ]
+    return sig.select("id", *band_cols).selectExpr(
+        "id",
+        "stack({}, {}) as (band_idx, band_key)".format(
+            bands, ", ".join(f"'{b}', band{b}" for b in range(bands))
+        ),
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -330,8 +354,6 @@ def minhash_lsh_pairs(
 
     Returns (id_a, id_b, jaccard), id_a < id_b.
     """
-    assert num_hashes % bands == 0, "num_hashes must divide evenly into bands"
-    rows_per_band = num_hashes // bands
     # The signature table feeds both sides of the band self-join and the
     # postings feed both sides of the verification join — persist them so
     # each subtree computes once per action (ContextCleaner drops the cache
@@ -344,20 +366,8 @@ def minhash_lsh_pairs(
     # (1 row/doc, feeds the band self-join twice)
     sh = _shingle_postings(df, text_col, id_col, n, None)
     sig = _persist(minhash_signatures(df, text_col, id_col, n, num_hashes, postings=sh))
-    band_cols = [
-        F.md5(
-            F.concat_ws("|", *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)])
-        ).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    banded = sig.select("id", *band_cols)
     # candidate pairs: docs sharing any band key (dedup across bands)
-    stacked = banded.selectExpr(
-        "id",
-        "stack({}, {}) as (band_idx, band_key)".format(
-            bands, ", ".join(f"'{b}', band{b}" for b in range(bands))
-        ),
-    )
+    stacked = _minhash_bands(sig, num_hashes, bands)
     star_pairs = None
     if max_band_bucket is not None:
         if max_band_bucket < 1:
@@ -525,17 +535,43 @@ def simhash_pairs(
 
     Returns (id_a, id_b, hamming int), id_a < id_b, hamming ≤ max_hamming.
     """
-    assert bits % bands == 0, "bits must divide evenly into bands"
-    width = bits // bands
-    mask = (1 << width) - 1
     # fingerprint feeds the band stack and both verification sides
     sig = _persist(simhash(df, text_col, id_col, bits))
+    return hamming_lsh_pairs(sig, "simhash", bits, bands, max_hamming)
+
+
+def hamming_lsh_pairs(
+    sig: DataFrame, hash_col: str, bits: int, bands: int, max_hamming: int
+) -> DataFrame:
+    """Bit-band Hamming LSH over an (id, ``hash_col``) frame of ``bits``-bit
+    integer fingerprints: stack the ``bands`` contiguous bit-bands, self-join
+    on (band_idx, band_key), keep distinct id_a < id_b candidates and verify
+    them with exact ``bit_count(a ^ b) <= max_hamming``. The one plan behind
+    :func:`simhash_pairs` and the dHash pair finders in
+    ``multimodal_dedup`` and ``crossmodal``.
+
+    Returns (id_a, id_b, hamming int).
+    """
+    # ValueError, not assert: these are caller-facing contract checks and
+    # must survive `python -O` (asserts vanish → silently non-exhaustive
+    # pair sets); matches the sibling validators in audit.k_anonymity.
+    if bits % bands != 0:
+        raise ValueError(f"bands must divide {bits}, got {bands}")
+    if max_hamming >= bands:
+        raise ValueError(
+            f"exhaustiveness needs max_hamming < bands (pigeonhole); "
+            f"got max_hamming={max_hamming}, bands={bands}"
+        )
+    width = bits // bands
+    mask = (1 << width) - 1
     stacked = sig.selectExpr(
         "id",
         "stack({}, {}) as (band_idx, band_key)".format(
             bands,
             ", ".join(
-                f"{b}, (shiftright(simhash, {b * width}) & {mask})"
+                # & mask truncates the arithmetic sign-extension of
+                # shiftright on negative hashes
+                f"{b}, (shiftright({hash_col}, {b * width}) & {mask})"
                 for b in range(bands)
             ),
         ),
@@ -551,8 +587,8 @@ def simhash_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    sa = sig.select(F.col("id").alias("id_a"), F.col("simhash").alias("__ha"))
-    sb = sig.select(F.col("id").alias("id_b"), F.col("simhash").alias("__hb"))
+    sa = sig.select(F.col("id").alias("id_a"), F.col(hash_col).alias("__ha"))
+    sb = sig.select(F.col("id").alias("id_b"), F.col(hash_col).alias("__hb"))
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
@@ -925,27 +961,8 @@ def minhash_band_ledger(
     ~constant per doc regardless of document length. Contrast with keeping
     postings (∝ doc length) or re-banding the corpus every batch.
     """
-    assert num_hashes % bands == 0, "num_hashes must divide evenly into bands"
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, text_col, id_col, n, num_hashes)
-    banded = sig.select(
-        "id",
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)],
-                )
-            ).alias(f"band{b}")
-            for b in range(bands)
-        ],
-    )
-    return banded.selectExpr(
-        "id",
-        "stack({}, {}) as (band_idx, band_key)".format(
-            bands, ", ".join(f"'{b}', band{b}" for b in range(bands))
-        ),
-    ).select("band_idx", "band_key", "id")
+    return _minhash_bands(sig, num_hashes, bands).select("band_idx", "band_key", "id")
 
 
 def minhash_lsh_incremental(

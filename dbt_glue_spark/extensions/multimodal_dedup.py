@@ -44,6 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from dbt_glue_spark.extensions.dedup import _persist, dup_clusters, hamming_lsh_pairs
 from dbt_glue_spark.extensions.multimodal import (
     DecodeUnavailable,
     png_decode,
@@ -203,58 +204,6 @@ def image_dhash_dedup(
     )
 
 
-def _near_dup_pairs_from_sig(
-    sig: DataFrame, max_hamming: int, bands: int
-) -> DataFrame:
-    """Banded Hamming LSH over a precomputed (id, dhash) frame — shared
-    by :func:`image_near_dup_pairs` and :func:`image_dup_clusters` so a
-    composed pipeline decodes each image exactly once."""
-    # ValueError, not assert: these are caller-facing contract checks and
-    # must survive `python -O` (asserts vanish → silently non-exhaustive
-    # pair sets); matches the sibling validators in audit.k_anonymity.
-    if 64 % bands != 0:
-        raise ValueError(f"bands must divide 64, got {bands}")
-    if max_hamming >= bands:
-        raise ValueError(
-            f"exhaustiveness needs max_hamming < bands (pigeonhole); "
-            f"got max_hamming={max_hamming}, bands={bands}"
-        )
-    width = 64 // bands
-    mask = (1 << width) - 1
-    stacked = sig.selectExpr(
-        "id",
-        "stack({}, {}) as (band_idx, band_key)".format(
-            bands,
-            ", ".join(
-                # & mask truncates the arithmetic sign-extension of
-                # shiftright on negative hashes
-                f"{b}, (shiftright(dhash, {b * width}) & {mask})"
-                for b in range(bands)
-            ),
-        ),
-    )
-    a, b = stacked.alias("a"), stacked.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    sa = sig.select(F.col("id").alias("id_a"), F.col("dhash").alias("__ha"))
-    sb = sig.select(F.col("id").alias("id_b"), F.col("dhash").alias("__hb"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("hamming", F.expr("cast(bit_count(__ha ^ __hb) as int)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 def image_near_dup_pairs(
     df: DataFrame,
     content_col: str = "content",
@@ -280,7 +229,7 @@ def image_near_dup_pairs(
         .filter(F.col("status") == "ok")
         .select(F.col("media_id").alias("id"), "dhash")
     )
-    return _near_dup_pairs_from_sig(sig, max_hamming, bands)
+    return hamming_lsh_pairs(sig, "dhash", 64, bands, max_hamming)
 
 
 def image_dup_clusters(
@@ -303,14 +252,12 @@ def image_dup_clusters(
     singleton clusters. The decode stage runs ONCE: the signature frame
     is persisted and feeds pair generation and the final singleton join.
     """
-    from dbt_glue_spark.extensions.dedup import _persist, dup_clusters
-
     sig = _persist(
         image_dhash(df, content_col, id_col)
         .filter(F.col("status") == "ok")
         .select(F.col("media_id").alias("id"), "dhash")
     )
-    pairs = _near_dup_pairs_from_sig(sig, max_hamming, bands)
+    pairs = hamming_lsh_pairs(sig, "dhash", 64, bands, max_hamming)
     return dup_clusters(
         sig.select(F.col("id").alias("media_id")), pairs, id_col="media_id"
     )

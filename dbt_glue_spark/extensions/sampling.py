@@ -888,7 +888,7 @@ def threshold_retention(
     w = int(bucket_width)
     # floor division for any sign: (score - pmod(score, w)) / w is exact
     bucket = F.expr(
-        f"(CAST({score_col} AS BIGINT) - pmod(CAST({score_col} AS BIGINT), {w}))"
+        f"(CAST(`{score_col}` AS BIGINT) - pmod(CAST(`{score_col}` AS BIGINT), {w}))"
         f" DIV {w}"
     )
     buckets = (

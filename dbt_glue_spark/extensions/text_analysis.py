@@ -1462,7 +1462,7 @@ def gopher_quality_flags(
     ).cast("bigint")
     n_sym = F.size(
         F.expr(
-            f"regexp_extract_all(coalesce({text_col}, ''), '#|\\\\.\\\\.\\\\.|…', 0)"
+            f"regexp_extract_all(coalesce(`{text_col}`, ''), '#|\\\\.\\\\.\\\\.|…', 0)"
         )
     ).cast("bigint")
     n_lines = F.size(lines).cast("bigint")

@@ -403,6 +403,7 @@ def ext_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from dbt_glue_spark.plans.extension_queries import (  # noqa: E402
     _JACCARD_TAIL,
+    _MINHASH_BANDS,
     _MINHASH_SIG,
 )
 
@@ -413,13 +414,8 @@ _LSH_CAP = 64
     "ext_minhash_lsh_capped",
     "WITH "
     + _MINHASH_SIG
+    + _MINHASH_BANDS
     + f""",
-    bands AS (
-      SELECT id, b, key FROM sig, LATERAL (VALUES
-        (0, MD5(h0 || '|' || h1)), (1, MD5(h2 || '|' || h3)),
-        (2, MD5(h4 || '|' || h5)), (3, MD5(h6 || '|' || h7))
-      ) AS v(b, key)
-    ),
     keepb AS (
       SELECT b, key FROM bands GROUP BY b, key HAVING COUNT(*) <= {_LSH_CAP}
     ),
@@ -551,14 +547,9 @@ _SIG_ONLY = _MINHASH_SIG.removeprefix(_SH)
     + _JACCARD_TAIL.lstrip().rstrip()
     + ",\n    truth AS (SELECT id_a, id_b FROM jac WHERE jaccard >= 0.5)"
     + _SIG_ONLY.rstrip().rstrip(")").rstrip()  # reopen: _SIG_ONLY is ",\n sig AS (...)\n"
-    + """
-    ),
-    bands AS (
-      SELECT id, b, key FROM sig, LATERAL (VALUES
-        (0, MD5(h0 || '|' || h1)), (1, MD5(h2 || '|' || h3)),
-        (2, MD5(h4 || '|' || h5)), (3, MD5(h6 || '|' || h7))
-      ) AS v(b, key)
-    ),
+    + "\n    )"
+    + _MINHASH_BANDS
+    + """,
     cand AS (
       SELECT DISTINCT a.id AS id_a, b2.id AS id_b
       FROM bands a JOIN bands b2

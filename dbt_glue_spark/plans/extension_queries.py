@@ -82,6 +82,16 @@ _MINHASH_SIG = (
 """
 )
 
+# the four 2-row LSH band keys of a sig row, the oracle twin of
+# dedup._minhash_bands (integer band index)
+_MINHASH_BANDS = """,
+    bands AS (
+      SELECT id, b, key FROM sig, LATERAL (VALUES
+        (0, MD5(h0 || '|' || h1)), (1, MD5(h2 || '|' || h3)),
+        (2, MD5(h4 || '|' || h5)), (3, MD5(h6 || '|' || h7))
+      ) AS v(b, key)
+    )"""
+
 
 # ---- dedup ---------------------------------------------------------------
 
@@ -194,13 +204,8 @@ def ext_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ext_minhash_lsh_pairs",
     "WITH "
     + _MINHASH_SIG
+    + _MINHASH_BANDS
     + """,
-    bands AS (
-      SELECT id, b, key FROM sig, LATERAL (VALUES
-        (0, MD5(h0 || '|' || h1)), (1, MD5(h2 || '|' || h3)),
-        (2, MD5(h4 || '|' || h5)), (3, MD5(h6 || '|' || h7))
-      ) AS v(b, key)
-    ),
     cand AS (
       SELECT DISTINCT a.id AS id_a, b2.id AS id_b
       FROM bands a JOIN bands b2 ON a.key = b2.key AND a.b = b2.b AND a.id < b2.id
@@ -269,13 +274,8 @@ def ext_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ext_minhash_incremental",
     "WITH "
     + _MINHASH_SIG
+    + _MINHASH_BANDS
     + """,
-    bands AS (
-      SELECT id, b, key FROM sig, LATERAL (VALUES
-        (0, MD5(h0 || '|' || h1)), (1, MD5(h2 || '|' || h3)),
-        (2, MD5(h4 || '|' || h5)), (3, MD5(h6 || '|' || h7))
-      ) AS v(b, key)
-    ),
     corpus AS (SELECT * FROM bands WHERE id % 4 <> 0),
     batch  AS (SELECT * FROM bands WHERE id % 4 = 0),
     intra AS (
@@ -1270,13 +1270,8 @@ def multimodal_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ext_dedup_apply",
     "WITH "
     + _MINHASH_SIG
+    + _MINHASH_BANDS
     + """,
-    bands AS (
-      SELECT id, b, key FROM sig, LATERAL (VALUES
-        (0, MD5(h0 || '|' || h1)), (1, MD5(h2 || '|' || h3)),
-        (2, MD5(h4 || '|' || h5)), (3, MD5(h6 || '|' || h7))
-      ) AS v(b, key)
-    ),
     keepb AS (
       SELECT b, key FROM bands GROUP BY b, key HAVING COUNT(*) <= 64
     ),

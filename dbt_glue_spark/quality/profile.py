@@ -181,8 +181,8 @@ def winsorize_report(
 
     x = F.col(col).cast("double")
     th = df.groupBy(group_by).agg(
-        F.expr(f"percentile(cast({col} as double), {lower})").alias("lo"),
-        F.expr(f"percentile(cast({col} as double), {upper})").alias("hi"),
+        F.expr(f"percentile(cast(`{col}` as double), {lower})").alias("lo"),
+        F.expr(f"percentile(cast(`{col}` as double), {upper})").alias("hi"),
     )
     j = df.join(F.broadcast(th), group_by)
     clipped = F.greatest(F.least(x, F.col("hi")), F.col("lo"))

@@ -98,7 +98,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # error on a perfectly valid table.
         if field.name in nano_cols and isinstance(field.dataType, LongType):
             df = df.withColumn(
-                field.name, F.expr(f"timestamp_micros({field.name} div 1000)")
+                field.name, F.expr(f"timestamp_micros(`{field.name}` div 1000)")
             )
     return normalize_timestamps(df)
 

@@ -844,30 +844,40 @@ def test_bpe_train_matches_python_reference(spark):
 def test_word_lexer_resolves_any_text_column_name(spark):
     """The word-lexing operators take ``text_col`` as a column, not as a
     SQL fragment: a text column named ``doc-text`` gives the same rows
-    as one named ``text``."""
+    as one named ``text``. The same holds for the other operators that
+    take a caller's column name (score column ``q-score``)."""
     from dbt_glue_spark.extensions.retrieval import tfidf_top_terms
+    from dbt_glue_spark.extensions.sampling import threshold_retention
     from dbt_glue_spark.extensions.text_analysis import (
         bigram_lm_score,
+        gopher_quality_flags,
         token_gini,
         vocab_coverage,
     )
+    from dbt_glue_spark.quality.profile import winsorize_report
 
     docs = spark.createDataFrame(
         [
-            (1, "The cat sat on the mat"),
-            (2, "the dog sat; THE cat ran"),
-            (3, "ΣΟΦΟΣ İstanbul cat cat cat"),
-            (4, None),
+            (1, "The cat sat on the mat", 7),
+            (2, "the dog sat; THE cat ran... #tag", 42),
+            (3, "ΣΟΦΟΣ İstanbul cat cat cat", -5),
+            (4, None, None),
         ],
-        "doc_id bigint, text string",
+        "doc_id bigint, text string, score bigint",
     )
-    dashed = docs.withColumnRenamed("text", "doc-text")
+    dashed = docs.withColumnRenamed("text", "doc-text").withColumnRenamed(
+        "score", "q-score"
+    )
     for run in (
-        lambda d, c: bigram_lm_score(d, text_col=c),
-        lambda d, c: vocab_coverage(d, ks=(1, 3), text_col=c),
-        lambda d, c: token_gini(d, text_col=c),
-        lambda d, c: tfidf_top_terms(d, k=2, text_col=c),
+        lambda d, c, s: bigram_lm_score(d, text_col=c),
+        lambda d, c, s: vocab_coverage(d, ks=(1, 3), text_col=c),
+        lambda d, c, s: token_gini(d, text_col=c),
+        lambda d, c, s: tfidf_top_terms(d, k=2, text_col=c),
+        lambda d, c, s: gopher_quality_flags(d, text_col=c),
+        lambda d, c, s: threshold_retention(d, s, "doc_id", 10),
+        lambda d, c, s: winsorize_report(d, s, "doc_id"),
     ):
-        want = sorted(map(tuple, run(docs, "text").collect()))
+        want = sorted(map(tuple, run(docs, "text", "score").collect()))
         assert want
-        assert sorted(map(tuple, run(dashed, "doc-text").collect())) == want
+        got = run(dashed, "doc-text", "q-score").collect()
+        assert sorted(map(tuple, got)) == want

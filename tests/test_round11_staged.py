@@ -198,6 +198,14 @@ def test_image_near_dup_pairs_rejects_bad_params(spark):
         image_near_dup_pairs(df, max_hamming=4, bands=4)  # not exhaustive
     with pytest.raises(ValueError):
         image_near_dup_pairs(df, bands=3)  # 64 % 3 != 0
+    # simhash_pairs runs the same bit-band LSH and the same checks
+    from dbt_glue_spark.extensions.dedup import simhash_pairs
+
+    docs = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError):
+        simhash_pairs(docs, bits=16, bands=4, max_hamming=4)  # not exhaustive
+    with pytest.raises(ValueError):
+        simhash_pairs(docs, bits=16, bands=3)  # 16 % 3 != 0
 
 
 def test_image_dedup_excludes_null_and_corrupt(spark):

@@ -126,3 +126,23 @@ def test_ntz_normalization_is_robust_to_inference_flip(spark, sf_dir):
         assert df.schema["ts"].dataType.simpleString() == "timestamp"
     finally:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", old)
+
+
+def test_nanosecond_timestamp_with_dashed_name_loads(spark, tmp_path):
+    """The timestamp[ns] repair quotes the column name: a parquet column
+    named ``event-ts`` loads as TIMESTAMP like any other."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = datetime.datetime(2024, 3, 1, 12, 30, 15, 123456)
+    pq.write_table(
+        pa.table(
+            {"id": [1], "event-ts": pa.array([ts], pa.timestamp("ns"))}
+        ),
+        str(tmp_path / "ticks.parquet"),
+    )
+    df = load_table(spark, str(tmp_path), "ticks")
+    assert df.schema["event-ts"].dataType.simpleString() == "timestamp"
+    assert df.collect()[0]["event-ts"] == ts

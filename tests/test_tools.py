@@ -1,11 +1,19 @@
-"""Smoke tests for the plan dumper and the A/B harness, run in process on
-one query at the test scale so the tools cannot rot unnoticed."""
+"""Smoke tests for the plan dumper, the A/B harness and the scaling probe,
+run in process at the test scale so the tools cannot rot unnoticed."""
 
 from __future__ import annotations
 
-from tools import ab, explain
+import json
+import os
+import re
+
+import pytest
+
+from dbt_glue_spark.sources.registry import load_table
+from tools import ab, explain, scale_probe
 
 QUERY = "q3_shipping_priority"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_explain_writes_plan_and_summary(spark, sf_dir, tmp_path, monkeypatch, capsys):
@@ -27,3 +35,39 @@ def test_ab_conf_reports_one_line_per_query(spark, sf_dir, monkeypatch, capsys):
         spark.conf.set(key, old)
     last = capsys.readouterr().out.splitlines()[-1]
     assert last.startswith(f"{QUERY}: A=") and " B/A=" in last, last
+
+
+def _probe_at_factor_one(probe, spark, sf_dir, monkeypatch, capsys) -> dict:
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+    monkeypatch.setattr(scale_probe, "get_spark", lambda name: spark)
+    scale_probe.main([f"--probe={probe}", "--factors=1"])
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1, lines
+    out = json.loads(lines[0])
+    names = [name for name, _ in scale_probe.FAMILIES[probe].cases]
+    assert list(out["seconds"]) == names
+    assert list(out["out_rows"]) == names
+    return out
+
+
+def test_scale_probe_runs_a_family(spark, sf_dir, monkeypatch, capsys):
+    out = _probe_at_factor_one("staged8", spark, sf_dir, monkeypatch, capsys)
+    assert out["rows"] == {"1": load_table(spark, sf_dir, "documents").count()}
+
+
+def test_every_documented_probe_resolves():
+    cited = set()
+    for doc in ("SCALE.md", os.path.join(".claude", "skills", "verify", "SKILL.md")):
+        with open(os.path.join(ROOT, doc)) as fh:
+            for names in re.findall(r"--probe=([\w|]+)", fh.read()):
+                cited.update(names.split("|"))
+    assert {"dedup", "mmr", "staged", "staged13", "dupweak", "dupgrowth"} <= cited
+    assert cited <= set(scale_probe.FAMILIES), cited - set(scale_probe.FAMILIES)
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("probe", sorted(scale_probe.FAMILIES))
+def test_every_probe_family_runs(probe, spark, sf_dir, monkeypatch, capsys):
+    out = _probe_at_factor_one(probe, spark, sf_dir, monkeypatch, capsys)
+    assert out["rows"]["1"] > 0
