@@ -8,7 +8,7 @@ exact session conf); with jars on a real cluster, `Engine.lakehouse_dry_run`
 output is what runs.
 
 Statement shapes follow the reference's macros:
-- MERGE INTO with DBT_INTERNAL_DEST / DBT_INTERNAL_SOURCE aliases, key
+- MERGE INTO with DBT_INTERNAL_DEST / DBT_INTERNAL_SOURCE alias names, key
   equality predicates ANDed with incremental_predicates, ``ON FALSE``
   when no unique key, ``UPDATE SET *`` or an explicit update-column list,
   and a full-column INSERT (reference: dbt/include/glue/macros/

@@ -66,31 +66,42 @@ _JACCARD_TAIL = """
     )
 """
 
+# the 8 MinHash signature columns of a doc's shingle set (sh → sig)
+_MINHASH_SIG_COLS = ",\n".join(
+    f"MIN(substring(MD5(shingle) || MD5('x:' || shingle), {1 + 8 * i}, 8)) AS h{i}"
+    for i in range(8)
+)
+
 _MINHASH_SIG = (
     _SH
     + """,
     sig AS (
       SELECT doc_id AS id,
     """
-    + ",\n".join(
-        f"MIN(substring(MD5(shingle) || MD5('x:' || shingle), {1 + 8 * i}, 8)) AS h{i}"
-        for i in range(8)
-    )
+    + _MINHASH_SIG_COLS
     + """
       FROM sh GROUP BY doc_id
     )
 """
 )
 
-# the four 2-row LSH band keys of a sig row, the oracle twin of
-# dedup._minhash_bands (integer band index)
-_MINHASH_BANDS = """,
+
+def _minhash_bands(band_type=int) -> str:
+    """The four 2-row LSH band keys of a sig row, the oracle twin of
+    dedup._minhash_bands. ``band_type`` is the band index's SQL type:
+    ``int`` (literal ``0``) or ``str`` (literal ``'0'``, matching a
+    string ``band_idx`` column)."""
+    b = [repr(band_type(i)) for i in range(4)]
+    return f""",
     bands AS (
       SELECT id, b, key FROM sig, LATERAL (VALUES
-        (0, MD5(h0 || '|' || h1)), (1, MD5(h2 || '|' || h3)),
-        (2, MD5(h4 || '|' || h5)), (3, MD5(h6 || '|' || h7))
+        ({b[0]}, MD5(h0 || '|' || h1)), ({b[1]}, MD5(h2 || '|' || h3)),
+        ({b[2]}, MD5(h4 || '|' || h5)), ({b[3]}, MD5(h6 || '|' || h7))
       ) AS v(b, key)
     )"""
+
+
+_MINHASH_BANDS = _minhash_bands()
 
 
 # ---- dedup ---------------------------------------------------------------

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from dbt_glue_spark.extensions import dedup
 from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
+from dbt_glue_spark.plans.extension_queries import _MINHASH_SIG_COLS, _minhash_bands
 from dbt_glue_spark.sources.registry import load_table
 
 
@@ -110,10 +111,6 @@ def ext_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _compaction_oracle() -> str:
-    sig_cols = ",\n".join(
-        f"MIN(substring(MD5(shingle) || MD5('x:' || shingle), {1 + 8 * i}, 8)) AS h{i}"
-        for i in range(8)
-    )
     return rf"""
     WITH aug AS (
       SELECT doc_id, text FROM documents
@@ -136,15 +133,9 @@ def _compaction_oracle() -> str:
     ),
     sig AS (
       SELECT doc_id AS id,
-    {sig_cols}
+    {_MINHASH_SIG_COLS}
       FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT id, b, key FROM sig, LATERAL (VALUES
-        ('0', MD5(h0 || '|' || h1)), ('1', MD5(h2 || '|' || h3)),
-        ('2', MD5(h4 || '|' || h5)), ('3', MD5(h6 || '|' || h7))
-      ) AS v(b, key)
-    ),
+    ){_minhash_bands(str)},
     gmap AS (
       SELECT doc_id AS id,
              CASE WHEN doc_id >= 1000000 THEN doc_id - 1000000

@@ -103,7 +103,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     "region, by order year — CASE-conditional numerator over the same "
     "decimal-sum denominator, half-up rounded on both engines. 100 TB "
     "plan: part/supplier/nation×2/region broadcast (nation joined twice "
-    "under different aliases); lineitem⋈orders is the one big shuffle; "
+    "under two alias names); lineitem⋈orders is the one big shuffle; "
     "p_type filter prunes the build side before broadcast.",
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -727,27 +727,18 @@ def _ledger_latest(target_path: str):
 
 
 _VERSION_RE = re.compile(r"^g(\d{6})b(\d{12})$")
-_LEGACY_VERSION_RE = re.compile(r"^b(\d{12})$")
 
 
 def _parse_version(name: str):
-    """Parse a ledger version dir name → (gen, batch_id), or None.
-
-    Accepts the current ``g{gen:06d}b{batch_id:012d}`` format AND the
-    pre-generation legacy ``b{batch_id:012d}`` (mapped to generation 0),
-    so a ledger written before the format change is still readable and
-    GC-able instead of silently reading as "no ledger" — which the
-    empty-stream fallbacks would then misreport as zero state. The match
-    is a strict full-name regex (separator AND field widths), so a stray
-    directory like ``g00000100`` or ``g000001x000000000005`` can never be
-    returned as the latest ledger or garbage-collected as a version.
+    """Parse a ledger version dir name ``g{gen:06d}b{batch_id:012d}`` →
+    (gen, batch_id), or None. The match is a strict full-name regex
+    (separator AND field widths), so a stray directory like
+    ``g00000100`` or ``g000001x000000000005`` can never be returned as
+    the latest ledger or garbage-collected as a version.
     """
     m = _VERSION_RE.match(name)
     if m:
         return int(m.group(1)), int(m.group(2))
-    m = _LEGACY_VERSION_RE.match(name)
-    if m:
-        return 0, int(m.group(1))
     return None
 
 
@@ -779,9 +770,8 @@ def _ledger_commit(df: DataFrame, target_path: str, gen: int, batch_id: int) -> 
     )
     keep = set(committed[-2:])
     for name in os.listdir(root):
-        # only version dirs (current or legacy format, incl. their .tmp
-        # residue) are GC candidates — the _ckpt token and any future
-        # sidecar files must survive
+        # only version dirs (incl. their .tmp residue) are GC candidates
+        # — the _ckpt token and any future sidecar files must survive
         versionish = _parse_version(name) is not None or (
             name.endswith(".tmp") and _parse_version(name[: -len(".tmp")]) is not None
         )
@@ -809,202 +799,22 @@ def read_ledger_or(spark, target_path: str, fallback: DataFrame) -> DataFrame:
         return fallback
 
 
-_INSTANCE_MARKER = ".dgs-instance"
-
-
-def _read_instance(checkpoint: str) -> str | None:
-    """Read this checkpoint instance's minted fallback identity, or None
-    if no fallback identity was ever minted (see :func:`_mint_instance`).
-    The marker lives INSIDE the checkpoint directory, so it dies with
-    the instance by construction — a checkpoint deleted and recreated at
-    the same path starts markerless."""
+def _checkpoint_id(checkpoint: str) -> str:
+    """Identity of the streaming checkpoint that owns a ledger: the query
+    id Spark writes to ``{checkpoint}/metadata`` before batch 0. It is
+    stable across restarts on the same checkpoint and new for a
+    checkpoint deleted and recreated at the same path, which is exactly
+    the scope the batch-id watermark needs (batch ids restart per
+    checkpoint). A missing, unreadable or id-less metadata file raises,
+    failing the micro-batch, so one checkpoint never gets two identities."""
+    import json
     import os
 
-    try:
-        with open(os.path.join(checkpoint, _INSTANCE_MARKER)) as fh:
-            return fh.read().strip() or None
-    except OSError:
-        return None
-
-
-def _mint_instance(checkpoint: str) -> str:
-    """Fallback identity of this checkpoint INSTANCE: a random token
-    minted once into a marker file inside the checkpoint directory
-    (unique tmp + atomic hard-link commit: the first minter wins and
-    every concurrent minter converges on the winner's token).
-
-    Instance-scoped on purpose: a checkpoint DELETED AND RECREATED at
-    the same path is a different stream (its batch counter restarts at 0
-    and its history is re-delivered from scratch), so it must NOT
-    inherit the previous instance's watermark. A path hash — or even a
-    path+inode hash, since common filesystems recycle inode numbers
-    immediately — would alias the two, and a ``reset_on_takeover`` sink
-    would then silently skip the new stream's early batches and merge
-    the rest into stale pre-restart state. The marker file cannot alias
-    them: it is deleted with the directory.
-
-    Commit ladder (ADVICE r6: link-unsupported ≠ read-only): hard-link
-    first; where the store refuses link() but is otherwise writable
-    (some FUSE/object-store mounts: EPERM/ENOTSUP), fall back to an
-    O_CREAT|O_EXCL exclusive create of the marker itself — still
-    first-writer-wins, losers poll the winner's bytes. Only when the
-    store refuses even a plain write (read-only — in which case Spark's
-    own commit protocol is failing too) does this degrade, WITH a
-    logged warning, to the md5 of the symlink-resolved real path, which
-    still never splits one instance into two identities but can alias a
-    deleted-and-recreated checkpoint."""
-    import hashlib
-    import os
-    import time
-    import uuid
-
-    existing = _read_instance(checkpoint)
-    if existing is not None:
-        return existing
-    token = uuid.uuid4().hex
-    marker = os.path.join(checkpoint, _INSTANCE_MARKER)
-    # first-writer-wins: hard-link a fully-written unique tmp onto the
-    # marker name. link() is atomic and REFUSES an existing target, so
-    # (a) concurrent minters cannot interleave writes into one tmp path
-    # (each tmp is token-suffixed) and (b) exactly one minter's token
-    # becomes the marker — the losers read the winner's value, which is
-    # complete by construction (linked after the write closed). A
-    # replace()-based commit would let a loser overwrite the winner
-    # AFTER the winner re-read its own value, splitting one instance
-    # into two identities.
-    def _path_hash() -> str:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "checkpoint store at %s refuses writes; degrading instance "
-            "identity to a path hash — a deleted-and-recreated checkpoint "
-            "at this path would alias its predecessor",
-            checkpoint,
-        )
-        return hashlib.md5(os.path.realpath(checkpoint).encode()).hexdigest()
-
-    tmp = marker + "." + token
-    try:
-        with open(tmp, "w") as fh:
-            fh.write(token)
-    except OSError:
-        # the store refuses even a plain create → read-only; last resort
-        return _path_hash()
-    try:
-        try:
-            os.link(tmp, marker)
-        except FileExistsError:
-            pass  # lost the race — the winner's marker is authoritative
-        except OSError:
-            # link-unsupported but writable store (FUSE/object mounts:
-            # EPERM/ENOTSUP): exclusive-create the marker itself. Unlike
-            # the link commit this publishes BEFORE the bytes land, so
-            # losers poll until the winner's write is visible.
-            try:
-                fd = os.open(marker, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-                try:
-                    os.write(fd, token.encode())
-                    os.fsync(fd)
-                finally:
-                    os.close(fd)
-            except FileExistsError:
-                for _ in range(500):  # winner's 32 bytes land in ~µs
-                    if _read_instance(checkpoint):
-                        break
-                    time.sleep(0.002)
-            except OSError:
-                return _path_hash()
-    finally:
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
-    return _read_instance(checkpoint) or token
-
-
-class _CkptToken:
-    """Stable identity of the streaming checkpoint that owns the ledger.
-
-    foreachBatch batch_ids are PER-CHECKPOINT counters, not a property of
-    the data: a stream restarted with a fresh checkpoint over the same
-    target restarts at batch 0. The batch_id watermark alone would then
-    misread every new batch as a replay and silently drop it. Stamping
-    the ledger with the checkpoint's identity scopes the watermark: only
-    a batch from the SAME checkpoint with batch_id ≤ stored is a replay.
-
-    Identity source, in order: the query id Spark stores in the
-    checkpoint's own ``metadata`` file (written at stream start, stable
-    across restarts, independent of how the path is spelled), falling
-    back to an instance token minted into a marker file inside the
-    checkpoint directory itself (see :func:`_mint_instance`). A path
-    hash would conflate a deleted-and-recreated checkpoint with its
-    predecessor and inherit a watermark that silently skips the new
-    stream's restarted batch ids; the marker dies with the directory,
-    so the two instances can never alias.
-
-    The resolver is instantiated once per sink run and CACHES the first
-    token it resolves from the metadata file. A transient read failure on
-    a later batch therefore cannot mint a different identity mid-run —
-    which a reset_on_takeover sink would misread as a checkpoint takeover
-    and wipe the additive ledger with NO re-delivery to rebuild from (the
-    real checkpoint is intact, so history is never replayed). If the
-    metadata file EXISTS but cannot be read/parsed and nothing is cached
-    yet, the batch fails (Spark retries it under the same batch_id)
-    rather than falling back; the instance-hash fallback applies only
-    while the metadata file does not exist at all, and is deliberately
-    not cached so the real query id wins as soon as the file appears.
-
-    That mid-run upgrade (instance token on batch 0, query id from
-    batch 1 on — possible on stores with delayed metadata visibility)
-    must NOT read as a takeover: a ledger committed under the instance
-    token belongs to this same checkpoint. :meth:`aliases` exposes it so
-    :func:`_takeover_state` can recognize it as self and upgrade the
-    stored token in place instead of wiping an additive ledger that the
-    intact checkpoint would never re-deliver history to rebuild. The
-    alias is scoped to the INSTANCE (the marker dies with the
-    directory): a checkpoint deleted and recreated at the same path does
-    not alias-match, so it is correctly treated as a takeover — reset
-    and rebuilt from its from-scratch re-delivery — instead of skipping
-    its restarted batch ids against the dead instance's watermark.
-    """
-
-    def __init__(self, checkpoint: str) -> None:
-        self.checkpoint = checkpoint
-        self._token: str | None = None
-
-    def __call__(self) -> str:
-        import json
-        import os
-
-        if self._token is not None:
-            return self._token
-        meta = os.path.join(self.checkpoint, "metadata")
-        try:
-            with open(meta) as fh:
-                qid = json.load(fh).get("id")
-        except OSError:
-            if os.path.exists(meta):
-                raise  # existing metadata unreadable: fail the batch, never mint a second identity
-            return _mint_instance(self.checkpoint)
-        if not qid:
-            # metadata without a query id: the minted instance token is
-            # stable for this checkpoint instance, so it is a cacheable
-            # identity
-            self._token = _mint_instance(self.checkpoint)
-        else:
-            self._token = str(qid)
-        return self._token
-
-    def aliases(self) -> frozenset[str]:
-        """Other tokens that denote THIS checkpoint instance: its minted
-        fallback identity (see :func:`_mint_instance`), read-only — a
-        run that resolved its query id directly never mints one. A
-        stored token matching an alias is the same owner, not a
-        takeover; a checkpoint recreated at the same path starts
-        markerless, so its predecessor's fallback token deliberately
-        does NOT alias-match."""
-        m = _read_instance(self.checkpoint)
-        return frozenset({m}) if m else frozenset()
+    with open(os.path.join(checkpoint, "metadata")) as fh:
+        qid = json.load(fh).get("id")
+    if not qid:
+        raise ValueError(f"streaming checkpoint metadata under {checkpoint} has no query id")
+    return str(qid)
 
 
 def _read_token(target_path: str) -> tuple[str | None, int]:
@@ -1018,8 +828,7 @@ def _read_token(target_path: str) -> tuple[str | None, int]:
     corrupt token, which the atomic tmp+rename write can never produce
     on its own — to "tokenless" would make a ``reset_on_takeover`` sink
     classify a healthy tokened ledger as legacy and wipe it with no
-    re-delivery to rebuild from (the same absent-vs-unreadable
-    distinction :class:`_CkptToken` draws for the checkpoint metadata)."""
+    re-delivery to rebuild from."""
     import os
 
     try:
@@ -1108,7 +917,6 @@ def _takeover_state(
     token: str,
     batch_id: int,
     reset_on_takeover: bool,
-    aliases: frozenset[str] = frozenset(),
 ) -> tuple[str | None, int, bool]:
     """The shared watermark/takeover protocol of every ledger sink.
 
@@ -1123,11 +931,6 @@ def _takeover_state(
       another generation is pre-takeover state that must not be merged
       either (it is residue of that crash window or of a partially
       failed reset), so ``cur_path`` is cleared for them in that case.
-    - ``aliases`` — alternate tokens that denote the SAME checkpoint
-      instance (its minted fallback identity, per
-      :meth:`_CkptToken.aliases`): a stored alias match is ownership,
-      not takeover, and upgrades the stored token to the primary one in
-      place.
     - takeover (stored token differs — or, for additive sinks, a
       committed ledger that predates tokens entirely: with no watermark
       scope there is no way to tell which re-delivered batches a legacy
@@ -1147,14 +950,7 @@ def _takeover_state(
     """
     stored_token, stored_gen = _read_token(target_path)
     cur_path, gen, cur_id = _ledger_latest(target_path)
-    if stored_token == token or (stored_token is not None and stored_token in aliases):
-        if stored_token != token:
-            # same checkpoint under its fallback-identity alias (the metadata
-            # file became visible after the alias was recorded): same
-            # owner, same generation — upgrade the stored token in
-            # place; a reset here would discard merges the intact
-            # checkpoint will never re-deliver
-            _write_token(target_path, token, stored_gen)
+    if stored_token == token:
         if gen == stored_gen:
             return cur_path, stored_gen, batch_id <= cur_id
         if reset_on_takeover:
@@ -1179,24 +975,21 @@ def _ledger_sink(
     """The foreachBatch driver every ledger sink shares.
 
     Per micro-batch: an empty batch commits nothing; otherwise the
-    checkpoint token and :func:`_takeover_state` decide the commit
-    generation and whether the batch is an at-least-once replay to skip;
-    ``fold(batch_df, cur)`` merges the batch into the current ledger
-    (``cur`` is None when there is none to merge into) and the result is
-    committed as a new version by :func:`_ledger_commit`. The query runs
-    ``availableNow`` and is returned started. ``reset_on_takeover`` is
-    the sink's merge algebra (see :func:`_takeover_state`)."""
-    # constructed here, resolved lazily inside the batch — the metadata
-    # file only exists once the stream starts (rules: _CkptToken doc)
-    token_of = _CkptToken(checkpoint)
+    checkpoint's query id (:func:`_checkpoint_id`) and
+    :func:`_takeover_state` decide the commit generation and whether the
+    batch is an at-least-once replay to skip; ``fold(batch_df, cur)``
+    merges the batch into the current ledger (``cur`` is None when there
+    is none to merge into) and the result is committed as a new version
+    by :func:`_ledger_commit`. The query runs ``availableNow`` and is
+    returned started. ``reset_on_takeover`` is the sink's merge algebra
+    (see :func:`_takeover_state`)."""
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        token = token_of()
         cur_path, commit_gen, skip = _takeover_state(
-            target_path, token, batch_id,
-            reset_on_takeover=reset_on_takeover, aliases=token_of.aliases(),
+            target_path, _checkpoint_id(checkpoint), batch_id,
+            reset_on_takeover=reset_on_takeover,
         )
         if skip:
             return  # at-least-once replay of an already-merged batch

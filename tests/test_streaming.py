@@ -308,7 +308,11 @@ def test_countmin_stream_sink_equals_batch_sketch_exactly(spark, tmp_path):
     import os
 
     from dbt_glue_spark.extensions.sketches import countmin_build
-    from dbt_glue_spark.streaming.pipelines import countmin_stream_sink, read_ledger
+    from dbt_glue_spark.streaming.pipelines import (
+        _read_token,
+        countmin_stream_sink,
+        read_ledger,
+    )
 
     vals = [(f"u{i % 37}",) for i in range(2000)]
     df = spark.createDataFrame(vals, "item string")
@@ -336,6 +340,8 @@ def test_countmin_stream_sink_equals_batch_sketch_exactly(spark, tmp_path):
     # linearity: the streamed sketch is cell-for-cell identical to the
     # one-shot batch build, independent of batching
     assert streamed == batch
+    # the ledger's owner is Spark's own streaming query id
+    assert _read_token(target)[0] == q.id
 
 
 def test_histogram_stream_sink_equals_batch_histogram_exactly(spark, tmp_path):
@@ -542,8 +548,8 @@ def test_parse_version_strict():
     from dbt_glue_spark.streaming.pipelines import _parse_version
 
     assert _parse_version("g000001b000000000005") == (1, 5)
-    assert _parse_version("b000000000005") == (0, 5)  # legacy
     for bad in [
+        "b000000000005",  # pre-generation name, no longer written or read
         "g00000100",  # no separator
         "g000001x000000000005",  # wrong separator
         "g0001b000000000005",  # short gen field
@@ -596,61 +602,48 @@ def test_reset_ledger_raises_on_surviving_version(spark, tmp_path, monkeypatch):
 
 
 def test_ckpt_token_cached_and_strict(tmp_path):
-    """_CkptToken: first successful metadata resolve is cached (a later
-    transient read failure cannot mint a second identity mid-run and
-    trigger a spurious additive-ledger wipe); an EXISTING-but-unreadable
-    metadata file with nothing cached fails the batch instead of falling
-    back; only a truly absent metadata file uses the minted instance
-    fallback, uncached so the real query id wins once the file appears."""
+    """_checkpoint_id: the ledger owner is the query id Spark stores in
+    the checkpoint's ``metadata`` file. A missing file, a corrupt file,
+    or an unreadable one (a directory at that path) raises, failing the
+    micro-batch: there is no fallback that could give one checkpoint a
+    second identity."""
     import json
-    import os
 
     import pytest
 
-    from dbt_glue_spark.streaming.pipelines import _CkptToken
+    from dbt_glue_spark.streaming.pipelines import _checkpoint_id
 
     ckpt = tmp_path / "ckpt"
     ckpt.mkdir()
     meta = ckpt / "metadata"
 
-    # absent metadata → stable minted instance fallback, not cached
-    tok = _CkptToken(str(ckpt))
-    fb1, fb2 = tok(), tok()
-    assert fb1 == fb2 and len(fb1) == 32
+    with pytest.raises(FileNotFoundError):
+        _checkpoint_id(str(ckpt))
+    assert list(ckpt.iterdir()) == [], "a failed read leaves nothing behind"
 
-    # metadata appears → query id wins (fallback was not cached)
     meta.write_text(json.dumps({"id": "qid-123"}))
-    assert tok() == "qid-123"
+    assert _checkpoint_id(str(ckpt)) == "qid-123"
 
-    # cached: metadata becomes unreadable/corrupt — token unchanged
-    meta.write_text("{corrupt")
-    assert tok() == "qid-123"
-    os.remove(meta)
-    assert tok() == "qid-123"
-
-    # no cache + corrupt EXISTING file → raise, never a second identity
-    meta.write_text("{corrupt")
-    tok2 = _CkptToken(str(ckpt))
+    meta.write_text(json.dumps({"other": 1}))
     with pytest.raises(ValueError):
-        tok2()
-    # no cache + unreadable EXISTING file (directory → OSError) → raise
-    os.remove(meta)
-    meta.mkdir()
-    tok3 = _CkptToken(str(ckpt))
+        _checkpoint_id(str(ckpt))
+
+    meta.write_text("{corrupt")
+    with pytest.raises(ValueError):
+        _checkpoint_id(str(ckpt))
+
+    meta.unlink()
+    meta.mkdir()  # unreadable as a file (EISDIR ∈ OSError)
     with pytest.raises(OSError):
-        tok3()
+        _checkpoint_id(str(ckpt))
 
 
 def test_takeover_protocol_random_interleavings(spark, tmp_path):
     """Model-based check of the ledger protocol: drive random sequences
-    of {new batch, at-least-once replay, checkpoint switch, fallback →
-    query-id alias upgrade, crash between token write and commit} through
-    the REAL _takeover_state/_ledger_commit pair, with 'merge' =
-    append-a-marker so the final ledger's marker set is comparable
-    against a pure-Python reference model. Identity in the model is the
-    CHECKPOINT, not the token string: a checkpoint may deliver first
-    under its fallback alias and later under its query id (round-6
-    alias fix) — same identity, no reset, replay-skip unaffected."""
+    of {new batch, at-least-once replay, checkpoint switch, crash between
+    token write and commit} through the REAL _takeover_state/_ledger_commit
+    pair, with 'merge' = append-a-marker so the final ledger's marker set
+    is comparable against a pure-Python reference model."""
     import random
 
     from dbt_glue_spark.streaming.pipelines import (
@@ -661,9 +654,9 @@ def test_takeover_protocol_random_interleavings(spark, tmp_path):
 
     rng = random.Random(20260814)
 
-    def deliver(target, token, aliases, bid, marker, model, ident):
+    def deliver(target, bid, marker, model, ident):
         """One merge_batch execution (additive policy)."""
-        cur, gen, skip = _takeover_state(target, token, bid, True, aliases=aliases)
+        cur, gen, skip = _takeover_state(target, f"qid-{ident}", bid, True)
         if skip:
             return
         if cur is None:
@@ -683,54 +676,34 @@ def test_takeover_protocol_random_interleavings(spark, tmp_path):
         target = str(tmp_path / f"t{seq}")
         model = {"ident": None, "markers": []}
         ident, bid, marker_i = 0, -1, 0
-        # a checkpoint may start under its fallback alias (metadata not
-        # yet visible); "upgrade" flips it to the query id mid-run
-        alias_mode = rng.random() < 0.5
-
-        def cur_token():
-            return f"hash-{ident}" if alias_mode else f"qid-{ident}"
-
-        def cur_aliases():
-            return frozenset({f"hash-{ident}"})
-
         last = None
         for _ in range(rng.randint(5, 10)):
-            ev = rng.choice(["batch", "batch", "replay", "switch", "upgrade", "crash"])
+            ev = rng.choice(["batch", "batch", "replay", "switch", "crash"])
             if ev == "batch" or last is None:
                 bid += 1
                 marker = f"m{seq}-{marker_i}"; marker_i += 1
-                deliver(target, cur_token(), cur_aliases(), bid, marker, model, ident)
-                last = (cur_token(), cur_aliases(), bid, ident)
+                deliver(target, bid, marker, model, ident)
+                last = (bid, ident)
             elif ev == "replay":
                 # re-deliver the last batch verbatim (at-least-once): its
-                # marker must NOT appear twice — even if an alias upgrade
-                # happened in between (the token the batch sees is the
-                # CURRENT one, but identity is unchanged)
-                tok = cur_token() if last[3] == ident else last[0]
-                als = cur_aliases() if last[3] == ident else last[1]
-                deliver(target, tok, als, last[2], f"dup{marker_i}", model, last[3])
+                # marker must NOT appear twice
+                deliver(target, last[0], f"dup{marker_i}", model, last[1])
             elif ev == "switch":
                 ident += 1
-                alias_mode = rng.random() < 0.5
                 bid = -1  # batch ids restart under a new checkpoint
-            elif ev == "upgrade":
-                # metadata became visible: same checkpoint, primary token
-                alias_mode = False
             elif ev == "crash":
                 # crash window: token/generation advanced, commit lost —
                 # the NEXT delivery of the same batch must merge normally
                 bid += 1
-                cur, gen, skip = _takeover_state(
-                    target, cur_token(), bid, True, aliases=cur_aliases()
-                )
+                cur, gen, skip = _takeover_state(target, f"qid-{ident}", bid, True)
                 assert not skip
                 # model: a reset may have happened (checkpoint change)
                 if model["ident"] != ident:
                     model["markers"] = []
                     model["ident"] = ident
                 marker = f"m{seq}-{marker_i}"; marker_i += 1
-                deliver(target, cur_token(), cur_aliases(), bid, marker, model, ident)
-                last = (cur_token(), cur_aliases(), bid, ident)
+                deliver(target, bid, marker, model, ident)
+                last = (bid, ident)
         if model["markers"]:
             got = sorted(r["m"] for r in read_ledger(spark, target).collect())
             assert got == sorted(model["markers"]), f"seq {seq}: {got} vs {model}"
@@ -759,46 +732,6 @@ def test_read_token_missing_vs_unreadable(spark, tmp_path):
     os.mkdir(ckpt_file)  # unreadable-as-file (EISDIR ∈ OSError, ∉ FileNotFoundError)
     with pytest.raises(OSError):
         _read_token(target)
-
-
-def test_fallback_alias_upgrade_not_takeover(spark, tmp_path):
-    """Round-6 review fix: a ledger committed under the checkpoint's
-    instance-token fallback (metadata not yet visible on batch 0) must be
-    recognized as SELF once the query id resolves — token upgraded in
-    place, no additive reset (the intact checkpoint would never
-    re-deliver the already-merged history), replay skip still scoped."""
-    import json
-
-    from dbt_glue_spark.streaming.pipelines import (
-        _CkptToken,
-        _ledger_commit,
-        _read_token,
-        _takeover_state,
-        read_ledger,
-    )
-
-    frame = lambda n: spark.createDataFrame([(1, n)], "bucket int, cnt int")  # noqa: E731
-    ckpt = tmp_path / "ckpt"
-    ckpt.mkdir()
-    token_of = _CkptToken(str(ckpt))
-    alias = token_of()  # metadata absent: the minted instance fallback
-    assert alias in token_of.aliases()
-
-    target = str(tmp_path / "tgt")
-    cur, gen, skip = _takeover_state(target, alias, 0, True, aliases=token_of.aliases())
-    assert not skip
-    _ledger_commit(frame(11), target, gen, 0)
-
-    # metadata becomes visible; the SAME sink run now resolves the qid
-    (ckpt / "metadata").write_text(json.dumps({"id": "qid-123"}))
-    qid = token_of()
-    assert qid == "qid-123" and qid != alias
-    cur, gen2, skip = _takeover_state(target, qid, 1, True, aliases=token_of.aliases())
-    assert not skip and gen2 == gen and cur is not None, "alias is self, not takeover"
-    assert _read_token(target) == (qid, gen), "stored token upgraded in place"
-    assert read_ledger(spark, target).collect()[0]["cnt"] == 11  # nothing wiped
-    # at-least-once replay of batch 0 under the upgraded token: skip
-    assert _takeover_state(target, qid, 0, True, aliases=token_of.aliases())[2]
 
 
 def test_reset_ledger_keeps_token_until_versions_gone(spark, tmp_path, monkeypatch):
@@ -838,155 +771,43 @@ def test_reset_ledger_keeps_token_until_versions_gone(spark, tmp_path, monkeypat
 
 
 def test_recreated_checkpoint_is_takeover_not_alias(spark, tmp_path):
-    """Round-6 review fix: the fallback identity is INSTANCE-scoped — a
-    token minted into a marker file inside the checkpoint directory, so
-    it dies with the directory. A checkpoint deleted and recreated at
-    the same path is a different stream — batch ids restart at 0 and
-    history is re-delivered from scratch — so the predecessor's fallback
-    token must NOT alias-match: inheriting the dead instance's watermark
-    would silently skip the new stream's early batches and merge the
-    rest into stale pre-restart additive state. (A path+inode hash fails
-    this too: tmpfs/ext4 recycle inode numbers immediately, as the first
-    version of this fix learned the hard way.)"""
-    import json
+    """A checkpoint deleted and recreated at the same path is a different
+    stream: Spark gives it a new query id, its batch ids restart at 0 and
+    its source is delivered from scratch. The additive ledger must treat
+    it as a takeover and rebuild from the new stream alone, neither
+    skipping its early batches against the old watermark nor merging
+    into the old state. Run 1 sees more files than run 2, so both faults
+    would leave a ledger that differs from run 2's batch build."""
     import shutil
 
-    from dbt_glue_spark.streaming.pipelines import (
-        _CkptToken,
-        _ledger_commit,
-        _mint_instance,
-        _takeover_state,
-        read_ledger,
-    )
+    from dbt_glue_spark.extensions.sketches import countmin_build
+    from dbt_glue_spark.streaming.pipelines import countmin_stream_sink, read_ledger
 
-    frame = lambda n: spark.createDataFrame([(1, n)], "bucket int, cnt int")  # noqa: E731
-    ckpt = tmp_path / "ckpt"
-    ckpt.mkdir()
-    target = str(tmp_path / "tgt")
+    stage, ckpt, target = (str(tmp_path / n) for n in ("src", "ckpt", "tgt"))
 
-    # run 1: metadata never becomes visible — commits under the fallback
-    run1 = _CkptToken(str(ckpt))
-    tok1 = run1()
-    assert tok1 == _mint_instance(str(ckpt)), "minted identity is stable per instance"
-    assert run1() == tok1, "re-resolving before metadata appears reuses the marker"
-    cur, gen, skip = _takeover_state(target, tok1, 0, True, aliases=run1.aliases())
-    assert not skip
-    _ledger_commit(frame(11), target, gen, 0)
-    cur, gen, skip = _takeover_state(target, tok1, 1, True, aliases=run1.aliases())
-    _ledger_commit(frame(99), target, gen, 1)
+    def run(df, files):
+        df.repartition(files).write.mode("overwrite").parquet(stage)
+        stream = (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+        )
+        q = countmin_stream_sink(stream, spark, target, ckpt, "item")
+        q.awaitTermination(120)
+        return q.id
 
-    # user deletes the checkpoint and restarts to force a rebuild
-    shutil.rmtree(ckpt)
-    ckpt.mkdir()
-    (ckpt / "metadata").write_text(json.dumps({"id": "qid-run2"}))
-    run2 = _CkptToken(str(ckpt))
-    assert tok1 not in run2.aliases(), "recreated dir has a new inode → new instance"
-
-    # run 2's batch 0 (fresh data, re-delivered from scratch) must MERGE
-    # — not be skipped against the dead instance's watermark — and must
-    # see a RESET ledger, not run 1's additive state
-    cur, gen2, skip = _takeover_state(target, run2(), 0, True, aliases=run2.aliases())
-    assert not skip, "batch 0 of the recreated stream must not be skipped"
-    assert cur is None, "additive takeover must reset, not merge into stale state"
-    assert gen2 > gen
-    _ledger_commit(frame(7), target, gen2, 0)
-    assert [r["cnt"] for r in read_ledger(spark, target).collect()] == [7]
-
-
-def test_mint_instance_concurrent_single_identity(tmp_path):
-    """Concurrent minters on one fresh checkpoint must converge on ONE
-    identity (first-writer-wins hard-link commit): a replace()-based
-    commit could hand different tokens to different racers, splitting
-    one checkpoint instance into two identities and letting a
-    reset_on_takeover sink wipe the ledger mid-run."""
-    import threading
-
-    from dbt_glue_spark.streaming.pipelines import _mint_instance, _read_instance
-
-    ckpt = str(tmp_path / "ckpt")
-    import os
-
-    os.makedirs(ckpt)
-    tokens: list[str] = []
-    barrier = threading.Barrier(8)
-
-    def mint():
-        barrier.wait()
-        tokens.append(_mint_instance(ckpt))
-
-    threads = [threading.Thread(target=mint) for _ in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert len(set(tokens)) == 1, tokens
-    assert tokens[0] == _read_instance(ckpt)
-    # no stray tmp files survive the race
-    leftovers = [f for f in os.listdir(ckpt) if ".tmp" in f or "." in f.lstrip(".")]
-    assert all(not f.endswith(tuple(tokens)) for f in leftovers), leftovers
-
-
-def test_mint_instance_link_unsupported_uses_excl_create(tmp_path, monkeypatch):
-    """Stores that refuse os.link but accept plain writes (FUSE/object
-    mounts) must still mint a marker-file identity — the path-hash
-    degradation is reserved for genuinely read-only stores (ADVICE r6).
-    Concurrent minters on the O_EXCL path must still converge on ONE
-    token."""
-    import os
-    import threading
-
-    from dbt_glue_spark.streaming import pipelines
-    from dbt_glue_spark.streaming.pipelines import _mint_instance, _read_instance
-
-    def no_link(src, dst, **kw):
-        raise PermissionError("link not supported on this mount")
-
-    monkeypatch.setattr(pipelines.os if hasattr(pipelines, "os") else os, "link", no_link, raising=True)
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(ckpt)
-    tokens: list[str] = []
-    barrier = threading.Barrier(8)
-
-    def mint():
-        barrier.wait()
-        tokens.append(_mint_instance(ckpt))
-
-    threads = [threading.Thread(target=mint) for _ in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert len(set(tokens)) == 1, tokens
-    assert tokens[0] == _read_instance(ckpt)
-    # marker file really exists → instance identity dies with the dir
-    assert os.path.exists(os.path.join(ckpt, pipelines._INSTANCE_MARKER))
-
-
-def test_mint_instance_readonly_store_degrades_with_warning(
-    tmp_path, caplog, monkeypatch
-):
-    """Only a store that refuses even a plain create falls back to the
-    path hash, and the degradation is logged (silent aliasing was the
-    ADVICE r6 complaint). Write refusal is simulated by patching open()
-    — the suite runs as root, where chmod 555 doesn't block writes."""
-    import builtins
-    import hashlib
-    import logging
-    import os
-
-    from dbt_glue_spark.streaming.pipelines import _mint_instance
-
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(ckpt)
-    real_open = builtins.open
-
-    def ro_open(file, mode="r", *a, **kw):
-        if str(file).startswith(ckpt) and ("w" in mode or "a" in mode):
-            raise PermissionError(f"read-only store: {file}")
-        return real_open(file, mode, *a, **kw)
-
-    monkeypatch.setattr(builtins, "open", ro_open)
-    with caplog.at_level(logging.WARNING):
-        tok = _mint_instance(ckpt)
-    assert tok == hashlib.md5(os.path.realpath(ckpt).encode()).hexdigest()
-    assert any("degrading instance identity" in r.message for r in caplog.records)
+    first = spark.createDataFrame([(f"u{i % 23}",) for i in range(1500)], "item string")
+    id1 = run(first, 4)
+    shutil.rmtree(ckpt)  # the user drops the checkpoint to force a rebuild
+    second = spark.createDataFrame([(f"v{i % 11}",) for i in range(600)], "item string")
+    id2 = run(second, 2)
+    assert id1 != id2
+    streamed = {
+        (r["row_idx"], r["bucket"]): r["cnt"]
+        for r in read_ledger(spark, target).collect()
+    }
+    batch = {
+        (r["row_idx"], r["bucket"]): r["cnt"]
+        for r in countmin_build(second, "item").collect()
+    }
+    assert streamed == batch

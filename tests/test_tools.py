@@ -1,5 +1,6 @@
-"""Smoke tests for the plan dumper, the A/B harness and the scaling probe,
-run in process at the test scale so the tools cannot rot unnoticed."""
+"""Smoke tests for the plan dumper, the A/B harness and the scaling and
+skew probes, run in process at the test scale so the tools cannot rot
+unnoticed."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import re
 import pytest
 
 from dbt_glue_spark.sources.registry import load_table
-from tools import ab, explain, scale_probe
+from tools import ab, explain, scale_probe, skew_probe
 
 QUERY = "q3_shipping_priority"
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -64,6 +65,21 @@ def test_every_documented_probe_resolves():
                 cited.update(names.split("|"))
     assert {"dedup", "mmr", "staged", "staged13", "dupweak", "dupgrowth"} <= cited
     assert cited <= set(scale_probe.FAMILIES), cited - set(scale_probe.FAMILIES)
+
+
+def test_probe_arguments_rejected_before_spark(monkeypatch):
+    def no_spark(name):
+        raise AssertionError("Spark started before the arguments were checked")
+
+    for tool, argv, message in [
+        (scale_probe, ["--probe=nope"], "one of dedup"),
+        (scale_probe, ["--factor=2"], "usage:"),
+        (skew_probe, ["--rep=3"], "usage: python tools/skew_probe.py"),
+        (skew_probe, ["--axis=foo"], "usage: python tools/skew_probe.py"),
+    ]:
+        monkeypatch.setattr(tool, "get_spark", no_spark)
+        with pytest.raises(SystemExit, match=message):
+            tool.main(argv)
 
 
 @pytest.mark.slow

@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -41,6 +42,7 @@ sys.path.insert(0, os.path.dirname(_TOOLS))
 sys.path.insert(0, _TOOLS)
 
 from gen_pathological import mutate_dupheavy, mutate_hot, mutate_textskew  # noqa: E402
+from scale_probe import _force  # noqa: E402
 
 from dbt_glue_spark.plans.catalog import SPECS  # noqa: E402
 from dbt_glue_spark.session import get_spark  # noqa: E402
@@ -102,41 +104,28 @@ PROBED_DUP = [
 ]
 
 
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+AXES = {
+    "hot": (mutate_hot, PROBED),
+    "textskew": (mutate_textskew, PROBED_TEXT),
+    "dupheavy": (mutate_dupheavy, PROBED_DUP),
+}
+USAGE = "usage: python tools/skew_probe.py [sf_dir] [--reps=3] [--axis=hot|textskew|dupheavy]"
 
 
-def _time(fn, reps: int) -> float:
-    import statistics
-
-    samples = []
-    for _ in range(reps):
-        t0 = time.time()
-        fn()
-        samples.append(time.time() - t0)
-    return round(statistics.median(samples), 3)
-
-
-def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = args[0] if args else "/root/testdata/sf0.1"
-    reps = 3
-    axis = "hot"
-    for a in sys.argv[1:]:
-        if a.startswith("--reps"):
+def main(argv: list[str]) -> None:
+    sf_dir, reps, axis = "/root/testdata/sf0.1", 3, "hot"
+    for a in argv:
+        if a.startswith("--reps="):
             reps = int(a.split("=", 1)[1])
-        if a.startswith("--axis"):
+        elif a.startswith("--axis="):
             axis = a.split("=", 1)[1]
-    mutator = {
-        "hot": mutate_hot,
-        "textskew": mutate_textskew,
-        "dupheavy": mutate_dupheavy,
-    }[axis]
-    probed = {
-        "hot": PROBED,
-        "textskew": PROBED_TEXT,
-        "dupheavy": PROBED_DUP,
-    }[axis]
+        elif a.startswith("--"):
+            raise SystemExit(f"unknown argument {a!r}; {USAGE}")
+        else:
+            sf_dir = a
+    if axis not in AXES:
+        raise SystemExit(f"unknown --axis={axis}; {USAGE}")
+    mutator, probed = AXES[axis]
     spark = get_spark("skew_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -188,8 +177,15 @@ def main() -> None:
             _force(specs[name].fn(spark, sf_dir))
             _force(specs[name].fn(spark, hot_dir))
         for name in probed:
-            clean = _time(lambda: _force(specs[name].fn(spark, sf_dir)), reps)
-            hot = _time(lambda: _force(specs[name].fn(spark, hot_dir)), reps)
+            secs = {}
+            for label, d in (("clean", sf_dir), ("hot", hot_dir)):
+                samples = []
+                for _ in range(reps):
+                    t0 = time.time()
+                    _force(specs[name].fn(spark, d))
+                    samples.append(time.time() - t0)
+                secs[label] = round(statistics.median(samples), 3)
+            clean, hot = secs["clean"], secs["hot"]
             results[name] = {
                 "clean": clean,
                 "hot": hot,
@@ -207,4 +203,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
