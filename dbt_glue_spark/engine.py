@@ -205,17 +205,32 @@ class Engine:
     def relation_for(self, name: str) -> Relation:
         return Relation(self.schema, name)
 
-    def _resolve_sql(self, model: Model) -> str:
+    def _resolve_sql(
+        self,
+        model: Model,
+        sql: str | None = None,
+        views: dict[str, str] | None = None,
+    ) -> str:
+        """Compile ``sql`` (default: the model's own) in ``model``'s
+        context: ``{{ source }}`` → the registered temp view,
+        ``{{ ref }}`` → the relation or an inlined ephemeral subquery,
+        ``{{ this }}`` → the model's relation. ``views`` maps ref/source
+        names to the temp views that stand in for them (unit-test mocks),
+        ephemeral bodies included."""
+        views = views or {}
+
         def sub(m: re.Match) -> str:
             kind, name = m.group(1), m.group(2)
+            if name in views:
+                return views[name]
             if kind == "source":
                 return name  # registered temp view
             dep = self.models.get(name)
             if dep and dep.config.materialized == "ephemeral":
-                return f"({self._resolve_sql(dep)}) AS __ephemeral_{name}"
+                return f"({self._resolve_sql(dep, views=views)}) AS __ephemeral_{name}"
             return self.relation_for(name).render()
 
-        sql = _REF.sub(sub, model.sql or "")
+        sql = _REF.sub(sub, (model.sql or "") if sql is None else sql)
         return sanitize_sql(_THIS.sub(self.relation_for(model.name).render(), sql))
 
     def ref_df(self, name: str) -> DataFrame:
@@ -357,8 +372,7 @@ class Engine:
         model body (dbt pre_hook/post_hook semantics: statements run in
         order; a failure aborts the model run)."""
         for hook in hooks:
-            shim = Model(model.name, sql=hook, config=model.config)
-            self.spark.sql(self._resolve_sql(shim))
+            self.spark.sql(self._resolve_sql(model, hook))
 
     @staticmethod
     def _check_contract(df: DataFrame, contract: dict[str, str]) -> None:
@@ -752,16 +766,8 @@ class Engine:
             to_df(data).createOrReplaceTempView(vname)
             views[dep] = vname
 
-        def sub(m: re.Match) -> str:
-            kind, nm = m.group(1), m.group(2)
-            if nm in views:
-                return views[nm]
-            return nm if kind == "source" else self.relation_for(nm).render()
-
-        sql = _REF.sub(sub, model.sql)
-        sql = _THIS.sub(self.relation_for(name).render(), sql)
         try:
-            actual_df = self.spark.sql(sql)
+            actual_df = self.spark.sql(self._resolve_sql(model, views=views))
             expect_df = to_df(expect)
             cols = expect_df.columns
             actual = sorted(

@@ -280,37 +280,18 @@ def semantic_keep_best(
     (bigint, bigint, bigint) rows once. Extends aws-samples/dbt-glue
     (no dedup surface in the reference; SemDeDup per Abbas et al. 2023).
     """
-    from dbt_glue_spark.extensions.dedup import dup_clusters
+    from dbt_glue_spark.extensions.dedup import dup_clusters, keep_best_by
 
     m, pairs = within_cluster_pairs(
         df, k=k, max_iter=max_iter, threshold=threshold,
         id_col=id_col, vec_col=vec_col,
     )
-    quality = df.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(F.col(quality_col).cast("bigint"), F.lit(-1)).alias("__q"),
-    )
+    quality = df.select(F.col(id_col).alias("id"), F.col(quality_col).alias("__q"))
     comps = dup_clusters(
         m.select(F.col("id").alias(id_col)), pairs, id_col, max_cc_iter
     ).select(F.col(id_col).alias("id"), F.col("cluster_id").alias("__class"))
-    return (
-        m.select("id")
-        .join(quality, "id")
-        .join(comps, "id")
-        .groupBy("__class")
-        .agg(
-            F.min(
-                F.struct((-F.col("__q")).alias("nq"), F.col("id").alias("i"))
-            ).alias("__w"),
-            F.count("*").cast("bigint").alias("n_members"),
-            F.max("__q").cast("bigint").alias("best_score"),
-        )
-        .select(
-            F.col("__w.i").cast("bigint").alias("keep_id"),
-            "n_members",
-            "best_score",
-        )
-    )
+    scored = m.select("id").join(quality, "id").join(comps, "id")
+    return keep_best_by(scored, ["__class"], "id", "__q")
 
 
 def semantic_contamination(

@@ -40,7 +40,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.extensions.dedup import _persist, dup_clusters, hamming_lsh_pairs
+from dbt_glue_spark.extensions.dedup import (
+    _persist,
+    dup_clusters,
+    hamming_lsh_pairs,
+    keep_best_by,
+)
 from dbt_glue_spark.extensions.multimodal import (
     DecodeUnavailable,
     png_decode,
@@ -255,28 +260,10 @@ def paired_keep_best(
     ).select(
         F.col(id_col), F.col("cluster_id").alias("image_cluster")
     )
-    q = F.coalesce(F.col(quality_col).cast("bigint"), F.lit(-1))
     scored = sigs.join(comps, id_col).join(
-        df.select(F.col(id_col), q.alias("__q")), id_col
+        df.select(F.col(id_col), F.col(quality_col).alias("__q")), id_col
     )
-    return (
-        scored.groupBy("caption_key", "image_cluster")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("__q")).alias("nq"),
-                    F.col(id_col).alias("i"),
-                )
-            ).alias("__w"),
-            F.count("*").cast("bigint").alias("n_members"),
-            F.max("__q").cast("bigint").alias("best_score"),
-        )
-        .select(
-            F.col("__w.i").cast("bigint").alias("keep_id"),
-            "n_members",
-            "best_score",
-        )
-    )
+    return keep_best_by(scored, ["caption_key", "image_cluster"], id_col, "__q")
 
 
 def paired_contamination(

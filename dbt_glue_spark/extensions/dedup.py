@@ -134,18 +134,41 @@ def exact_dedup_keep_best(
     ).select(
         F.md5(c).alias("__h"),
         F.col(id_col).cast("bigint").alias("__id"),
-        F.coalesce(F.col(score_col).cast("bigint"), F.lit(-1)).alias("__q"),
+        F.col(score_col).alias("__q"),
     )
-    # min(struct(-score, id)) == (max score, then min id): one aggregate,
-    # no window, no second pass
-    best = F.min(F.struct((-F.col("__q")).alias("nq"), F.col("__id").alias("i")))
-    return staged.groupBy("__h").agg(
-        best.alias("__best"),
-        F.count("*").cast("bigint").alias("n_copies"),
-    ).select(
-        F.col("__best.i").cast("bigint").alias("keep_id"),
-        "n_copies",
-        (-F.col("__best.nq")).cast("bigint").alias("best_score"),
+    return keep_best_by(staged, ["__h"], "__id", "__q", n_name="n_copies")
+
+
+def keep_best_by(
+    scored: DataFrame,
+    by: list[str],
+    id_col: str,
+    score_col: str,
+    n_name: str = "n_members",
+    keep_by: bool = False,
+) -> DataFrame:
+    """The keep-best tail every survivor manifest shares: ONE groupBy on
+    ``by`` whose argmax rides ``min(struct(-q, id))`` — max score, then
+    min id — with no window and no join-back.
+
+    ``q`` is the score cast to bigint with NULL coalesced to −1, so a
+    NULL score loses to any real (non-negative) score and an all-NULL
+    group reports ``best_score = -1``. Output: ``keep_id``, the member
+    count named ``n_name`` and ``best_score`` (all bigint), preceded by
+    the ``by`` columns cast to bigint when ``keep_by``.
+    """
+    q = F.coalesce(F.col(score_col).cast("bigint"), F.lit(-1))
+    best = F.min(F.struct((-q).alias("nq"), F.col(id_col).alias("i")))
+    head = [F.col(c).cast("bigint").alias(c) for c in by] if keep_by else []
+    return (
+        scored.groupBy(*by)
+        .agg(best.alias("__w"), F.count("*").cast("bigint").alias(n_name))
+        .select(
+            *head,
+            F.col("__w.i").cast("bigint").alias("keep_id"),
+            n_name,
+            (-F.col("__w.nq")).cast("bigint").alias("best_score"),
+        )
     )
 
 
@@ -788,28 +811,8 @@ def cluster_keep_best(
     carrying (bigint, bigint, bigint) rows.
     """
     comps = dup_clusters(df, pairs, id_col, max_iter)
-    q = F.coalesce(F.col(score_col).cast("bigint"), F.lit(-1))
-    scored = comps.join(
-        df.select(F.col(id_col), q.alias("__q")), id_col
-    )
-    return (
-        scored.groupBy("cluster_id")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("__q")).alias("nq"), F.col(id_col).alias("i")
-                )
-            ).alias("__w"),
-            F.count("*").cast("bigint").alias("n_members"),
-            F.max("__q").cast("bigint").alias("best_score"),
-        )
-        .select(
-            F.col("cluster_id").cast("bigint").alias("cluster_id"),
-            F.col("__w.i").cast("bigint").alias("keep_id"),
-            "n_members",
-            "best_score",
-        )
-    )
+    scored = comps.join(df.select(F.col(id_col), F.col(score_col).alias("__q")), id_col)
+    return keep_best_by(scored, ["cluster_id"], id_col, "__q", keep_by=True)
 
 
 def contamination_pairs(

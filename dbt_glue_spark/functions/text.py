@@ -65,8 +65,15 @@ def fold_lower_sql(expr: str) -> str:
 def words(col: Column) -> Column:
     """Word lexer → array<string>: lowercase alpha runs (``[a-z]+``) of
     the engine-stable fold. The oracles' DuckDB form is
-    ``regexp_extract_all(translate(lower(x), 'ς̇', 'σ'), '[a-z]+')``."""
+    :func:`words_sql`."""
     return F.regexp_extract_all(fold_lower(col), F.lit("[a-z]+"), F.lit(0))
+
+
+def words_sql(expr: str) -> str:
+    """:func:`words` as a DuckDB SQL fragment, for oracles (Spark SQL's
+    ``regexp_extract_all`` defaults to group 1, so this form is
+    DuckDB-only)."""
+    return f"regexp_extract_all({fold_lower_sql(expr)}, '[a-z]+')"
 
 
 def normalize_text(col: Column) -> Column:

@@ -24,6 +24,7 @@ from dbt_glue_spark.extensions import (
 )
 from dbt_glue_spark.extensions.sampling import _PRIORITY_SPACE
 from dbt_glue_spark.extensions.sketches import _duck_hash_int
+from dbt_glue_spark.functions.text import words_sql
 from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.plans.extension_queries import _SH as _ext_SH
@@ -71,9 +72,9 @@ def ext_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_pmi_pairs",
-    r"""
+    rf"""
     WITH tok AS (
-      SELECT doc_id, regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+') AS toks
+      SELECT doc_id, {words_sql('text')} AS toks
       FROM documents
     ),
     pos AS (
@@ -118,9 +119,9 @@ def ext_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_zipf_buckets",
-    r"""
+    rf"""
     WITH tk AS (
-      SELECT unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS tok
+      SELECT unnest({words_sql('text')}) AS tok
       FROM documents
     ),
     counts AS (
@@ -236,9 +237,9 @@ def ext_gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_token_gini",
-    r"""
+    rf"""
     WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS tok
+      SELECT doc_id, unnest({words_sql('text')}) AS tok
       FROM documents
     ),
     c AS (

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions.sketches import _duck_hash_int
+from dbt_glue_spark.functions.text import words_sql
 from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.sources.registry import load_table
@@ -293,7 +294,7 @@ _VG_BUCKET = f"""CASE WHEN mx = mn THEN 0
       FROM documents WHERE doc_id IS NOT NULL
     ),
     tok AS (
-      SELECT doc_id, regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+') AS toks
+      SELECT doc_id, {words_sql('text')} AS toks
       FROM documents WHERE doc_id IS NOT NULL
     ),
     b AS (

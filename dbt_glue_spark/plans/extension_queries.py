@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions import dedup, similarity, text_analysis
 from dbt_glue_spark.extensions.similarity import _hyperplane
-from dbt_glue_spark.functions.text import words
+from dbt_glue_spark.functions.text import fold_lower_sql, words, words_sql
 from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.quality import profile
@@ -109,9 +109,9 @@ _MINHASH_BANDS = _minhash_bands()
 
 @register(
     "ext_exact_dedup",
-    r"""
+    rf"""
     WITH hashed AS (
-      SELECT *, MD5(trim(regexp_replace(regexp_replace(translate(lower(text), 'ς̇', 'σ'),
+      SELECT *, MD5(trim(regexp_replace(regexp_replace({fold_lower_sql('text')},
                  '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS h
       FROM documents
     ), keep AS (SELECT h, MIN(doc_id) AS doc_id FROM hashed GROUP BY h)
@@ -145,9 +145,9 @@ def ext_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_exact_dedup_incremental",
-    r"""
+    rf"""
     WITH hashed AS (
-      SELECT *, MD5(trim(regexp_replace(regexp_replace(translate(lower(text), 'ς̇', 'σ'),
+      SELECT *, MD5(trim(regexp_replace(regexp_replace({fold_lower_sql('text')},
                  '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS h
       FROM documents
     ),
@@ -1046,8 +1046,9 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Streaming incremental-append SINK end-to-end "
     "(streaming/pipelines.incremental_stream_sink): events staged as a "
-    "4-file stream, availableNow parquet sink partitioned by event hour "
-    "with a checkpoint, then the SINK's files re-read and aggregated — "
+    "4-file stream, availableNow parquet sink that adds an event_hour "
+    "column, with a checkpoint, then the SINK's files re-read and "
+    "aggregated by event hour — "
     "exactly-once file-sink semantics must reproduce the batch aggregate. "
     "This is the streaming twin of the incremental/append "
     "materialization (the driver-triggered micro-batch run).",
@@ -1086,7 +1087,7 @@ def streaming_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Streaming upsert sink end-to-end "
     "(streaming/pipelines.merge_stream_sink): each micro-batch merges "
-    "into a parquet target with precombine latest-wins on event_id — the "
+    "into a parquet ledger with precombine latest-wins on event_id — the "
     "Hudi-style streaming upsert. The final target must hold exactly the "
     "max-event_id row per (user, event_type) REGARDLESS of how the "
     "stream was batched: out-of-order batches must not clobber newer "
@@ -1096,7 +1097,7 @@ def streaming_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from dbt_glue_spark.streaming.pipelines import merge_stream_sink
+    from dbt_glue_spark.streaming.pipelines import merge_stream_sink, read_ledger_or
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id"
@@ -1113,13 +1114,9 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             dedup_source_on="event_id",
         )
         streams.drain(q, "streaming_merge_upsert")
-    data_dir = os.path.join(target, "data")
-    # empty source stream → no micro-batch ever merged → no target dir;
+    # empty source stream → no micro-batch ever merged → no ledger;
     # the upsert of nothing is an empty table, not a read error
-    final = (
-        spark.read.parquet(data_dir) if os.path.exists(data_dir) else events.limit(0)
-    )
-    return final.select(
+    return read_ledger_or(spark, target, events.limit(0)).select(
         "user_id", "event_type", F.col("event_id").alias("last_event_id")
     )
 
@@ -1753,7 +1750,7 @@ def _curation_oracle() -> str:
       WHERE q.quality_score >= 0.5 AND l.lang_pred <> 'und'
     ),
     hashed AS (
-      SELECT *, MD5(trim(regexp_replace(regexp_replace(translate(lower(text), 'ς̇', 'σ'),
+      SELECT *, MD5(trim(regexp_replace(regexp_replace({fold_lower_sql('text')},
                  '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS h
       FROM kept
     ),
@@ -1848,9 +1845,9 @@ def ext_contamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_top_tokens",
-    r"""
+    rf"""
     WITH tk AS (
-      SELECT unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS tok
+      SELECT unnest({words_sql('text')}) AS tok
       FROM documents
     )
     SELECT tok, CAST(COUNT(*) AS BIGINT) AS n
@@ -1907,9 +1904,9 @@ def ext_token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_tfidf_top_terms",
-    r"""
+    rf"""
     WITH tk AS (
-      SELECT doc_id, unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS tok
+      SELECT doc_id, unnest({words_sql('text')}) AS tok
       FROM documents
     ),
     tf AS (
@@ -1950,9 +1947,9 @@ def ext_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_bm25_search",
-    r"""
+    rf"""
     WITH tk AS (
-      SELECT doc_id, unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS tok
+      SELECT doc_id, unnest({words_sql('text')}) AS tok
       FROM documents
     ),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM tk GROUP BY doc_id),
@@ -2407,7 +2404,7 @@ def _cm_oracle() -> str:
     )
     return f"""
     WITH tk AS (
-      SELECT unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS tok
+      SELECT unnest({words_sql('text')}) AS tok
       FROM documents
     ),
     cells AS (
@@ -2822,9 +2819,9 @@ def ext_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared bigram-LM oracle core: WITH-clauses through the quantized model
 # terms plus the per-doc score select — reused verbatim by ext_lm_score and
 # the CCNet bucket query so the two can never drift apart.
-_LM_CORE = r"""
+_LM_CORE = rf"""
     WITH tok AS (
-      SELECT doc_id, regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+') AS ws
+      SELECT doc_id, {words_sql('text')} AS ws
       FROM documents
     ),
     uni AS (SELECT unnest(ws) AS w FROM tok),
@@ -2832,7 +2829,7 @@ _LM_CORE = r"""
     vocab AS (SELECT COUNT(*) AS v FROM c1),
     big AS (
       SELECT doc_id,
-             unnest([{'w1': ws[i], 'w2': ws[i+1]}
+             unnest([{{'w1': ws[i], 'w2': ws[i+1]}}
                      for i in generate_series(1, len(ws) - 1)],
                     recursive := true)
       FROM tok WHERE len(ws) >= 2
@@ -2886,7 +2883,7 @@ def _wordpiece_oracle_head() -> str:
     step = _wordpiece_step_sql(text_analysis.WORDPIECE_VOCAB)
     return f"""
     WITH RECURSIVE inst AS (
-      SELECT doc_id, unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS word
+      SELECT doc_id, unnest({words_sql('text')}) AS word
       FROM documents
     ),
     dw AS (SELECT DISTINCT word FROM inst),
@@ -3446,7 +3443,7 @@ def _bpe_oracle(n_merges: int = 8) -> str:
       SELECT regexp_replace(word, '(.)', {s} || '\\1', 'g') AS enc, cnt
       FROM (
         SELECT word, COUNT(*) AS cnt FROM (
-          SELECT unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS word
+          SELECT unnest({words_sql('text')}) AS word
           FROM documents) t
         GROUP BY word) wf
     )"""
@@ -3535,7 +3532,7 @@ def _dsir_oracle(n_buckets: int = 1024) -> str:
     return f"""
     WITH ws AS (
       SELECT doc_id, (lang = 'en') AS is_target,
-             regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+') AS ws
+             {words_sql('text')} AS ws
       FROM documents
     ),
     bgr AS (
@@ -3720,10 +3717,10 @@ def ext_knn_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_data_card",
-    r"""
+    rf"""
     WITH tokd AS (
       SELECT doc_id, source, lang,
-             md5(trim(regexp_replace(regexp_replace(translate(lower(text), 'ς̇', 'σ'),
+             md5(trim(regexp_replace(regexp_replace({fold_lower_sql('text')},
                  '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS h,
              len(list_filter(string_split_regex(text, '\s+'), t -> t <> ''))
                AS n_toks
@@ -4004,9 +4001,9 @@ def ext_remove_dominant_direction(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "ext_hard_negatives",
-    r"""
+    rf"""
     WITH tk AS (
-      SELECT doc_id, unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS tok
+      SELECT doc_id, unnest({words_sql('text')}) AS tok
       FROM documents
     ),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM tk GROUP BY doc_id),
@@ -4340,10 +4337,10 @@ def ext_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_vocab_coverage",
-    r"""
+    rf"""
     WITH cnt AS (
       SELECT w, COUNT(*) AS c FROM (
-        SELECT unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS w
+        SELECT unnest({words_sql('text')}) AS w
         FROM documents) u
       GROUP BY w
     ),
@@ -4745,7 +4742,7 @@ def _rbo_oracle(k: int = 10, p: float = 0.9) -> str:
     vals = ", ".join(f"({d}, {p ** (d - 1)!r}::DOUBLE)" for d in range(1, k + 1))
     return f"""
     WITH tk AS (
-      SELECT doc_id, unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS tok
+      SELECT doc_id, unnest({words_sql('text')}) AS tok
       FROM documents
     ),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM tk GROUP BY doc_id),
@@ -5142,9 +5139,9 @@ def ext_ndcg_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_top_tokens_per_lang",
-    r"""
+    rf"""
     WITH tk AS (
-      SELECT lang, unnest(regexp_extract_all(translate(lower(text), 'ς̇', 'σ'), '[a-z]+')) AS tok
+      SELECT lang, unnest({words_sql('text')}) AS tok
       FROM documents
     ),
     cnt AS (
@@ -5290,12 +5287,12 @@ def ext_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     + _SH
     + ","
     + _JACCARD_TAIL
-    + r""",
+    + rf""",
     prs AS (SELECT id_a, id_b FROM jac WHERE jaccard >= 0.5),
     nrm AS (
       SELECT doc_id,
              trim(regexp_replace(regexp_replace(
-               translate(lower(text), 'ς̇', 'σ'),
+               {fold_lower_sql('text')},
                '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS nt
       FROM documents
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions import dedup
+from dbt_glue_spark.functions.text import fold_lower_sql
 from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.plans.extension_queries import _MINHASH_SIG_COLS, _minhash_bands
@@ -328,10 +329,10 @@ def ext_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_sorted_neighborhood",
-    r"""
+    rf"""
     WITH base AS (
       SELECT doc_id AS id, coalesce(lang, '') AS g,
-             coalesce(trim(regexp_replace(regexp_replace(translate(lower(text), 'ς̇', 'σ'),
+             coalesce(trim(regexp_replace(regexp_replace({fold_lower_sql('text')},
                  '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), '') AS s
       FROM documents
     ),

@@ -259,55 +259,37 @@ def merge_stream_sink(
     unique_key: list[str],
     dedup_source_on: str | None = None,
 ):
-    """Streaming upsert: foreachBatch → merge_upsert into a parquet target.
+    """Streaming upsert: each micro-batch is folded into a parquet
+    ledger (:func:`_ledger_sink`) with ``merge_upsert`` semantics.
 
     The streaming twin of the engine's incremental/merge strategy: each
     micro-batch merges into the target with latest-wins semantics
-    (``dedup_source_on`` = precombine column for intra-batch duplicates).
-    On Delta/Iceberg the body becomes a native ``MERGE INTO``; on plain
-    parquet each batch rewrites the (compacted) target — correct, and the
-    size trade-off is the same one documented in SCALE.md §incremental.
+    (``dedup_source_on`` = precombine column, compared against the
+    target's value too, so an out-of-order batch cannot clobber a newer
+    target row — Hudi's upsert path). On Delta/Iceberg the body becomes
+    a native ``MERGE INTO``; on plain parquet each batch commits the
+    merged target as a new ledger version (``data/g…b…``, read back with
+    :func:`read_ledger`) — the version being read is never the one being
+    written, so a failed write leaves the previous state intact. Upsert
+    is a set merge like KMV: re-delivered history converges to the same
+    state, so a new checkpoint keeps the ledger
+    (``reset_on_takeover=False``).
     """
-    import os
+    from pyspark.sql import Window as W
 
     from dbt_glue_spark.operators.merge import merge_upsert
 
-    def latest_wins(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window as W
-
+    def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
+        if dedup_source_on is None:
+            return batch_df if cur is None else merge_upsert(cur, batch_df, unique_key)
+        both = batch_df if cur is None else cur.unionByName(batch_df)
         rn = F.row_number().over(
             W.partitionBy(*unique_key).orderBy(F.desc(dedup_source_on))
         )
-        return df.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn")
+        return both.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn")
 
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        data_dir = os.path.join(target_path, "data")
-        if batch_df.isEmpty():
-            return
-        # existence is the dir, not a successful read: a target that
-        # exists but fails to read (corrupt footer, permissions) must fail
-        # the batch, never be overwritten as if this were the first batch
-        exists = os.path.isdir(data_dir)
-        target = spark.read.parquet(data_dir) if exists else None
-        if dedup_source_on is not None:
-            # precombine semantics compare against the TARGET's value too
-            # (an out-of-order batch must not clobber a newer target row):
-            # union + keep-latest per key, like Hudi's upsert path.
-            merged = latest_wins(
-                target.unionByName(batch_df) if exists else batch_df
-            )
-        elif exists:
-            merged = merge_upsert(target, batch_df, unique_key)
-        else:
-            merged = batch_df
-        staged = merged.localCheckpoint(eager=True)  # don't read+overwrite same files
-        staged.write.mode("overwrite").parquet(data_dir)
-
-    return (
-        source_stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledger_sink(
+        source_stream, spark, target_path, checkpoint, fold, reset_on_takeover=False
     )
 
 
@@ -315,23 +297,22 @@ def incremental_stream_sink(
     events_stream: DataFrame,
     path: str,
     checkpoint: str,
-    partition_hours: bool = True,
 ):
     """Streaming incremental-append materialization: the streaming twin of
-    the engine's incremental/append strategy. Returns the (started)
-    StreamingQuery; ``availableNow`` processes the full backlog then stops,
-    which is exactly a driver-triggered incremental batch run."""
-    out = events_stream
-    if partition_hours:
-        out = out.withColumn("event_hour", F.date_trunc("hour", "ts"))
-    writer = (
-        out.writeStream.format("parquet")
+    the engine's incremental/append strategy. Each row gains an
+    ``event_hour`` column (``date_trunc('hour', ts)``); the parquet files
+    are not partitioned by it. Returns the (started) StreamingQuery;
+    ``availableNow`` processes the full backlog then stops, which is
+    exactly a driver-triggered incremental batch run."""
+    return (
+        events_stream.withColumn("event_hour", F.date_trunc("hour", "ts"))
+        .writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
         .trigger(availableNow=True)
+        .start()
     )
-    return writer.start()
 
 
 def click_purchase_join_stream(
@@ -781,7 +762,7 @@ def _ledger_commit(df: DataFrame, target_path: str, gen: int, batch_id: int) -> 
 
 
 def read_ledger(spark, target_path: str) -> DataFrame:
-    """Read the newest committed ledger version of a sketch stream sink."""
+    """Read the newest committed ledger version of a ledger sink."""
     path, _gen, _bid = _ledger_latest(target_path)
     if path is None:
         raise FileNotFoundError(f"no committed ledger under {target_path}/data")
@@ -972,7 +953,9 @@ def _ledger_sink(
     fold,
     reset_on_takeover: bool,
 ):
-    """The foreachBatch driver every ledger sink shares.
+    """The foreachBatch driver every ledger sink shares — the one
+    ``foreachBatch`` in this module: the sketch sinks and the streaming
+    upsert (:func:`merge_stream_sink`) each supply only a ``fold``.
 
     Per micro-batch: an empty batch commits nothing; otherwise the
     checkpoint's query id (:func:`_checkpoint_id`) and

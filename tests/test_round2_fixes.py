@@ -342,6 +342,26 @@ def test_unit_test_runs_model_on_mocked_inputs(engine):
     assert bad["actual"] == [("a", 1)] and bad["expected"] == [("a", 2)]
 
 
+def test_unit_test_inlines_ephemeral_deps(engine):
+    """A unit test compiles the model like ``compile()`` does: an
+    unmocked ephemeral dep is inlined, and mocks apply inside it."""
+    engine.add(Model("ut_raw", sql="select 1 as id"))  # never built
+    engine.add(
+        Model(
+            "ut_eph",
+            sql="select id from {{ ref('ut_raw') }} where id > 1",
+            config=ModelConfig(materialized="ephemeral"),
+        )
+    )
+    engine.add(Model("ut_top", sql="select id from {{ ref('ut_eph') }}"))
+    res = engine.unit_test(
+        "ut_top",
+        given={"ut_raw": ([(1,), (2,), (3,)], "id int")},
+        expect=([(2,), (3,)], "id int"),
+    )
+    assert res["passed"], res
+
+
 def test_run_select_by_tag(engine):
     engine.add(Model("tagged_a", sql="select 1 as x", tags=["nightly"]))
     engine.add(

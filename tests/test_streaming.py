@@ -91,11 +91,12 @@ def test_incremental_stream_sink(spark, events_stream_source):
 
 
 def test_merge_stream_sink_latest_wins(spark, events_stream_source):
-    """Streaming upsert keyed on user_id with ts as precombine: final
-    target must hold exactly the latest event per user (batch-verifiable)."""
+    """Streaming upsert keyed on user_id with ts as precombine: the
+    newest ledger version must hold exactly the latest event per user
+    (batch-verifiable)."""
     import tempfile
 
-    from dbt_glue_spark.streaming.pipelines import merge_stream_sink
+    from dbt_glue_spark.streaming.pipelines import merge_stream_sink, read_ledger
 
     events, stream = events_stream_source
     target = tempfile.mkdtemp(prefix="dgs_merge_sink_")
@@ -110,7 +111,7 @@ def test_merge_stream_sink_latest_wins(spark, events_stream_source):
             dedup_source_on="ts",
         )
         q.awaitTermination(180)
-        out = spark.read.parquet(os.path.join(target, "data"))
+        out = read_ledger(spark, target)
         # one row per user
         assert out.count() == events.select("user_id").distinct().count()
         # every row's ts equals the max event ts of that user
@@ -125,27 +126,94 @@ def test_merge_stream_sink_latest_wins(spark, events_stream_source):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def _committed_versions(target: str) -> list[str]:
+    from dbt_glue_spark.streaming.pipelines import _parse_version
+
+    return sorted(
+        n for n in os.listdir(os.path.join(target, "data")) if _parse_version(n)
+    )
+
+
 def test_merge_stream_sink_fails_on_unreadable_target(spark, tmp_path):
-    """A target that exists but cannot be read fails the batch: it is
-    never taken for "no target yet" and overwritten by one micro-batch."""
+    """A committed version that cannot be read fails the next batch: it
+    is never taken for "no target yet", and no new version is committed
+    over it."""
     from pyspark.errors import StreamingQueryException
 
     from dbt_glue_spark.streaming.pipelines import merge_stream_sink
 
-    src = tmp_path / "src"
-    spark.createDataFrame([(1, 10), (2, 20)], "k long, v long").write.parquet(str(src))
-    data_dir = tmp_path / "target" / "data"
-    data_dir.mkdir(parents=True)
-    corrupt = data_dir / "part-00000.parquet"
-    corrupt.write_bytes(b"PAR1 not a parquet footer")
-    stream = spark.readStream.schema("k long, v long").parquet(str(src))
-    q = merge_stream_sink(
-        stream, spark, str(tmp_path / "target"), str(tmp_path / "ckpt"), unique_key=["k"]
-    )
+    src, target = str(tmp_path / "src"), str(tmp_path / "target")
+    schema = "k long, v long"
+
+    def run(rows):
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
+        stream = spark.readStream.schema(schema).parquet(src)
+        return merge_stream_sink(
+            stream, spark, target, str(tmp_path / "ckpt"), unique_key=["k"]
+        )
+
+    run([(1, 10), (2, 20)]).awaitTermination(120)
+    (version,) = _committed_versions(target)
+    vdir = os.path.join(target, "data", version)
+    for name in os.listdir(vdir):
+        if name.endswith(".parquet"):
+            with open(os.path.join(vdir, name), "wb") as fh:
+                fh.write(b"PAR1 not a parquet footer")
     with pytest.raises(StreamingQueryException):
-        q.awaitTermination(120)
-    assert corrupt.read_bytes() == b"PAR1 not a parquet footer"
-    assert os.listdir(data_dir) == ["part-00000.parquet"]
+        run([(3, 30)]).awaitTermination(120)
+    assert _committed_versions(target) == [version]
+
+
+def test_merge_stream_sink_keeps_history_when_a_write_fails(spark, tmp_path, monkeypatch):
+    """A failed target write must not lose what earlier batches merged.
+
+    The failing write does what a failed Spark overwrite does: its
+    output path is deleted before the job runs, then the job raises. The
+    retried batch and a later one must merge INTO the earlier state,
+    never restart the target from the batch alone."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from dbt_glue_spark.streaming.pipelines import merge_stream_sink, read_ledger
+
+    src, target = str(tmp_path / "src"), str(tmp_path / "target")
+    schema = "k long, v long"
+
+    def stage(rows):
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
+
+    def run():
+        stream = spark.readStream.schema(schema).parquet(src)
+        return merge_stream_sink(
+            stream, spark, target, str(tmp_path / "ckpt"), unique_key=["k"]
+        )
+
+    first = [(k, k) for k in range(5)]
+    stage(first)
+    run().awaitTermination(120)
+
+    real_parquet = DataFrameWriter.parquet
+    failed = []
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if failed:
+            return real_parquet(self, path, *args, **kwargs)
+        failed.append(path)
+        shutil.rmtree(path, ignore_errors=True)
+        raise OSError(f"simulated failed overwrite of {path}")
+
+    stage([(5, 50), (0, 100)])
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(StreamingQueryException):
+        run().awaitTermination(120)
+    assert failed
+    monkeypatch.undo()
+
+    stage([(6, 60)])
+    run().awaitTermination(120)
+    got = {r["k"]: r["v"] for r in read_ledger(spark, target).collect()}
+    assert {k for k, _ in first} <= set(got)
+    assert got == {0: 100, 1: 1, 2: 2, 3: 3, 4: 4, 5: 50, 6: 60}
 
 
 def test_user_activity_tracker_stateful(spark, events_stream_source):
