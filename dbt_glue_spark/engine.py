@@ -45,6 +45,7 @@ from dbt_glue_spark.operators.governance import scan_versions
 from dbt_glue_spark.operators.merge import merge_upsert
 from dbt_glue_spark.operators.schema_evolution import evolve
 from dbt_glue_spark.relations import Relation, quote
+from dbt_glue_spark.session import local_frame
 
 TRANSACTIONAL_FORMATS = {"delta", "iceberg", "hudi"}
 #: formats the reference accepts (validate.sql:4)
@@ -1336,26 +1337,13 @@ def _count_rows(frames: list[DataFrame]) -> list[int]:
     return [counts.get(i, 0) for i in range(len(frames))]
 
 
-#: typed all-NULL row closing the report's VALUES list (cut off by its LIMIT)
-_REPORT_NULL_ROW = (
-    "(CAST(NULL AS STRING), CAST(NULL AS STRING), CAST(NULL AS STRING), "
-    "CAST(NULL AS BIGINT), CAST(NULL AS BOOLEAN))"
-)
-
-
 def _report(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    """``Engine.test``'s report as a local relation, an inline VALUES table
-    with every cell bound as a parameter: collecting or filtering it runs
-    no Spark job, where a ``createDataFrame(list)`` frame is RDD-backed and
-    runs one per action. The typed NULL row, which the LIMIT drops, fixes
-    the schema (model, column, test string, n_failures bigint, passed
-    boolean, all nullable) for any number of rows, zero included."""
-    cells = [f"(:m{i}, :c{i}, :t{i}, :n{i}, :p{i})" for i in range(len(rows))]
-    args = {f"{k}{i}": v for i, row in enumerate(rows) for k, v in zip("mctnp", row)}
-    return spark.sql(
-        f"SELECT * FROM VALUES {', '.join([*cells, _REPORT_NULL_ROW])} "
-        f"AS t(model, `column`, test, n_failures, passed) LIMIT {len(rows)}",
-        args=args,
+    """``Engine.test``'s report as a local relation: collecting or
+    filtering it runs no Spark job, zero rows included."""
+    return local_frame(
+        spark,
+        rows,
+        "model string, `column` string, test string, n_failures bigint, passed boolean",
     )
 
 

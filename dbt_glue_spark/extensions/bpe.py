@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.functions.text import words
+from dbt_glue_spark.session import local_frame
 
 SENT = "\x1e"
 
@@ -90,8 +91,8 @@ def bpe_train(
     lexicographically on (sym_a, sym_b) so training is deterministic on
     any engine/partitioning."""
     merges, _ = _train(df, n_merges, text_col)
-    return df.sparkSession.createDataFrame(
-        merges, "round int, sym_a string, sym_b string, pair_count long"
+    return local_frame(
+        df.sparkSession, merges, "round int, sym_a string, sym_b string, pair_count long"
     )
 
 

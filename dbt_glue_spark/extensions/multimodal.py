@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from dbt_glue_spark.session import local_frame
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -497,7 +499,7 @@ def synth_media_table(spark, n: int = 64) -> DataFrame:
             (i, kind, content, ("image/png", "audio/wav", "video/x-pngv")[i % 3],
              w, h, 1000 * (1 + i % 10))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def extract_features(df: DataFrame, batch_size_hint: int = 256) -> DataFrame:

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from dbt_glue_spark.functions.scalars import half_up_round
 from dbt_glue_spark.functions.text import tokenize_once, tokens, words
+from dbt_glue_spark.session import local_frame
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deliberately small + deterministic; the oracle SQL embeds the
@@ -964,7 +965,7 @@ def vocab_coverage(
         F.row_number().over(w_rank).alias("rk"),
         F.sum("c").over(w_cum).alias("cum"),
     )
-    ks_df = ranked.sparkSession.createDataFrame([(k,) for k in ks], "k int")
+    ks_df = local_frame(ranked.sparkSession, [(k,) for k in ks], "k int")
     # per k: cumulative count at rank min(k, n_vocab)
     at_k = (
         ks_df.join(F.broadcast(totals))

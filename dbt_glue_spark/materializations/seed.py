@@ -10,6 +10,9 @@ process, chunking disappears; we reproduce the *type mapping* exactly
     Date → date, DateTime → timestamp
 
 plus ``column_types`` overrides applied as ``cast(col as T) as col``.
+The rows are already on the driver, so the seed is a local relation
+(``session.local_frame``): building and reading it starts no Python worker,
+and a naive DateTime is the CSV's wall clock in the session time zone.
 """
 
 from __future__ import annotations
@@ -30,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from dbt_glue_spark.session import local_frame
 
 _DATE_FMTS = ("%Y-%m-%d",)
 _TS_FMTS = ("%Y-%m-%d %H:%M:%S", "%Y-%m-%dT%H:%M:%S", "%Y-%m-%d %H:%M:%S.%f")
@@ -81,7 +86,7 @@ def infer_seed_df(
         fields.append(StructField(name, t, True))
         converters.append(conv)
     typed = [tuple(conv(r[i]) for i, conv in enumerate(converters)) for r in data]
-    df = spark.createDataFrame(typed, StructType(fields))
+    df = local_frame(spark, typed, StructType(fields))
     if column_types:
         # cast-back step, mirroring impl.py:679-690
         df = df.select(

@@ -26,6 +26,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from dbt_glue_spark.session import local_frame
+
 CATALOG_COLUMNS = [
     "table_database",
     "table_schema",
@@ -68,7 +70,7 @@ def catalog_info(spark: SparkSession, schemas: list[str]) -> DataFrame:
                     )
                 )
     schema_t = StructType([StructField(c, StringType(), True) for c in CATALOG_COLUMNS])
-    return spark.createDataFrame(rows, schema_t)
+    return local_frame(spark, rows, schema_t)
 
 
 def create_secured_view(

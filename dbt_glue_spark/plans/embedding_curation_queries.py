@@ -78,6 +78,7 @@ from dbt_glue_spark.plans.extension_queries import (
     _bucket_sql,
     _cos_sql,
 )
+from dbt_glue_spark.session import local_frame
 from dbt_glue_spark.sources.registry import load_table
 
 
@@ -781,9 +782,7 @@ def ext_ivf_cell_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty corpus → empty codebook; an empty F.array() literal is
         # VOID-typed and would break ivf_assign's explode (the knn_ivf
         # guard, mirrored)
-        return spark.createDataFrame(
-            [], "cell int, n_vectors bigint, share_ppm bigint"
-        )
+        return local_frame(spark, [], "cell int, n_vectors bigint, share_ppm bigint")
     cells = similarity.ivf_assign(nonnull, centroids, "embedding", "vec_id")
     census = cells.groupBy("cell").agg(
         F.count("*").cast("bigint").alias("n_vectors")

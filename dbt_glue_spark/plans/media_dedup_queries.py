@@ -79,6 +79,7 @@ from pyspark.sql import functions as F
 from dbt_glue_spark.extensions.multimodal import png_encode, video_encode
 from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
+from dbt_glue_spark.session import local_frame
 from dbt_glue_spark.sources.registry import load_table
 
 
@@ -610,7 +611,8 @@ def ext_audio_snippet_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_glue_spark.extensions.multimodal_dedup import audio_snippet_match
 
     corpus = _synth_media(spark, sf_dir, "audio", subset_mod=32, subset_val=2)
-    queries = spark.createDataFrame(
+    queries = local_frame(
+        spark,
         [(1000000 + g, "audio", synth_audio_snippet_bytes(g)) for g in range(6)],
         "media_id long, kind string, content binary",
     )

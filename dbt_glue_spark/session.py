@@ -23,7 +23,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Defaults tuned for the local[32] test harness; on a real cluster the same
 # settings scale: shuffle.partitions is a floor that AQE coalesces down from,
@@ -64,6 +65,14 @@ _DEFAULT_CONF: dict[str, str] = {
     # side fits (canBuildLocalHashMap), and AQE skew-join splitting
     # covers shuffled-hash joins as well as sort-merge since Spark 3.2.
     "spark.sql.join.preferSortMergeJoin": "false",
+    # Hold one pass's generated classes in Spark's codegen cache (static
+    # conf: one value per JVM, read at the first codegen). With Spark's
+    # default of 100, a pass that compiles more classes than that evicts
+    # and recompiles the last pass's. Measured on 4 CPUs, sf0.001: running
+    # ext_minhash_lsh_pairs and ext_prefix_jaccard_join (~113 classes)
+    # twice in one JVM recompiles 83 classes on the repeat at 100 and
+    # 0-4 at 1000 (tests/test_session_deps.py pins it).
+    "spark.sql.codegen.cache.maxEntries": "1000",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.parquet.filterPushdown": "true",
@@ -206,3 +215,26 @@ def add_py_files(spark: SparkSession, paths: list[str]) -> None:
     Files become importable inside UDFs/mapInPandas on every executor."""
     for p in paths:
         spark.sparkContext.addPyFile(p)
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """A frame over rows the driver already holds, as a ``LocalRelation``:
+    the rows travel to the JVM once as an Arrow table, and collecting,
+    filtering or joining the frame starts no Python worker. A frame made
+    from a Python list is a PythonRDD instead, so its first action on a
+    fresh SparkContext starts the PySpark worker daemon.
+
+    ``schema`` is a ``StructType`` or a DDL string. A naive ``datetime``
+    in a timestamp column is a wall clock in the session time zone, as
+    Spark reads one anywhere else; the Python process's ``TZ`` plays no
+    part."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema, timestamp_utc=False)
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)

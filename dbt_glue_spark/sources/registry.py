@@ -34,11 +34,14 @@ TABLES = (
 )
 
 
-_NANO_TS_COLS: dict[str, list[str]] = {}
+#: path -> ((mtime_ns, size) the footer was read at, nanos columns)
+_NANO_TS_COLS: dict[str, tuple[tuple[int, int], list[str]]] = {}
 
 
 def _nano_ts_columns(path: str) -> list[str]:
-    """Columns stored as parquet timestamp[ns] (footer-only read, cached).
+    """Columns stored as parquet timestamp[ns] (footer-only read, cached
+    per path until the path's mtime or size changes, so a table rewritten
+    with other column types is read afresh).
 
     Spark's vectorized reader rejects TIMESTAMP(NANOS) outright
     (PARQUET_TYPE_ILLEGAL); with ``spark.sql.legacy.parquet.nanosAsLong``
@@ -46,7 +49,10 @@ def _nano_ts_columns(path: str) -> list[str]:
     proper timestamp. ns→µs truncation matches DuckDB's TIMESTAMP_NS →
     TIMESTAMP cast, so oracle values agree exactly.
     """
-    if path not in _NANO_TS_COLS:
+    st = os.stat(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    cached = _NANO_TS_COLS.get(path)
+    if cached is None or cached[0] != stamp:
         if os.path.isdir(path):
             # directory-style table (standard Spark writer layout):
             # pq.read_schema only accepts a single file, so resolve the
@@ -56,10 +62,11 @@ def _nano_ts_columns(path: str) -> list[str]:
             schema = ds.dataset(path, format="parquet").schema
         else:
             schema = pq.read_schema(path)
-        _NANO_TS_COLS[path] = [
-            f.name for f in schema if str(f.type) == "timestamp[ns]"
-        ]
-    return _NANO_TS_COLS[path]
+        cached = _NANO_TS_COLS[path] = (
+            stamp,
+            [f.name for f in schema if str(f.type) == "timestamp[ns]"],
+        )
+    return cached[1]
 
 
 def normalize_timestamps(df: DataFrame) -> DataFrame:

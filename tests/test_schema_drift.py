@@ -146,3 +146,24 @@ def test_nanosecond_timestamp_with_dashed_name_loads(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "ticks")
     assert df.schema["event-ts"].dataType.simpleString() == "timestamp"
     assert df.collect()[0]["event-ts"] == ts
+
+
+def test_table_rewritten_with_nanosecond_timestamps_is_reread(spark, tmp_path):
+    """The footer memo belongs to one version of a file: a path rewritten
+    with ``t`` as timestamp[ns] where it was int64 loads ``t`` as
+    TIMESTAMP, not as the raw nanoseconds the first footer implied."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "ticks.parquet")
+    pq.write_table(pa.table({"t": pa.array([7], pa.int64())}), path)
+    assert load_table(spark, str(tmp_path), "ticks").schema["t"].dataType.simpleString() == (
+        "bigint"
+    )
+    ts = datetime.datetime(2024, 3, 1, 12, 30, 15, 123456)
+    pq.write_table(pa.table({"t": pa.array([ts], pa.timestamp("ns"))}), path)
+    df = load_table(spark, str(tmp_path), "ticks")
+    assert df.schema["t"].dataType.simpleString() == "timestamp"
+    assert df.collect()[0]["t"] == ts

@@ -90,3 +90,27 @@ def test_only_session_reads_the_environment():
             ):
                 offenders.append(f"{os.path.relpath(path, pkg)}:{node.lineno}")
     assert not offenders
+
+
+def test_codegen_cache_holds_a_pass_of_two_queries(spark, sf_dir):
+    """Two catalog queries that together compile more classes than Spark's
+    default codegen cache holds (100) are run twice; the repeat finds its
+    classes in the cache. AQE can re-plan a stage differently on a repeat,
+    which generates a class never seen before (0-4 per repeat measured),
+    so the repeat is bounded by a handful, against ~80 recompiles with
+    the default cache."""
+    from dbt_glue_spark.extensions import dedup
+    from dbt_glue_spark.plans.catalog import QUERIES
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    queries = QUERIES()
+
+    def one_round() -> int:
+        before = compiles.getCount()
+        for name in ("ext_minhash_lsh_pairs", "ext_prefix_jaccard_join"):
+            queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            dedup.release_caches()
+        return compiles.getCount() - before
+
+    one_round()
+    assert one_round() <= 8

@@ -45,7 +45,7 @@ import sys
 import tempfile
 import time
 import wave
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 from functools import partial
 from types import SimpleNamespace
@@ -102,6 +102,16 @@ def _force(df: DataFrame) -> int:
     return obs.get["n"]
 
 
+def warm(frames: Iterable[DataFrame]) -> None:
+    """Force every frame once, untimed, then free the dedup caches: each
+    plan compiles its own WholeStageCodegen, so the first timed run of a
+    frame that was not warmed pays its compile and JVM warm-up time. Pass
+    a generator so each frame is built just before it is forced."""
+    for df in frames:
+        _force(df)
+    dedup.release_caches()
+
+
 def run(spark, sf_dir: str, factors: list[int], family: Family) -> tuple[dict, dict, dict]:
     """Warm every case, then time every case at every factor. Returns
     (seconds, input rows, output rows), keyed by case and factor."""
@@ -110,10 +120,8 @@ def run(spark, sf_dir: str, factors: list[int], family: Family) -> tuple[dict, d
     out_rows: dict[str, dict[str, int]] = {}
     rows: dict[str, int] = {}
     try:
-        warm, _ = family.build(spark, sf_dir, WARM, scratch)
-        for _name, case in family.cases:
-            _force(case(warm))
-        dedup.release_caches()
+        small, _ = family.build(spark, sf_dir, WARM, scratch)
+        warm(case(small) for _name, case in family.cases)
         for f_ in factors:
             inputs, rows[str(f_)] = family.build(spark, sf_dir, f_, scratch)
             for name, case in family.cases:

@@ -42,7 +42,7 @@ sys.path.insert(0, os.path.dirname(_TOOLS))
 sys.path.insert(0, _TOOLS)
 
 from gen_pathological import mutate_dupheavy, mutate_hot, mutate_textskew  # noqa: E402
-from scale_probe import _force  # noqa: E402
+from scale_probe import _force, warm  # noqa: E402
 
 from dbt_glue_spark.plans.catalog import SPECS  # noqa: E402
 from dbt_glue_spark.session import get_spark  # noqa: E402
@@ -169,13 +169,7 @@ def main(argv: list[str]) -> None:
 
         specs = SPECS()
         results: dict[str, dict] = {}
-        # warm up EVERY probed query's codegen on both directories —
-        # each plan compiles its own WholeStageCodegen, so warming only
-        # one query would leave the others' first rep paying compile
-        # time (visible at --reps=1 on sub-second queries)
-        for name in probed:
-            _force(specs[name].fn(spark, sf_dir))
-            _force(specs[name].fn(spark, hot_dir))
+        warm(specs[name].fn(spark, d) for name in probed for d in (sf_dir, hot_dir))
         for name in probed:
             secs = {}
             for label, d in (("clean", sf_dir), ("hot", hot_dir)):
