@@ -13,11 +13,15 @@ driver. The per-round dataflow is
            with array_sort (one shuffle of |N|·d narrow rows)
 
 All arithmetic is double with sequential array folds and decimal dimension
-sums, so results are bit-reproducible run-to-run and layout-independent —
-but k-means is NOT SQL-expressible in one query (arbitrary-depth
-iteration), so the catalog entry is a rows-only check; correctness is
-asserted by unit tests (blob separation, monotone inertia) instead of a
-DuckDB oracle.
+sums, so results are bit-reproducible run-to-run and layout-independent;
+that is what lets the ``ext_kmeans_embeddings`` oracle (``_KMEANS_CTE``,
+a recursive CTE) replay all 6 Lloyd rounds to exact equality.
+
+This module is the one Lloyd's k-means: :func:`lloyd_centroids` trains
+the checkpointed centroid frame, :func:`nearest_centroid` buckets vectors
+into it, and :func:`cluster_edges` is the within-cluster cosine edge. The
+IVF codebook of ``similarity.knn_ivf`` and the semantic-dedup family
+below all run on them.
 """
 
 from __future__ import annotations
@@ -35,33 +39,58 @@ def _sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def kmeans_assign(
-    df: DataFrame,
-    k: int = 10,
-    max_iter: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd's k-means; returns (id, cluster_id, sq_dist).
+def id_vectors(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """The ``(id, v)`` frame every k-means entry point consumes: NULL
+    vectors excluded (no geometry; oracle twins filter ``embedding IS NOT
+    NULL``), the vector cast to ``array<double>``."""
+    return df.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    )
+
+
+def centroid_scores(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """Every (vector, centroid) pair of ``vecs ⋈ broadcast(cents)`` (k
+    rows — map-side, no shuffle) with ``s = struct(d2, cid)``: ordering
+    on ``s`` is the squared-L2 distance with ties broken on the LOWER
+    centroid id, the one ranking both the nearest-centroid step and the
+    IVF probe use."""
+    return vecs.join(F.broadcast(cents)).select(
+        *vecs.columns,
+        F.struct(_sqdist(F.col("v"), F.col("c")).alias("d2"), F.col("cid").alias("cid")).alias("s"),
+    )
+
+
+def nearest_centroid(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """Bucket ``vecs`` (``id``, ``v`` and any other columns, carried
+    through) into their nearest centroid by struct-min over
+    :func:`centroid_scores` — deterministic tie-break on the lower
+    centroid id. Returns ``(id, v, ..., cluster_id, sq_dist)``."""
+    rest = [c for c in vecs.columns if c != "id"]
+    return (
+        centroid_scores(vecs, cents)
+        .groupBy("id")
+        .agg(F.min("s").alias("best"), *[F.first(c).alias(c) for c in rest])
+        .select(
+            "id", *rest,
+            F.col("best.cid").alias("cluster_id"),
+            F.col("best.d2").alias("sq_dist"),
+        )
+    )
+
+
+def lloyd_centroids(vecs: DataFrame, k: int, max_iter: int) -> DataFrame:
+    """Lloyd's k-means training over an ``(id, v, ...)`` frame; returns
+    the checkpointed ``(cid, c)`` centroid frame after ``max_iter``
+    rounds.
 
     Deterministic throughout: init takes the ``k`` lowest-id vectors as
     seed centroids (no RNG); assignment breaks distance ties on the lower
     centroid id; centroid means go through decimal so shuffle order can't
     perturb them. A cluster that loses all members drops out (k shrinks)
     rather than being re-seeded, keeping the algorithm a pure function of
-    its input.
-
-    100 TB plan: centroids are k rows — every assign round is a broadcast
-    nested-loop over k, i.e. map-side linear scan; the only shuffle per
-    round is the (cluster, dim) mean, whose output is k·d rows. Rounds are
-    O(max_iter) scans — exactly Spark MLlib's dataflow, minus RNG.
-
-    NULL vectors are excluded (no geometry; oracle twins filter
-    ``embedding IS NOT NULL``).
+    its input. An empty input trains an empty (still typed) frame.
     """
-    vecs = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    vecs = vecs.select("id", "v")
     # global window is intentional: numbering runs over the k-row seed
     # frame (already limited), never the corpus
     w = Window.orderBy("id")
@@ -71,23 +100,10 @@ def kmeans_assign(
         .select((F.row_number().over(w) - 1).alias("cid"), F.col("v").alias("c"))
         .localCheckpoint()
     )
-
-    def assign(cents: DataFrame) -> DataFrame:
-        scored = vecs.join(F.broadcast(cents)).select(
-            "id", "v", F.struct(_sqdist(F.col("v"), F.col("c")).alias("d2"), F.col("cid").alias("cid")).alias("s")
-        )
-        return scored.groupBy("id").agg(
-            F.min("s").alias("best"), F.first("v").alias("v")
-        ).select(
-            "id", "v",
-            F.col("best.cid").alias("cluster_id"),
-            F.col("best.d2").alias("sq_dist"),
-        )
-
     for _ in range(max_iter):
-        assigned = assign(centroids)
         centroids = (
-            assigned.select(F.col("cluster_id").alias("cid"), F.posexplode("v").alias("pos", "x"))
+            nearest_centroid(vecs, centroids)
+            .select(F.col("cluster_id").alias("cid"), F.posexplode("v").alias("pos", "x"))
             .groupBy("cid", "pos")
             .agg(
                 (F.sum(F.col("x").cast("decimal(28,12)")) / F.count("*"))
@@ -99,7 +115,61 @@ def kmeans_assign(
             .select("cid", F.transform("pm", lambda s: s.m).alias("c"))
             .localCheckpoint()
         )
-    return assign(centroids).select(
+    return centroids
+
+
+def kmeans_buckets(vecs: DataFrame, k: int, max_iter: int) -> DataFrame:
+    """Train :func:`lloyd_centroids` and bucket ``vecs`` against them:
+    ``(id, v, ..., cluster_id, sq_dist)`` — the vectors ride the
+    assignment, so no consumer joins them back in."""
+    return nearest_centroid(vecs, lloyd_centroids(vecs, k, max_iter))
+
+
+def cluster_edges(
+    a: DataFrame, b: DataFrame, threshold: float, cond: Column | None = None
+) -> DataFrame:
+    """The within-cluster edge: ``a ⋈ b`` (aliased ``a``/``b``) on
+    ``cluster_id`` and ``cond``, kept where the cosine of ``a.v`` and
+    ``b.v``, rounded 4 dp half-up (the catalog float rule, so an ULP can
+    never flip an edge), is ≥ ``threshold``; adds that cosine as ``sim``.
+
+    100 TB shape: the equi-join on cluster_id bounds candidate volume at
+    Σ n_c² (size ``k`` so clusters fit a shuffle partition), never
+    corpus².
+    """
+    from dbt_glue_spark.functions.scalars import half_up_round
+    from dbt_glue_spark.functions.vectors import cosine_sim
+
+    on = F.col("a.cluster_id") == F.col("b.cluster_id")
+    if cond is not None:
+        on = on & cond
+    return (
+        a.alias("a")
+        .join(b.alias("b"), on)
+        .withColumn("sim", half_up_round(cosine_sim(F.col("a.v"), F.col("b.v")), 4))
+        .filter(F.col("sim") >= F.lit(threshold))
+    )
+
+
+def kmeans_assign(
+    df: DataFrame,
+    k: int = 10,
+    max_iter: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Lloyd's k-means (:func:`kmeans_buckets`); returns (id, cluster_id,
+    sq_dist).
+
+    100 TB plan: centroids are k rows — every assign round is a broadcast
+    nested-loop over k, i.e. map-side linear scan; the only shuffle per
+    round is the (cluster, dim) mean, whose output is k·d rows. Rounds are
+    O(max_iter) scans — exactly Spark MLlib's dataflow, minus RNG.
+
+    NULL vectors are excluded (no geometry; oracle twins filter
+    ``embedding IS NOT NULL``).
+    """
+    return kmeans_buckets(id_vectors(df, id_col, vec_col), k, max_iter).select(
         F.col("id").alias(id_col), "cluster_id", "sq_dist"
     )
 
@@ -134,28 +204,11 @@ def semantic_dedup(
     embedding space.
     """
     from dbt_glue_spark.functions.scalars import half_up_round
-    from dbt_glue_spark.functions.vectors import cosine_sim
 
-    assigned = kmeans_assign(df, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col)
-    vecs = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
     m = (
-        assigned.select(
-            F.col(id_col).alias("id"),
-            "cluster_id",
-            half_up_round(F.col("sq_dist"), 6).alias("d2"),
-        )
-        .join(vecs, "id")
+        kmeans_buckets(id_vectors(df, id_col, vec_col), k, max_iter)
+        .select("id", "cluster_id", half_up_round(F.col("sq_dist"), 6).alias("d2"), "v")
         .localCheckpoint()  # cut the 6-round lineage before the self-join
-    )
-    a, b = m.alias("a"), m.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.cluster_id") == F.col("b.cluster_id"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).withColumn(
-        "sim", half_up_round(cosine_sim(F.col("a.v"), F.col("b.v")), 4)
     )
     victim = (
         F.when(F.col("a.d2") > F.col("b.d2"), F.col("a.id"))
@@ -163,7 +216,7 @@ def semantic_dedup(
         .otherwise(F.greatest(F.col("a.id"), F.col("b.id")))
     )
     dropped = (
-        pairs.filter(F.col("sim") >= F.lit(threshold))
+        cluster_edges(m, m, threshold, F.col("a.id") < F.col("b.id"))
         .select(victim.alias("id"))
         .distinct()
     )
@@ -190,40 +243,17 @@ def within_cluster_pairs(
     reused by every downstream consumer), ``pairs`` is
     ``(id_a, id_b)`` with ``id_a < id_b``.
 
-    Single source of truth for the candidate construction shared by
-    :func:`semantic_keep_best`, the staged recall/class-card specs, and
-    the weak-scaling probe — a change to the rounding rule, threshold
-    semantics, or checkpoint discipline lands in one place.
-
-    100 TB shape: the equi-join on cluster_id bounds candidate volume
-    at Σ n_c² (size ``k`` so clusters fit a shuffle partition), never
-    corpus².
+    Shared by :func:`semantic_keep_best`, the staged recall/class-card
+    specs, and the weak-scaling probe; the edge itself is
+    :func:`cluster_edges`.
     """
-    from dbt_glue_spark.functions.scalars import half_up_round
-    from dbt_glue_spark.functions.vectors import cosine_sim
-
-    assigned = kmeans_assign(df, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col)
-    vecs = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
     m = (
-        assigned.select(F.col(id_col).alias("id"), "cluster_id")
-        .join(vecs, "id")
+        kmeans_buckets(id_vectors(df, id_col, vec_col), k, max_iter)
+        .select("id", "cluster_id", "v")
         .localCheckpoint()
     )
-    a, b = m.alias("a"), m.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.cluster_id") == F.col("b.cluster_id"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .withColumn(
-            "sim", half_up_round(cosine_sim(F.col("a.v"), F.col("b.v")), 4)
-        )
-        .filter(F.col("sim") >= F.lit(threshold))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+    pairs = cluster_edges(m, m, threshold, F.col("a.id") < F.col("b.id")).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
     )
     return m, pairs
 
@@ -256,11 +286,12 @@ def semantic_keep_best(
 
     Composition (every stage an existing discipline):
 
-    1. :func:`kmeans_assign` buckets the space (RNG-free, decimal
+    1. :func:`kmeans_buckets` buckets the space (RNG-free, decimal
        means) — candidate pairs are per-cluster quadratic, never
        corpus-quadratic;
-    2. within-cluster cosine ≥ threshold pairs (4 dp half-up — the
-       catalog float rule, so an ULP can't flip an edge);
+    2. :func:`cluster_edges`: within-cluster cosine ≥ threshold pairs
+       (4 dp half-up — the catalog float rule, so an ULP can't flip an
+       edge);
     3. ``dedup.dup_clusters`` pointer-doubling components over V(E) —
        vectors with no semantic-dup edge stay singletons;
     4. ONE groupBy per class with the argmax riding
@@ -327,45 +358,19 @@ def semantic_contamination(
     cluster's comparisons; output is bounded by the eval set, which is
     benchmark-sized by definition.
     """
-    from dbt_glue_spark.functions.scalars import half_up_round
-    from dbt_glue_spark.functions.vectors import cosine_sim
+    def side(d: DataFrame, is_eval: int) -> DataFrame:
+        return id_vectors(d, id_col, vec_col).withColumn("__is_eval", F.lit(is_eval))
 
-    t = train.select(F.col(id_col), F.col(vec_col)).withColumn(
-        "__is_eval", F.lit(0)
-    )
-    e = eval_df.select(F.col(id_col), F.col(vec_col)).withColumn(
-        "__is_eval", F.lit(1)
-    )
-    union = t.unionByName(e)
-    assigned = kmeans_assign(
-        union, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col
-    )
+    # the eval flag rides the bucketing frame (Lloyd trains on (id, v) only)
     m = (
-        assigned.select(F.col(id_col).alias("id"), "cluster_id")
-        .join(
-            union.filter(F.col(vec_col).isNotNull()).select(
-                F.col(id_col).alias("id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-                "__is_eval",
-            ),
-            "id",
-        )
+        kmeans_buckets(side(train, 0).unionByName(side(eval_df, 1)), k, max_iter)
+        .select("id", "cluster_id", "v", "__is_eval")
         .localCheckpoint()  # cut the Lloyd lineage before the self-join
     )
-    ev = m.filter(F.col("__is_eval") == 1).select(
-        F.col("id").alias("eval_id"), "cluster_id", F.col("v").alias("__ev")
+    hits = cluster_edges(
+        m.filter(F.col("__is_eval") == 1), m.filter(F.col("__is_eval") == 0), threshold
     )
-    tr = m.filter(F.col("__is_eval") == 0).select(
-        "cluster_id", F.col("v").alias("__tv")
-    )
-    hits = (
-        ev.join(tr, "cluster_id")
-        .withColumn(
-            "sim", half_up_round(cosine_sim(F.col("__ev"), F.col("__tv")), 4)
-        )
-        .filter(F.col("sim") >= F.lit(threshold))
-    )
-    return hits.groupBy("eval_id").agg(
+    return hits.groupBy(F.col("a.id").alias("eval_id")).agg(
         F.count("*").cast("bigint").alias("n_hits"),
         F.max("sim").alias("max_sim"),
     )

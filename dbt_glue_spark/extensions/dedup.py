@@ -334,7 +334,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     max_band_bucket: int | None = 64,
-    oversize_policy: str = "star",
 ) -> DataFrame:
     """MinHash + LSH near-dup candidate pairs, verified by exact Jaccard.
 
@@ -349,23 +348,19 @@ def minhash_lsh_pairs(
     whole-corpus fractions into single band buckets — 10.1× runtime at
     2.9× tokens, i.e. the bucket self-join went quadratic): a band
     bucket holding more than the cap never enters the quadratic
-    self-join. What happens to it instead is ``oversize_policy``:
-
-    - ``"star"`` (default): every member is linked to the bucket's
-      MIN id — O(bucket) candidate pairs instead of O(bucket²), each
-      still exact-Jaccard verified. A true duplicate family stays
-      CONNECTED (one star component of diameter 2 — deliberately NOT a
-      consecutive-id chain, whose O(bucket) diameter would stall
-      dup_clusters' label propagation), which is all downstream
-      clustering needs; only the exhaustive per-pair list is
-      sacrificed. Found by the round-9 dupheavy axis: with the
-      original drop policy, a corpus where 85 % of documents are
-      mirrors of five near-identical canonicals returned ZERO pairs —
-      every band bucket merged past the cap and the whole duplicated
-      mass vanished from the pair stream (SCALE.md round-9 session 3).
-    - ``"drop"``: the round-8 behavior — oversized buckets are skipped
-      entirely. Opt-in for when the pair stream must contain only
-      complete bucket families (e.g. recall accounting against a cap).
+    self-join. Instead it degrades to a STAR: every member is linked to
+    the bucket's MIN id — O(bucket) candidate pairs instead of
+    O(bucket²), each still exact-Jaccard verified. A true duplicate
+    family stays CONNECTED (one star component of diameter 2 —
+    deliberately NOT a consecutive-id chain, whose O(bucket) diameter
+    would stall dup_clusters' label propagation), which is all
+    downstream clustering needs; only the exhaustive per-pair list is
+    sacrificed. Found by the round-9 dupheavy axis: with the original
+    policy of skipping an oversized bucket, a corpus where 85 % of
+    documents are mirrors of five near-identical canonicals returned
+    ZERO pairs — every band bucket merged past the cap and the whole
+    duplicated mass vanished from the pair stream (SCALE.md round-9
+    session 3).
 
     The cap IS the default (64, flipped round 9 per the r8 verdict: the
     uncapped bucket join is a proven quadratic scale-killer on
@@ -373,7 +368,7 @@ def minhash_lsh_pairs(
     probe — i.e. on the NORMAL shape of web-crawl data). Pass
     ``max_band_bucket=None`` to opt in to exact full-recall semantics on
     small/curated corpora. ``lsh_recall_audit`` measures what the cap
-    costs on a given corpus (run it per policy to price the trade).
+    costs on a given corpus.
 
     Returns (id_a, id_b, jaccard), id_a < id_b.
     """
@@ -395,8 +390,6 @@ def minhash_lsh_pairs(
     if max_band_bucket is not None:
         if max_band_bucket < 1:
             raise ValueError(f"max_band_bucket must be >= 1: {max_band_bucket}")
-        if oversize_policy not in ("star", "drop"):
-            raise ValueError(f"oversize_policy must be star|drop: {oversize_policy}")
         # one cheap groupBy over the bands×docs frame decides each
         # bucket's fate BEFORE the self-join, so an oversized bucket's
         # quadratic pair set is never materialized
@@ -418,30 +411,23 @@ def minhash_lsh_pairs(
         keep = counts.filter(
             (F.col("__bn") >= 2) & (F.col("__bn") <= max_band_bucket)
         ).select("band_idx", "band_key")
-        if oversize_policy == "star":
-            # oversized buckets degrade to a STAR around the bucket's
-            # min id: O(bucket) candidates from the bucket-level __bmin
-            # joined back onto the members (over-cap bucket list is one
-            # row per bucket — AQE broadcasts it, so the members never
-            # re-shuffle), exact-verified downstream like every other
-            # candidate; a true duplicate family stays one connected
-            # component of DIAMETER 2 (a consecutive-id chain would be
-            # O(bucket) diameter and stall label propagation — measured
-            # on the dupheavy axis: a 65-doc mirror family came out as
-            # a 51-vertex partial component at dup_clusters'
-            # max_iter=50)
-            star_pairs = (
-                stacked.join(
-                    counts.filter(F.col("__bn") > max_band_bucket).select(
-                        "band_idx", "band_key", "__bmin"
-                    ),
-                    ["band_idx", "band_key"],
-                )
-                .filter(F.col("__bmin") < F.col("id"))
-                .select(
-                    F.col("__bmin").alias("id_a"), F.col("id").alias("id_b")
-                )
+        # the star: the bucket-level __bmin joined back onto the members
+        # (the over-cap bucket list is one row per bucket — AQE
+        # broadcasts it, so the members never re-shuffle); a chain
+        # instead left a 65-doc dupheavy mirror family as a 51-vertex
+        # partial component at dup_clusters' max_iter=50
+        star_pairs = (
+            stacked.join(
+                counts.filter(F.col("__bn") > max_band_bucket).select(
+                    "band_idx", "band_key", "__bmin"
+                ),
+                ["band_idx", "band_key"],
             )
+            .filter(F.col("__bmin") < F.col("id"))
+            .select(
+                F.col("__bmin").alias("id_a"), F.col("id").alias("id_b")
+            )
+        )
         stacked = stacked.join(keep, ["band_idx", "band_key"], "left_semi")
     a = stacked.alias("a")
     b = stacked.alias("b")
@@ -1836,7 +1822,6 @@ def lsh_recall_audit(
     num_hashes: int = 8,
     bands: int = 4,
     max_band_bucket: int | None = None,
-    oversize_policy: str = "star",
 ) -> DataFrame:
     """Recall audit of the banded MinHash-LSH candidate generation
     against the EXACT inverted-index ground truth at the same
@@ -1848,10 +1833,10 @@ def lsh_recall_audit(
     Because LSH pairs are exact-Jaccard VERIFIED, LSH ⊆ truth and
     precision is 1 by construction; the audit therefore reports
     n_true, n_found, n_missed and recall (exact integer ppm). With
-    ``max_band_bucket`` set, the missing mass additionally includes
-    whatever the oversize policy refuses (``star`` keeps O(bucket)
-    connectivity links; ``drop`` refuses the bucket outright) — run
-    the settings side by side to price the cap on YOUR corpus.
+    ``max_band_bucket`` set, the missing mass additionally includes the
+    pairs an over-cap bucket gives up when it degrades to its O(bucket)
+    star of connectivity links — run it with and without the cap to
+    price the cap on YOUR corpus.
 
     100 TB shape: the truth side is the exact inverted join — this is
     an AUDIT you run on a sampled slice, not the production path (the
@@ -1870,7 +1855,6 @@ def lsh_recall_audit(
         bands,
         threshold,
         max_band_bucket=max_band_bucket,
-        oversize_policy=oversize_policy,
     ).select("id_a", "id_b")
     hit = truth.join(found, ["id_a", "id_b"], "left_semi")
     t = truth.agg(F.count("*").cast("bigint").alias("n_true"))

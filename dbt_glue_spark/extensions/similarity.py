@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbt_glue_spark.extensions import clustering
 from dbt_glue_spark.functions.scalars import half_up_round
 from dbt_glue_spark.functions.vectors import cosine_sim
 
@@ -132,98 +133,6 @@ def knn_lsh(
     )
 
 
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (id, cell, vec).
-
-    Centroids are literal arrays (driver-side list — an IVF codebook is
-    KBs even at 100 TB corpus scale), so assignment is a narrow projection:
-    no join, no shuffle. min_by over an exploded centroid array.
-    """
-    cent_arr = F.array(
-        *[
-            F.struct(
-                F.lit(cid).alias("cid"), F.array(*[F.lit(v) for v in vec]).alias("c")
-            )
-            for cid, vec in centroids
-        ]
-    )
-    exploded = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.explode(cent_arr).alias("cent"),
-    )
-    dist = F.aggregate(
-        F.zip_with(F.col("v"), F.col("cent.c"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-    # struct-min, not min_by: equal distances break ties on the LOWER cid
-    # deterministically (min_by tie order is engine/partition dependent)
-    return (
-        exploded.withColumn("dist", dist)
-        .groupBy("id")
-        .agg(
-            F.min(F.struct(F.col("dist"), F.col("cent.cid").alias("cid"))).alias("best"),
-            F.first("v").alias("v"),
-        )
-        .select("id", F.col("best.cid").alias("cell"), "v")
-    )
-
-
-def ivf_train(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int = 16,
-    iters: int = 3,
-) -> list[tuple[int, list[float]]]:
-    """Train an IVF codebook with Lloyd iterations, deterministic init
-    (the ``n_centroids`` lowest-id vectors). Each iteration is one narrow
-    assignment pass + one groupBy-mean over (cell, dim) — linear scans, no
-    pairwise work. Returns the codebook as a driver-side list."""
-    # NULL embeddings carry no geometry: they can neither seed nor train
-    # a centroid (list(None) would TypeError on the driver), so the
-    # codebook is trained on the non-NULL corpus only
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    init = (
-        corpus.orderBy(id_col)
-        .limit(n_centroids)
-        .select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )
-    centroids = [(i, list(r.v)) for i, r in enumerate(init)]
-    if not centroids:
-        # empty corpus → empty codebook (running Lloyd iterations with an
-        # empty centroid array would build a VOID-typed literal)
-        return []
-    for _ in range(iters):
-        assigned = ivf_assign(corpus, centroids, vec_col, id_col)
-        means = (
-            assigned.select("cell", F.posexplode("v").alias("dim", "x"))
-            .groupBy("cell", "dim")
-            # decimal mean → shuffle-order-independent (same discipline as
-            # clustering.kmeans_assign), making the codebook — and thus the
-            # whole IVF index — a pure function of the corpus
-            .agg(
-                (F.sum(F.col("x").cast("decimal(28,12)")) / F.count("*"))
-                .cast("double")
-                .alias("m")
-            )
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-            .collect()
-        )
-        centroids = [
-            (r.cell, [e.m for e in r.dm]) for r in sorted(means, key=lambda r: r.cell)
-        ]
-    return centroids
-
-
 def knn_ivf(
     corpus: DataFrame,
     queries: DataFrame,
@@ -241,47 +150,27 @@ def knn_ivf(
     (an equi-join key materializes the inverted file), queries fan out to
     nprobe cells → candidate fraction ≈ nprobe/n_centroids. Recall tunes
     with nprobe. All vector math stays in Catalyst expressions.
+
+    The codebook is the shared Lloyd's k-means of ``extensions.clustering``
+    (``n_centroids`` lowest-id seeds, 3 rounds, decimal means): the corpus
+    cells are its bucketing frame, and each query's probes are the
+    ``nprobe`` first centroids in the same (distance, cid) order the
+    nearest-centroid step takes the minimum of. An empty corpus trains no
+    centroid, so no query probes a cell and the result is empty.
     """
     # NULL vectors excluded (no geometry) — matches the oracle scan filter
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    queries = queries.filter(F.col(vec_col).isNotNull())
-    centroids = ivf_train(corpus, vec_col, id_col, n_centroids)
-    if not centroids:
-        # empty corpus → empty codebook → no neighbors; an empty literal
-        # F.array() is VOID-typed and would break the probe expressions
-        return (
-            queries.select(F.col(id_col).alias("query_id"))
-            .limit(0)
-            .withColumn("neighbor_id", F.col("query_id"))
-            .withColumn("sim", F.lit(None).cast("double"))
-            .withColumn("rk", F.lit(None).cast("int"))
-        )
-    corpus_cells = ivf_assign(corpus, centroids, vec_col, id_col).select(
-        F.col("id").alias("neighbor_id"), F.col("cell"), F.col("v").alias("__cv")
+    corpus = clustering.id_vectors(corpus, id_col, vec_col)
+    centroids = clustering.lloyd_centroids(corpus, n_centroids, 3)
+    corpus_cells = clustering.nearest_centroid(corpus, centroids).select(
+        F.col("id").alias("neighbor_id"), F.col("cluster_id").alias("cell"), F.col("v").alias("__cv")
     )
     # query → nprobe nearest cells
-    cent_arr = F.array(
-        *[
-            F.struct(F.lit(cid).alias("cid"), F.array(*[F.lit(v) for v in vec]).alias("c"))
-            for cid, vec in centroids
-        ]
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-        F.explode(cent_arr).alias("cent"),
-    )
-    qdist = F.aggregate(
-        F.zip_with(F.col("__qv"), F.col("cent.c"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("qd"), F.asc("cent.cid"))
+    wq = Window.partitionBy("id").orderBy(F.asc("s.d2"), F.asc("s.cid"))
     probes = (
-        q.withColumn("qd", qdist)
+        clustering.centroid_scores(clustering.id_vectors(queries, id_col, vec_col), centroids)
         .withColumn("prk", F.row_number().over(wq))
         .filter(F.col("prk") <= nprobe)
-        .select("query_id", "__qv", F.col("cent.cid").alias("cell"))
+        .select(F.col("id").alias("query_id"), F.col("v").alias("__qv"), F.col("s.cid").alias("cell"))
     )
     scored = (
         corpus_cells.join(F.broadcast(probes), "cell")

@@ -74,11 +74,11 @@ from pyspark.sql import functions as F
 from dbt_glue_spark.plans import streams
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.plans.extension_queries import (
+    _IVF_CTE,
     _KMEANS_CTE,
     _bucket_sql,
     _cos_sql,
 )
-from dbt_glue_spark.session import local_frame
 from dbt_glue_spark.sources.registry import load_table
 
 
@@ -231,55 +231,6 @@ def ext_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clustering.semantic_contamination(
         train, ev, k=10, max_iter=6, threshold=0.30
     )
-
-
-# IVF codebook replay: 8 centroids, 3 Lloyd rounds, nprobe=3 — the
-# ext_knn_ivf construction (same parameters, same tie-breaks) extended
-# with the exact brute-force side and the recall join.
-_IVF_CTE = r"""
-    WITH RECURSIVE e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-                         FROM embeddings WHERE embedding IS NOT NULL),
-    cb(i, cid, c) AS (
-      SELECT 0, CAST(ROW_NUMBER() OVER (ORDER BY id) - 1 AS INT) AS cid, v
-      FROM (SELECT id, v FROM e ORDER BY id LIMIT 8)
-      UNION ALL
-      SELECT i + 1, cell, list(m ORDER BY pos)
-      FROM (
-        SELECT a.i, a.cell, gs.pos,
-               CAST(SUM(CAST(a.v[gs.pos] AS DECIMAL(28,12))) / COUNT(*) AS DOUBLE) AS m
-        FROM (
-          SELECT ce.i, ee.id, ee.v,
-                 (MIN({'d2': list_sum(list_transform(list_zip(ee.v, ce.c),
-                                      p -> (p[1]-p[2])*(p[1]-p[2]))),
-                       'cid': ce.cid})).cid AS cell
-          FROM e ee, cb ce
-          WHERE ce.i < 3
-          GROUP BY ce.i, ee.id, ee.v
-        ) a, (SELECT unnest(generate_series(1, 64)) AS pos) gs
-        GROUP BY a.i, a.cell, gs.pos
-      )
-      GROUP BY i, cell
-    ),
-    fc AS (SELECT cid, c FROM cb WHERE i = 3),
-    cells AS (
-      SELECT ee.id,
-             (MIN({'d2': list_sum(list_transform(list_zip(ee.v, fc.c),
-                                  p -> (p[1]-p[2])*(p[1]-p[2]))),
-                   'cid': fc.cid})).cid AS cell,
-             ee.v
-      FROM e ee, fc GROUP BY ee.id, ee.v
-    ),
-    probes AS (
-      SELECT query_id, cell FROM (
-        SELECT q.id AS query_id, fc.cid AS cell,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.id
-                 ORDER BY list_sum(list_transform(list_zip(q.v, fc.c),
-                           p -> (p[1]-p[2])*(p[1]-p[2]))) ASC, fc.cid ASC) AS prk
-        FROM (SELECT id, v FROM e WHERE id < 10) q, fc
-      ) WHERE prk <= 3
-    )
-"""
 
 
 @register(
@@ -773,18 +724,11 @@ def ext_semantic_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast total; oracle replays codebook training + assignment.",
 )
 def ext_ivf_cell_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbt_glue_spark.extensions import similarity
+    from dbt_glue_spark.extensions import clustering
 
     emb = load_table(spark, sf_dir, "embeddings")
-    nonnull = emb.filter(F.col("embedding").isNotNull())
-    centroids = similarity.ivf_train(nonnull, n_centroids=8)
-    if not centroids:
-        # empty corpus → empty codebook; an empty F.array() literal is
-        # VOID-typed and would break ivf_assign's explode (the knn_ivf
-        # guard, mirrored)
-        return local_frame(spark, [], "cell int, n_vectors bigint, share_ppm bigint")
-    cells = similarity.ivf_assign(nonnull, centroids, "embedding", "vec_id")
-    census = cells.groupBy("cell").agg(
+    cells = clustering.kmeans_buckets(clustering.id_vectors(emb), k=8, max_iter=3)
+    census = cells.groupBy(F.col("cluster_id").alias("cell")).agg(
         F.count("*").cast("bigint").alias("n_vectors")
     )
     total = census.agg(F.sum("n_vectors").cast("bigint").alias("__n"))
@@ -833,36 +777,20 @@ def ext_ivf_cell_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ext_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_glue_spark.extensions import clustering
-    from dbt_glue_spark.functions.scalars import half_up_round
-    from dbt_glue_spark.functions.vectors import cosine_sim
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned = clustering.kmeans_assign(emb, k=10, max_iter=6)
-    vecs = emb.filter(F.col("embedding").isNotNull()).select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
     m = (
-        assigned.select(F.col("vec_id").alias("id"), "cluster_id")
-        .join(vecs, "id")
+        clustering.kmeans_buckets(clustering.id_vectors(emb), k=10, max_iter=6)
+        .select("id", "cluster_id", "v")
         .localCheckpoint()
     )
-    new = m.filter(F.col("id") % 2 == 1).select(
-        F.col("id").alias("vec_id"), "cluster_id", F.col("v").alias("__nv")
-    )
-    ledger = m.filter(F.col("id") % 2 == 0).select(
-        "cluster_id", F.col("v").alias("__xv")
-    )
+    new = m.filter(F.col("id") % 2 == 1)
     hits = (
-        new.join(ledger, "cluster_id")
-        .withColumn(
-            "sim", half_up_round(cosine_sim(F.col("__nv"), F.col("__xv")), 4)
-        )
-        .filter(F.col("sim") >= 0.30)
-        .groupBy("vec_id")
+        clustering.cluster_edges(new, m.filter(F.col("id") % 2 == 0), 0.30)
+        .groupBy(F.col("a.id").alias("vec_id"))
         .agg(F.count("*").cast("bigint").alias("__h"))
     )
-    return new.select("vec_id").join(hits, "vec_id", "left").select(
+    return new.select(F.col("id").alias("vec_id")).join(hits, "vec_id", "left").select(
         "vec_id",
         F.coalesce(F.col("__h"), F.lit(0)).cast("bigint").alias(
             "n_exemplar_hits"

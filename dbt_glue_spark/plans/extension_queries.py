@@ -1329,9 +1329,47 @@ def ext_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.join(drop, "doc_id", "left_anti").select("doc_id", "lang", "source")
 
 
-@register(
-    "ext_knn_ivf",
-    r"""
+# Lloyd replays: _KMEANS_CTE is k=10 over 6 rounds (assign = final
+# nearest centroid); _IVF_CTE is the ext_knn_ivf codebook — 8 centroids,
+# 3 rounds, corpus cells and nprobe=3 probes for the 10 query ids — whose
+# tail ext_knn_ivf, ext_ivf_recall_audit and ext_ivf_cell_card each add.
+_KMEANS_CTE = r"""
+    WITH RECURSIVE e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
+                         FROM embeddings WHERE embedding IS NOT NULL),
+    cent(i, cid, c) AS (
+      SELECT 0, CAST(ROW_NUMBER() OVER (ORDER BY id) - 1 AS INT) AS cid, v
+      FROM (SELECT id, v FROM e ORDER BY id LIMIT 10)
+      UNION ALL
+      SELECT i + 1, cluster_id, list(m ORDER BY pos)
+      FROM (
+        SELECT a.i, a.cluster_id, gs.pos,
+               CAST(SUM(CAST(a.v[gs.pos] AS DECIMAL(28,12))) / COUNT(*) AS DOUBLE) AS m
+        FROM (
+          SELECT ce.i, ee.id, ee.v,
+                 (MIN({'d2': list_sum(list_transform(list_zip(ee.v, ce.c),
+                                      p -> (p[1]-p[2])*(p[1]-p[2]))),
+                       'cid': ce.cid})).cid AS cluster_id
+          FROM e ee, cent ce
+          WHERE ce.i < 6
+          GROUP BY ce.i, ee.id, ee.v
+        ) a, (SELECT unnest(generate_series(1, 64)) AS pos) gs
+        GROUP BY a.i, a.cluster_id, gs.pos
+      )
+      GROUP BY i, cluster_id
+    ),
+    final_cent AS (SELECT cid, c FROM cent WHERE i = 6),
+    assign AS (
+      SELECT ee.id,
+             MIN({'d2': list_sum(list_transform(list_zip(ee.v, fc.c),
+                                  p -> (p[1]-p[2])*(p[1]-p[2]))),
+                  'cid': fc.cid}) AS best
+      FROM e ee, final_cent fc
+      GROUP BY ee.id
+    )
+"""
+
+
+_IVF_CTE = r"""
     WITH RECURSIVE e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
                          FROM embeddings WHERE embedding IS NOT NULL),
     cb(i, cid, c) AS (
@@ -1373,7 +1411,14 @@ def ext_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                            p -> (p[1]-p[2])*(p[1]-p[2]))) ASC, fc.cid ASC) AS prk
         FROM (SELECT id, v FROM e WHERE id < 10) q, fc
       ) WHERE prk <= 3
-    ),
+    )
+"""
+
+
+@register(
+    "ext_knn_ivf",
+    _IVF_CTE.rstrip()
+    + r""",
     scored AS (
       SELECT p.query_id, c.id AS neighbor_id,
              """ + _cos_sql("q.v", "c.v") + r""" AS sim
@@ -2290,42 +2335,6 @@ def ext_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ext_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_analysis.pii_redact(_pii_marked_df(spark, sf_dir))
-
-
-_KMEANS_CTE = r"""
-    WITH RECURSIVE e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-                         FROM embeddings WHERE embedding IS NOT NULL),
-    cent(i, cid, c) AS (
-      SELECT 0, CAST(ROW_NUMBER() OVER (ORDER BY id) - 1 AS INT) AS cid, v
-      FROM (SELECT id, v FROM e ORDER BY id LIMIT 10)
-      UNION ALL
-      SELECT i + 1, cluster_id, list(m ORDER BY pos)
-      FROM (
-        SELECT a.i, a.cluster_id, gs.pos,
-               CAST(SUM(CAST(a.v[gs.pos] AS DECIMAL(28,12))) / COUNT(*) AS DOUBLE) AS m
-        FROM (
-          SELECT ce.i, ee.id, ee.v,
-                 (MIN({'d2': list_sum(list_transform(list_zip(ee.v, ce.c),
-                                      p -> (p[1]-p[2])*(p[1]-p[2]))),
-                       'cid': ce.cid})).cid AS cluster_id
-          FROM e ee, cent ce
-          WHERE ce.i < 6
-          GROUP BY ce.i, ee.id, ee.v
-        ) a, (SELECT unnest(generate_series(1, 64)) AS pos) gs
-        GROUP BY a.i, a.cluster_id, gs.pos
-      )
-      GROUP BY i, cluster_id
-    ),
-    final_cent AS (SELECT cid, c FROM cent WHERE i = 6),
-    assign AS (
-      SELECT ee.id,
-             MIN({'d2': list_sum(list_transform(list_zip(ee.v, fc.c),
-                                  p -> (p[1]-p[2])*(p[1]-p[2]))),
-                  'cid': fc.cid}) AS best
-      FROM e ee, final_cent fc
-      GROUP BY ee.id
-    )
-"""
 
 
 @register(

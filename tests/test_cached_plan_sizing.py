@@ -65,8 +65,7 @@ def _corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-@pytest.mark.parametrize("policy", ["star", "drop"])
-def test_singleton_bucket_prune_keeps_pairs(spark, policy):
+def test_singleton_bucket_prune_keeps_pairs(spark):
     from dbt_glue_spark.extensions.dedup import minhash_lsh_pairs, release_caches
 
     docs = _corpus(spark)
@@ -77,9 +76,7 @@ def test_singleton_bucket_prune_keeps_pairs(spark, policy):
         }
         capped = {
             tuple(r)
-            for r in minhash_lsh_pairs(
-                docs, threshold=0.3, max_band_bucket=64, oversize_policy=policy
-            ).collect()
+            for r in minhash_lsh_pairs(docs, threshold=0.3, max_band_bucket=64).collect()
         }
     finally:
         release_caches()

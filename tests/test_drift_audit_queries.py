@@ -544,20 +544,17 @@ def test_minhash_capped_identity_on_clean_corpus(spark, sf_dir):
     assert capped == uncapped
 
 
-def test_minhash_cap_star_vs_drop_policies(spark):
+def test_minhash_cap_star_keeps_family_connected(spark):
     """Boilerplate corpus: every doc shares a long template prefix, so
-    all docs land in shared band buckets. Under the cap:
-
-    - ``star`` (default): capped ⊆ uncapped (star pairs are exact-
-      verified), the own-content pair survives, the template family's
-      QUADRATIC mass is refused but the family stays CONNECTED — its
-      O(bucket) star pairs (every member → bucket min, diameter 2) link
-      all 30 docs into one component (the round-9 dupheavy finding:
-      drop semantics returned ZERO pairs on a mirror corpus and the
-      whole dup mass vanished; a consecutive-id CHAIN stalls
-      dup_clusters' label propagation at O(bucket) diameter);
-    - ``drop``: the round-8 behavior — no template pairs at all.
-    """
+    all docs land in shared band buckets. Under the cap, capped ⊆
+    uncapped (star pairs are exact-verified), the own-content pair
+    survives, and the template family's QUADRATIC mass is refused but
+    the family stays CONNECTED — its O(bucket) star pairs (every member
+    → bucket min, diameter 2) link all 30 docs into one component (the
+    round-9 dupheavy finding: skipping over-cap buckets returned ZERO
+    pairs on a mirror corpus and the whole dup mass vanished; a
+    consecutive-id CHAIN stalls dup_clusters' label propagation at
+    O(bucket) diameter)."""
     from dbt_glue_spark.extensions.dedup import minhash_lsh_pairs
 
     boiler = " ".join(f"tpl{i}" for i in range(40))
@@ -576,14 +573,8 @@ def test_minhash_cap_star_vs_drop_policies(spark):
         (r.id_a, r.id_b)
         for r in minhash_lsh_pairs(df, threshold=0.5, max_band_bucket=8).collect()
     }
-    dropped = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(
-            df, threshold=0.5, max_band_bucket=8, oversize_policy="drop"
-        ).collect()
-    }
-    assert starred <= uncapped and dropped <= starred
-    assert (100, 101) in starred and (100, 101) in dropped
+    assert starred <= uncapped
+    assert (100, 101) in starred
     tpl_all = {(a, b) for a, b in uncapped if a < 100 and b < 100}
     tpl_star = {(a, b) for a, b in starred if a < 100 and b < 100}
     # quadratic mass (LSH banding may probabilistically miss a few of
@@ -591,7 +582,6 @@ def test_minhash_cap_star_vs_drop_policies(spark):
     assert len(tpl_all) > 300
     assert 0 < len(tpl_star) < len(tpl_all)      # linear, not quadratic
     assert len(tpl_star) <= 4 * 29               # ≤ one star per band
-    assert not any(a < 100 and b < 100 for a, b in dropped)
     # connectivity: union-find over the star pairs joins all 30
     parent = list(range(30))
 
@@ -606,8 +596,6 @@ def test_minhash_cap_star_vs_drop_policies(spark):
     assert len({find(i) for i in range(30)}) == 1
     with pytest.raises(ValueError, match="max_band_bucket"):
         minhash_lsh_pairs(df, max_band_bucket=0)
-    with pytest.raises(ValueError, match="oversize_policy"):
-        minhash_lsh_pairs(df, max_band_bucket=8, oversize_policy="explode")
 
 
 def test_minhash_capped_plan_is_bucketed(spark, sf_dir):

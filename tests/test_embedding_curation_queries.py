@@ -253,33 +253,12 @@ def test_semantic_dedup_recall_is_total_at_k1(spark, sf_dir):
     """With k=1 every pair is within-cluster — the bucketed count must
     equal the exact all-pairs truth (recall 1e6 exactly)."""
     from dbt_glue_spark.extensions import clustering, similarity
-    from dbt_glue_spark.functions.scalars import half_up_round
-    from dbt_glue_spark.functions.vectors import cosine_sim
     from dbt_glue_spark.sources.registry import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     n_true = similarity.all_pairs_cosine(emb, threshold=0.30, buckets=0).count()
-    assigned = clustering.kmeans_assign(emb, k=1, max_iter=2)
-    vecs = emb.filter(F.col("embedding").isNotNull()).select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    m = assigned.select(F.col("vec_id").alias("id"), "cluster_id").join(
-        vecs, "id"
-    )
-    a, b = m.alias("a"), m.alias("b")
-    n_found = (
-        a.join(
-            b,
-            (F.col("a.cluster_id") == F.col("b.cluster_id"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .withColumn(
-            "sim", half_up_round(cosine_sim(F.col("a.v"), F.col("b.v")), 4)
-        )
-        .filter(F.col("sim") >= 0.30)
-        .count()
-    )
+    _m, pairs = clustering.within_cluster_pairs(emb, k=1, max_iter=2, threshold=0.30)
+    n_found = pairs.count()
     assert n_found == n_true
 
 

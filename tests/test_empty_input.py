@@ -12,7 +12,10 @@ down. Round-5 probe findings fixed here and regression-gated:
   as nanos-as-long bigint;
 - funnel_conversion_timing: ANSI DIVIDE_BY_ZERO with zero viewers;
 - pagerank: Python ZeroDivisionError seeding 1/n ranks with n=0;
-- ivf_train/knn_ivf: empty codebook built a VOID-typed literal array;
+- knn_ivf / ext_ivf_cell_card: an empty corpus used to build an empty
+  literal codebook (VOID-typed); the codebook is now the shared k-means
+  centroid frame, which trains empty but typed — the k-means/IVF specs
+  stay in the regression set;
 - streaming sketch/merge sinks: an empty stream commits no ledger — the
   readers now fall back to the typed empty sketch instead of raising.
 
@@ -51,6 +54,10 @@ REGRESSION_QUERIES = [
     "funnel_conversion_timing",
     "ext_pagerank_trade",
     "ext_knn_ivf",
+    "ext_ivf_cell_card",
+    "ext_kmeans_embeddings",
+    "ext_semantic_dedup",
+    "ext_semantic_contamination",
     "streaming_merge_upsert",
     "flagship_revenue_by_nation",  # exercises directory+INT96 load path
     "events_hourly",
@@ -102,13 +109,20 @@ def test_pagerank_empty_edges(spark):
 
 
 def test_knn_ivf_empty_corpus(spark):
-    from dbt_glue_spark.extensions.similarity import ivf_train, knn_ivf
+    from dbt_glue_spark.extensions.similarity import knn_ivf
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert ivf_train(empty) == []
     out = knn_ivf(empty, empty)
     assert out.count() == 0
     assert out.columns == ["query_id", "neighbor_id", "sim", "rk"]
+
+
+def test_ivf_cell_card_empty_is_typed(spark, empty_sf):
+    out = SPECS()["ext_ivf_cell_card"].fn(spark, empty_sf)
+    assert out.count() == 0
+    assert out.schema.simpleString() == (
+        "struct<cell:int,n_vectors:bigint,share_ppm:bigint>"
+    )
 
 
 def test_funnel_timing_empty_events(spark, empty_sf):

@@ -1,6 +1,12 @@
 """Smoke tests for the plan dumper, the A/B harness and the scaling and
 skew probes, run in process at the test scale so the tools cannot rot
-unnoticed."""
+unnoticed.
+
+The default set runs one scaling-probe family at factor 1 and the
+``textskew`` and ``dupheavy`` skew-probe axes end to end — mutate,
+warm, time and report the axis ratio — on one control query each
+(``ext_text_stats``); the full probe families and axes are ``slow`` or
+left to the command line (a full skew axis takes about a minute)."""
 
 from __future__ import annotations
 
@@ -65,6 +71,19 @@ def test_every_documented_probe_resolves():
                 cited.update(names.split("|"))
     assert {"dedup", "mmr", "staged", "staged13", "dupweak", "dupgrowth"} <= cited
     assert cited <= set(scale_probe.FAMILIES), cited - set(scale_probe.FAMILIES)
+
+
+@pytest.mark.parametrize("axis,ratio", [("textskew", "token_ratio"), ("dupheavy", "dup_ratio")])
+def test_skew_probe_runs_an_axis(axis, ratio, spark, sf_dir, monkeypatch, capsys):
+    monkeypatch.setattr(skew_probe, "get_spark", lambda name: spark)
+    monkeypatch.setitem(skew_probe.AXES, axis, (skew_probe.AXES[axis][0], ["ext_text_stats"]))
+    skew_probe.main([sf_dir, "--reps=1", f"--axis={axis}"])
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1, lines
+    out = json.loads(lines[0])
+    assert (out["axis"], out["reps"], list(out["results"])) == (axis, 1, ["ext_text_stats"])
+    assert set(out["results"]["ext_text_stats"]) == {"clean", "hot", "ratio"}
+    assert out[ratio] > 0
 
 
 def test_probe_arguments_rejected_before_spark(monkeypatch):
