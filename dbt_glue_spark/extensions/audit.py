@@ -8,6 +8,8 @@ and feeds dataset documentation (datasheets/data cards).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -222,8 +224,6 @@ def distribution_drift(
     partial aggregation before the join; the two 1-row totals broadcast.
     Nothing scales with corpus size after the first scan.
     """
-    from dbt_glue_spark.functions.scalars import half_up_round
-
     return drift_from_histograms(
         value_histogram(a, value_col, bucket_width, n_buckets),
         value_histogram(b, value_col, bucket_width, n_buckets),
@@ -231,27 +231,69 @@ def distribution_drift(
 
 
 def value_histogram(
-    df: DataFrame, value_col: str, bucket_width: int, n_buckets: int = 32
+    df: DataFrame,
+    value_col: str,
+    bucket_width: int,
+    n_buckets: int = 32,
+    by: Sequence[str] = (),
 ) -> DataFrame:
-    """Fixed-width bucket counts of a numeric column: (bucket, cnt), the
-    mergeable (cell-wise +) summary drift comparisons run on. Collapses
-    to ≤ n_buckets rows via map-side partial aggregation.
+    """Fixed-width bucket counts of a numeric column: (*by, bucket, cnt),
+    the mergeable (cell-wise +) summary drift comparisons run on — one
+    histogram per ``by`` key (source, language, shard), or one global
+    histogram for the default ``by=()``. Collapses to ≤ keys×n_buckets
+    rows via map-side partial aggregation.
 
     NULL contract: NULL values are EXCLUDED before bucketing (r8 ADVICE:
     ``least()`` ignores NULLs in both engines, so a NULL value used to
     land silently in the TOP bucket — a NULL-rate change then
-    masqueraded as tail drift in every consumer). NULL-rate monitoring
-    is `profile.profile_columns`' job (ext_column_profile); the
-    histogram measures the distribution of the values that exist."""
+    masqueraded as tail drift in every consumer), and so are rows with
+    a NULL ``by`` key (NULL never matches itself in the keyed joins
+    downstream). NULL-rate monitoring is `profile.profile_columns`' job
+    (ext_column_profile); the histogram measures the distribution of the
+    values that exist."""
     bucket = F.least(
         F.floor(F.col(value_col) / F.lit(bucket_width)),
         F.lit(n_buckets - 1),
     ).cast("int")
+    keep = F.col(value_col).isNotNull()
+    for c in by:
+        keep = F.col(c).isNotNull() & keep
     return (
-        df.filter(F.col(value_col).isNotNull())
-        .select(bucket.alias("bucket"))
-        .groupBy("bucket")
+        df.filter(keep)
+        .select(*by, bucket.alias("bucket"))
+        .groupBy(*by, "bucket")
         .agg(F.count("*").cast("bigint").alias("cnt"))
+    )
+
+
+def _joined_histograms(
+    ha: DataFrame, hb: DataFrame, by: Sequence[str] = ()
+) -> DataFrame:
+    """(*by, bucket, ca, cb, n_a, n_b) from two (*by, bucket, cnt)
+    histograms: the (key, bucket) full-outer join with a missing cell
+    counted 0, plus each side's per-key total — NULL where the key has
+    no rows on that side (the empty-side contract of every consumer).
+    Totals are ≤ |keys|-row aggregates, broadcast; ``by=()`` makes them
+    one global row."""
+    by = list(by)
+
+    def side(h: DataFrame, cnt: str) -> DataFrame:
+        return h.select(*by, "bucket", F.col("cnt").alias(cnt))
+
+    def totals(h: DataFrame, n: str) -> DataFrame:
+        return h.groupBy(*by).agg(F.sum("cnt").cast("bigint").alias(n))
+
+    return (
+        side(ha, "ca")
+        .join(side(hb, "cb"), [*by, "bucket"], "full_outer")
+        .select(
+            *by,
+            "bucket",
+            F.coalesce("ca", F.lit(0)).cast("bigint").alias("ca"),
+            F.coalesce("cb", F.lit(0)).cast("bigint").alias("cb"),
+        )
+        .join(F.broadcast(totals(ha, "n_a")), by or None, "left")
+        .join(F.broadcast(totals(hb, "n_b")), by or None, "left")
     )
 
 
@@ -262,35 +304,19 @@ def drift_from_histograms(ha: DataFrame, hb: DataFrame) -> DataFrame:
     batch reference with the identical arithmetic."""
     from dbt_glue_spark.functions.scalars import half_up_round
 
-    joined = (
-        ha.select("bucket", F.col("cnt").alias("ca"))
-        .join(hb.select("bucket", F.col("cnt").alias("cb")), "bucket", "full_outer")
-        .select(
-            "bucket",
-            F.coalesce("ca", F.lit(0)).cast("bigint").alias("count_a"),
-            F.coalesce("cb", F.lit(0)).cast("bigint").alias("count_b"),
-        )
-    )
-    totals_a = ha.agg(F.sum("cnt").cast("bigint").alias("n_a"))
-    totals_b = hb.agg(F.sum("cnt").cast("bigint").alias("n_b"))
-    pa = F.col("count_a").cast("double") / F.col("n_a").cast("double")
-    pb = F.col("count_b").cast("double") / F.col("n_b").cast("double")
-    chi = (
-        (F.col("count_a") - F.col("count_b"))
-        * (F.col("count_a") - F.col("count_b"))
-    ).cast("double") / (F.col("count_a") + F.col("count_b")).cast("double")
-    return (
-        joined.join(F.broadcast(totals_a))
-        .join(F.broadcast(totals_b))
-        .select(
-            "bucket",
-            "count_a",
-            "count_b",
-            half_up_round(pa, 8).alias("prop_a"),
-            half_up_round(pb, 8).alias("prop_b"),
-            half_up_round(F.abs(pa - pb), 8).alias("abs_prop_diff"),
-            half_up_round(chi, 6).alias("chi2_term"),
-        )
+    pa = F.col("ca").cast("double") / F.col("n_a").cast("double")
+    pb = F.col("cb").cast("double") / F.col("n_b").cast("double")
+    chi = ((F.col("ca") - F.col("cb")) * (F.col("ca") - F.col("cb"))).cast(
+        "double"
+    ) / (F.col("ca") + F.col("cb")).cast("double")
+    return _joined_histograms(ha, hb).select(
+        "bucket",
+        F.col("ca").alias("count_a"),
+        F.col("cb").alias("count_b"),
+        half_up_round(pa, 8).alias("prop_a"),
+        half_up_round(pb, 8).alias("prop_b"),
+        half_up_round(F.abs(pa - pb), 8).alias("abs_prop_diff"),
+        half_up_round(chi, 6).alias("chi2_term"),
     )
 
 
@@ -686,14 +712,10 @@ def psi_js_drift(
     Output per feature: (feature, n_a, n_b, n_buckets_used, psi, js) —
     psi/js half-up 6 dp; a side with zero rows yields NULL psi/js.
     """
-    from dbt_glue_spark.functions.scalars import half_up_round
-
     if isinstance(value_cols, str):
         value_cols = [value_cols]
     if not value_cols:
         raise ValueError("value_cols must name at least one feature")
-    if eps <= 0:
-        raise ValueError(f"eps must be > 0: {eps}")
 
     outs = []
     for c in value_cols:
@@ -717,148 +739,23 @@ def psi_js_from_histograms(
     row state) can be scored against a batch reference with the
     identical arithmetic: the streamed-vs-batch PSI is then exactly the
     batch-vs-batch PSI because histogram counting is linear."""
-    from dbt_glue_spark.functions.scalars import half_up_round
-
-    if eps <= 0:
-        raise ValueError(f"eps must be > 0: {eps}")
-    joined = (
-        ha.select("bucket", F.col("cnt").alias("ca"))
-        .join(
-            hb.select("bucket", F.col("cnt").alias("cb")),
-            "bucket",
-            "full_outer",
-        )
-        .select(
-            "bucket",
-            F.coalesce("ca", F.lit(0)).cast("bigint").alias("ca"),
-            F.coalesce("cb", F.lit(0)).cast("bigint").alias("cb"),
-        )
-        .join(F.broadcast(ha.agg(F.sum("cnt").cast("bigint").alias("n_a"))))
-        .join(F.broadcast(hb.agg(F.sum("cnt").cast("bigint").alias("n_b"))))
-    )
-    pa = F.col("ca").cast("double") / F.col("n_a").cast("double")
-    pb = F.col("cb").cast("double") / F.col("n_b").cast("double")
-    pa_c = F.greatest(pa, F.lit(float(eps)))
-    pb_c = F.greatest(pb, F.lit(float(eps)))
-    psi_term = (pa_c - pb_c) * F.log(pa_c / pb_c)
-    js_a = F.when(
-        F.col("ca") > 0, pa * F.log(F.lit(2.0) * pa / (pa + pb))
-    ).otherwise(F.lit(0.0))
-    js_b = F.when(
-        F.col("cb") > 0, pb * F.log(F.lit(2.0) * pb / (pa + pb))
-    ).otherwise(F.lit(0.0))
-    terms = joined.select(
-        "n_a",
-        "n_b",
-        F.struct(
-            F.col("bucket"),
-            psi_term.alias("psi_t"),
-            (F.lit(0.5) * (js_a + js_b)).alias("js_t"),
-        ).alias("t"),
-    )
-    folded = terms.groupBy("n_a", "n_b").agg(
-        F.count("*").cast("bigint").alias("n_buckets_used"),
-        F.sort_array(F.collect_list("t")).alias("ts"),
-    )
-    fold = lambda field: F.aggregate(  # noqa: E731
-        "ts", F.lit(0.0), lambda acc, s: acc + s[field]
-    )
-    return folded.select(
-            F.lit(feature).alias("feature"),
-            "n_a",
-            "n_b",
-            "n_buckets_used",
-            # an empty side means no distribution to compare: NULL
-            # statistic, explicitly — Spark's greatest() IGNORES
-            # NULLs, so without this gate the eps clamp would
-            # swallow the NULL proportion and emit a finite psi
-            half_up_round(
-                F.when(
-                    F.col("n_a").isNotNull() & F.col("n_b").isNotNull(),
-                    fold("psi_t"),
-                ),
-                6,
-            ).alias("psi"),
-            half_up_round(
-                F.when(
-                    F.col("n_a").isNotNull() & F.col("n_b").isNotNull(),
-                    fold("js_t"),
-                ),
-                6,
-            ).alias("js"),
-        )
+    return _psi_js(ha, hb, eps).select(F.lit(feature).alias("feature"), "*")
 
 
-
-def psi_js_drift_by_group(
-    a: DataFrame,
-    b: DataFrame,
-    group_col: str,
-    value_col: str,
-    bucket_width: int = 64,
-    n_buckets: int = 32,
-    eps: float = 1e-6,
+def _psi_js(
+    ha: DataFrame, hb: DataFrame, eps: float, by: Sequence[str] = ()
 ) -> DataFrame:
-    """Per-GROUP PSI/JS drift — :func:`psi_js_drift` stratified by
-    ``group_col`` (source, language, shard): one (group, psi, js) row
-    per group present in either snapshot. This is the form a production
-    monitor actually runs — corpus-level drift hides a single source
-    going bad behind the stable majority; per-source PSI names the
-    offender.
-
-    Same arithmetic and float-determinism discipline as the global
-    operator (exact-count proportions, eps clamp, 0·ln0 = 0, bucket-
-    sorted fold — here per group, over each group's ≤ n_buckets-row
-    collected frame). A group present on only ONE side has no
-    distribution to compare on the other: NULL psi/js (the empty-side
-    contract), with its n_a/n_b showing which side is missing.
-
-    NULL contract (r8 ADVICE): rows with a NULL group are EXCLUDED —
-    NULL never matches itself in the (g, bucket) full-outer join or the
-    totals joins, so a NULL group present in BOTH snapshots used to
-    yield two contradictory one-sided rows. NULL values are likewise
-    excluded before bucketing (see :func:`value_histogram`); per-group
-    NULL rates belong to a profile audit, not the drift statistic.
-
-    100 TB shape: both sides collapse to ≤ groups×n_buckets rows via
-    map-side partial aggregation at the scan; joins are (group, bucket)
-    and (group) equi-joins over those collapsed frames; the folds ride
-    per-group bounded frames. Nothing after the scans depends on corpus
-    size — only on |groups|.
-    """
+    """The one PSI/JS kernel: (*by, n_a, n_b, n_buckets_used, psi, js)
+    from two (*by, bucket, cnt) histograms, one row per ``by`` key
+    present on either side (one row for ``by=()``). Per key the
+    eps-clamped PSI term and the 0·ln0 = 0 JS term of every joined
+    bucket fold left to right over the bucket-sorted collected array;
+    a key with no rows on one side has no distribution to compare:
+    NULL psi/js."""
     from dbt_glue_spark.functions.scalars import half_up_round
 
     if eps <= 0:
         raise ValueError(f"eps must be > 0: {eps}")
-
-    def hist(df: DataFrame, cnt: str) -> DataFrame:
-        bucket = F.least(
-            F.floor(F.col(value_col) / F.lit(bucket_width)),
-            F.lit(n_buckets - 1),
-        ).cast("int")
-        return (
-            df.filter(
-                F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-            )
-            .select(F.col(group_col).alias("g"), bucket.alias("bucket"))
-            .groupBy("g", "bucket")
-            .agg(F.count("*").cast("bigint").alias(cnt))
-        )
-
-    ha, hb = hist(a, "ca"), hist(b, "cb")
-    ta = ha.groupBy("g").agg(F.sum("ca").cast("bigint").alias("n_a"))
-    tb = hb.groupBy("g").agg(F.sum("cb").cast("bigint").alias("n_b"))
-    joined = (
-        ha.join(hb, ["g", "bucket"], "full_outer")
-        .select(
-            "g",
-            "bucket",
-            F.coalesce("ca", F.lit(0)).cast("bigint").alias("ca"),
-            F.coalesce("cb", F.lit(0)).cast("bigint").alias("cb"),
-        )
-        .join(ta, "g", "left")
-        .join(tb, "g", "left")
-    )
     pa = F.col("ca").cast("double") / F.col("n_a").cast("double")
     pb = F.col("cb").cast("double") / F.col("n_b").cast("double")
     pa_c = F.greatest(pa, F.lit(float(eps)))
@@ -871,8 +768,9 @@ def psi_js_drift_by_group(
         F.col("cb") > 0, pb * F.log(F.lit(2.0) * pb / (pa + pb))
     ).otherwise(F.lit(0.0))
     folded = (
-        joined.select(
-            "g",
+        _joined_histograms(ha, hb, by)
+        .select(
+            *by,
             "n_a",
             "n_b",
             F.struct(
@@ -881,7 +779,7 @@ def psi_js_drift_by_group(
                 (F.lit(0.5) * (js_a + js_b)).alias("js_t"),
             ).alias("t"),
         )
-        .groupBy("g", "n_a", "n_b")
+        .groupBy(*by, "n_a", "n_b")
         .agg(
             F.count("*").cast("bigint").alias("n_buckets_used"),
             F.sort_array(F.collect_list("t")).alias("ts"),
@@ -890,14 +788,63 @@ def psi_js_drift_by_group(
     fold = lambda field: F.aggregate(  # noqa: E731
         "ts", F.lit(0.0), lambda acc, s: acc + s[field]
     )
+    # Spark's greatest() IGNORES NULLs: without this gate the eps clamp
+    # would swallow an empty side's NULL proportion and emit a finite psi
     both = F.col("n_a").isNotNull() & F.col("n_b").isNotNull()
     return folded.select(
-        F.col("g").alias(group_col),
+        *by,
         "n_a",
         "n_b",
         "n_buckets_used",
         half_up_round(F.when(both, fold("psi_t")), 6).alias("psi"),
         half_up_round(F.when(both, fold("js_t")), 6).alias("js"),
+    )
+
+
+def psi_js_drift_by_group(
+    a: DataFrame,
+    b: DataFrame,
+    group_col: str,
+    value_col: str,
+    bucket_width: int = 64,
+    n_buckets: int = 32,
+    eps: float = 1e-6,
+) -> DataFrame:
+    """Per-GROUP PSI/JS drift — :func:`psi_js_drift` stratified by
+    ``group_col`` (source, language, shard): one (group, n_a, n_b,
+    n_buckets_used, psi, js) row per group present in either snapshot.
+    This is the form a production monitor actually runs — corpus-level
+    drift hides a single source going bad behind the stable majority;
+    per-source PSI names the offender.
+
+    It is the global operator's kernel keyed by the group: each side is
+    ``value_histogram(by=[group_col])`` and the one PSI/JS kernel
+    (``_psi_js``, shared with :func:`psi_js_from_histograms`) joins,
+    scores and folds per group, so the arithmetic and float-determinism
+    discipline are the global operator's by construction. A group
+    present on only ONE side has no distribution to compare on the
+    other: NULL psi/js (the empty-side contract), with its n_a/n_b
+    showing which side is missing.
+
+    NULL contract (r8 ADVICE): rows with a NULL group are EXCLUDED —
+    NULL never matches itself in the (group, bucket) full-outer join or
+    the totals joins, so a NULL group present in BOTH snapshots would
+    yield two contradictory one-sided rows. NULL values are likewise
+    excluded before bucketing (see :func:`value_histogram`); per-group
+    NULL rates belong to a profile audit, not the drift statistic.
+
+    100 TB shape: both sides collapse to ≤ groups×n_buckets rows via
+    map-side partial aggregation at the scan; joins are (group, bucket)
+    and (group) equi-joins over those collapsed frames; the folds ride
+    per-group bounded frames. Nothing after the scans depends on corpus
+    size — only on |groups|.
+    """
+    by = [group_col]
+    return _psi_js(
+        value_histogram(a, value_col, bucket_width, n_buckets, by),
+        value_histogram(b, value_col, bucket_width, n_buckets, by),
+        eps,
+        by,
     )
 
 

@@ -279,7 +279,8 @@ def minhash_signatures(
     exactly). One explode + one groupBy; signature width is a constant
     factor. num_hashes ≤ 8 with this 64-hex-char family.
     """
-    assert num_hashes <= 8, "hash family provides 8 x 32-bit slices"
+    if num_hashes > 8:
+        raise ValueError(f"num_hashes must be <= 8 (8 x 32-bit hash slices): {num_hashes}")
     # callers that also need the postings (LSH verification) pass them in
     # so the tokenize+shingle explode runs once, not once per consumer
     sh = postings if postings is not None else _shingle_postings(df, text_col, id_col, n, None)

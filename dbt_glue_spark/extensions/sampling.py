@@ -8,12 +8,20 @@ function of the data: stable across runs, partitionings, engines (the
 DuckDB oracle reproduces it bit-for-bit), and incremental loads (a doc's
 in/out decision never changes as the corpus grows).
 
-Scale shape: both operators are stateless projections + filters (hash
-sample) or one bounded-output window (stratified top-fraction) — no
-collect, no global sort, no state.
+Scale shape: each operator is a stateless projection + filter (hash
+samplers, splits), a window keyed by a stratum, shard or bucket
+(stratified, quota and per-group weighted samplers, shuffle, curriculum),
+a top-(k+1) TakeOrderedAndProject (the global weighted sampler) or a
+map-side-combined aggregate down to ≤ |groups| or |buckets| rows
+(mixture, budget and retention planning); ``cluster_safe_split`` adds a
+projection on top of ``dedup.dup_clusters``. No driver collect, no
+global sort, no state. A per-group weighted sampler is its global
+kernel keyed by the group (``by``).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -69,14 +77,33 @@ def train_val_test_split(
     (adding documents never reassigns existing ones), which is exactly what
     leakage-free ML splits require. Narrow projection, no shuffle.
     """
-    assert val_fraction + test_fraction < 1.0
-    frac = _hash_frac(F.col(key_col))
-    train_hi = 1.0 - val_fraction - test_fraction
     return df.withColumn(
-        "split",
+        "split", _hash_split(F.col(key_col), val_fraction, test_fraction)
+    )
+
+
+def _hash_split(key, val_fraction: float, test_fraction: float):
+    """'train'/'val'/'test' from the md5 hash fraction of ``key``.
+
+    ValueError, not assert: user-facing argument validation must survive
+    python -O (asserts are stripped, and an invalid split would silently
+    produce all-val/test output). Each fraction is checked individually:
+    a negative fraction can pass the sum check yet silently shift the
+    split boundaries."""
+    for name, frac in (("val_fraction", val_fraction), ("test_fraction", test_fraction)):
+        if not 0.0 <= frac < 1.0:
+            raise ValueError(f"{name} must be in [0, 1), got {frac}")
+    if not val_fraction + test_fraction < 1.0:
+        raise ValueError(
+            "val_fraction + test_fraction must be < 1, got "
+            f"{val_fraction} + {test_fraction}"
+        )
+    frac = _hash_frac(key)
+    train_hi = 1.0 - val_fraction - test_fraction
+    return (
         F.when(frac < F.lit(train_hi), F.lit("train"))
         .when(frac < F.lit(train_hi + val_fraction), F.lit("val"))
-        .otherwise(F.lit("test")),
+        .otherwise(F.lit("test"))
     )
 
 
@@ -208,27 +235,9 @@ def cluster_safe_split(
     """
     from dbt_glue_spark.extensions.dedup import dup_clusters
 
-    # ValueError, not assert: user-facing argument validation must survive
-    # python -O (asserts are stripped, and an invalid split would silently
-    # produce all-val/test output). Each fraction is checked individually:
-    # a negative fraction can pass the sum check yet silently shift the
-    # split boundaries.
-    for name, frac in (("val_fraction", val_fraction), ("test_fraction", test_fraction)):
-        if not 0.0 <= frac < 1.0:
-            raise ValueError(f"{name} must be in [0, 1), got {frac}")
-    if not val_fraction + test_fraction < 1.0:
-        raise ValueError(
-            "val_fraction + test_fraction must be < 1, got "
-            f"{val_fraction} + {test_fraction}"
-        )
+    # built (and its fractions checked) before dup_clusters runs a job
+    split = _hash_split(F.col("cluster_id"), val_fraction, test_fraction)
     comp = dup_clusters(df, pairs, id_col)
-    frac = _hash_frac(F.col("cluster_id"))
-    train_hi = 1.0 - val_fraction - test_fraction
-    split = (
-        F.when(frac < F.lit(train_hi), F.lit("train"))
-        .when(frac < F.lit(train_hi + val_fraction), F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     return comp.select(F.col(id_col), "cluster_id", split.alias("split"))
 
 
@@ -349,79 +358,101 @@ def weighted_sample(
     100 TB shape: ``orderBy(priority).limit(k+1)`` plans
     TakeOrderedAndProject — per-partition partial top-(k+1), one O(p·k)
     merge, NO global sort and no corpus shuffle. The k+1 survivors host
-    the only window; τ flows as a 1-row broadcast (codebook contract).
+    the only window, which also carries τ: nothing is joined or
+    broadcast.
 
     Output: key, weight (bigint), priority (bigint), est_weight (double).
     Corpora with ≤ k rows return every row with est_weight = weight
     (inclusion probability 1, no τ).
     """
-    # persist the k+1 survivors: tau and the output both consume this
-    # frame, and TakeOrderedAndProject is not an Exchange — unpersisted,
-    # each action would run the corpus-wide top-(k+1) scan twice
-    from dbt_glue_spark.extensions.dedup import _persist
-
     pri = priority_frame(df, key_col, weight_col, seed)
-    top = _persist(
-        pri.orderBy(F.col("priority").asc(), F.col(key_col).asc()).limit(k + 1)
-    )
+    top = pri.orderBy(F.col("priority").asc(), F.col(key_col).asc()).limit(k + 1)
     return priority_sample_finalize(top, key_col, k)
 
 
-def priority_frame(
-    df: DataFrame, key_col: str, weight_col: str, seed: str = "7"
-) -> DataFrame:
-    """(key, weight, priority) frame of :func:`weighted_sample`'s exact
-    integer priority space — shared by the one-shot sampler and the
-    streaming ledger sink (:func:`streaming.pipelines.
-    priority_sample_stream_sink`), which must rank identically for the
-    streamed sample to equal the batch one. See :func:`weighted_sample`
-    for the exactness discipline."""
+def _seeded_hash(key_col: str, seed: str):
+    """int64 md5 hash of ``seed:key`` — the deterministic uniform every
+    weighted sampler draws (the DLT priority and the A-ExpJ variate)."""
     from dbt_glue_spark.extensions.sketches import hash_int
 
-    h = hash_int(F.concat(F.lit(f"{seed}:"), F.col(key_col).cast("string")))
-    w = F.greatest(F.coalesce(F.col(weight_col).cast("bigint"), F.lit(1)), F.lit(1))
+    return hash_int(F.concat(F.lit(f"{seed}:"), F.col(key_col).cast("string")))
+
+
+def _sample_weight(weight_col: str):
+    """Sampling weight as bigint clamped ≥ 1 (NULL counts as 1)."""
+    return F.greatest(
+        F.coalesce(F.col(weight_col).cast("bigint"), F.lit(1)), F.lit(1)
+    )
+
+
+def priority_frame(
+    df: DataFrame,
+    key_col: str,
+    weight_col: str,
+    seed: str = "7",
+    by: Sequence[str] = (),
+) -> DataFrame:
+    """(*by, key, weight, priority) frame of :func:`weighted_sample`'s
+    exact integer priority space — shared by the one-shot sampler, the
+    per-group sampler (``by=[group]``) and the streaming ledger sink
+    (:func:`streaming.pipelines.priority_sample_stream_sink`), which
+    must rank identically for the streamed sample to equal the batch
+    one. See :func:`weighted_sample` for the exactness discipline."""
     return df.select(
+        *by,
         F.col(key_col),
-        w.alias("weight"),
-        ((h + F.lit(1)) * F.lit(1000)).alias("__num"),
+        _sample_weight(weight_col).alias("weight"),
+        ((_seeded_hash(key_col, seed) + F.lit(1)) * F.lit(1000)).alias("__num"),
     ).select(
-        key_col, "weight", F.expr("__num DIV weight").cast("bigint").alias("priority")
+        *by,
+        key_col,
+        "weight",
+        F.expr("__num DIV weight").cast("bigint").alias("priority"),
     )
 
 
 def priority_sample_finalize(
-    top: DataFrame, key_col: str, k: int
+    top: DataFrame, key_col: str, k: int, by: Sequence[str] = ()
 ) -> DataFrame:
-    """Turn a bottom-(k+1)-by-priority frame (the carried sample state —
-    bottom-k merge is associative, so a union-of-bottom-(k+1)s re-topped
-    is exactly the one-shot bottom-(k+1)) into the k-row sample with the
-    unbiased DLT estimator weight: τ = the (k+1)-th priority if present,
-    est_weight = max(w, PRIORITY_SPACE/τ). Fewer than k+1 rows ⇒ no τ ⇒
-    every row kept at est_weight = weight (inclusion probability 1)."""
+    """Turn a priority frame into the k-row sample per ``by`` key (one
+    global sample for ``by=()``) with the unbiased DLT estimator weight:
+    rank by (priority, key) within the key, τ = the (k+1)-th priority
+    if present, est_weight = max(w, PRIORITY_SPACE/τ). Fewer than k+1
+    rows ⇒ no τ ⇒ every row kept at est_weight = weight (inclusion
+    probability 1). τ is a max over the same window partition, so a
+    NULL ``by`` key is a stratum of its own and nothing is joined.
+
+    ``top`` may be pre-cut to the bottom-(k+1) by priority (the carried
+    sample state — bottom-k merge is associative, so a union of
+    bottom-(k+1)s re-topped is exactly the one-shot bottom-(k+1))."""
     from dbt_glue_spark.functions.scalars import half_up_round
 
-    wnd = Window.orderBy(F.col("priority").asc(), F.col(key_col).asc())
-    ranked = top.select("*", F.row_number().over(wnd).alias("__rn"))
-    tau = ranked.agg(
-        F.max(F.when(F.col("__rn") == k + 1, F.col("priority"))).alias("__tau")
+    wnd = Window.partitionBy(*by).orderBy(
+        F.col("priority").asc(), F.col(key_col).asc()
     )
-    est = F.when(
-        F.col("__tau").isNull(), F.col("weight").cast("double")
-    ).otherwise(
+    ranked = top.select("*", F.row_number().over(wnd).alias("__rn")).filter(
+        F.col("__rn") <= k + 1
+    )
+    tau = F.max(F.when(F.col("__rn") == k + 1, F.col("priority"))).over(
+        Window.partitionBy(*by)
+    )
+    est = F.when(tau.isNull(), F.col("weight").cast("double")).otherwise(
         F.greatest(
             F.col("weight").cast("double"),
-            F.lit(float(_PRIORITY_SPACE)) / F.col("__tau").cast("double"),
+            F.lit(float(_PRIORITY_SPACE)) / tau.cast("double"),
         )
     )
     return (
-        ranked.filter(F.col("__rn") <= k)
-        .crossJoin(F.broadcast(tau))
-        .select(
+        ranked.select(
+            *by,
             key_col,
             "weight",
             "priority",
             half_up_round(est, 4).alias("est_weight"),
+            "__rn",
         )
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
     )
 
 
@@ -440,54 +471,28 @@ def weighted_sample_by_group(
     (same integer priority space, same exactness discipline; see that
     docstring for the estimator math).
 
+    It is the global sampler's kernel keyed by the group:
+    :func:`priority_frame` and :func:`priority_sample_finalize` with
+    ``by=[group_col]``, so each group's sample equals
+    :func:`weighted_sample` run on that group's rows alone.
+
+    NULL contract: a NULL group is a stratum of its own (window
+    partitioning groups NULLs together; nothing joins on the group).
+
     100 TB shape: the global top-k becomes a rank window PARTITIONED BY
     GROUP — parallel across strata, per-partition state bounded by the
     group's rows, no global sort and no driver collection. τ stays inside
     each window partition (a conditional max over the k+1 ranked rows),
-    so unlike the global variant nothing is broadcast at all.
+    so nothing is broadcast at all.
 
     Output: group, key, weight (bigint), priority (bigint),
     est_weight (double). Groups with ≤ k rows return all rows with
     est_weight = weight.
     """
-    from dbt_glue_spark.extensions.sketches import hash_int
-    from dbt_glue_spark.functions.scalars import half_up_round
-
-    h = hash_int(F.concat(F.lit(f"{seed}:"), F.col(key_col).cast("string")))
-    w = F.greatest(F.coalesce(F.col(weight_col).cast("bigint"), F.lit(1)), F.lit(1))
-    pri = df.select(
-        F.col(group_col),
-        F.col(key_col),
-        w.alias("weight"),
-        ((h + F.lit(1)) * F.lit(1000)).alias("__num"),
-    ).select(
-        group_col,
-        key_col,
-        "weight",
-        F.expr("__num DIV weight").cast("bigint").alias("priority"),
+    by = [group_col]
+    return priority_sample_finalize(
+        priority_frame(df, key_col, weight_col, seed, by), key_col, k, by
     )
-    wnd = Window.partitionBy(group_col).orderBy(
-        F.col("priority").asc(), F.col(key_col).asc()
-    )
-    ranked = pri.select("*", F.row_number().over(wnd).alias("__rn")).filter(
-        F.col("__rn") <= k + 1
-    )
-    tw = Window.partitionBy(group_col)
-    tau = F.max(F.when(F.col("__rn") == k + 1, F.col("priority"))).over(tw)
-    est = F.when(tau.isNull(), F.col("weight").cast("double")).otherwise(
-        F.greatest(
-            F.col("weight").cast("double"),
-            F.lit(float(_PRIORITY_SPACE)) / tau.cast("double"),
-        )
-    )
-    return ranked.select(
-        group_col,
-        key_col,
-        "weight",
-        "priority",
-        half_up_round(est, 4).alias("est_weight"),
-        "__rn",
-    ).filter(F.col("__rn") <= k).drop("__rn")
 
 
 #: 16^13 = 2^52: (h+1)/2^52 with h+1 <= 2^52 is an EXACT binary division —
@@ -548,14 +553,13 @@ def ppswor_sample_by_group(
 
     Output: group, key, weight (bigint), est_weight (double 4 dp).
     """
-    from dbt_glue_spark.extensions.sketches import hash_int
     from dbt_glue_spark.functions.scalars import half_up_round
 
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
     df = df.filter(F.col(key_col).isNotNull())
-    h = hash_int(F.concat(F.lit(f"{seed}:"), F.col(key_col).cast("string")))
-    w = F.greatest(F.coalesce(F.col(weight_col).cast("bigint"), F.lit(1)), F.lit(1))
+    h = _seeded_hash(key_col, seed)
+    w = _sample_weight(weight_col)
     e = -F.log((h + F.lit(1)).cast("double") / F.lit(_U_DEN)) / w.cast("double")
     pri = df.select(
         F.col(group_col), F.col(key_col), w.alias("weight"), e.alias("__e")

@@ -323,7 +323,8 @@ def countmin_build(
     per DISTINCT value instead of per instance (r12-opt: the md5 bucket
     arithmetic, not the shuffle, is this operator's cost at any scale).
     """
-    assert width & (width - 1) == 0, "width must be a power of two (exact double math)"
+    if width < 1 or width & (width - 1):
+        raise ValueError(f"width must be a power of two (exact double math): {width}")
     # ONE scan: posexplode of the depth-wide bucket array (position = row
     # index) — a union of depth branches would read the input depth times.
     stacked = df.select(
@@ -392,7 +393,8 @@ def bloom_build(
     build-side join pruning: the whole filter is ≤ ``bits`` rows (64 KB
     here) regardless of input size, so it always broadcasts.
     """
-    assert bits & (bits - 1) == 0, "bits must be a power of two (exact double math)"
+    if bits < 1 or bits & (bits - 1):
+        raise ValueError(f"bits must be a power of two (exact double math): {bits}")
     # ONE scan: explode the k positions per value — a union of k branches
     # would read the build side k times.
     return df.select(

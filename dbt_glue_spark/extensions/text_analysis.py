@@ -668,7 +668,8 @@ def dsir_weights(
     """
     from dbt_glue_spark.extensions.sketches import hash_fraction
 
-    assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of two"
+    if n_buckets < 1 or n_buckets & (n_buckets - 1):
+        raise ValueError(f"n_buckets must be a power of two: {n_buckets}")
     ws_stage = df.select(
         F.col(id_col),
         F.expr(target_predicate).alias("is_target"),

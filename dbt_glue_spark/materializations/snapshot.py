@@ -74,12 +74,13 @@ def scd2_apply(
     - deleted keys close their open row only with invalidate_hard_deletes
       (dbt default false).
     """
+    if strategy == "timestamp" and not updated_at:
+        raise ValueError("timestamp strategy requires updated_at")
     if current is None:
         return first_snapshot(source, unique_key, as_of, strategy, updated_at)
 
     data_cols = source.columns
     if strategy == "timestamp":
-        assert updated_at, "timestamp strategy requires updated_at"
         # NULL-guard: if src.updated_at or the open row's dbt_updated_at is
         # NULL the comparison is SQL NULL, which must mean "unchanged" (the
         # reference MERGE leaves the target row untouched when the match

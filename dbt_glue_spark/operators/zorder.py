@@ -26,13 +26,20 @@ from pyspark.sql import functions as F
 _BITS = 16
 
 
+def _check_fits(n_cols: int, bits: int) -> None:
+    if n_cols * bits >= 63:
+        raise ValueError(
+            f"z-value of {n_cols} columns x {bits} bits must fit a signed bigint"
+        )
+
+
 def zorder_value(cols: list[str], mins: dict, maxs: dict, bits: int = _BITS) -> Column:
     """Morton z-value for ``cols`` given per-column (min, max) stats:
     each column is scaled to a ``bits``-bit integer, then bit b of column
     i lands at z-bit ``b * ncols + i``. NULL scales to 0 (sorts with the
     low corner — deterministic, documented)."""
     n = len(cols)
-    assert n * bits < 63, "z-value must fit a signed bigint"
+    _check_fits(n, bits)
     top = (1 << bits) - 1
     terms = []
     for i, c in enumerate(cols):
@@ -63,6 +70,7 @@ def zorder_rewrite(df: DataFrame, cols: list[str], n_partitions: int, bits: int 
     ``n_partitions`` output partitions (→ files). One stats pass (one-row
     aggregate, driver-collected — column count × 16 bytes, never data),
     then one range shuffle on the z-value."""
+    _check_fits(len(cols), bits)
     stats = df.agg(
         *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in cols],
         *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in cols],

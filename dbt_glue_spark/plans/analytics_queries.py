@@ -35,16 +35,23 @@ _WS_K = 256
 _WS_W = "GREATEST(COALESCE(CAST(n_chars AS BIGINT), 1), 1)"
 
 
-@register(
-    "ext_weighted_sample",
-    f"""
+def _ws_pri_cte(cols: str) -> str:
+    """The ``pri`` CTE of the weighted-sample oracles: ``cols``, the
+    clamped weight and the integer DLT priority of every document
+    (sampling.priority_frame)."""
+    return f"""
     WITH pri AS (
-      SELECT doc_id,
+      SELECT {cols},
              {_WS_W} AS weight,
              (({_duck_hash_int("'7:' || CAST(doc_id AS VARCHAR)")} + 1) * 1000)
                // {_WS_W} AS priority
       FROM documents
-    ),
+    ),"""
+
+
+@register(
+    "ext_weighted_sample",
+    _ws_pri_cte("doc_id") + f"""
     ranked AS (
       SELECT *, row_number() OVER (ORDER BY priority, doc_id) AS rn FROM pri
     ),
@@ -477,14 +484,7 @@ _WSG_K = 64
 
 @register(
     "ext_weighted_sample_by_source",
-    f"""
-    WITH pri AS (
-      SELECT source, doc_id,
-             {_WS_W} AS weight,
-             (({_duck_hash_int("'7:' || CAST(doc_id AS VARCHAR)")} + 1) * 1000)
-               // {_WS_W} AS priority
-      FROM documents
-    ),
+    _ws_pri_cte("source, doc_id") + f"""
     ranked AS (
       SELECT *, row_number() OVER (PARTITION BY source
                                    ORDER BY priority, doc_id) AS rn

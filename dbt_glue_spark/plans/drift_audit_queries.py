@@ -30,9 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbt_glue_spark.extensions.sampling import _U_DEN
 from dbt_glue_spark.extensions.sketches import _duck_hash_int
 from dbt_glue_spark.functions.text import words_sql
 from dbt_glue_spark.plans import streams
+from dbt_glue_spark.plans.analytics_queries import _WS_W
 from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.sources.registry import load_table
 
@@ -59,6 +61,16 @@ _B_SNAP = """
 _PSI_W = 64
 _PSI_NB = 32
 _PSI_EPS = 1e-6
+#: per-bucket PSI (eps-clamped) and JS (0·ln0 = 0) terms over the joined
+#: (ca, cb, pa, pb) columns — the term arithmetic of audit._psi_js
+_PSI_JS_TERMS = f"""(GREATEST(pa, {_PSI_EPS!r}) - GREATEST(pb, {_PSI_EPS!r}))
+               * ln(GREATEST(pa, {_PSI_EPS!r}) / GREATEST(pb, {_PSI_EPS!r}))
+               AS psi_t,
+             0.5 * (CASE WHEN ca > 0
+                         THEN pa * ln(2.0 * pa / (pa + pb)) ELSE 0.0 END
+                    + CASE WHEN cb > 0
+                           THEN pb * ln(2.0 * pb / (pa + pb)) ELSE 0.0 END)
+               AS js_t"""
 
 
 def _psi_feature_sql(feature: str, expr: str) -> str:
@@ -71,14 +83,7 @@ def _psi_feature_sql(feature: str, expr: str) -> str:
            FLOOR(SUM(js_t) * 1000000.0 + 0.5) / 1000000.0 AS js
     FROM (
       SELECT bucket, n_a, n_b,
-             (GREATEST(pa, {_PSI_EPS!r}) - GREATEST(pb, {_PSI_EPS!r}))
-               * ln(GREATEST(pa, {_PSI_EPS!r}) / GREATEST(pb, {_PSI_EPS!r}))
-               AS psi_t,
-             0.5 * (CASE WHEN ca > 0
-                         THEN pa * ln(2.0 * pa / (pa + pb)) ELSE 0.0 END
-                    + CASE WHEN cb > 0
-                           THEN pb * ln(2.0 * pb / (pa + pb)) ELSE 0.0 END)
-               AS js_t
+             {_PSI_JS_TERMS}
       FROM (
         SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
                CAST(COALESCE(ca, 0) AS BIGINT) AS ca,
@@ -165,8 +170,6 @@ def ext_psi_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _PW_K = 32
-_PW_W = "GREATEST(COALESCE(CAST(n_chars AS BIGINT), 1), 1)"
-_U_DEN = float(16**13)  # 2^52: (h+1)/2^52 is an exact IEEE division
 
 
 @register(
@@ -174,10 +177,10 @@ _U_DEN = float(16**13)  # 2^52: (h+1)/2^52 is an exact IEEE division
     f"""
     WITH pri AS (
       SELECT source, doc_id,
-             {_PW_W} AS weight,
+             {_WS_W} AS weight,
              -ln(CAST({_duck_hash_int("'7:' || CAST(doc_id AS VARCHAR)")} + 1
                       AS DOUBLE) / {_U_DEN!r})
-               / CAST({_PW_W} AS DOUBLE) AS e
+               / CAST({_WS_W} AS DOUBLE) AS e
       FROM documents
       -- NULL keys carry no deterministic uniform: excluded (r8 ADVICE),
       -- mirroring the operator's key IS NOT NULL filter
@@ -612,14 +615,7 @@ def ext_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
            FLOOR(SUM(js_t) * 1000000.0 + 0.5) / 1000000.0 AS js
     FROM (
       SELECT bucket, n_a, n_b,
-             (GREATEST(pa, {_PSI_EPS!r}) - GREATEST(pb, {_PSI_EPS!r}))
-               * ln(GREATEST(pa, {_PSI_EPS!r}) / GREATEST(pb, {_PSI_EPS!r}))
-               AS psi_t,
-             0.5 * (CASE WHEN ca > 0
-                         THEN pa * ln(2.0 * pa / (pa + pb)) ELSE 0.0 END
-                    + CASE WHEN cb > 0
-                           THEN pb * ln(2.0 * pb / (pa + pb)) ELSE 0.0 END)
-               AS js_t
+             {_PSI_JS_TERMS}
       FROM (
         SELECT COALESCE(ha.bucket, hb.bucket) AS bucket,
                CAST(COALESCE(ca, 0) AS BIGINT) AS ca,
@@ -724,14 +720,7 @@ def streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     terms AS (
       SELECT g, n_a, n_b,
-             (GREATEST(pa, {_PSI_EPS!r}) - GREATEST(pb, {_PSI_EPS!r}))
-               * ln(GREATEST(pa, {_PSI_EPS!r}) / GREATEST(pb, {_PSI_EPS!r}))
-               AS psi_t,
-             0.5 * (CASE WHEN ca > 0
-                         THEN pa * ln(2.0 * pa / (pa + pb)) ELSE 0.0 END
-                    + CASE WHEN cb > 0
-                           THEN pb * ln(2.0 * pb / (pa + pb)) ELSE 0.0 END)
-               AS js_t
+             {_PSI_JS_TERMS}
       FROM jt
     )
     SELECT g AS source, n_a, n_b,

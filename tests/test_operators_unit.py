@@ -9,7 +9,10 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.extensions.dedup import exact_dedup
+from dbt_glue_spark.extensions import sampling
+from dbt_glue_spark.extensions.dedup import exact_dedup, minhash_signatures
+from dbt_glue_spark.extensions.sketches import bloom_build, countmin_build
+from dbt_glue_spark.extensions.text_analysis import dsir_weights
 from dbt_glue_spark.functions.text import normalize_text, tokens, word_shingles
 from dbt_glue_spark.functions.vectors import cosine_sim
 from dbt_glue_spark.materializations.seed import infer_seed_df
@@ -21,6 +24,7 @@ from dbt_glue_spark.operators.schema_evolution import (
     evolve,
 )
 from dbt_glue_spark.operators.temporal import asof_join
+from dbt_glue_spark.operators.zorder import zorder_rewrite, zorder_value
 from dbt_glue_spark.quality.tests import accepted_values, unique
 
 
@@ -881,3 +885,103 @@ def test_word_lexer_resolves_any_text_column_name(spark):
         assert want
         got = run(dashed, "doc-text", "q-score").collect()
         assert sorted(map(tuple, got)) == want
+
+
+_ARG_CHECKS = {
+    "train_val_test_split": (
+        "val_fraction",
+        lambda d: sampling.train_val_test_split(d, "doc_id", 0.6, 0.5),
+    ),
+    "cluster_safe_split": (
+        "val_fraction",
+        lambda d: sampling.cluster_safe_split(
+            d, d.selectExpr("doc_id id_a", "doc_id id_b"), "doc_id", 0.6, 0.5
+        ),
+    ),
+    "minhash_signatures": ("num_hashes", lambda d: minhash_signatures(d, num_hashes=9)),
+    "dsir_weights": ("n_buckets", lambda d: dsir_weights(d, "doc_id = 1", n_buckets=1000)),
+    "countmin_build": ("width", lambda d: countmin_build(d, "doc_id", width=1000)),
+    "bloom_build": ("bits", lambda d: bloom_build(d, "doc_id", bits=1000)),
+    "scd2_apply": (
+        "updated_at",
+        lambda d: scd2_apply(d, d, ["doc_id"], "2024-01-01", strategy="timestamp"),
+    ),
+    "zorder_rewrite": ("bigint", lambda d: zorder_rewrite(d, ["doc_id", "n", "m", "o"], 2)),
+    "zorder_value": ("bigint", lambda d: zorder_value(["doc_id", "n", "m", "o"], {}, {})),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ARG_CHECKS))
+def test_argument_checks_raise_value_error_before_any_job(spark, name):
+    """User-facing argument checks are ValueErrors (an assert vanishes
+    under python -O) and fire before the operator submits a Spark job."""
+    from tests.test_schema_test_pass import jobs_run
+
+    match, call = _ARG_CHECKS[name]
+    docs = spark.createDataFrame(
+        [(1, "a b c d", 1, 2, 3)], "doc_id long, text string, n int, m int, o int"
+    )
+
+    def check():
+        with pytest.raises(ValueError, match=match):
+            call(docs)
+
+    _, n_jobs = jobs_run(spark, check)
+    assert n_jobs == 0
+
+
+def test_weighted_sample_by_group_is_global_sample_per_group(spark):
+    """Every group's stratified priority sample equals the global
+    sampler run on that group's rows alone (same k, same seed): a group
+    larger than k (its own τ), one with ≤ k rows (no τ) and the NULL
+    group, which is a stratum of its own."""
+    from dbt_glue_spark.extensions.sampling import (
+        weighted_sample,
+        weighted_sample_by_group,
+    )
+
+    rows = [("big", i, (i * 37) % 11) for i in range(1, 10)]
+    rows += [("small", 20, 5), ("small", 21, None)]
+    rows += [(None, 30 + i, 3 * i) for i in range(5)]
+    df = spark.createDataFrame(rows, "g string, id long, w long")
+    k = 3
+    got = {}
+    for r in weighted_sample_by_group(df, "g", "id", "w", k=k, seed="3").collect():
+        got.setdefault(r.g, []).append(tuple(r)[1:])
+    assert set(got) == {"big", "small", None}
+    for g, n in (("big", 9), ("small", 2), (None, 5)):
+        part = df.filter(F.col("g").eqNullSafe(F.lit(g))).drop("g")
+        want = weighted_sample(part, "id", "w", k=k, seed="3").collect()
+        assert sorted(got[g]) == sorted(map(tuple, want)), g
+        assert len(got[g]) == min(k, n)
+
+
+def test_psi_js_drift_by_group_is_global_drift_per_group(spark):
+    """Every group's stratified PSI/JS row equals the global operator run
+    on that group's slices alone — including a group present on one
+    side only (NULL psi/js) — and the NULL group is dropped."""
+    from dbt_glue_spark.extensions.audit import psi_js_drift, psi_js_drift_by_group
+
+    a = spark.createDataFrame(
+        [("g1", 1), ("g1", 12), ("g1", 12), ("g1", 35), (None, 3), ("g1", None)],
+        "g string, v bigint",
+    )
+    b = spark.createDataFrame(
+        [("g1", 2), ("g1", 25), ("g1", 25), ("g2", 7), ("g2", 30), (None, 40)],
+        "g string, v bigint",
+    )
+    got = {
+        r.g: tuple(r)[1:]
+        for r in psi_js_drift_by_group(a, b, "g", "v", bucket_width=10, n_buckets=3).collect()
+    }
+    assert set(got) == {"g1", "g2"}
+    assert got["g2"][0] is None and got["g2"][3:] == (None, None)
+    for g in got:
+        ref = psi_js_drift(
+            a.filter(F.col("g") == g).select("v"),
+            b.filter(F.col("g") == g).select("v"),
+            "v",
+            bucket_width=10,
+            n_buckets=3,
+        ).collect()
+        assert [tuple(r)[1:] for r in ref] == [got[g]], g
