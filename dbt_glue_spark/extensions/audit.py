@@ -710,7 +710,9 @@ def psi_js_drift(
     at the end — the union is |features| rows.
 
     Output per feature: (feature, n_a, n_b, n_buckets_used, psi, js) —
-    psi/js half-up 6 dp; a side with zero rows yields NULL psi/js.
+    psi/js half-up 6 dp; a side with zero rows yields NULL psi/js, and a
+    feature empty on both sides still gets its row (NULL totals, 0
+    buckets used).
     """
     if isinstance(value_cols, str):
         value_cols = [value_cols]
@@ -747,7 +749,8 @@ def _psi_js(
 ) -> DataFrame:
     """The one PSI/JS kernel: (*by, n_a, n_b, n_buckets_used, psi, js)
     from two (*by, bucket, cnt) histograms, one row per ``by`` key
-    present on either side (one row for ``by=()``). Per key the
+    present on either side (always one row for ``by=()``, even when both
+    sides are empty). Per key the
     eps-clamped PSI term and the 0·ln0 = 0 JS term of every joined
     bucket fold left to right over the bucket-sorted collected array;
     a key with no rows on one side has no distribution to compare:
@@ -767,6 +770,9 @@ def _psi_js(
     js_b = F.when(
         F.col("cb") > 0, pb * F.log(F.lit(2.0) * pb / (pa + pb))
     ).otherwise(F.lit(0.0))
+    # grouped by ``by`` alone (the totals are one value per key): for
+    # ``by=()`` that is a global aggregate, so two empty sides still
+    # return their one row (NULL totals, 0 buckets, NULL psi/js)
     folded = (
         _joined_histograms(ha, hb, by)
         .select(
@@ -779,8 +785,10 @@ def _psi_js(
                 (F.lit(0.5) * (js_a + js_b)).alias("js_t"),
             ).alias("t"),
         )
-        .groupBy(*by, "n_a", "n_b")
+        .groupBy(*by)
         .agg(
+            F.max("n_a").alias("n_a"),
+            F.max("n_b").alias("n_b"),
             F.count("*").cast("bigint").alias("n_buckets_used"),
             F.sort_array(F.collect_list("t")).alias("ts"),
         )

@@ -29,6 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbt_glue_spark.functions.scalars import half_up_round
+from dbt_glue_spark.functions.vectors import cosine_pairs
+
 
 def _sqdist(a: Column, b: Column) -> Column:
     """Squared L2 distance, sequential fold → deterministic."""
@@ -128,27 +131,20 @@ def kmeans_buckets(vecs: DataFrame, k: int, max_iter: int) -> DataFrame:
 def cluster_edges(
     a: DataFrame, b: DataFrame, threshold: float, cond: Column | None = None
 ) -> DataFrame:
-    """The within-cluster edge: ``a ⋈ b`` (aliased ``a``/``b``) on
-    ``cluster_id`` and ``cond``, kept where the cosine of ``a.v`` and
-    ``b.v``, rounded 4 dp half-up (the catalog float rule, so an ULP can
-    never flip an edge), is ≥ ``threshold``; adds that cosine as ``sim``.
+    """The within-cluster edge: the pair kernel
+    ``vectors.cosine_pairs`` (``a ⋈ b``, aliased ``a``/``b``) on
+    ``cluster_id`` and ``cond``, kept where its ``sim`` — the cosine of
+    ``a.v`` and ``b.v`` rounded 4 dp half-up (the catalog float rule, so
+    an ULP can never flip an edge) — is ≥ ``threshold``.
 
     100 TB shape: the equi-join on cluster_id bounds candidate volume at
     Σ n_c² (size ``k`` so clusters fit a shuffle partition), never
     corpus².
     """
-    from dbt_glue_spark.functions.scalars import half_up_round
-    from dbt_glue_spark.functions.vectors import cosine_sim
-
     on = F.col("a.cluster_id") == F.col("b.cluster_id")
     if cond is not None:
         on = on & cond
-    return (
-        a.alias("a")
-        .join(b.alias("b"), on)
-        .withColumn("sim", half_up_round(cosine_sim(F.col("a.v"), F.col("b.v")), 4))
-        .filter(F.col("sim") >= F.lit(threshold))
-    )
+    return cosine_pairs(a, b, on).filter(F.col("sim") >= F.lit(threshold))
 
 
 def kmeans_assign(
@@ -203,8 +199,6 @@ def semantic_dedup(
     catches near-verbatim text, this catches paraphrases living close in
     embedding space.
     """
-    from dbt_glue_spark.functions.scalars import half_up_round
-
     m = (
         kmeans_buckets(id_vectors(df, id_col, vec_col), k, max_iter)
         .select("id", "cluster_id", half_up_round(F.col("sq_dist"), 6).alias("d2"), "v")
@@ -418,7 +412,6 @@ def _pc1_state(
     persisted, the working set — and the converged 64-row direction
     (pos, vv))."""
     from dbt_glue_spark.extensions.dedup import _persist
-    from dbt_glue_spark.functions.scalars import half_up_round
 
     dims = df.select(
         F.col(id_col).alias("id"),
@@ -502,8 +495,6 @@ def power_iteration_pc1(
     (MLlib gramian, minus RNG). localCheckpoint per round keeps the plan
     constant-size.
     """
-    from dbt_glue_spark.functions.scalars import half_up_round
-
     cd, v = _pc1_state(df, id_col, vec_col, rounds, round_digits)
     return (
         cd.join(F.broadcast(v), "pos")
@@ -542,8 +533,6 @@ def remove_dominant_direction(
     ROUNDED pc1_score (the quantized model value, not an internal
     double), so the oracle replays it exactly.
     """
-    from dbt_glue_spark.functions.scalars import half_up_round
-
     # re-run the shared iteration; cd/v persistence makes the second pass
     # over the staged frames cheap
     cd, v = _pc1_state(df, id_col, vec_col, rounds, round_digits)
@@ -616,8 +605,6 @@ def label_separation(
     aggregation; everything after the first groupBy is ≤ labels×dims rows.
     No vector ever reaches the driver.
     """
-    from dbt_glue_spark.functions.scalars import half_up_round
-
     # NULL vectors excluded up front: posexplode would silently drop them
     # from the scatter sums while groupBy counts kept them — inconsistent
     # n_vecs vs w_ss (and a divergence from the oracle's IS NOT NULL scan)
@@ -695,8 +682,6 @@ def embedding_dim_audit(
     reproducible doubles. One posexplode pass, (pos, x) narrow shuffle
     with map-side partial agg, ≤ dims output rows.
     """
-    from dbt_glue_spark.functions.scalars import half_up_round
-
     # NULL vectors excluded (no geometry; oracle filters IS NOT NULL)
     dims = df.filter(F.col(vec_col).isNotNull()).select(
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("dim", "x")

@@ -395,11 +395,11 @@ def pair_alignment_audit(
     so sim = 1.0 lands in the top bucket. ONE map-only projection + ONE
     groupBy over ≤ 20 bucket rows — no shuffle wider than the histogram.
     """
+    from dbt_glue_spark.functions.scalars import half_up_round
     from dbt_glue_spark.functions.vectors import cosine_sim
 
-    sim = cosine_sim(F.col(caption_vec_col), F.col(image_vec_col))
     # half-up at 4 dp, the catalog rule — oracles mirror this formula
-    sim4 = F.floor(sim * 10000 + F.lit(0.5)) / 10000
+    sim4 = half_up_round(cosine_sim(F.col(caption_vec_col), F.col(image_vec_col)), 4)
     scored = (
         df.filter(
             F.col(caption_vec_col).isNotNull()

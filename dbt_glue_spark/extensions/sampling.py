@@ -366,7 +366,7 @@ def weighted_sample(
     (inclusion probability 1, no τ).
     """
     pri = priority_frame(df, key_col, weight_col, seed)
-    top = pri.orderBy(F.col("priority").asc(), F.col(key_col).asc()).limit(k + 1)
+    top = pri.orderBy(*priority_order(key_col)).limit(k + 1)
     return priority_sample_finalize(top, key_col, k)
 
 
@@ -411,6 +411,14 @@ def priority_frame(
     )
 
 
+def priority_order(key_col: str) -> tuple:
+    """The one priority-sample ranking: ``priority`` then the key, both
+    ascending with NULLs LAST (the DuckDB oracles' order) — a NULL key
+    hashes to a NULL priority and must never take a slot ahead of a real
+    row."""
+    return F.col("priority").asc_nulls_last(), F.col(key_col).asc_nulls_last()
+
+
 def priority_sample_finalize(
     top: DataFrame, key_col: str, k: int, by: Sequence[str] = ()
 ) -> DataFrame:
@@ -427,9 +435,7 @@ def priority_sample_finalize(
     bottom-(k+1)s re-topped is exactly the one-shot bottom-(k+1))."""
     from dbt_glue_spark.functions.scalars import half_up_round
 
-    wnd = Window.partitionBy(*by).orderBy(
-        F.col("priority").asc(), F.col(key_col).asc()
-    )
+    wnd = Window.partitionBy(*by).orderBy(*priority_order(key_col))
     ranked = top.select("*", F.row_number().over(wnd).alias("__rn")).filter(
         F.col("__rn") <= k + 1
     )

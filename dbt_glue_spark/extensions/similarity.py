@@ -14,7 +14,11 @@ Driver-mandated extension (not in the reference). Two tiers:
   tables for higher recall.
 
 All vector math is Catalyst higher-order functions in double precision
-(functions/vectors.py) — no Python UDF in any hot path.
+(functions/vectors.py) — no Python UDF in any hot path. Every joined
+pair is scored by the one pair kernel ``vectors.cosine_pairs`` over
+``clustering.id_vectors`` frames, which takes each norm once per row
+before the join, and every kNN operator ranks through the one top-k
+tail :func:`_top_k`.
 """
 
 from __future__ import annotations
@@ -24,7 +28,7 @@ from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions import clustering
 from dbt_glue_spark.functions.scalars import half_up_round
-from dbt_glue_spark.functions.vectors import cosine_sim
+from dbt_glue_spark.functions.vectors import cosine_pairs, dot
 
 
 def _hyperplane(dim: int, plane_idx: int) -> list[float]:
@@ -43,14 +47,23 @@ def sign_bucket(vec: Column, dim: int, planes: int) -> Column:
     """LSH bucket id: concatenated signs of <vec, hyperplane_i>."""
     bits = []
     for p in range(planes):
-        hp = F.array(*[F.lit(v) for v in _hyperplane(dim, p)])
-        d = F.aggregate(
-            F.zip_with(vec.cast("array<double>"), hp, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        d = dot(vec, F.array(*map(F.lit, _hyperplane(dim, p))))
         bits.append(F.when(d >= 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
+
+
+def _top_k(scored: DataFrame, k: int, sim_col: str = "sim") -> DataFrame:
+    """The one kNN tail over scored ``a``(corpus)/``b``(query) pairs:
+    drop self-matches, rank each query's neighbors by ``sim_col``
+    descending (NULLs last), ties to the lower neighbor id, keep the top
+    ``k``. Returns (query_id, neighbor_id, ``sim_col``, rk)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(sim_col), F.asc("neighbor_id"))
+    return (
+        scored.filter(F.col("a.id") != F.col("b.id"))
+        .select(F.col("b.id").alias("query_id"), F.col("a.id").alias("neighbor_id"), sim_col)
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+    )
 
 
 def knn_bruteforce(
@@ -74,23 +87,9 @@ def knn_bruteforce(
     similarity (and DuckDB's list_inner_product hard-errors on NULL, so
     the oracles filter `embedding IS NOT NULL` to the same effect).
     """
-    q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-    )
-    scored = (
-        c.join(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("sim", half_up_round(cosine_sim(F.col("__qv"), F.col("__cv")), round_digits))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
+    c = clustering.id_vectors(corpus, id_col, vec_col)
+    q = clustering.id_vectors(queries, id_col, vec_col)
+    return _top_k(cosine_pairs(c, F.broadcast(q), digits=round_digits), k)
 
 
 def knn_lsh(
@@ -110,27 +109,12 @@ def knn_lsh(
     2^planes buckets; expected candidate fraction 2^-planes per table pair.
     """
     # NULL vectors excluded (no geometry) — matches the oracle scan filter
-    q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        sign_bucket(F.col(vec_col), dim, planes).alias("__b"),
-    )
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        sign_bucket(F.col(vec_col), dim, planes).alias("__b"),
-    )
-    scored = (
-        c.join(q, "__b")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("sim", half_up_round(cosine_sim(F.col("__qv"), F.col("__cv")), round_digits))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
+    def bucketed(df: DataFrame) -> DataFrame:
+        v = clustering.id_vectors(df, id_col, vec_col)
+        return v.withColumn("__b", sign_bucket(F.col("v"), dim, planes))
+
+    on = F.col("a.__b") == F.col("b.__b")
+    return _top_k(cosine_pairs(bucketed(corpus), bucketed(queries), on, round_digits), k)
 
 
 def knn_ivf(
@@ -162,7 +146,7 @@ def knn_ivf(
     corpus = clustering.id_vectors(corpus, id_col, vec_col)
     centroids = clustering.lloyd_centroids(corpus, n_centroids, 3)
     corpus_cells = clustering.nearest_centroid(corpus, centroids).select(
-        F.col("id").alias("neighbor_id"), F.col("cluster_id").alias("cell"), F.col("v").alias("__cv")
+        "id", "v", F.col("cluster_id").alias("cell")
     )
     # query → nprobe nearest cells
     wq = Window.partitionBy("id").orderBy(F.asc("s.d2"), F.asc("s.cid"))
@@ -170,19 +154,10 @@ def knn_ivf(
         clustering.centroid_scores(clustering.id_vectors(queries, id_col, vec_col), centroids)
         .withColumn("prk", F.row_number().over(wq))
         .filter(F.col("prk") <= nprobe)
-        .select(F.col("id").alias("query_id"), F.col("v").alias("__qv"), F.col("s.cid").alias("cell"))
+        .select("id", "v", F.col("s.cid").alias("cell"))
     )
-    scored = (
-        corpus_cells.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("sim", half_up_round(cosine_sim(F.col("__qv"), F.col("__cv")), round_digits))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
+    on = F.col("a.cell") == F.col("b.cell")
+    return _top_k(cosine_pairs(corpus_cells, F.broadcast(probes), on, round_digits), k)
 
 
 def all_pairs_cosine(
@@ -203,18 +178,14 @@ def all_pairs_cosine(
     NULL vectors are excluded (no geometry; oracle twin filters
     ``embedding IS NOT NULL``).
     """
-    base = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    )
+    base = clustering.id_vectors(df, id_col, vec_col)
     if buckets > 0:
         base = base.withColumn("__b", sign_bucket(F.col("v"), dim, buckets))
         cond = (F.col("a.__b") == F.col("b.__b")) & (F.col("a.id") < F.col("b.id"))
     else:
         cond = F.col("a.id") < F.col("b.id")
-    a, b = base.alias("a"), base.alias("b")
     return (
-        a.join(b, cond)
-        .withColumn("sim", half_up_round(cosine_sim(F.col("a.v"), F.col("b.v")), round_digits))
+        cosine_pairs(base, base, cond, round_digits)
         .filter(F.col("sim") >= threshold)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "sim")
     )
@@ -239,8 +210,6 @@ def centroid_outliers(
     accumulation keeps every sum order-independent, so the score is
     bit-identical across engines and partitionings.
     """
-    from dbt_glue_spark.functions.scalars import half_up_round
-
     pos = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.col(vec_col)).alias("dim", "v"),
@@ -552,31 +521,18 @@ def knn_quantized(
     is ~4× smaller, which is the point at 100 TB — the quantized index fits
     4× more vectors per executor and per broadcast.
     """
-    qz = quantize_embeddings(corpus, vec_col, id_col)
-    qn = qz.select(
-        F.col(id_col).alias("neighbor_id"), F.col("q").alias("__cq")
-    )
-    qq = quantize_embeddings(queries, vec_col, id_col).select(
-        F.col(id_col).alias("query_id"), F.col("q").alias("__qq")
-    )
-    dotq = _int_dot(F.col("__qq"), F.col("__cq")).cast("double")
-    norms = F.sqrt(_int_dot(F.col("__qq"), F.col("__qq")).cast("double")) * F.sqrt(
-        _int_dot(F.col("__cq"), F.col("__cq")).cast("double")
-    )
-    scored = (
-        qn.join(F.broadcast(qq))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "qsim",
-            half_up_round(F.when(norms > 0, dotq / norms), round_digits),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qsim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "qsim", F.col("rk").cast("int").alias("rk"))
-    )
+    # each side's integer norm once per row, before the join
+    def side(df: DataFrame, name: str) -> DataFrame:
+        q = F.col("q")
+        return quantize_embeddings(df, vec_col, id_col).select(
+            F.col(id_col).alias("id"), q, F.sqrt(_int_dot(q, q).cast("double")).alias("__n")
+        ).alias(name)
+
+    norms = F.col("a.__n") * F.col("b.__n")
+    dotq = _int_dot(F.col("a.q"), F.col("b.q")).cast("double")
+    qsim = half_up_round(F.when(norms > 0, dotq / norms), round_digits).alias("qsim")
+    scored = side(corpus, "a").join(F.broadcast(side(queries, "b"))).select("a.id", "b.id", qsim)
+    return _top_k(scored, k, "qsim")
 
 
 def projection_signs(dim: int, out_dim: int) -> list[list[float]]:
@@ -617,16 +573,10 @@ def random_project(
     out_dim/dim of the payload. ``as_array=True`` packs the components
     into one array column ready to feed knn_* / kmeans_* operators.
     """
-    signs = projection_signs(dim, out_dim)
-    comps = []
-    for j, row in enumerate(signs):
-        sgn = F.array(*[F.lit(s) for s in row])
-        p = F.aggregate(
-            F.zip_with(F.col(vec_col).cast("array<double>"), sgn, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        comps.append(half_up_round(p, round_digits).alias(f"p{j}"))
+    comps = [
+        half_up_round(dot(F.col(vec_col), F.array(*map(F.lit, row))), round_digits).alias(f"p{j}")
+        for j, row in enumerate(projection_signs(dim, out_dim))
+    ]
     out = df.select(F.col(id_col), *comps)
     if as_array:
         # a NULL input vector must stay a NULL vector, not an array of

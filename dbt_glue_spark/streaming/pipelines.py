@@ -1152,10 +1152,10 @@ def priority_sample_stream_sink(
     needed and the ledger survives checkpoint loss intact. Commits use
     the versioned atomic ledger protocol (:func:`_ledger_commit`).
     """
-    from dbt_glue_spark.extensions.sampling import priority_frame
+    from dbt_glue_spark.extensions.sampling import priority_frame, priority_order
 
     def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
-        order = (F.col("priority").asc(), F.col(key_col).asc())
+        order = priority_order(key_col)
         bp = (
             priority_frame(batch_df, key_col, weight_col, seed)
             .orderBy(*order)

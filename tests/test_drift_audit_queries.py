@@ -93,14 +93,17 @@ def test_psi_js_bounds_and_disjoint(spark):
 
 def test_psi_js_empty_side_null(spark):
     """A zero-row side yields NULL psi/js (no ANSI divide error), and
-    two empty sides yield an empty frame."""
+    two empty sides still yield the feature's row: NULL totals and
+    psi/js, 0 buckets used."""
     from dbt_glue_spark.extensions.audit import psi_js_drift
 
     a = spark.createDataFrame([(5,), (10,)], "v bigint")
     empty = a.limit(0)
     got = psi_js_drift(a, empty, "v").collect()
     assert len(got) == 1 and got[0].psi is None and got[0].js is None
-    assert psi_js_drift(empty, empty, "v").collect() == []
+    assert [tuple(r) for r in psi_js_drift(empty, empty, "v").collect()] == [
+        ("v", None, None, 0, None, None)
+    ]
 
 
 def test_psi_js_multi_feature_and_validation(spark):
@@ -109,6 +112,11 @@ def test_psi_js_multi_feature_and_validation(spark):
     df = spark.createDataFrame([(1, 100), (2, 200)], "x bigint, y bigint")
     rows = psi_js_drift(df, df, ["x", "y"]).collect()
     assert sorted(r.feature for r in rows) == ["x", "y"]
+    # a feature empty on both sides keeps its row in the union
+    part = df.withColumn("y", F.lit(None).cast("bigint"))
+    rows = {r.feature: tuple(r)[1:] for r in psi_js_drift(part, part, ["x", "y"]).collect()}
+    assert rows["y"] == (None, None, 0, None, None)
+    assert rows["x"] == (2, 2, 1, 0.0, 0.0)
     with pytest.raises(ValueError, match="value_cols"):
         psi_js_drift(df, df, [])
     with pytest.raises(ValueError, match="eps"):

@@ -154,9 +154,37 @@ def test_text_primitives_edges(spark):
     assert rows[3].norm == "h llo world"  # accents stripped to space, collapsed
 
 
-def test_cosine_zero_vector_null(spark):
-    df = spark.createDataFrame([([0.0, 0.0], [1.0, 2.0])], "a array<double>, b array<double>")
-    assert df.select(cosine_sim(F.col("a"), F.col("b")).alias("s")).collect()[0].s is None
+@pytest.mark.parametrize(
+    "a, b, want",
+    [
+        ([0.0, 0.0], [1.0, 2.0], None),  # zero norm: undefined
+        ([1.0, None], [1.0, 2.0], None),  # a NULL element poisons the folds
+        ([1.0, 2.0, 3.0], [1.0, 2.0], None),  # zip_with pads NULL: NULL dot
+        ([1e200, 1.0], [1e200, 2.0], "nan"),  # overflow: Inf / Inf
+    ],
+    ids=["zero", "null_elem", "unequal_len", "overflow"],
+)
+def test_cosine_zero_vector_null(spark, a, b, want):
+    """Per-row ``cosine_sim`` on the undefined-geometry inputs, and the
+    joined-pair kernel (norms taken per row before the join) returns the
+    identical rounded value on the same pair, NULL included."""
+    import math
+
+    from dbt_glue_spark.functions.scalars import half_up_round
+    from dbt_glue_spark.functions.vectors import cosine_pairs
+
+    df = spark.createDataFrame([(a, b)], "a array<double>, b array<double>")
+    row = df.select(
+        cosine_sim(F.col("a"), F.col("b")).alias("s"),
+        half_up_round(cosine_sim(F.col("a"), F.col("b")), 4).alias("s4"),
+    ).collect()[0]
+    if want is None:
+        assert row.s is None
+    else:
+        assert math.isnan(row.s)
+    side = lambda v: spark.createDataFrame([(v,)], "v array<double>")  # noqa: E731
+    pair = cosine_pairs(side(a), side(b)).collect()
+    assert len(pair) == 1 and pair[0].sim == row.s4
 
 
 def test_exact_dedup_keeps_min_id(spark):
@@ -954,6 +982,27 @@ def test_weighted_sample_by_group_is_global_sample_per_group(spark):
         want = weighted_sample(part, "id", "w", k=k, seed="3").collect()
         assert sorted(got[g]) == sorted(map(tuple, want)), g
         assert len(got[g]) == min(k, n)
+
+
+def test_weighted_samplers_rank_null_key_last(spark):
+    """A NULL key hashes to a NULL priority; both samplers rank it LAST
+    (the oracles' NULLS LAST), so it never takes a slot from a real row
+    whatever its weight, and the global and by-group forms agree."""
+    from dbt_glue_spark.extensions.sampling import (
+        priority_frame,
+        weighted_sample,
+        weighted_sample_by_group,
+    )
+
+    df = spark.createDataFrame(
+        [(None, 1), (1, 1000), (2, 1000), (3, 1000)], "id long, w long"
+    )
+    pri = min((r.priority, r.id) for r in priority_frame(df, "id", "w").collect() if r.id)
+    got = [tuple(r) for r in weighted_sample(df, "id", "w", k=1).collect()]
+    assert [r[:3] for r in got] == [(pri[1], 1000, pri[0])]
+    by_g = df.withColumn("g", F.lit("s"))
+    grouped = weighted_sample_by_group(by_g, "g", "id", "w", k=1).collect()
+    assert [tuple(r)[1:] for r in grouped] == got
 
 
 def test_psi_js_drift_by_group_is_global_drift_per_group(spark):
