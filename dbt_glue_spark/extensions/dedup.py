@@ -608,19 +608,6 @@ def hamming_lsh_pairs(
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    buckets: int = 0,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs (see similarity.all_pairs_cosine)."""
-    from dbt_glue_spark.extensions.similarity import all_pairs_cosine
-
-    return all_pairs_cosine(df, vec_col, id_col, threshold, buckets)
-
-
 def dup_clusters(
     df: DataFrame,
     pairs: DataFrame,

@@ -13,6 +13,11 @@ Driver-mandated extension (not in the reference). Two tiers:
   shuffles on the bucket key. Recall < 1.0 by construction; band multiple
   tables for higher recall.
 
+Every approximate index (``knn_lsh``, ``knn_ivf``, ``knn_quantized``) is
+audited by the one operator ``recall_at_k``: its top-k answer
+left-joined to the exact ``knn_bruteforce`` answer on (query, neighbor)
+and folded to per-query recall@k.
+
 All vector math is Catalyst higher-order functions in double precision
 (functions/vectors.py) — no Python UDF in any hot path. Every joined
 pair is scored by the one pair kernel ``vectors.cosine_pairs`` over
@@ -90,6 +95,48 @@ def knn_bruteforce(
     c = clustering.id_vectors(corpus, id_col, vec_col)
     q = clustering.id_vectors(queries, id_col, vec_col)
     return _top_k(cosine_pairs(c, F.broadcast(q), digits=round_digits), k)
+
+
+def recall_at_k(corpus: DataFrame, queries: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """Index-quality audit: per-query recall@k of an approximate top-k
+    answer against exact brute force — the rebuild-time check a
+    production vector index runs on a sampled probe set.
+
+    The exact side is ``knn_bruteforce(corpus, queries, k=k)``; ``approx``
+    is any (query_id, neighbor_id, …) top-k frame over the same inputs.
+    Each exact (query, neighbor) row is left-joined to ``approx`` and
+    counted a hit when the approximate index also returned it, so a
+    query with no approximate answer still gets its row (recall 0) and a
+    query with no geometry (NULL vector) gets none.
+
+    Returns (query_id, n_exact bigint, n_hits bigint, recall_at_<k>):
+    ``n_exact`` is the denominator — below ``k`` when the corpus holds
+    fewer than k other vectors — and the recall is half-up rounded to
+    6 dp.
+    """
+    exact = knn_bruteforce(corpus, queries, k=k).select("query_id", "neighbor_id")
+    approx = approx.select(F.col("query_id"), F.col("neighbor_id").alias("a_neighbor"))
+    joined = exact.join(
+        approx,
+        (exact["query_id"] == approx["query_id"])
+        & (exact["neighbor_id"] == approx["a_neighbor"]),
+        "left",
+    ).select(exact["query_id"].alias("qid"), "neighbor_id", "a_neighbor")
+    return (
+        joined.groupBy("qid")
+        .agg(
+            F.count("*").cast("bigint").alias("n_exact"),
+            F.sum(F.when(F.col("a_neighbor").isNotNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_hits"),
+        )
+        .select(
+            F.col("qid").alias("query_id"),
+            "n_exact",
+            "n_hits",
+            half_up_round(F.col("n_hits") / F.col("n_exact"), 6).alias(f"recall_at_{k}"),
+        )
+    )
 
 
 def knn_lsh(

@@ -15,8 +15,26 @@ or a count, so cross-engine parity is exact with no decimal staging.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def ohlc_aggregates() -> list[Column]:
+    """The six OHLC bar aggregates over a projected ``__v`` (the value as
+    double) and ``__o`` (its total order ``struct(ts, id)``): open and
+    close as ``min_by``/``max_by`` over ``__o``, high, low, hl_range and
+    n_events. The batch bars (``ohlc_bars``, a ``date_trunc`` bucket) and
+    their streaming twin (``streaming.pipelines.ohlc_stream``, an
+    event-time ``window``) both fold with this one list, so the twin
+    equals the batch operator by construction."""
+    return [
+        F.min_by("__v", "__o").alias("open"),
+        F.max("__v").alias("high"),
+        F.min("__v").alias("low"),
+        F.max_by("__v", "__o").alias("close"),
+        (F.max("__v") - F.min("__v")).alias("hl_range"),
+        F.count("*").cast("bigint").alias("n_events"),
+    ]
 
 
 def ohlc_bars(
@@ -53,14 +71,7 @@ def ohlc_bars(
             order.alias("__o"),
         )
         .groupBy(key_col, f"bar_{bucket}")
-        .agg(
-            F.min_by("__v", "__o").alias("open"),
-            F.max("__v").alias("high"),
-            F.min("__v").alias("low"),
-            F.max_by("__v", "__o").alias("close"),
-            (F.max("__v") - F.min("__v")).alias("hl_range"),
-            F.count("*").cast("bigint").alias("n_events"),
-        )
+        .agg(*ohlc_aggregates())
     )
 
 

@@ -285,39 +285,11 @@ def ext_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ext_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_glue_spark.extensions import similarity
-    from dbt_glue_spark.functions.scalars import half_up_round
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    exact = similarity.knn_bruteforce(emb, queries, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    approx = similarity.knn_ivf(
-        emb, queries, k=5, n_centroids=8, nprobe=3
-    ).select(F.col("query_id"), F.col("neighbor_id").alias("a_neighbor"))
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["query_id"])
-        & (exact["neighbor_id"] == approx["a_neighbor"]),
-        "left",
-    ).select(exact["query_id"].alias("qid"), "neighbor_id", "a_neighbor")
-    return (
-        joined.groupBy("qid")
-        .agg(
-            F.count("*").cast("bigint").alias("n_exact"),
-            F.sum(F.when(F.col("a_neighbor").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_hits"),
-        )
-        .select(
-            F.col("qid").alias("query_id"),
-            "n_exact",
-            "n_hits",
-            half_up_round(F.col("n_hits") / F.col("n_exact"), 6).alias(
-                "recall_at_5"
-            ),
-        )
-    )
+    approx = similarity.knn_ivf(emb, queries, k=5, n_centroids=8, nprobe=3)
+    return similarity.recall_at_k(emb, queries, approx, k=5)
 
 
 @register(
@@ -509,39 +481,11 @@ _QUANT_CTE = """
 )
 def ext_quantized_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_glue_spark.extensions import similarity
-    from dbt_glue_spark.functions.scalars import half_up_round
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    exact = similarity.knn_bruteforce(emb, queries, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    approx = similarity.knn_quantized(emb, queries, k=5).select(
-        F.col("query_id"), F.col("neighbor_id").alias("a_neighbor")
-    )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["query_id"])
-        & (exact["neighbor_id"] == approx["a_neighbor"]),
-        "left",
-    ).select(exact["query_id"].alias("qid"), "neighbor_id", "a_neighbor")
-    return (
-        joined.groupBy("qid")
-        .agg(
-            F.count("*").cast("bigint").alias("n_exact"),
-            F.sum(F.when(F.col("a_neighbor").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_hits"),
-        )
-        .select(
-            F.col("qid").alias("query_id"),
-            "n_exact",
-            "n_hits",
-            half_up_round(F.col("n_hits") / F.col("n_exact"), 6).alias(
-                "recall_at_5"
-            ),
-        )
-    )
+    approx = similarity.knn_quantized(emb, queries, k=5)
+    return similarity.recall_at_k(emb, queries, approx, k=5)
 
 
 @register(

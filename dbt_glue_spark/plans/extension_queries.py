@@ -507,10 +507,10 @@ def _bucket_sql(col: str, planes: int = 4, dim: int = 64) -> str:
     "0.35 sits inside this synthetic corpus's similarity range (max "
     "~0.51) so the gate checks real pair values, not an empty set. The "
     "exact all-pairs variant (buckets=0) stays available for small "
-    "filtered sets via dedup.embedding_near_dup_pairs.",
+    "filtered sets via similarity.all_pairs_cosine.",
 )
 def ext_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.embedding_near_dup_pairs(
+    return similarity.all_pairs_cosine(
         load_table(spark, sf_dir, "embeddings"), threshold=0.35, buckets=4
     )
 
@@ -4186,7 +4186,7 @@ def ext_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ANN index-quality audit: per-query recall@5 of the LSH index "
     "against exact brute force — the monitoring query a production "
     "vector index runs on a sampled probe set after every rebuild "
-    "(composition of knn_lsh and knn_bruteforce; oracle replays both "
+    "(similarity.recall_at_k over knn_lsh; oracle replays both paths "
     "with identical plane literals). Probe cost only: the corpus is "
     "scanned twice for the sampled queries, never joined corpus²; at "
     "100 TB the probe set stays small and broadcast.",
@@ -4194,37 +4194,8 @@ def ext_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    exact = similarity.knn_bruteforce(emb, queries, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    approx = similarity.knn_lsh(emb, queries, k=5, planes=4, dim=64).select(
-        F.col("query_id"), F.col("neighbor_id").alias("a_neighbor")
-    )
-    from dbt_glue_spark.functions.scalars import half_up_round
-
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["query_id"])
-        & (exact["neighbor_id"] == approx["a_neighbor"]),
-        "left",
-    ).select(exact["query_id"].alias("qid"), "neighbor_id", "a_neighbor")
-    return (
-        joined.groupBy("qid")
-        .agg(
-            F.count("*").cast("bigint").alias("n_exact"),
-            F.sum(F.when(F.col("a_neighbor").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_hits"),
-        )
-        .select(
-            F.col("qid").alias("query_id"),
-            "n_exact",
-            "n_hits",
-            half_up_round(F.col("n_hits") / F.col("n_exact"), 6).alias(
-                "recall_at_5"
-            ),
-        )
-    )
+    approx = similarity.knn_lsh(emb, queries, k=5, planes=4, dim=64)
+    return similarity.recall_at_k(emb, queries, approx, k=5)
 
 
 def _join_size_oracle() -> str:

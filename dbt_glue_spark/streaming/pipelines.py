@@ -107,14 +107,17 @@ def ohlc_stream(
     """Streaming twin of ``timeseries.ohlc_bars``: per-series tumbling
     event-time OHLC bars with a late-data watermark.
 
-    open/close use the same ``min_by``/``max_by`` over the
-    (ts, event_id) total order as the batch operator — both are
-    declarative aggregates, so the state store carries one partial
+    It folds with the batch operator's own aggregate list
+    (``timeseries.ohlc_aggregates``: ``min_by``/``max_by`` over the
+    (ts, event_id) total order for open/close) — all declarative
+    aggregates, so the state store carries one partial
     (6 fields) per open (series, window) group and merges micro-batches
     associatively, exactly like the batch map-side combine. Sum-free
     (order statistics + count), so the Kappa equivalence to the batch
     oracle is float-exact.
     """
+    from dbt_glue_spark.extensions.timeseries import ohlc_aggregates
+
     src = _with_event_time_watermark(events_stream, "ts", watermark)
     order = F.struct(F.col("ts"), F.col("event_id"))
     v = F.col("value").cast("double")
@@ -123,14 +126,7 @@ def ohlc_stream(
             "event_type", "ts", v.alias("__v"), order.alias("__o")
         )
         .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.min_by("__v", "__o").alias("open"),
-            F.max("__v").alias("high"),
-            F.min("__v").alias("low"),
-            F.max_by("__v", "__o").alias("close"),
-            (F.max("__v") - F.min("__v")).alias("hl_range"),
-            F.count("*").cast("bigint").alias("n_events"),
-        )
+        .agg(*ohlc_aggregates())
         .select(
             "event_type",
             F.col("w.start").alias("bar_hour"),

@@ -36,6 +36,62 @@ def test_lsh_recall_vs_bruteforce(spark, sf_dir):
     assert hits > 0  # same-bucket probing finds a nonzero share of true NNs
 
 
+# ---- recall_at_k ------------------------------------------------------------
+
+_DEG = [0, 10, 25, 45, 70, 100, 140, 190]  # vec_id i sits at _DEG[i] degrees
+
+
+def _fan(spark, n=len(_DEG)):
+    """Unit 2-d vectors at distinct angles (no cosine ties) plus vec_id 99
+    with a NULL embedding."""
+    import math
+
+    rows = [
+        (i, [math.cos(math.radians(d)), math.sin(math.radians(d))])
+        for i, d in enumerate(_DEG[:n])
+    ]
+    return spark.createDataFrame(rows + [(99, None)], "vec_id long, embedding array<double>")
+
+
+def _recall_rows(df, k):
+    return {r.query_id: (r.n_exact, r.n_hits, r[f"recall_at_{k}"]) for r in df.collect()}
+
+
+def test_recall_at_k_matches_exact_and_counts_hits(spark):
+    corpus = _fan(spark)
+    queries = corpus.filter(F.col("vec_id").isin(0, 3, 99))
+    exact = similarity.knn_bruteforce(corpus, queries, k=3)
+    # nearest by angle: 0° → 10°, 25°, 45°; 45° → 25°, 70°, 10°
+    assert _topk_sets(exact) == {0: {1, 2, 3}, 3: {2, 4, 1}}
+
+    out = similarity.recall_at_k(corpus, queries, exact, k=3)
+    assert out.columns == ["query_id", "n_exact", "n_hits", "recall_at_3"]
+    types = [f.dataType.simpleString() for f in out.schema.fields]
+    assert types[1:] == ["bigint", "bigint", "double"]
+    # approx == exact: full recall; the NULL-embedding query gets no row
+    assert _recall_rows(out, 3) == {0: (3, 3, 1.0), 3: (3, 3, 1.0)}
+
+    # drop query 0's true neighbour 3, add the false neighbour 7
+    approx = spark.createDataFrame(
+        [(0, 1), (0, 2), (0, 7), (3, 2), (3, 4), (3, 1)], "query_id long, neighbor_id long"
+    )
+    got = _recall_rows(similarity.recall_at_k(corpus, queries, approx, k=3), 3)
+    assert got == {0: (3, 2, 0.666667), 3: (3, 3, 1.0)}
+
+    # an index that answers nothing still reports every query, at recall 0
+    got = _recall_rows(similarity.recall_at_k(corpus, queries, exact.limit(0), k=3), 3)
+    assert got == {0: (3, 0, 0.0), 3: (3, 0, 0.0)}
+
+
+def test_recall_at_k_denominator_is_exact_count(spark):
+    # 3 vectors: each query has only 2 other neighbours, so n_exact = 2 < k
+    corpus = _fan(spark, n=3)
+    queries = corpus.filter(F.col("vec_id") == 0)
+    approx = spark.createDataFrame([(0, 1)], "query_id long, neighbor_id long")
+    got = _recall_rows(similarity.recall_at_k(corpus, queries, approx, k=3), 3)
+    assert got == {0: (2, 1, 0.5)}
+
+
 # ---- k-means ---------------------------------------------------------------
 
 

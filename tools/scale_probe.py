@@ -431,8 +431,10 @@ def _emb_inputs(spark, sf_dir, factor, scratch):
         spark, factor, scratch, "emb", _emb_row, "vec_id long, embedding array<double>, q long"
     )
     # k scales with the corpus (the SemDeDup contract: per-cluster
-    # candidate volume stays bounded)
-    return SimpleNamespace(emb=emb, k=10 * max(factor, 1)), emb.count()
+    # candidate volume stays bounded); the recall audits take the
+    # catalog specs' fixed 10-vector probe set
+    probes = emb.filter(F.col("vec_id") < 10)
+    return SimpleNamespace(emb=emb, k=10 * max(factor, 1), probes=probes), emb.count()
 
 
 def _mmr_inputs(spark, sf_dir, factor, scratch):
@@ -549,21 +551,6 @@ def _preference_pairs(docs):
         "source",
         F.when(first_wins, F.col("t0")).otherwise(F.col("t1")).alias("chosen_text"),
         F.when(first_wins, F.col("t1")).otherwise(F.col("t0")).alias("rejected_text"),
-    )
-
-
-def _recall_audit(emb, approx_knn):
-    # the catalog spec's recall join: (query_id, neighbor) hit-matching,
-    # not a per-query cross product
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = similarity.knn_bruteforce(emb, queries, k=5).select("query_id", "neighbor_id")
-    approx = approx_knn(emb, queries).select(
-        F.col("query_id"), F.col("neighbor_id").alias("a_n")
-    )
-    return exact.join(
-        approx,
-        (exact["query_id"] == approx["query_id"]) & (exact["neighbor_id"] == approx["a_n"]),
-        "left",
     )
 
 
@@ -802,13 +789,18 @@ FAMILIES: dict[str, Family] = {
             ),
             (
                 "ivf_recall_audit",
-                lambda i: _recall_audit(
-                    i.emb, lambda e, q: similarity.knn_ivf(e, q, k=5, n_centroids=16, nprobe=4)
+                lambda i: similarity.recall_at_k(
+                    i.emb,
+                    i.probes,
+                    similarity.knn_ivf(i.emb, i.probes, k=5, n_centroids=16, nprobe=4),
+                    k=5,
                 ),
             ),
             (
                 "quantized_recall_audit",
-                lambda i: _recall_audit(i.emb, lambda e, q: similarity.knn_quantized(e, q, k=5)),
+                lambda i: similarity.recall_at_k(
+                    i.emb, i.probes, similarity.knn_quantized(i.emb, i.probes, k=5), k=5
+                ),
             ),
             ("semantic_dedup_recall_sliced", _dedup_recall_sliced),
         ],
