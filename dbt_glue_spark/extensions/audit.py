@@ -151,20 +151,11 @@ def source_overlap_matrix(
     |groups|² per hash — never docs². Shuffles carry hashes, never
     shingle text (plan-gated). Output is ≤ |groups|² rows.
     """
-    from dbt_glue_spark.functions.text import tokenize_once, word_shingles
-
-    staged = tokenize_once(df, text_col, [F.col(by)])
-    src_sh = (
-        staged.select(
-            F.col(by), F.explode(word_shingles(F.col("toks"), n)).alias("shingle")
-        )
-        .select(F.col(by), F.md5("shingle").alias("h"))
-        .distinct()
-    )
     from dbt_glue_spark.extensions.dedup import _persist
-    from dbt_glue_spark.functions.scalars import half_up_round
+    from dbt_glue_spark.functions.scalars import jaccard
+    from dbt_glue_spark.functions.text import shingle_postings
 
-    src_sh = _persist(src_sh)
+    src_sh = _persist(shingle_postings(df, text_col, [F.col(by)], n).distinct())
     sizes = src_sh.groupBy(by).agg(F.count("*").alias("n_sh"))
     a = src_sh.alias("a")
     b = src_sh.alias("b")
@@ -192,11 +183,7 @@ def source_overlap_matrix(
             "source_a",
             "source_b",
             F.col("n_shared").cast("bigint").alias("n_shared"),
-            half_up_round(
-                F.col("n_shared")
-                / (F.col("sh_a") + F.col("sh_b") - F.col("n_shared")),
-                6,
-            ).alias("jaccard"),
+            jaccard("n_shared", "sh_a", "sh_b").alias("jaccard"),
         )
     )
 

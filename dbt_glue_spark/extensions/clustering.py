@@ -260,7 +260,6 @@ def semantic_keep_best(
     threshold: float = 0.30,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_cc_iter: int = 50,
 ) -> DataFrame:
     """Semantic dedup with QUALITY-ARGMAX survivor selection — the
     embedding-space twin of ``dedup.cluster_keep_best`` (and the
@@ -312,9 +311,7 @@ def semantic_keep_best(
         id_col=id_col, vec_col=vec_col,
     )
     quality = df.select(F.col(id_col).alias("id"), F.col(quality_col).alias("__q"))
-    comps = dup_clusters(
-        m.select(F.col("id").alias(id_col)), pairs, id_col, max_cc_iter
-    ).select(F.col(id_col).alias("id"), F.col("cluster_id").alias("__class"))
+    comps = dup_clusters(m.select(F.col("id").alias(id_col)), pairs, id_col).select(F.col(id_col).alias("id"), F.col("cluster_id").alias("__class"))
     scored = m.select("id").join(quality, "id").join(comps, "id")
     return keep_best_by(scored, ["__class"], "id", "__q")
 

@@ -209,7 +209,6 @@ def paired_keep_best(
     quality_col: str = "quality",
     max_hamming: int = 2,
     bands: int = 4,
-    max_iter: int = 50,
 ) -> DataFrame:
     """Paired-modality dedup with CONSISTENT survivor selection: two
     pairs are duplicates iff their captions are exact-text duplicates
@@ -255,9 +254,7 @@ def paired_keep_best(
         bands,
         max_hamming,
     ).select("id_a", "id_b")
-    comps = dup_clusters(
-        sigs.select(F.col(id_col)), pairs, id_col, max_iter
-    ).select(
+    comps = dup_clusters(sigs.select(F.col(id_col)), pairs, id_col).select(
         F.col(id_col), F.col("cluster_id").alias("image_cluster")
     )
     scored = sigs.join(comps, id_col).join(

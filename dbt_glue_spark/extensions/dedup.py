@@ -10,6 +10,11 @@ these are the driver-mandated extensions, designed Spark-first for 100 TB:
 - all hashing is ``md5`` of deterministic strings → reproducible across
   runs, engines (the DuckDB oracle computes the identical signatures), and
   cluster sizes;
+- every shingle overlap joins one posting frame,
+  ``functions.text.shingle_postings`` — (id, 16-byte ``h``) rows, so no
+  shuffle carries shingle text — and every overlap ratio it reports is
+  ``functions.scalars.jaccard``; ``ngram_jaccard_pairs`` and
+  ``containment_pairs`` share one posting self-join;
 - no Python UDFs anywhere in the hot path.
 
 Scale notes (100 TB): the shingle explode multiplies rows by ~doc length;
@@ -26,9 +31,10 @@ from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from dbt_glue_spark.functions.scalars import half_up_round
+from dbt_glue_spark.functions.scalars import half_up_round, jaccard
 from dbt_glue_spark.functions.text import (
     normalize_text,
+    shingle_postings,
     tokenize_once,
     tokens,
     word_shingles,
@@ -172,23 +178,6 @@ def keep_best_by(
     )
 
 
-def _shingle_postings(
-    df: DataFrame, text_col: str, id_col: str, n: int, df_freq_cutoff: int | None
-) -> DataFrame:
-    """(id, shingle) inverted-index postings, optionally dropping
-    stop-shingles whose document frequency exceeds ``df_freq_cutoff``."""
-    staged = tokenize_once(df, text_col, [F.col(id_col).alias("id")])
-    sh = staged.select(
-        "id", F.explode(word_shingles(F.col("toks"), n)).alias("shingle")
-    )
-    if df_freq_cutoff is not None:
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("df_"))
-        sh = (
-            sh.join(freq.filter(F.col("df_") <= df_freq_cutoff), "shingle", "left_semi")
-        )
-    return sh
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -208,25 +197,26 @@ def ngram_jaccard_pairs(
     """
     # postings feed the join twice (a/b sides) plus the per-doc size agg —
     # persist so the tokenize+shingle explode runs once, not three times
-    # (measured ~2x on the sf0.1 corpus; same discipline as minhash).
-    # Shingles are md5-hashed AT THE SOURCE so the inverted self-join —
-    # the widest exchange in the plan — carries 16-byte keys instead of
-    # ~50-byte shingle text (the r8 LSH / r9 prefix-Jaccard discipline);
-    # intersection counts are identical (collision mass negligible).
+    # (measured ~2x on the sf0.1 corpus; same discipline as minhash)
     sh = _persist(
-        _shingle_postings(df, text_col, id_col, n, df_freq_cutoff).select(
-            "id", F.unhex(F.md5("shingle")).alias("__shh")
-        )
+        shingle_postings(df, text_col, [F.col(id_col).alias("id")], n, df_freq_cutoff)
     )
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
+    return _jaccard_at_least(_posting_overlaps(sh), sizes, threshold)
+
+
+def _posting_overlaps(sh: DataFrame) -> DataFrame:
+    """The one posting self-join: (id_a, id_b, n_common) for every pair
+    id_a < id_b of ``sh`` (id, h) postings sharing ≥ 1 shingle hash —
+    candidate generation by inverted index, so only docs that share a
+    posting ever meet."""
     a = sh.alias("a")
     b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.__shh") == F.col("b.__shh")) & (F.col("a.id") < F.col("b.id")))
+    return (
+        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.id") < F.col("b.id")))
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").alias("n_common"))
     )
-    return _jaccard_at_least(inter, sizes, threshold)
 
 
 def _jaccard_at_least(
@@ -249,13 +239,7 @@ def _jaccard_at_least(
         .join(
             sizes.withColumnsRenamed({"id": "id_b", "n_sh": "sh_b"}), "id_b"
         )
-        .withColumn(
-            "jaccard",
-            half_up_round(
-                F.col("n_common") / (F.col("sh_a") + F.col("sh_b") - F.col("n_common")),
-                6,
-            ),
-        )
+        .withColumn("jaccard", jaccard("n_common", "sh_a", "sh_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -267,7 +251,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     n: int = 3,
     num_hashes: int = 8,
-    postings: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash signatures: h_i(doc) = min over shingles of a 32-bit hash
     slice — hash family = 8-hex-char substrings of
@@ -281,9 +264,12 @@ def minhash_signatures(
     """
     if num_hashes > 8:
         raise ValueError(f"num_hashes must be <= 8 (8 x 32-bit hash slices): {num_hashes}")
-    # callers that also need the postings (LSH verification) pass them in
-    # so the tokenize+shingle explode runs once, not once per consumer
-    sh = postings if postings is not None else _shingle_postings(df, text_col, id_col, n, None)
+    # the one shingle-text consumer: the hash family is defined over the
+    # shingle text, so this explode cannot share the hashed postings
+    staged = tokenize_once(df, text_col, [F.col(id_col).alias("id")])
+    sh = staged.select(
+        "id", F.explode(word_shingles(F.col("toks"), n)).alias("shingle")
+    )
     # barrier: without it CollapseProject inlines the two md5 calls into
     # every substring site (2*num_hashes evaluations per row)
     wide = F.concat(
@@ -373,18 +359,15 @@ def minhash_lsh_pairs(
 
     Returns (id_a, id_b, jaccard), id_a < id_b.
     """
-    # The signature table feeds both sides of the band self-join and the
-    # postings feed both sides of the verification join — persist them so
-    # each subtree computes once per action (ContextCleaner drops the cache
-    # when the frames are GC'd). Signatures are 1 row/doc (tiny at any
-    # scale); postings are ~doc_len rows/doc and spill to disk if needed.
-    # sh NOT persisted (r12 A/B: 3.10 s vs 3.45 s cached — map-only
-    # postings recompute beats caching the exploded rows; re-measured
-    # with AQE coalescing cached frames, sf0.1, 4 CPUs: 4.15 s persisted
-    # vs 3.60 s not, so still not worth it); sig stays persisted
-    # (1 row/doc, feeds the band self-join twice)
-    sh = _shingle_postings(df, text_col, id_col, n, None)
-    sig = _persist(minhash_signatures(df, text_col, id_col, n, num_hashes, postings=sh))
+    # The signature table feeds both sides of the band self-join —
+    # persisted (1 row/doc, tiny at any scale; ContextCleaner drops the
+    # cache when the frame is GC'd). The hashed postings feed both sides
+    # of the verification join but are NOT persisted (r12 A/B: 3.10 s vs
+    # 3.45 s cached — map-only postings recompute beats caching the
+    # exploded rows; re-measured with AQE coalescing cached frames, sf0.1,
+    # 4 CPUs: 4.15 s persisted vs 3.60 s not, so still not worth it)
+    sh = shingle_postings(df, text_col, [F.col(id_col).alias("id")], n)
+    sig = _persist(minhash_signatures(df, text_col, id_col, n, num_hashes))
     # candidate pairs: docs sharing any band key (dedup across bands)
     stacked = _minhash_bands(sig, num_hashes, bands)
     star_pairs = None
@@ -445,9 +428,8 @@ def minhash_lsh_pairs(
     cand = _persist(bucket_pairs.distinct())
     # Exact-Jaccard verification restricted to candidates: fan candidate
     # pairs out over id_a's postings, then equi-join id_b's postings on
-    # (id_b, shingle). Cost ∝ |candidates| × shingles/doc — independent of
-    # corpus size, unlike an all-pairs verification. Reuses the postings
-    # persisted above (one tokenize+shingle pass for the whole pipeline).
+    # (id_b, h). Cost ∝ |candidates| × shingles/doc — independent of
+    # corpus size, unlike an all-pairs verification.
     # Shingle sizes are computed ONLY for candidate-incident docs (semi-
     # join first): `sh.groupBy(id)` alone would be one row per document —
     # and a forced F.broadcast of that, as this used to do, bypasses
@@ -466,19 +448,15 @@ def minhash_lsh_pairs(
         .groupBy("id")
         .agg(F.count("*").alias("n_sh"))
     )
-    # the intersection join carries md5(shingle) (16-byte binary), not the
-    # shingle text: it is computed map-side from the cached postings, the
-    # count semantics are identical (collision mass negligible — the
-    # contamination ledger uses the same argument), and the shuffle bytes
-    # of the widest exchange in the pipeline roughly halve — measured at
-    # the 64× local memory boundary where this operator's spill regime
-    # begins (SCALE.md round-8)
-    shingle_h = F.unhex(F.md5("shingle")).alias("__shh")
-    sh_a = sh.select(F.col("id").alias("id_a"), shingle_h)
-    sh_b = sh.select(F.col("id").alias("id_b"), shingle_h)
+    # the intersection join carries the 16-byte posting hash, not the
+    # shingle text: the shuffle bytes of the widest exchange in the
+    # pipeline roughly halve — measured at the 64× local memory boundary
+    # where this operator's spill regime begins (SCALE.md round-8)
+    sh_a = sh.withColumnRenamed("id", "id_a")
+    sh_b = sh.withColumnRenamed("id", "id_b")
     inter = (
         cand.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "__shh"])
+        .join(sh_b, ["id_b", "h"])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_common"))
     )
@@ -763,7 +741,6 @@ def cluster_keep_best(
     pairs: DataFrame,
     id_col: str = "doc_id",
     score_col: str = "quality",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Quality-argmax survivor selection per NEAR-DUP CLUSTER — the
     cluster-level form of :func:`exact_dedup_keep_best` (the
@@ -784,7 +761,7 @@ def cluster_keep_best(
     keep pass adds ONE map-side-combining groupBy on the cluster id
     carrying (bigint, bigint, bigint) rows.
     """
-    comps = dup_clusters(df, pairs, id_col, max_iter)
+    comps = dup_clusters(df, pairs, id_col)
     scored = comps.join(df.select(F.col(id_col), F.col(score_col).alias("__q")), id_col)
     return keep_best_by(scored, ["cluster_id"], id_col, "__q", keep_by=True)
 
@@ -809,17 +786,10 @@ def contamination_pairs(
     deliberate: a 50-token leak inside a 10k-token training doc has
     negligible Jaccard but is still contamination.
     """
-    # md5 the shingles map-side on BOTH corpora so the cross-corpus join
-    # carries 16-byte keys, never shingle text (the module-wide shuffle
-    # discipline); the ≥ min_common count semantics are identical
-    sh_a = _shingle_postings(corpus_a, text_col, id_col, n, None).select(
-        F.col("id").alias("a_id"), F.unhex(F.md5("shingle")).alias("__shh")
-    )
-    sh_b = _shingle_postings(corpus_b, text_col, id_col, n, None).select(
-        F.col("id").alias("b_id"), F.unhex(F.md5("shingle")).alias("__shh")
-    )
+    sh_a = shingle_postings(corpus_a, text_col, [F.col(id_col).alias("a_id")], n)
+    sh_b = shingle_postings(corpus_b, text_col, [F.col(id_col).alias("b_id")], n)
     return (
-        sh_a.join(sh_b, "__shh")
+        sh_a.join(sh_b, "h")
         .groupBy("a_id", "b_id")
         .agg(F.count("*").alias("n_common"))
         .filter(F.col("n_common") >= min_common)
@@ -1151,11 +1121,7 @@ def ngram_dup_fraction(
     construction (word_shingles array_distinct). Docs with < n tokens
     have no shingles and are absent, same as the oracle's GROUP BY.
     """
-    post = _persist(
-        _shingle_postings(df, text_col, id_col, n, None).select(
-            "id", F.unhex(F.md5("shingle")).alias("h")
-        )
-    )
+    post = _persist(shingle_postings(df, text_col, [F.col(id_col).alias("id")], n))
     dfreq = post.groupBy("h").agg(F.count("*").alias("dfr"))
     per = (
         post.join(dfreq, "h")
@@ -1282,21 +1248,14 @@ def prefix_jaccard_pairs(
     p, q = threshold
     if not (0 < p <= q):
         raise ValueError(f"threshold must be a rational in (0, 1]: {threshold}")
-    # one persisted postings frame feeds the frequency pass, the ranking,
-    # and both verification probes — the tokenize+shingle explode runs
-    # once (same discipline as ngram_jaccard_pairs). Shingles are
-    # md5-hashed AT THE SOURCE so every downstream shuffle (df pass,
-    # rank join, prefix self-join, both verification probes) carries
-    # 16-byte keys instead of ~50-byte shingle text — the same map-side
-    # hashing that halved the LSH verification shuffle (round 8). The
+    # one postings frame feeds the frequency pass, the ranking, and both
+    # verification probes, so every shuffle carries the 16-byte hash. The
     # prefix lemma needs only a CONSISTENT global total order; rarest-df
-    # first with md5 tiebreak is one, so recall stays lossless.
+    # first with hash tiebreak is one, so recall stays lossless.
     # NOT persisted (r12 A/B: 3.42 s vs 4.13 s cached): the postings
     # subtree is map-only codegen (tokenize+explode+md5); recomputing it
     # per consumer beats caching the exploded postings rows
-    sh = _shingle_postings(df, text_col, id_col, n, None).select(
-        "id", F.unhex(F.md5("shingle")).alias("h")
-    )
+    sh = shingle_postings(df, text_col, [F.col(id_col).alias("id")], n)
     sizes = sh.groupBy("id").agg(F.count("*").cast("bigint").alias("n_sh"))
     dfreq = sh.groupBy("h").agg(F.count("*").cast("bigint").alias("df_"))
     ranked = (
@@ -1369,10 +1328,7 @@ def prefix_jaccard_pairs(
         "n_common",
         "n_a",
         "n_b",
-        half_up_round(
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-            6,
-        ).alias("jaccard"),
+        jaccard("n_common", "n_a", "n_b").alias("jaccard"),
     )
 
 
@@ -1674,15 +1630,13 @@ def contamination_ledger(
     MBs — broadcastable at any training-corpus scale.
 
     Postings carry the md5 of the shingle, not the text: the ledger
-    row is (16-byte hash, id), and the batch side hashes identically —
-    collision probability over an eval suite's shingles is negligible
-    and two-sided (both engines hash the same way).
+    row is (b_id, 16-byte hash ``h``) — the :func:`shingle_postings`
+    frame — and the batch side hashes identically; collision
+    probability over an eval suite's shingles is negligible.
     """
-    return (
-        _shingle_postings(eval_corpus, text_col, id_col, n, None)
-        .select(F.md5("shingle").alias("sh"), F.col("id").alias("b_id"))
-        .distinct()
-    )
+    return shingle_postings(
+        eval_corpus, text_col, [F.col(id_col).alias("b_id")], n
+    ).distinct()
 
 
 def extend_contamination_ledger(
@@ -1723,11 +1677,9 @@ def contamination_check_incremental(
     a (a_id, b_id)-keyed partial-agg count — never a corpus-wide pass,
     never eval-text re-reads.
     """
-    sh_a = _shingle_postings(train_batch, text_col, id_col, n, None).select(
-        F.md5("shingle").alias("sh"), F.col("id").alias("a_id")
-    )
+    sh_a = shingle_postings(train_batch, text_col, [F.col(id_col).alias("a_id")], n)
     return (
-        sh_a.join(ledger, "sh")
+        sh_a.join(ledger, "h")
         .groupBy("a_id", "b_id")
         .agg(F.count("*").alias("n_common"))
         .filter(F.col("n_common") >= min_common)
@@ -1775,16 +1727,16 @@ def containment_pairs(
         )
     if min_shingles < 1:
         raise ValueError(f"min_shingles must be >= 1: {min_shingles}")
-    sh = _persist(_shingle_postings(df, text_col, id_col, n, df_freq_cutoff))
-    sizes = sh.groupBy("id").agg(F.count("*").cast("bigint").alias("n_sh"))
-    a = sh.select(F.col("id").alias("id_a"), "shingle")
-    b = sh.select(F.col("id").alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").cast("bigint").alias("n_common"))
+    sh = _persist(
+        shingle_postings(df, text_col, [F.col(id_col).alias("id")], n, df_freq_cutoff)
     )
+    sizes = sh.groupBy("id").agg(F.count("*").cast("bigint").alias("n_sh"))
+    # each unordered pair is joined once; both orientations then face
+    # the directional filter
+    swapped = F.struct(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
+    inter = _posting_overlaps(sh).select(
+        F.explode(F.array(F.struct("id_a", "id_b"), swapped)).alias("__p"), "n_common"
+    ).select("__p.*", "n_common")
     return (
         inter.join(
             sizes.withColumnsRenamed({"id": "id_a", "n_sh": "n_a"}), "id_a"

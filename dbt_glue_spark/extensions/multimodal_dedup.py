@@ -238,7 +238,6 @@ def image_dup_clusters(
     id_col: str = "media_id",
     max_hamming: int = 2,
     bands: int = 4,
-    max_iter: int = 50,
 ) -> DataFrame:
     """Perceptual duplicate CLUSTERS: near-dup pairs → connected
     components → (media_id, cluster_id = min member id).

@@ -20,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.functions.scalars import half_up_round
-from dbt_glue_spark.functions.text import words
+from dbt_glue_spark.functions.scalars import half_up_round, jaccard
+from dbt_glue_spark.functions.text import shingle_postings, words
 
 
 def tfidf_top_terms(
@@ -216,7 +216,6 @@ def hard_negatives(
     from pyspark.sql import Window
 
     from dbt_glue_spark.extensions.dedup import _persist
-    from dbt_glue_spark.functions.text import tokenize_once, word_shingles
 
     ranked = bm25_search(
         docs, query_terms, topk=topk, id_col=id_col, text_col=text_col
@@ -228,14 +227,9 @@ def hard_negatives(
         F.broadcast(ranked.select(id_col, "rk", "bm25")), id_col, "inner"
     )
     sh = _persist(
-        tokenize_once(cand_docs, text_col, [F.col(id_col), F.col("rk"), F.col("bm25")])
-        .select(
-            id_col,
-            "rk",
-            "bm25",
-            F.explode(word_shingles(F.col("toks"), shingle_n)).alias("shingle"),
+        shingle_postings(
+            cand_docs, text_col, [F.col(id_col), F.col("rk"), F.col("bm25")], shingle_n
         )
-        .select(id_col, "rk", "bm25", F.md5("shingle").alias("h"))
     )
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     pos_sh = sh.filter(F.col("rk") == 1).select(F.col("h").alias("h"))
@@ -250,8 +244,6 @@ def hard_negatives(
         .groupBy(id_col)
         .agg(F.count("*").alias("n_common"))
     )
-    from dbt_glue_spark.functions.scalars import half_up_round
-
     # A candidate with < shingle_n tokens has no row in `sizes` → n_sh
     # coalesces to 0 instead of nulling the jaccard (which dropped it).
     # Both sets empty ⇒ jaccard defined as 0 (disjoint-by-vacuity: a short
@@ -268,7 +260,7 @@ def hard_negatives(
             id_col,
             "bm25",
             F.when(denom == 0, F.lit(0.0))
-            .otherwise(half_up_round(n_common / denom, 6))
+            .otherwise(jaccard(n_common, n_sh, "pos_sh"))
             .alias("jaccard_to_pos"),
         )
         .filter(F.col("jaccard_to_pos") < jaccard_threshold)

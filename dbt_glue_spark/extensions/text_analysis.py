@@ -1363,8 +1363,8 @@ def ngram_novelty(
     hash-keyed; repeat_q6 is one exact integer division; the only
     window is the cumulative over the ≤ n_buckets-row frame.
     """
-    from dbt_glue_spark.extensions.dedup import _shingle_postings
     from dbt_glue_spark.extensions.skyline import equi_width_bucket
+    from dbt_glue_spark.functions.text import shingle_postings
 
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1: {n_buckets}")
@@ -1372,29 +1372,25 @@ def ngram_novelty(
         F.col("__id").isNotNull()
     )
     st = ids.agg(F.min("__id").alias("__mn"), F.max("__id").alias("__mx"))
-    sh = (
-        _shingle_postings(
-            df.filter(F.col(id_col).isNotNull()), text_col, id_col, n, None
-        )
-        .select(
-            F.col("id").cast("bigint").alias("__id"),
-            F.md5("shingle").alias("sh"),
-        )
-        .join(F.broadcast(st))
-    )
+    sh = shingle_postings(
+        df.filter(F.col(id_col).isNotNull()),
+        text_col,
+        [F.col(id_col).cast("bigint").alias("__id")],
+        n,
+    ).join(F.broadcast(st))
     bk = equi_width_bucket(
         F.col("__id").cast("double"),
         F.col("__mn").cast("double"),
         F.col("__mx").cast("double"),
         n_buckets,
     )
-    occ = sh.select(bk.alias("bucket"), "sh")
+    occ = sh.select(bk.alias("bucket"), "h")
     per_bucket = occ.groupBy("bucket").agg(
         F.count("*").cast("bigint").alias("n_occurrences")
     )
-    first = occ.groupBy("sh").agg(F.min("bucket").alias("first_bucket"))
+    first = occ.groupBy("h").agg(F.min("bucket").alias("first_bucket"))
     repeats = (
-        occ.join(first, "sh")
+        occ.join(first, "h")
         .filter(F.col("bucket") > F.col("first_bucket"))
         .groupBy("bucket")
         .agg(F.count("*").cast("bigint").alias("n_repeats"))

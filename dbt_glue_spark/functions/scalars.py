@@ -38,3 +38,12 @@ def half_up_round(col: Column, digits: int) -> Column:
     """
     scale = float(10**digits)
     return F.floor(col * scale + F.lit(0.5)) / scale
+
+
+def jaccard(n_common: str | Column, n_a: str | Column, n_b: str | Column) -> Column:
+    """Set Jaccard from an intersection and the two set sizes,
+    ``|A∩B| / (|A| + |B| − |A∩B|)``, half-up rounded to 6 dp — the one
+    rounded Jaccard every overlap operator reports. Empty-union guards
+    (0 / 0) belong to the caller."""
+    c, a, b = (x if isinstance(x, Column) else F.col(x) for x in (n_common, n_a, n_b))
+    return half_up_round(c / (a + b - c), 6)

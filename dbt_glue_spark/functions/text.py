@@ -3,6 +3,12 @@
 All expressions are built-in Catalyst functions (split/transform/sequence/
 md5) — no Python UDFs — so tokenization and shingling of a 100 TB documents
 table runs inside whole-stage codegen and scales linearly with input size.
+
+:func:`shingle_postings` is the one hashed n-gram posting frame: every
+shingle overlap in the engine (Jaccard, containment, contamination,
+novelty, source overlap, hard negatives) joins its 16-byte ``h`` key,
+never shingle text. Only MinHash signatures hash shingle text
+themselves, because their hash family is defined over it.
 """
 
 from __future__ import annotations
@@ -102,3 +108,29 @@ def word_shingles(tok: Column, n: int = 3) -> Column:
     )
     grams = F.transform(idx, lambda i: F.concat_ws(" ", *[tok[i + j] for j in range(n)]))
     return F.array_distinct(grams)
+
+
+def shingle_postings(
+    df, text_col: str, keep: list, n: int = 3, df_freq_cutoff: int | None = None
+):
+    """Hashed word n-gram postings ``(*keep, h)``: one row per distinct
+    whitespace-token ``n``-gram of each row's ``text_col``, keyed by
+    ``h = unhex(md5(shingle))`` — 16 bytes, so every join and shuffle
+    over postings carries a fixed-width key instead of ~50 bytes of
+    shingle text. Overlap counts are those of the text (md5 collisions
+    over a corpus's shingles are negligible).
+
+    Rows with NULL text or fewer than ``n`` tokens have no postings.
+    ``df_freq_cutoff`` drops stop-shingles: postings whose document
+    frequency (rows holding the shingle) exceeds it — the skew defense
+    for self-joins, where a shingle of frequency f costs f² pairs.
+    """
+    staged = tokenize_once(df, text_col, keep)
+    cols = staged.columns[:-2]  # keep's names, without toks / __once
+    sh = staged.select(
+        *cols, F.explode(word_shingles(F.col("toks"), n)).alias("shingle")
+    ).select(*cols, F.unhex(F.md5("shingle")).alias("h"))
+    if df_freq_cutoff is not None:
+        freq = sh.groupBy("h").agg(F.count("*").alias("df_"))
+        sh = sh.join(freq.filter(F.col("df_") <= df_freq_cutoff), "h", "left_semi")
+    return sh

@@ -518,15 +518,15 @@ def test_ngram_novelty_hand_case(spark):
 def test_ngram_novelty_reconciles(spark, sf_dir):
     """Occurrence masses sum to the per-doc distinct shingle total;
     repeats never exceed occurrences; bucket 0 has zero repeats."""
-    from dbt_glue_spark.extensions.dedup import _shingle_postings
     from dbt_glue_spark.extensions.text_analysis import ngram_novelty
+    from dbt_glue_spark.functions.text import shingle_postings
     from dbt_glue_spark.sources.registry import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     rows = sorted(
         (tuple(r) for r in ngram_novelty(docs).collect()), key=lambda t: t[0]
     )
-    total = _shingle_postings(docs, "text", "doc_id", 3, None).count()
+    total = shingle_postings(docs, "text", ["doc_id"]).count()
     assert sum(r[1] for r in rows) == total
     assert all(0 <= r[2] <= r[1] for r in rows)
     assert rows[0][2] == 0

@@ -346,6 +346,84 @@ def test_contamination_pairs_detects_verbatim_leak(spark):
     assert out[0].n_common >= 5
 
 
+def _md5(s: str) -> bytes:
+    import hashlib
+
+    return hashlib.md5(s.encode()).digest()
+
+
+def test_shingle_postings_key_is_md5_of_the_ngram(spark):
+    from dbt_glue_spark.functions.text import shingle_postings
+
+    df = spark.createDataFrame(
+        [
+            (1, "a b c d", "x"),
+            (2, "a b", "y"),  # fewer than n tokens: no postings
+            (3, None, "z"),  # NULL text: no postings
+            (4, "a  b c a b c", "w"),  # repeated shingles count once
+        ],
+        "doc_id bigint, text string, tag string",
+    )
+    out = shingle_postings(df, "text", ["doc_id", "tag"])
+    assert out.columns == ["doc_id", "tag", "h"]
+    assert dict(out.dtypes)["h"] == "binary"
+    got = sorted((r.doc_id, r.tag, bytes(r.h)) for r in out.collect())
+    want = [(1, "x", g) for g in ("a b c", "b c d")]
+    want += [(4, "w", g) for g in ("a b c", "b c a", "c a b")]
+    assert got == sorted((i, t, _md5(g)) for i, t, g in want)
+
+
+def test_shingle_postings_cutoff_drops_exactly_the_frequent_shingles(spark):
+    from dbt_glue_spark.functions.text import shingle_postings
+
+    texts = {1: "a b c d", 2: "a b c e", 3: "a b c f", 4: "x b c d"}
+    df = spark.createDataFrame(list(texts.items()), "doc_id bigint, text string")
+    post = {
+        (i, " ".join(t.split()[k : k + 3]))
+        for i, t in texts.items()
+        for k in range(len(t.split()) - 2)
+    }
+    freq = {}
+    for _, g in post:
+        freq[g] = freq.get(g, 0) + 1
+    for cutoff in (1, 2, 3):
+        got = {
+            (r.doc_id, bytes(r.h))
+            for r in shingle_postings(df, "text", ["doc_id"], 3, cutoff).collect()
+        }
+        assert got == {(i, _md5(g)) for i, g in post if freq[g] <= cutoff}, cutoff
+
+
+def test_containment_pairs_matches_brute_force(spark):
+    from dbt_glue_spark.extensions.dedup import containment_pairs
+
+    texts = {
+        1: " ".join(f"w{i}" for i in range(20)),
+        2: " ".join(f"w{i}" for i in range(5, 13)),  # inside 1, not vice versa
+        3: " ".join(f"m{i}" for i in range(10)),  # 3 and 4 contain each other
+        4: " ".join(f"m{i}" for i in range(11)),
+        5: "z0 z1 z2 z3 z4",
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id bigint, text string")
+    sets = {
+        i: {" ".join(t.split()[k : k + 3]) for k in range(len(t.split()) - 2)}
+        for i, t in texts.items()
+    }
+    expected = {
+        (a, b): (len(sa & sb), len(sa), len(sb))
+        for a, sa in sets.items()
+        for b, sb in sets.items()
+        if a != b and len(sa) >= 3 and sa & sb and len(sa & sb) * 5 >= len(sa) * 4
+    }
+    got = {
+        (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b)
+        for r in containment_pairs(df).collect()
+    }
+    assert got == expected
+    assert (2, 1) in got and (1, 2) not in got
+    assert (3, 4) in got and (4, 3) in got
+
+
 # ---- retrieval / chunking / repetition ------------------------------------
 
 

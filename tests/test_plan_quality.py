@@ -240,14 +240,33 @@ def test_ungrouped_kmv_uses_take_ordered(spark, sf_dir):
     assert "Window" not in plan, plan
 
 
-@pytest.mark.parametrize("name", ["ext_exact_dedup", "ext_minhash_lsh_pairs"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ext_exact_dedup",
+        "ext_minhash_lsh_pairs",
+        "ext_ngram_jaccard_pairs",
+        "ext_ngram_jaccard_cutoff",
+        "ext_prefix_jaccard_join",
+        "ext_ngram_dup_fraction",
+        "ext_containment_pairs",
+        "ext_contamination_pairs",
+        "ext_contamination_ledger",
+        "ext_ngram_novelty",
+        "ext_source_overlap",
+        "ext_hard_negatives",
+    ],
+)
 def test_dedup_shuffles_hashes_not_documents(spark, sf_dir, name):
-    # The wide shuffles in the dedup path must travel md5/posting keys,
-    # never full document text: no Exchange partitioning on `text`.
-    plan = plan_of(SPECS()[name].fn(spark, sf_dir))
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "text#" not in line, line
+    # The wide shuffles in the dedup and shingle-overlap paths must travel
+    # md5/posting keys, never document or shingle text: no hash exchange
+    # keyed on `text` or `shingle`. The simple plan prints each exchange
+    # as one `Exchange hashpartitioning(<keys>, n)` line.
+    plan = plan_of(SPECS()[name].fn(spark, sf_dir), mode="simple")
+    keyed = [ln for ln in plan.splitlines() if "Exchange hashpartitioning(" in ln]
+    assert keyed, plan
+    for line in keyed:
+        assert "text#" not in line and "shingle#" not in line, line
 
 
 def test_partitioned_table_scan_prunes_partitions(spark, sf_dir, warehouse):
@@ -391,7 +410,8 @@ def test_skew_stop_shingle_cutoff_bounds_candidate_cost(spark):
     # shingle's bucket costs df² pairs — the one real skew source in the
     # dedup family. df_freq_cutoff must drop it while true near-dups
     # (sharing rare shingles) still surface.
-    from dbt_glue_spark.extensions.dedup import _shingle_postings, ngram_jaccard_pairs
+    from dbt_glue_spark.extensions.dedup import ngram_jaccard_pairs
+    from dbt_glue_spark.functions.text import shingle_postings
 
     boiler = "subscribe to our newsletter for updates today"
     rows = []
@@ -407,8 +427,8 @@ def test_skew_stop_shingle_cutoff_bounds_candidate_cost(spark):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
 
     def candidate_cost(cutoff):
-        post = _shingle_postings(docs, "text", "doc_id", 3, cutoff)
-        df_counts = post.groupBy("shingle").count()
+        post = shingle_postings(docs, "text", ["doc_id"], 3, cutoff)
+        df_counts = post.groupBy("h").count()
         return df_counts.selectExpr("sum(count * count) AS c").collect()[0]["c"]
 
     unbounded = candidate_cost(None)
@@ -606,18 +626,6 @@ def test_dsir_shuffles_ints_not_text(spark, sf_dir):
     assert "BroadcastExchange" in plan  # model + totals broadcast
 
 
-def test_ngram_dup_fraction_shuffles_hashes_not_shingles(spark, sf_dir):
-    # The df aggregate and join-back must travel 16-byte md5 keys, never
-    # shingle text (the exact-dedup discipline).
-    from dbt_glue_spark.extensions.dedup import ngram_dup_fraction
-
-    docs = load_table(spark, sf_dir, "documents")
-    plan = plan_of(ngram_dup_fraction(docs), mode="formatted")
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "shingle#" not in line and "text#" not in line, line
-
-
 def test_random_projection_is_shuffle_free(spark, sf_dir):
     # A pure per-row projection: no Exchange anywhere in the plan.
     from dbt_glue_spark.extensions.similarity import random_project
@@ -639,16 +647,6 @@ def test_lm_buckets_window_is_keyed_by_group(spark, sf_dir):
     total = plan.count("windowspecdefinition(")
     keyed = plan.count("windowspecdefinition(lang#")
     assert total > 0 and total == keyed, plan
-
-
-def test_source_overlap_shuffles_hashes_not_shingles(spark, sf_dir):
-    from dbt_glue_spark.extensions.audit import source_overlap_matrix
-
-    docs = load_table(spark, sf_dir, "documents")
-    plan = plan_of(source_overlap_matrix(docs), mode="formatted")
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "shingle#" not in line and "text#" not in line, line
 
 
 def test_key_skew_topk_is_take_ordered(spark, sf_dir):

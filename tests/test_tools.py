@@ -31,6 +31,19 @@ def test_explain_writes_plan_and_summary(spark, sf_dir, tmp_path, monkeypatch, c
     assert capsys.readouterr().out.startswith(f"{QUERY}: Exchange=")
 
 
+def test_explain_records_a_streaming_specs_micro_batch_plan(
+    spark, sf_dir, tmp_path, monkeypatch, capsys
+):
+    # the spec returns its memory sink's table; the tool must show the
+    # stream's own stateful aggregation, not a LocalTableScan
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setattr(explain, "get_spark", lambda name: spark)
+    explain.main([str(tmp_path), "before", "streaming_ohlc"])
+    plan = (tmp_path / "streaming_ohlc_before.txt").read_text()
+    assert "StateStoreSave" in plan and "Exchange hashpartitioning(" in plan, plan
+    assert capsys.readouterr().out.startswith("streaming_ohlc: Exchange=1 ")
+
+
 def test_ab_conf_reports_one_line_per_query(spark, sf_dir, monkeypatch, capsys):
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
     monkeypatch.setattr(ab, "get_spark", lambda name: spark)
